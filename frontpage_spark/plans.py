@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 import threading
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -41,39 +42,32 @@ SALT_COL = "__salt"
 # the young end instead of double-registering), so a frame a query
 # keeps re-using — bpe_train's per-round keep plus nested keeps from
 # dedup helpers — isn't evicted mid-use by its own later registrations
-# (ADVICE r4).
+# (ADVICE r4).  The FIFO is process-global on purpose, unlike the
+# per-session cache (session.session_cache): every session of a
+# SparkContext shares one CacheManager, and that is what the cap bounds.
 _KEPT: list[DataFrame] = []
 _KEPT_MAX = 8
 _KEPT_LOCK = threading.Lock()
 
-# Active keep() listeners (ADVICE r11): a caller that needs to know
-# which frames were kept during a code region (the prepared-plan
-# cache's kept_new detection) registers a list here and every keep()
-# appends to it. This replaces the old id()-snapshot diff of _KEPT,
-# which could silently MISS a new keep when a pre-existing frame was
-# FIFO-evicted and garbage-collected mid-build (a recycled id()), and
-# lost early keeps whenever a build registered more than _KEPT_MAX
-# frames.
-_KEEP_LISTENERS: list[list] = []
+# Thread-local keep() capture: the prepared-plan cache must know which
+# frames its build kept, and only ITS build's — a concurrent build on
+# another thread keeps its own frames. Each open capture is a list on
+# this thread's stack; keep() appends to every one of them, so an outer
+# capture also sees the keeps of a build nested inside it.
+_CAPTURES = threading.local()
 
 
-def keep_capture_start() -> list:
-    """Begin capturing keep() registrations; returns the capture list.
-    Pair with :func:`keep_capture_stop`."""
-    captured: list = []
-    with _KEPT_LOCK:
-        _KEEP_LISTENERS.append(captured)
-    return captured
-
-
-def keep_capture_stop(captured: list) -> list:
-    """Stop a capture started by :func:`keep_capture_start`."""
-    with _KEPT_LOCK:
-        for i, ex in enumerate(_KEEP_LISTENERS):
-            if ex is captured:
-                del _KEEP_LISTENERS[i]
-                break
-    return captured
+@contextmanager
+def keep_capture():
+    """Collect, into the yielded list, every frame keep() registers on
+    this thread inside the ``with`` block."""
+    stack = _CAPTURES.__dict__.setdefault("stack", [])
+    captured: list[DataFrame] = []
+    stack.append(captured)
+    try:
+        yield captured
+    finally:
+        stack.pop()
 
 
 def keep(df: DataFrame) -> DataFrame:
@@ -82,9 +76,9 @@ def keep(df: DataFrame) -> DataFrame:
     persisted frame."""
     df = df.persist()
     evict: list[DataFrame] = []
+    for captured in getattr(_CAPTURES, "stack", ()):
+        captured.append(df)
     with _KEPT_LOCK:
-        for listener in _KEEP_LISTENERS:
-            listener.append(df)
         # identity scan, not list.remove(): DataFrame.__eq__ builds a
         # Column, so equality-based membership would be nonsense here
         for i, ex in enumerate(_KEPT):

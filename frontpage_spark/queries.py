@@ -28,7 +28,7 @@ from pyspark.sql.window import Window
 
 from . import functions as FF
 from .ext import dedup, similarity, textstats
-from .session import tune
+from .session import session_cache, tune
 from . import plans
 from .sources import load_table
 
@@ -44,9 +44,11 @@ ORACLES: dict[str, str] = {}
 # Column construction + analysis) that repeats identically on every
 # call — at toy scale that fixed cost IS the gap to the oracle for ~30
 # sub-second queries (VERDICT r4 item 6). This is prepared-statement
-# reuse: the built DataFrame is cached per (application, sf_dir, name)
-# and handed back on later calls; execution (optimizer → codegen-cached
-# → run) still happens per action, so measurements stay honest.
+# reuse: the built DataFrame is cached in the calling session's cache
+# (session.session_cache) under ("plan", sf_dir, name) and handed back
+# on later calls; execution (optimizer → codegen-cached → run) still
+# happens per action, so measurements stay honest. Keying by session,
+# not application, means a newSession() clone builds its own plan.
 #
 # Safety is SELF-DETECTED, not hand-listed: a build is cached only if
 # it launched zero Spark jobs — a fixpoint/driver-loop query (pagerank,
@@ -64,8 +66,6 @@ ORACLES: dict[str, str] = {}
 # keep() already had (CacheManager canonical-plan matching exposed the
 # same reuse before the relink). bench.py clearCache()s after EVERY
 # timed run, so measurements never reuse data.
-_QPLAN_CACHE: dict[tuple[str, str, str], tuple[DataFrame, list[DataFrame]]] = {}
-_QPLAN_MAX = 512
 
 
 def _last_job_id(tracker) -> int:
@@ -77,61 +77,40 @@ def _last_job_id(tracker) -> int:
     return max(ids) if ids else -1
 
 
-def _build_cacheable(spark: SparkSession, fn, name: str, sf_dir: str):
-    tracker = spark.sparkContext.statusTracker()
-    jobs_before = _last_job_id(tracker)
-    # capture keeps via a plans-level listener, not an id()-snapshot
-    # diff of the live FIFO (ADVICE r11: an evicted-and-GC'd frame's
-    # recycled id() could mask a genuinely new keep, and builds keeping
-    # more than _KEPT_MAX frames lost their early keeps)
-    captured = plans.keep_capture_start()
-    try:
-        df = fn(spark, sf_dir)
-    finally:
-        plans.keep_capture_stop(captured)
-    pure = _last_job_id(tracker) == jobs_before
-    # de-dup re-keeps of the same frame handle within one build
-    kept_new = list({id(k): k for k in captured}.values())
-    return df, pure, kept_new
-
-
 def register(name: str, oracle: str | None = None):
     def deco(fn):
         import functools
 
         @functools.wraps(fn)
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            try:
-                key = (spark.sparkContext.applicationId, sf_dir, name)
-            except Exception:
-                key = None
-            if key is not None:
-                # tune BEFORE build and hit alike: fixture-based queries
-                # never touch _t()/tune themselves, so without this a
-                # first call would run under whatever profile the
-                # previous query left while cached calls get the tuned
-                # one — same query, two conf profiles
-                tune(spark, sf_dir)
-                hit = _QPLAN_CACHE.get(key)
-                if hit is not None:
-                    df, kept = hit
-                    # re-link the plan's keep() frames: clearCache()
-                    # since the last call dropped their CacheManager
-                    # registration; re-persisting the SAME handle makes
-                    # the shared stages compute once per action again
-                    # (the data itself is recomputed — nothing carries
-                    # over across calls)
-                    for frame in kept:
-                        plans.keep(frame)
-                    return df
-                df, pure, kept_new = _build_cacheable(spark, fn, name, sf_dir)
-                if pure:
-                    for stale in [k for k in _QPLAN_CACHE if k[0] != key[0]]:
-                        del _QPLAN_CACHE[stale]
-                    if len(_QPLAN_CACHE) < _QPLAN_MAX:
-                        _QPLAN_CACHE[key] = (df, kept_new)
+            # tune BEFORE build and hit alike: fixture-based queries
+            # never touch _t()/tune themselves, so without this a first
+            # call would run under whatever profile the previous query
+            # left while cached calls get the tuned one — same query,
+            # two conf profiles
+            tune(spark, sf_dir)
+            cache = session_cache(spark)
+            key = ("plan", sf_dir, name)
+            hit = cache.get(key)
+            if hit is not None:
+                df, kept = hit
+                # re-link the plan's keep() frames: clearCache() since
+                # the last call dropped their CacheManager registration;
+                # re-persisting the SAME handle makes the shared stages
+                # compute once per action again (the data itself is
+                # recomputed — nothing carries over across calls)
+                for frame in kept:
+                    plans.keep(frame)
                 return df
-            return fn(spark, sf_dir)
+            tracker = spark.sparkContext.statusTracker()
+            jobs_before = _last_job_id(tracker)
+            with plans.keep_capture() as captured:
+                df = fn(spark, sf_dir)
+            if _last_job_id(tracker) == jobs_before:  # pure build
+                # de-dup re-keeps of the same frame handle within one build
+                kept = list({id(k): k for k in captured}.values())
+                cache.put(key, (df, kept))
+            return df
 
         wrapped.__wrapped__ = fn
         if name in QUERIES:
@@ -1269,8 +1248,6 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _EMB_EXACT_GATE = 4096
 
-_rows_meta_cache: dict[tuple[str, str], int] = {}
-
 
 def _table_rows_meta(sf_dir: str, name: str) -> int:
     """Exact row count of a base parquet table from file FOOTERS —
@@ -1278,43 +1255,39 @@ def _table_rows_meta(sf_dir: str, name: str) -> int:
     limit(N+1).count() gate probe cost one scheduler round per call).
     Matches what the engine itself trusts: parquet num_rows is the
     same statistic Spark's own count-star metadata optimization reads.
-    Cached per (sf_dir, table). The except is NARROW (missing pyarrow /
-    missing path / unreadable footer) and the over-gate fallback is
-    LOGGED: a silent broad except here once meant an environment hiccup
-    could route a size-gated operator onto its large-input branch whose
-    semantics differ from the registered oracle (ADVICE r4) — anything
-    unexpected now raises instead of mispicking a branch."""
-    key = (sf_dir, name)
-    if key not in _rows_meta_cache:
-        if len(_rows_meta_cache) >= 256:  # bounded (cache-hygiene rule)
-            _rows_meta_cache.clear()
-        import os
+    Uncached: a footer read costs well under a millisecond and runs
+    only at build time, which a prepared-plan cache hit skips. The
+    except is NARROW (missing pyarrow / missing path / unreadable
+    footer) and the over-gate fallback is LOGGED: a silent broad except
+    here once meant an environment hiccup could route a size-gated
+    operator onto its large-input branch whose semantics differ from
+    the registered oracle (ADVICE r4) — anything unexpected now raises
+    instead of mispicking a branch."""
+    try:
+        import pyarrow.parquet as pq
 
-        try:
-            import pyarrow.parquet as pq
+        path = os.path.join(sf_dir, name + ".parquet")
+        files = (
+            [os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")]
+            if os.path.isdir(path)
+            else [path]
+        )
+        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+    except (ImportError, FileNotFoundError, OSError, ValueError) as e:
+        # ValueError covers pyarrow.lib.ArrowInvalid (truncated /
+        # corrupt footer — "Parquet magic bytes not found"), which
+        # subclasses it; the docstring's "unreadable footer →
+        # over-gate" contract was otherwise a crash
+        import warnings
 
-            path = os.path.join(sf_dir, name + ".parquet")
-            files = (
-                [os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")]
-                if os.path.isdir(path)
-                else [path]
-            )
-            _rows_meta_cache[key] = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-        except (ImportError, FileNotFoundError, OSError, ValueError) as e:
-            # ValueError covers pyarrow.lib.ArrowInvalid (truncated /
-            # corrupt footer — "Parquet magic bytes not found"), which
-            # subclasses it; the docstring's "unreadable footer →
-            # over-gate" contract was otherwise a crash
-            import warnings
+        warnings.warn(
+            f"_table_rows_meta({sf_dir}, {name}): metadata unreadable "
+            f"({type(e).__name__}: {e}); assuming over-gate (scalable branch)",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+        return 1 << 62
 
-            warnings.warn(
-                f"_table_rows_meta({sf_dir}, {name}): metadata unreadable "
-                f"({type(e).__name__}: {e}); assuming over-gate (scalable branch)",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            _rows_meta_cache[key] = 1 << 62
-    return _rows_meta_cache[key]
 
 # banded-signature SQL shared by the embedding_near_dup_lsh oracle:
 # hyperplane h[p][i] = +-1 from the parity of md5('p:i')'s first hex
@@ -3819,7 +3792,7 @@ def _components_from_rows(spark: SparkSession, rows: list, id_type: str) -> Data
         return r
 
     for row in rows:
-        a, b = row[0], row[1]
+        a, b = row["a"], row["b"]
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
@@ -6085,13 +6058,6 @@ def variant_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---- recursive CTE (Spark 4 WITH RECURSIVE) -------------------------------
-# Cached raised-rail session clones for recursive_ancestor_depths,
-# keyed by (applicationId, sf_dir) — see its docstring. Sessions are
-# cheap driver objects sharing the SparkContext; the bound only guards
-# a pathological many-sf_dir harness.
-_RECURSION_SESSIONS: dict[tuple[str, str], SparkSession] = {}
-
-
 @register(
     "recursive_ancestor_depths",
     """
@@ -6130,8 +6096,9 @@ def recursive_ancestor_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     this frame sees the higher limit, and every other recursive query
     in the long-lived session keeps the default runaway rail.
 
-    The clone is CACHED per (application, sf_dir) and reused across
-    calls (r12): a fresh newSession() + view re-registration per call
+    The clone is CACHED in the caller's session cache under
+    ("recursion", sf_dir, need) and reused across calls (r12): a fresh
+    newSession() + view re-registration per call
     cost ~0.9 s of driver work at sf1 and, because the clone also
     started from the INITIAL session options rather than the
     runtime-tuned profile, the recursion silently ran under the
@@ -6145,19 +6112,15 @@ def recursive_ancestor_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     need = max(1_000_000, (n_cust + 1) * 22)
     cur = int(spark.conf.get("spark.sql.cteRecursionRowLimit", "1000000"))
     if need > cur:
-        key = (spark.sparkContext.applicationId, sf_dir)
-        clone = _RECURSION_SESSIONS.get(key)
-        if clone is None or int(
-            clone.conf.get("spark.sql.cteRecursionRowLimit", "1000000")
-        ) < need:
-            if len(_RECURSION_SESSIONS) >= 16:  # bounded (cache-hygiene rule)
-                _RECURSION_SESSIONS.clear()
+
+        def raised_rail_clone() -> SparkSession:
             clone = spark.newSession()
             clone.conf.set("spark.sql.cteRecursionRowLimit", str(need))
             tune(clone, sf_dir)
             register_views(clone, sf_dir)
-            _RECURSION_SESSIONS[key] = clone
-        spark = clone
+            return clone
+
+        spark = session_cache(spark).get_or_put(("recursion", sf_dir, need), raised_rail_clone)
     else:
         register_views(spark, sf_dir)
     return spark.sql(

@@ -11,6 +11,8 @@ timestamp arithmetic.
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import SparkSession
 
@@ -27,10 +29,11 @@ RUNTIME_CONF = {
 
 
 def default_parallelism() -> int:
+    """$SPARK_GRAFT_CPUS, else the cores this process may run on."""
     try:
-        return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    except ValueError:
-        return 32
+        return int(os.environ["SPARK_GRAFT_CPUS"])
+    except (KeyError, ValueError):
+        return len(os.sched_getaffinity(0))
 
 
 # Below this much input, AQE is a net loss: each adaptive query stage
@@ -40,18 +43,13 @@ def default_parallelism() -> int:
 # AQE off + 8 partitions = 4.6s for the same seven queries. A real
 # table never hits this branch.
 _SMALL_INPUT_BYTES = 1 << 30
-_dir_bytes_cache: dict[str, int] = {}
 
 
 def _dir_bytes(path: str) -> int:
-    if path not in _dir_bytes_cache:
-        try:
-            _dir_bytes_cache[path] = sum(
-                e.stat().st_size for e in os.scandir(path) if e.name.endswith(".parquet")
-            )
-        except OSError:
-            _dir_bytes_cache[path] = _SMALL_INPUT_BYTES  # unknown → large profile
-    return _dir_bytes_cache[path]
+    try:
+        return sum(e.stat().st_size for e in os.scandir(path) if e.name.endswith(".parquet"))
+    except OSError:
+        return _SMALL_INPUT_BYTES  # unknown → large profile
 
 
 def tune(spark: SparkSession, sf_dir: str | None = None) -> SparkSession:
@@ -80,6 +78,60 @@ def tune(spark: SparkSession, sf_dir: str | None = None) -> SparkSession:
     except Exception:
         pass
     return spark
+
+
+# ---- per-session cache ------------------------------------------------------
+# Everything the engine reuses across calls lives in ONE bounded LRU per
+# SparkSession: prepared query plans ("plan", sf_dir, name), table
+# scans ("table", sf_dir, name) and raised-rail recursion clones
+# ("recursion", sf_dir, need). Its lifetime is the session's, so a
+# stopped session takes its entries with it and a newSession() clone
+# starts empty instead of being handed frames bound to its parent. It
+# is an attribute of the session object, not a WeakKeyDictionary
+# value: the cached DataFrames reference their session, so a weak-keyed
+# entry would pin its own key.
+SESSION_CACHE_MAX = 512
+_CACHE_ATTR = "_frontpage_cache"
+
+
+class SessionCache:
+    """Thread-safe LRU of at most ``cap`` entries."""
+
+    def __init__(self, cap: int = SESSION_CACHE_MAX):
+        self._entries: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+        self._cap = cap
+
+    def get(self, key):
+        with self._lock:
+            value = self._entries.get(key)
+            if value is not None:
+                self._entries.move_to_end(key)
+            return value
+
+    def put(self, key, value) -> None:
+        with self._lock:
+            self._entries[key] = value
+            self._entries.move_to_end(key)
+            while len(self._entries) > self._cap:
+                self._entries.popitem(last=False)
+
+    def get_or_put(self, key, build):
+        """Cached value for ``key``, else ``build()`` stored under it.
+        Builds run outside the lock; a racing duplicate build is benign."""
+        value = self.get(key)
+        if value is None:
+            value = build()
+            self.put(key, value)
+        return value
+
+
+def session_cache(spark: SparkSession) -> SessionCache:
+    """The cache owned by ``spark``, created on first use."""
+    cache = getattr(spark, _CACHE_ATTR, None)
+    if cache is None:
+        cache = spark.__dict__.setdefault(_CACHE_ATTR, SessionCache())
+    return cache
 
 
 #: One BLAS thread per task: Spark schedules a task per core, so any

@@ -11,11 +11,11 @@ pruning and predicate pushdown reach the parquet scan.
 from __future__ import annotations
 
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .schemas import TESTDATA_TABLES
+from .session import session_cache
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -29,53 +29,28 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 NORMALIZE_TS_COLUMNS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
-# Plan cache: spark.read.parquet pays file listing + footer schema
-# inference (~0.1s/table) at PLAN time, every call. The testdata dirs
-# are immutable and DataFrame plans are immutable values, so reusing
-# the logical plan per (session, dir, table) is semantics-free — it
-# removes a per-query constant that a long-lived production session
-# would never pay either (tables would live in a catalog).
-# Hygiene (ADVICE r2): guarded by a lock for concurrent load_table
-# calls; entries keyed by any OTHER applicationId are evicted on access
-# (a stopped session's plans must not pin JVM references for the
-# process lifetime), and the dict is hard-capped as a leak backstop.
-_plan_cache: dict[tuple[str, str, str, str], DataFrame] = {}
-_plan_cache_lock = threading.Lock()
-_PLAN_CACHE_MAX = 512
+# Table scans are cached in the session's cache (session.session_cache)
+# under ("table", sf_dir, name): spark.read.parquet pays file listing +
+# footer schema inference (~0.1s/table) at PLAN time, every call. The
+# testdata dirs are immutable and DataFrame plans are immutable values,
+# so reusing the logical plan is semantics-free — it removes a per-query
+# constant that a long-lived production session would never pay either
+# (tables would live in a catalog).
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """One testdata parquet table. Vectorized reader; pruning/pushdown free.
 
-    The plan cache is keyed by SESSION identity, not just application
-    (r11): a cached frame belongs to the session that built it, and a
-    temp view registered from it lands in THAT session's catalog — an
-    app-level key handed a cloned session (``spark.newSession()``, the
-    scoped-conf idiom) a default-session frame, so
-    ``register_views`` silently registered views the clone could not
-    resolve (sf1 bench: TABLE_OR_VIEW_NOT_FOUND on `customer`)."""
-    try:
-        app_id = spark.sparkContext.applicationId
-        try:
-            sess_id = str(spark._jsparkSession.sessionUUID())
-        except Exception:
-            sess_id = str(id(spark))
-        key = (app_id, sess_id, sf_dir, name)
-    except Exception:
-        key = None
-    if key is not None:
-        with _plan_cache_lock:
-            for stale in [k for k in _plan_cache if k[0] != app_id]:
-                del _plan_cache[stale]
-            if key in _plan_cache:
-                return _plan_cache[key]
-    df = _load_table_uncached(spark, sf_dir, name)
-    if key is not None:
-        with _plan_cache_lock:
-            if len(_plan_cache) >= _PLAN_CACHE_MAX:
-                _plan_cache.clear()
-            _plan_cache[key] = df
-    return df
+    The scan is cached per SESSION, not per application (r11): a cached
+    frame belongs to the session that built it, and a temp view
+    registered from it lands in THAT session's catalog — an app-level
+    key handed a cloned session (``spark.newSession()``, the scoped-conf
+    idiom) a default-session frame, so ``register_views`` silently
+    registered views the clone could not resolve (sf1 bench:
+    TABLE_OR_VIEW_NOT_FOUND on `customer`)."""
+    return session_cache(spark).get_or_put(
+        ("table", sf_dir, name), lambda: _load_table_uncached(spark, sf_dir, name)
+    )
 
 
 def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

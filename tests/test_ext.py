@@ -302,30 +302,32 @@ def test_cosine_pairs_blocked_matches_expr(spark):
         }
         assert set(got) == set(want)
         assert all(abs(got[k] - want[k]) < 1e-12 for k in want)
+    # Threshold checks filter BOTH sides by one rule: the two paths
+    # compute a cosine with different summation orders, so a value
+    # within float noise of 0.5 may be kept by one and dropped by the
+    # other. Pairs inside that band are excluded on both sides (ADVICE
+    # r12); every pair clear of it must agree exactly.
+    def clear(v):
+        return abs(v - 0.5) > 1e-9
+
     thr = {
         (r["a"], r["b"])
         for r in similarity.cosine_pairs_blocked(df, n_blocks=3, threshold=0.5).collect()
     }
-    assert thr == {k for k, v in want.items() if v >= 0.5}
+    assert thr <= set(want)
+    assert {k for k in thr if clear(want[k])} == {
+        k for k, v in want.items() if v >= 0.5 and clear(v)
+    }
     # values_only (r11): identical cosine MULTISET, no id columns,
     # including under a threshold
     for kw in ({}, {"threshold": 0.5}):
         vo = similarity.cosine_pairs_blocked(df, n_blocks=3, values_only=True, **kw)
         assert vo.columns == ["cosine"]
-        # round BEFORE thresholding on both sides (ADVICE r11): the two
-        # paths compute the cosines with different summation orders, so
-        # a value within float noise of 0.5 could otherwise be kept by
-        # one side and dropped by the other, flaking the length assert —
-        # the production consumer (embedding_near_dup) rounds to 12
-        # decimals before its threshold for exactly this reason
-        got_vals = sorted(round(r["cosine"], 12) for r in vo.collect())
-        want_vals = sorted(
-            round(v, 12)
-            for v in want.values()
-            if "threshold" not in kw or round(v, 12) >= 0.5
-        )
+        got_vals = sorted(r["cosine"] for r in vo.collect())
+        want_vals = sorted(want.values())
         if "threshold" in kw:
-            got_vals = [v for v in got_vals if v >= 0.5]
+            got_vals = [v for v in got_vals if clear(v)]
+            want_vals = [v for v in want_vals if v >= 0.5 and clear(v)]
         assert len(got_vals) == len(want_vals)
         assert all(abs(a - b) < 1e-12 for a, b in zip(got_vals, want_vals))
 
@@ -997,6 +999,15 @@ def test_component_fixpoint_high_diameter_and_mixed(spark):
         r["id"]: r["comp"] for r in _component_fixpoint(df, small_rows=1).collect()
     }
     assert got_dist == _cc_expected(pairs)
+    # endpoints are read by NAME: a pairs frame with a leading extra
+    # column must give the same labels on both paths
+    wab = spark.createDataFrame([(0.5, a, b) for a, b in pairs], "w double, a long, b long")
+    for small_rows in (100_000, 1):
+        got_w = {
+            r["id"]: r["comp"]
+            for r in _component_fixpoint(wab, small_rows=small_rows).collect()
+        }
+        assert got_w == _cc_expected(pairs)
 
 
 def test_component_fixpoint_empty_and_single(spark):

@@ -1,11 +1,10 @@
-"""Capture .explain("formatted") for named queries into plans/r12/.
+"""Capture .explain("formatted") for named queries into plans/<round>/.
 
-Usage: python tools/explain_r12.py <tag> <query> [query ...]
-Writes plans/r12/<query>_<tag>.txt  (tag = before | after).
+Usage: python tools/explain_plans.py <round> <tag> <query> [query ...]
+Writes plans/<round>/<query>_<tag>.txt  (e.g. round = r12, tag = before | after).
 
-The optimization round's evidence contract: the judge cannot run
-Spark, so every plan claim in OPTIMIZATION_r12.md points at one of
-these files.
+Every plan claim in an OPTIMIZATION_<round>.md points at one of these
+files, so a reader can check it without running Spark.
 """
 
 from __future__ import annotations
@@ -13,20 +12,22 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    if len(sys.argv) < 4:
+        sys.exit(__doc__)
+    rnd, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
 
     from frontpage_spark.queries import QUERIES
     from frontpage_spark.session import get_spark
+    from frontpage_spark.sources import DEFAULT_SF_DIR as sf_dir
 
-    spark = get_spark("explain_r12")
+    spark = get_spark(f"explain_{rnd}")
     spark.sparkContext.setLogLevel("ERROR")
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r12")
+    out_dir = os.path.join(_REPO, "plans", rnd)
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = QUERIES[name](spark, sf_dir)
