@@ -21,6 +21,17 @@ import argparse
 import sys
 
 
+def _sink_keys(spark, path: str):
+    """The uniq_id keys already in a parquet sink. Before the first
+    append the sink has no parquet footers: an empty key set then."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.parquet(path).select("uniq_id")
+    except AnalysisException:
+        return spark.createDataFrame([], "uniq_id string")
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="frontpage_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -71,7 +82,7 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(f"frontpage_spark-{args.cmd}")
     try:
         if args.cmd == "ingest":
-            from pyspark.sql import functions as F
+            from pyspark.sql import Observation, functions as F
 
             from .pipeline import dedup_new_keys, write_append
             from .sources import assemble_raw, fetch_documents
@@ -94,13 +105,15 @@ def main(argv: list[str] | None = None) -> int:
             )
             clock = (lambda d=args.scrape_date: d) if args.scrape_date else None
             fetched = fetch_documents(urls, fetcher, max_retries=args.max_retries, clock=clock)
+            # Count dead letters as the write job streams past them: a
+            # separate count() would re-run the whole fetch stage.
+            dead = Observation("ingest_dead_letters")
+            fetched = fetched.observe(
+                dead, F.count_if(F.col("error").isNotNull()).alias("n")
+            )
             raw = assemble_raw(fetched)
-            try:
-                existing = spark.read.parquet(args.out).select("uniq_id")
-            except Exception:
-                existing = spark.createDataFrame([], "uniq_id string")
-            write_append(dedup_new_keys(raw, existing), args.out)
-            n_dead = fetched.filter(F.col("error").isNotNull()).count()
+            write_append(dedup_new_keys(raw, _sink_keys(spark, args.out)), args.out)
+            n_dead = dead.get["n"]
             print(
                 f"ingest: sink now has {spark.read.parquet(args.out).count()} rows"
                 f" ({n_dead} dead-lettered fetches)"
@@ -111,25 +124,15 @@ def main(argv: list[str] | None = None) -> int:
 
             raw = spark.read.parquet(args.raw)
             site_map = csv_dimension(spark, args.dim)
-            try:
-                existing = spark.read.parquet(args.out).select("uniq_id")
-            except Exception:
-                existing = spark.createDataFrame([], "uniq_id string")
             if args.stream:
                 from .incremental import stream_pipeline
 
                 def body(batch, _eid):
-                    # Re-read the sink each epoch so later batches see keys the
-                    # earlier ones appended; if no batch has appended yet the
-                    # sink dir has no parquet footers — fall back to the empty
-                    # (or pre-existing) key set instead of crashing the stream.
-                    seen = existing
-                    if _eid > 0:
-                        try:
-                            seen = spark.read.parquet(args.out).select("uniq_id")
-                        except Exception:
-                            seen = existing
-                    out = run_batch(batch, site_map, seen)
+                    # Read the sink in every epoch, so each batch sees the
+                    # keys earlier batches and earlier runs appended (batch
+                    # ids persist in the checkpoint, so a read made before
+                    # the stream starts would serve only its first epoch).
+                    out = run_batch(batch, site_map, _sink_keys(spark, args.out))
                     write_append(to_compat(out), args.out)
 
                 sq = stream_pipeline(
@@ -138,7 +141,7 @@ def main(argv: list[str] | None = None) -> int:
                 )
                 sq.awaitTermination()
             else:
-                out = run_batch(raw, site_map, existing)
+                out = run_batch(raw, site_map, _sink_keys(spark, args.out))
                 write_append(to_compat(out), args.out)
             print(f"etl: sink now has {spark.read.parquet(args.out).count()} rows")
         elif args.cmd == "conform":

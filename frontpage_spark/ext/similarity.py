@@ -176,7 +176,10 @@ def cosine_pairs_blocked(
     # exactly when cores are scarce (interleaved sweep at sf0.1:
     # rep36 0.920 / rep32 0.906 / rep16 0.833 s); on a real cluster
     # where cores exceed 2x the block-pair count the cap is inactive
-    # and every block pair keeps its own task.
+    # and every block pair keeps its own task. The sweep predates the
+    # daemon's importer-cache clear (daemon_preload.py), which took
+    # ~0.27 s of zip re-reading off every forked task, so the fork cost
+    # it weighs is overstated: re-measure before retuning.
     n_pairs = n_blocks * (n_blocks + 1) // 2
     par = corpus.sparkSession.sparkContext.defaultParallelism
     bp = (

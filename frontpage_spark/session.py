@@ -191,7 +191,10 @@ def get_spark(app_name: str = "frontpage_spark", master: str | None = None) -> S
         # workers, while a forked child off the daemon is clean and
         # costs ~ms on Linux. Arrow-batched stages here are seconds
         # long, so per-task spawn amortizes to noise; flip this back on
-        # for sub-second micro-batch streaming workloads.
+        # for sub-second micro-batch streaming workloads. Both figures
+        # predate the daemon's importer-cache clear (daemon_preload.py),
+        # which took ~0.27 s of zip re-reading off every forked task:
+        # re-measure before trusting them either way.
         .config("spark.python.worker.reuse", "false")
         # Pre-import numpy/pandas/pyarrow in the worker daemon so every
         # forked worker inherits them copy-on-write (see

@@ -333,6 +333,44 @@ def test_daemon_preload_module_importable():
         assert lib in sys.modules
 
 
+def test_daemon_preload_leaves_no_zipimporters():
+    """Workers forked from the daemon inherit its sys.path_importer_cache,
+    and pyspark's worker main calls importlib.invalidate_caches() on
+    every task, which makes each cached zipimporter re-read its whole
+    archive. Run the daemon module the way Spark runs it, pyspark from
+    its zip, and require that no zipimporter survives the import; a
+    submodule it never preloaded must still import from the zip."""
+    import glob
+    import os
+    import subprocess
+    import sys
+
+    import pyspark
+
+    lib = os.path.join(os.path.dirname(pyspark.__file__), "python", "lib")
+    zips = [os.path.join(lib, "pyspark.zip"), *glob.glob(os.path.join(lib, "py4j-*.zip"))]
+    assert len(zips) == 2 and all(os.path.isfile(z) for z in zips), zips
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    probe = (
+        "import sys, zipimport\n"
+        "import frontpage_spark.daemon_preload\n"
+        "import pyspark\n"
+        "assert '.zip' in pyspark.__file__, pyspark.__file__\n"
+        "left = [k for k, v in sys.path_importer_cache.items()\n"
+        "        if isinstance(v, zipimport.zipimporter)]\n"
+        "assert not left, left\n"
+        "assert 'pyspark.ml.linalg' not in sys.modules\n"
+        "import pyspark.ml.linalg as m\n"
+        "assert '.zip' in m.__file__, m.__file__\n"
+    )
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join([*zips, repo]))
+    r = subprocess.run(
+        [sys.executable, "-c", probe], env=env, cwd=lib,
+        capture_output=True, text=True, timeout=120,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+
+
 def test_get_spark_exports_repo_on_pythonpath(monkeypatch):
     """get_spark must make the package importable for worker daemons
     (spark.python.daemon.module resolves in a fresh process using
