@@ -274,7 +274,7 @@ def bpe_train(
     # consumers (encode join) see the exact distributed result. A
     # multi-million-word vocab fails the probe and trains with the
     # distributed rounds below.
-    # Probe and collect FUSED into one job (r11): limit(N+1).collect()
+    # Probe and collect FUSED into one job (r11): limit(N+1) collected
     # is the gate probe AND, when under the gate, already the whole
     # vocab — the previous count-then-collect ran the (cached) word
     # aggregate twice, paying a second job's scheduling floor. Over the
@@ -286,7 +286,7 @@ def bpe_train(
     _SMALL_VOCAB = 100_000
     head = _take_wide(state.select("word", "wc"), _SMALL_VOCAB + 1)
     if len(head) <= _SMALL_VOCAB:
-        vocab = [(r["word"], r["wc"]) for r in head]
+        vocab = list(zip(head.column("word").to_pylist(), head.column("wc").to_pylist()))
         merges = _bpe_train_local(vocab, n_merges)
         expr = "st"
         for _, a, b in merges:

@@ -183,50 +183,22 @@ def pin(df: DataFrame) -> DataFrame:
         df.unpersist()
 
 
-_TAKE_WIDE_LOCK = threading.Lock()
+def take_wide(df: DataFrame, n: int):
+    """The first ``n`` rows of ``df`` as a ``pyarrow.Table``, scanning
+    every partition in ONE job.
 
-
-def take_wide(df: DataFrame, n: int) -> list:
-    """``df.limit(n).collect()`` that scans every partition in ONE job.
-
-    ``executeTake`` ramps incrementally (1 partition, then
-    ``spark.sql.limit.scaleUpFactor``x more per retry) — the right
-    trade when a head probably fits in the first partition, but a
-    size-GATE probe (limit(cap+1) over a table expected to be near or
-    under the cap) almost always exhausts the input, so the ramp just
-    pays 2-3 job-scheduling floors for the same scan (r11). Scoping
-    ``spark.sql.limit.initialNumPartitions`` to "all" turns the probe
-    into one parallel job; the conf is restored afterwards so ordinary
-    small limits elsewhere keep the incremental behavior. Driver
-    traffic stays bounded by ``n`` exactly as before.
-
-    The save/set/restore is serialized under a module lock (ADVICE
-    r11): without it an interleaved take_wide on the same session could
-    'restore' the temporary 2^20 value as the permanent one, and a
-    concurrent query's small limits would run under the wide setting.
-    Limits submitted by OTHER driver threads while a take_wide holds
-    the lock still see the session-global conf — callers running
-    concurrent query threads on one session should expect the wide
-    ramp for the duration (a performance nuance, never a correctness
-    one: initialNumPartitions only changes job granularity)."""
-    spark = df.sparkSession
-    key = "spark.sql.limit.initialNumPartitions"
-    with _TAKE_WIDE_LOCK:
-        try:
-            old = spark.conf.get(key)
-        except Exception:
-            old = None
-        spark.conf.set(key, str(1 << 20))
-        try:
-            return df.limit(n).collect()
-        finally:
-            if old is None:
-                try:
-                    spark.conf.unset(key)
-                except Exception:
-                    pass
-            else:
-                spark.conf.set(key, old)
+    ``df.limit(n).collect()`` runs ``executeTake``, which ramps
+    incrementally (1 partition, then ``spark.sql.limit.scaleUpFactor``x
+    more per retry) — the right trade when a head probably fits in the
+    first partition, but a size-GATE probe (limit(cap+1) over a table
+    expected to be near or under the cap) almost always exhausts the
+    input, so the ramp pays 2-3 job-scheduling floors for the same
+    scan. ``toArrow`` runs ``CollectLimitExec.execute()`` instead: a
+    per-partition local limit over all partitions, then one
+    single-partition global limit, all in one job. No conf is touched,
+    so concurrent queries on the session are unaffected. Driver
+    traffic stays bounded by ``n``."""
+    return df.limit(n).toArrow()
 
 
 def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:

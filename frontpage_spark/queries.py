@@ -83,11 +83,9 @@ def register(name: str, oracle: str | None = None):
 
         @functools.wraps(fn)
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # tune BEFORE build and hit alike: fixture-based queries
-            # never touch _t()/tune themselves, so without this a first
-            # call would run under whatever profile the previous query
-            # left while cached calls get the tuned one — same query,
-            # two conf profiles
+            # the engine's one per-query conf write, BEFORE build and
+            # hit alike: builds never tune, so a query runs under its
+            # sf_dir's profile whether or not its plan was cached
             tune(spark, sf_dir)
             cache = session_cache(spark)
             key = ("plan", sf_dir, name)
@@ -126,11 +124,6 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark, sf_dir)
-    return load_table(spark, sf_dir, name)
-
-
 def _tw(spark: SparkSession, sf_dir: str, name: str, min_parts: int | None = None) -> DataFrame:
     """Scan + ``plans.fan_out`` — for queries whose narrow per-row CPU
     (regex/md5/Arrow) dominates: the local single-row-group files scan
@@ -145,7 +138,7 @@ def _tw(spark: SparkSession, sf_dir: str, name: str, min_parts: int | None = Non
     1.7 s vs 8-way = 0.65 s for the same result at sf0.1. On real
     multi-MB payloads per-row cost dominates instead and the scan is
     already wide, making fan_out a no-op either way."""
-    return plans.fan_out(_t(spark, sf_dir, name), min_parts)
+    return plans.fan_out(load_table(spark, sf_dir, name), min_parts)
 
 
 # --------------------------------------------------------------------------
@@ -219,7 +212,7 @@ SHINGLES_SQL = (
 )
 def phone_mine_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F6 (etl_process.py:79-126) as a native column chain → explode → agg."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     mined = cust.select(
         "c_mktsegment", F.explode(FF.phone_candidates(_corpus_col())).alias("phone")
     )
@@ -255,7 +248,6 @@ _PHONE_VALUES_SQL = ", ".join(f"({i}, '{_sq(s)}')" for i, s in _PHONE_ROWS)
 def phone_extract_literals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F6 golden edge cases: spelled-out digits, $ separation, 7..11 length
     bounds, dedup, zero-match rows (etl_process.py:84-121)."""
-    tune(spark)
     df = spark.createDataFrame(_PHONE_ROWS, ["id", "s"])
     return df.select(
         F.col("id").cast("long").alias("id"), FF.phone_extract("s").alias("phone")
@@ -290,8 +282,8 @@ URL_SQL = (
 )
 def url_parse_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1/F2/F3 (etl_process.py:42-65) over synthesized ad URLs."""
-    cust = _t(spark, sf_dir, "customer")
-    nat = _t(spark, sf_dir, "nation")
+    cust = load_table(spark, sf_dir, "customer")
+    nat = load_table(spark, sf_dir, "nation")
     url = F.concat(
         F.lit("http://"),
         F.lower(F.regexp_replace("n_name", " ", "")),
@@ -351,8 +343,8 @@ def frontier_politeness_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions by host, so the shuffle key is the politeness domain
     itself — exactly how a distributed frontier shards; no global
     sort, no driver state."""
-    cust = _t(spark, sf_dir, "customer")
-    nat = _t(spark, sf_dir, "nation")
+    cust = load_table(spark, sf_dir, "customer")
+    nat = load_table(spark, sf_dir, "nation")
     u = cust.join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey).select(
         F.lower(F.regexp_replace("n_name", " ", "")).alias("host"),
         F.lower(F.col("c_mktsegment")).alias("category"),
@@ -388,7 +380,7 @@ def frontier_politeness_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def composite_uniq_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F12 (scraper.py:105-119): concat_ws composite key + uniqueness profile."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     uid = FF.uniq_id(
         FF.format_ts("o_orderdate"),
         F.col("o_orderkey").cast("string"),
@@ -417,7 +409,7 @@ def composite_uniq_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ts_roundtrip_verbose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F4 (etl_process.py:28-39): '%A, %B %d, %Y %I:%M %p' parse →
     '%Y-%m-%d %H:%M:%S' reformat, round-tripped through formatting."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     v = F.date_format("ts", FF.VERBOSE_DATE_FMT_SPARK)
     out = ev.select("event_id", v.alias("v"))
     return out.select(
@@ -439,7 +431,7 @@ def ts_roundtrip_verbose(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def json_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F16 (etl_process.py:305): JSONB-style dynamic field access."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     k = FF.json_get("props", "k").cast("int")
     return (
         ev.select("event_type", k.alias("k"))
@@ -463,8 +455,8 @@ def json_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def cities_x_categories(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1 (scraper.py:163-166): the cities × categories crawl matrix."""
-    region = _t(spark, sf_dir, "region")
-    nation = _t(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
+    nation = load_table(spark, sf_dir, "nation")
     return region.crossJoin(nation).select(
         "r_name",
         "n_name",
@@ -494,9 +486,9 @@ def cities_x_categories(spark: SparkSession, sf_dir: str) -> DataFrame:
 def enrich_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2 (etl_process.py:320-323): small-dimension broadcast enrichment —
     the site_map lookup as an inner broadcast hash join."""
-    cust = _t(spark, sf_dir, "customer")
-    nat = F.broadcast(_t(spark, sf_dir, "nation"))
-    reg = F.broadcast(_t(spark, sf_dir, "region"))
+    cust = load_table(spark, sf_dir, "customer")
+    nat = F.broadcast(load_table(spark, sf_dir, "nation"))
+    reg = F.broadcast(load_table(spark, sf_dir, "region"))
     return (
         cust.join(nat, cust.c_nationkey == nat.n_nationkey)
         .join(reg, nat.n_regionkey == reg.r_regionkey)
@@ -522,8 +514,8 @@ def enrich_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3 (etl_process.py:297-301): NULL-safe left_anti in place of NOT IN."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     return cust.join(
         orders.select(F.col("o_custkey").alias("c_custkey")), "c_custkey", "left_anti"
     ).select("c_custkey", "c_name")
@@ -541,8 +533,8 @@ def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def customers_with_orders_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J5: rows already loaded — the complement of the delta scan."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         cust.join(orders.select(F.col("o_custkey").alias("c_custkey")), "c_custkey", "left_semi")
         .groupBy("c_mktsegment")
@@ -562,8 +554,8 @@ def customers_with_orders_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def conform_referential(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4 (etl_process.py:238-241): clean↔raw referential profile."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
     joined = li.join(orders, li.l_orderkey == orders.o_orderkey, "left")
     return joined.agg(
         F.count("*").alias("n_lineitem"),
@@ -585,7 +577,7 @@ def conform_referential(spark: SparkSession, sf_dir: str) -> DataFrame:
 def conform_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P3 (etl_process.py:230-235): global-min scalar subquery as a
     broadcast of one row."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     m = ev.filter(F.col("event_type") == "signup").agg(F.min("ts").alias("__m"))
     return (
         ev.crossJoin(F.broadcast(m))
@@ -609,7 +601,7 @@ def conform_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def global_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 (etl_process.py:234-235): global aggregates."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return ev.agg(
         F.count("*").alias("n"),
         FF.format_ts(F.min("ts")).alias("min_ts"),
@@ -653,7 +645,7 @@ def group_counts_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     Java rounds the shortest decimal repr, DuckDB multiplies-and-rounds,
     and 4-decimal products routinely land on the midpoints where those
     two disagree)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     pre = li.select(
         "l_returnflag",
         "l_linestatus",
@@ -694,7 +686,7 @@ def topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5 (etl_process.py:301): LIMIT, made deterministic with a total
     order (unique-key tiebreak). Spark executes as TakeOrdered — no full
     sort shuffle."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
         .limit(50)
@@ -709,7 +701,7 @@ def topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def distinct_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2 (scraper.py:159-160): relational distinct."""
-    return _t(spark, sf_dir, "lineitem").select("l_returnflag", "l_linestatus").distinct()
+    return load_table(spark, sf_dir, "lineitem").select("l_returnflag", "l_linestatus").distinct()
 
 
 # ---- F14/S6: param normalization -----------------------------------------
@@ -722,7 +714,7 @@ def distinct_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
 def param_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F14/S6 (scraper.py:159-160): set(line.lower().strip())."""
     return (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .select(FF.normalize_param("p_type").alias("param"))
         .distinct()
     )
@@ -748,7 +740,7 @@ def incremental_delta_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows are simulated as event_id % 3 <> 0."""
     from .incremental import delta_scan
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     processed = ev.filter(F.col("event_id") % 3 != 0).select(F.col("event_id"))
     batch = delta_scan(ev, processed, key="event_id", batch_size=None)
     batch = batch.filter(F.col("event_type") != "error")
@@ -783,7 +775,7 @@ def stateful_type_counts_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     never global) computes the same recurrence the state store folds.
     Keys are subsampled (user_id % 29) to keep the emission table
     driver-hashable; the streaming pytest covers the full keyspace."""
-    ev = _t(spark, sf_dir, "events").filter(F.col("user_id") % 29 == 0)
+    ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") % 29 == 0)
     per_day = ev.groupBy(
         "user_id", "event_type", F.to_date("ts").alias("d")
     ).agg(F.count(F.lit(1)).alias("c"))
@@ -822,8 +814,8 @@ def stateful_type_counts_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 def clean_projection_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P1 (etl_process.py:203-224): the clean-record projection, URL-derived
     subset, with the NULL→'' compat boundary on a failing extractor."""
-    cust = _t(spark, sf_dir, "customer")
-    nat = _t(spark, sf_dir, "nation")
+    cust = load_table(spark, sf_dir, "customer")
+    nat = load_table(spark, sf_dir, "nation")
     url = F.concat(
         F.lit("http://"),
         F.lower(F.regexp_replace("n_name", " ", "")),
@@ -868,7 +860,7 @@ def clean_projection_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact (hash) dedup profile per source."""
-    return dedup.exact_dup_stats(_t(spark, sf_dir, "documents"))
+    return dedup.exact_dup_stats(load_table(spark, sf_dir, "documents"))
 
 
 # ---- MinHash + LSH banding -----------------------------------------------
@@ -915,7 +907,7 @@ def stream_near_dup_batch_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .ext.dedup import minhash_signatures
     from .incremental import near_dup_batch_dups
 
-    docs = plans.fan_out(_t(spark, sf_dir, "documents").select("doc_id", "source", "text"))
+    docs = plans.fan_out(load_table(spark, sf_dir, "documents").select("doc_id", "source", "text"))
     batch_docs = docs.filter(F.col("doc_id") % 2 == 1)
     hist_docs = docs.filter(F.col("doc_id") % 2 == 0)
     sigs = minhash_signatures(batch_docs.select("doc_id", "text"))
@@ -961,7 +953,7 @@ def stream_near_dup_tiebreak_core(spark: SparkSession, sf_dir: str) -> DataFrame
     from .ext.dedup import minhash_signatures
     from .incremental import near_dup_batch_dups
 
-    docs = plans.fan_out(_t(spark, sf_dir, "documents").select("doc_id", "source", "text"))
+    docs = plans.fan_out(load_table(spark, sf_dir, "documents").select("doc_id", "source", "text"))
     batch_docs = docs.filter(F.col("doc_id") % 2 == 1)
     hist_docs = docs.filter(F.col("doc_id") % 2 == 0)
 
@@ -1051,7 +1043,7 @@ def incremental_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys, lifted to near-dup signatures. Flagged docs route to the
     pairwise verify (`near_dup_verified`) when exact Jaccard evidence
     is needed."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sigs = dedup.minhash_signatures(docs)
     new_sigs = sigs.filter(F.col("doc_id") % 10 == 0)
     hist = sigs.filter(F.col("doc_id") % 10 != 0).select("band", "minhash").distinct()
@@ -1126,7 +1118,7 @@ def simhash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard on a 1-in-50 doc sample (inverted-index join).
     Exact double division — no float accumulation."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 50 == 0)
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 50 == 0)
     return dedup.jaccard_pairs(docs, threshold=0.2)
 
 
@@ -1169,7 +1161,7 @@ def embedding_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     dot products → partition-order-deterministic; the final sqrt/divide
     is engine-dependent in the last ULP, so the OUTPUT cosine is rounded
     to 12 decimals (rank is computed on the unrounded value)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     out = similarity.cosine_topk(emb, emb.filter(F.col("vec_id") < 3), k=10)
     return out.select(
         "qid", "cid", F.round("cosine", 12).alias("cosine"), F.col("rank").cast("long").alias("rank")
@@ -1222,7 +1214,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (500/500/2000 rows) sits under the gate, so this oracle stays the
     exact all-pairs mirror; the gated branch is exercised by the 20x
     scale probe and `tests/test_ext.py::test_embedding_near_dup_gate`."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     over_gate = _table_rows_meta(sf_dir, "embeddings") > _EMB_EXACT_GATE
     if over_gate:
         pairs = similarity.lsh_near_dup_pairs(emb, threshold=-1.0).withColumn(
@@ -1351,7 +1343,7 @@ def embedding_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominate (exact duplicates collide in every band — recall 1.0 for
     the dedup case; recall near the 0.45 boundary is partial, the
     standard LSH trade)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return similarity.lsh_near_dup_pairs(emb, threshold=0.45)
 
 
@@ -1406,7 +1398,7 @@ def semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     `embedding_near_dup_lsh` uses and verify exactly.) Cosines round to
     12 digits BEFORE thresholding on both engines, sequential-fold dot
     products, so the DuckDB mirror is hash-exact."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     ev = emb.filter(F.col("vec_id") % 97 == 0).select(
         F.col("vec_id").alias("b"), F.col("embedding").alias("eb"),
         similarity._norm2("embedding").alias("nb"),
@@ -1487,8 +1479,8 @@ def rolling_hash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 def topn_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window-function extension: top-3 orders per market segment
     (partitioned row_number with a deterministic tiebreak)."""
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
     joined = orders.join(cust, orders.o_custkey == cust.c_custkey).select(
         "c_mktsegment", "o_orderkey", "o_totalprice"
     )
@@ -1522,7 +1514,7 @@ def topn_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 def set_ops_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set-operation extension: INTERSECT / EXCEPT cohorts of customers
     by order status."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     f_keys = orders.filter(F.col("o_orderstatus") == "F").select("o_custkey").distinct()
     o_keys = orders.filter(F.col("o_orderstatus") == "O").select("o_custkey").distinct()
     both = f_keys.intersect(o_keys).agg(F.count("*").alias("n")).select(
@@ -1551,8 +1543,8 @@ def salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the PLAIN join — salting must be result-invariant."""
     from .plans import salted_join
 
-    cust = _t(spark, sf_dir, "customer")
-    nat = _t(spark, sf_dir, "nation").select(
+    cust = load_table(spark, sf_dir, "customer")
+    nat = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("c_nationkey"), "n_name"
     )
     joined = salted_join(cust, nat, "c_nationkey", n_salt=8)
@@ -1587,7 +1579,7 @@ def salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_quality_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring rollup per language (repetition ratio, lengths)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     prof = textstats.quality_profile(docs)
     return prof.select(
         "lang",
@@ -1674,7 +1666,7 @@ def char_entropy_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def token_counts_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace + BPE-ish token counting per source."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return docs.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum(textstats.ws_token_count("text")).alias("sum_ws_tokens"),
@@ -1772,7 +1764,7 @@ def asof_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     is DuckDB's native ASOF LEFT JOIN."""
     from .ext.temporal import asof_join
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     left = ev.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
     right = (
         ev.filter(F.col("event_type") == "purchase")
@@ -1816,7 +1808,7 @@ def percentiles_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge), so widening the map side parallelizes it (no-op on a
     production multi-split table)."""
     orders = plans.fan_out(
-        _t(spark, sf_dir, "orders").select("o_orderstatus", "o_totalprice")
+        load_table(spark, sf_dir, "orders").select("o_orderstatus", "o_totalprice")
     )
     return orders.groupBy("o_orderstatus").agg(
         F.count("*").alias("n"),
@@ -1846,7 +1838,7 @@ def percentiles_by_status_windowed(spark: SparkSession, sf_dir: str) -> DataFram
     and an ordinary aggregation. Same interpolation formula, same
     oracle; the float sum is exact because all non-flanking
     contributions are literal 0.0 (adding 0.0 introduces no rounding)."""
-    orders = _t(spark, sf_dir, "orders").select("o_orderstatus", "o_totalprice")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderstatus", "o_totalprice")
     w = Window.partitionBy("o_orderstatus").orderBy("o_totalprice")
     ranked = orders.select(
         "o_orderstatus",
@@ -1888,7 +1880,7 @@ def percentiles_by_status_windowed(spark: SparkSession, sf_dir: str) -> DataFram
 def pivot_status_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot: order counts per (year × status), statuses as columns.
     Fixed pivot-value list keeps the schema deterministic."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     out = (
         orders.select(F.year("o_orderdate").cast("long").alias("order_year"), "o_orderstatus")
         .groupBy("order_year")
@@ -1940,7 +1932,7 @@ _SESSIONIZE_USERS_SQL = """
 def _sessionize_users_agg(spark: SparkSession, sf_dir: str, plan) -> DataFrame:
     from .incremental import sessionize
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     s = sessionize(ev, gap_seconds=1800, plan=plan)
     per_session = s.groupBy("user_id", "session_idx").agg(
         F.count("*").alias("session_len")
@@ -1990,7 +1982,7 @@ def tumbling_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST6: 10-minute tumbling-window aggregation (epoch-aligned window id
     so the result is engine-portable; the streaming form uses
     incremental.windowed_counts with window()/watermark)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(
             F.expr("unix_timestamp(ts) div 600").alias("window_id"), "event_type"
@@ -2018,7 +2010,7 @@ def tumbling_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rollup_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouping-sets extension: ROLLUP totals (not in the reference — free
     from Catalyst)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.rollup("l_returnflag", "l_linestatus")
         .agg(
@@ -2088,7 +2080,6 @@ def html_extraction_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pipeline applies per partition at any scale."""
     from .html import extract_fields
 
-    tune(spark)
     corpus = spark.read.parquet(_HTML_CORPUS)
     golden = spark.read.parquet(_HTML_GOLDEN)
     ext = corpus.select("k", extract_fields("html").alias("e")).select(
@@ -2176,7 +2167,7 @@ def clean_derivation_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
     one scan — no shuffle."""
     from .pipeline import derive_clean, to_compat
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     url = F.concat(
         F.lit("http://"),
         F.col("source"),
@@ -2305,7 +2296,6 @@ def html_clean_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds the gate, not the operator."""
     from .pipeline import clean_projection, enrich, to_compat
 
-    tune(spark)
     corpus = spark.read.parquet(_HTML_CORPUS)
     uniq = F.concat(F.lit("u"), F.col("k").cast("string"))
     url = F.concat(
@@ -2419,7 +2409,7 @@ def embedding_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall bound itself is checked by `ann_recall_eval`). Output cosine
     rounded to 12 decimals (sqrt/divide last-ULP), rank on the
     unrounded value, exactly the `embedding_topk_cosine` convention."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     out = similarity.lsh_topk(emb, emb.filter(F.col("vec_id") < 3), k=10, planes=4)
     return out.select(
         "qid",
@@ -2489,7 +2479,7 @@ def embedding_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell join are fixed functions of the data, so DuckDB replays the
     retrieval exactly (graduated from rows-only in round 8). Output
     cosine rounded to 12 decimals, rank on the unrounded value."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     out = similarity.ivf_topk(emb, emb.filter(F.col("vec_id") < 3), k=10)
     return out.select(
         "qid",
@@ -2616,7 +2606,7 @@ def range_join_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEJoin runs the same predicate natively as the oracle."""
     from .ext.temporal import range_join_banded
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", F.col("event_id").alias("p_id"), F.col("ts").alias("p_ts")
     )
@@ -2652,7 +2642,7 @@ def hash_sample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus. Narrow filter, no shuffle before the aggregate."""
     from .ext.sampling import hash_sample
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     s = hash_sample(orders, "o_orderkey", _HS_RATE, _HS_DIGITS)
     return s.agg(
         F.count("*").alias("n_sampled"),
@@ -2682,7 +2672,7 @@ def stratified_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     One shuffle (window on the stratum key)."""
     from .ext.sampling import stratified_sample
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return stratified_sample(docs, "source", "doc_id", 5).select("doc_id", "source")
 
 
@@ -2712,7 +2702,7 @@ def quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     (floor; float32->double exact), so fully oracle-checkable; codes
     cross the boundary as CSV strings to sidestep array-dtype repr
     differences between engines."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     q = similarity.quantize_int8(emb)
     return q.select(
         "vec_id",
@@ -2735,7 +2725,7 @@ def cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE grouping sets: all 4 aggregation granularities of
     (status, year) in one pass — Spark expands grouping sets before the
     shuffle, so partial aggregation still applies at scale."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.withColumn("o_year", F.year("o_orderdate"))
         .cube("o_orderstatus", "o_year")
@@ -2763,7 +2753,7 @@ def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DuckDB oracle asserts as literal TRUE alongside the exact
     counts. A sketch drifting past its rsd bound now fails the
     differential gate, not just a pytest."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.count_distinct("user_id").alias("exact_users"),
         (
@@ -2874,9 +2864,9 @@ def revenue_topn_q3ish(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject (no global sort). At 100 TB the orders join
     shuffles on orderkey while customer stays broadcast-sized per AQE.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     pre = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -2932,11 +2922,11 @@ def regional_revenue_q5ish(spark: SparkSession, sf_dir: str) -> DataFrame:
     where the customer side of an ASIA filter is billions of rows and
     neither side is broadcastable. Nation totals are then sums of
     per-customer sums. Integer-cents arithmetic throughout."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region")
     dim = (
         c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .join(F.broadcast(r.filter(F.col("r_name") == "ASIA")), F.col("n_regionkey") == r.r_regionkey)
@@ -2994,7 +2984,7 @@ def quality_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same scan — one job, no per-stage re-scan, map-side partial agg.
     This is how you audit a filter cascade over 100 TB without running
     the corpus N times."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     m = docs.select(
         F.size(toks).alias("n_tok"),
@@ -3039,7 +3029,7 @@ def gap_fill_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast), exploded, and LEFT-joined against the per-day counts so
     silent days surface as zeros. The spine side is O(days) — trivially
     broadcast — so the only real work is the one groupBy over events."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.to_date("ts").alias("day")).agg(F.count("*").alias("n"))
     bounds = ev.agg(
         F.min(F.to_date("ts")).alias("d0"), F.max(F.to_date("ts")).alias("d1")
@@ -3080,7 +3070,7 @@ def mom_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     window side is trivially small after aggregation, so the single
     unpartitioned sort is safe at any SF (the heavy lifting happened in
     the map-side-combined groupBy)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     monthly = o.groupBy(F.date_format("o_orderdate", "yyyy-MM").alias("month")).agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev_c")
     )
@@ -3186,7 +3176,7 @@ def kmeans_assign_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     The per-pair cosine is rounded to 12 decimals and summed as exact
     integer picos before the mean so the cross-engine float-sum order
     cannot flip the output."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     cents = (
         emb.orderBy("vec_id")
         .limit(8)
@@ -3251,7 +3241,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate-sized. The tfidf product is one ln + one multiply
     (IEEE-deterministic), rounded before ranking so cross-engine ties
     cannot reorder; ties break on the term itself."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "source", F.explode(F.split(F.lower(F.col("text")), " ")).alias("term")
     ).filter(F.col("term") != "")
@@ -3343,7 +3333,7 @@ def sliding_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     before one keyed aggregation; same shape streaming with a watermark.
     (The oracle expands the 3 memberships with a generate_series
     lateral; window START is the comparison key.)"""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(
             F.window("ts", "15 minutes", "5 minutes").alias("w"), "event_type"
@@ -3382,7 +3372,7 @@ def locf_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine fills silent days with the previous day's value. The window
     runs over the tiny post-aggregation series (days), never the raw
     events. Daily sums accumulate in exact integer micros."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.filter(F.col("event_type") == "purchase")
         .groupBy(F.to_date("ts").alias("day"))
@@ -3422,7 +3412,7 @@ def order_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation (map-side combined; bucket count is bounded so the
     shuffle carries ~one row per bucket per task). min/max per bucket
     are single-expression comparisons — order-independent."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.groupBy(F.floor(F.col("o_totalprice") / 50000).cast("long").alias("bucket"))
         .agg(
@@ -3464,7 +3454,7 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the expected booleans and recomputes n_queries from the table; a
     broken index (recall collapse) or a lost query row flips the hash.
     Tighter per-configuration CIs live in the recall-gate pytest."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
     exact = similarity.cosine_topk(emb, q, k=10).select("qid", "cid")
     k = 10
@@ -3552,7 +3542,7 @@ def token_frequency_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined; the second input is already sketch-sized (distinct
     tokens). The standard corpus-health audit before vocab/BPE
     training."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         F.explode(F.split(F.lower(F.col("text")), " ")).alias("term")
     ).filter(F.col("term") != "")
@@ -3596,7 +3586,7 @@ def repetition_ratio_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer ppm (one division, rounded once), then summed per
     source so cross-engine float accumulation can't drift. Narrow
     per-row array ops + one keyed agg."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     t = F.split(F.lower(F.col("text")), " ")
     n = F.size(t)
     grams = F.when(
@@ -3719,68 +3709,25 @@ def _dup_component_labels(
     return _component_fixpoint(pairs, small_rows=small_rows)
 
 
-# Pair graphs at or below this row count take the single-job local
-# union-find (`_components_local`); above it, the star-contraction loop
-# runs on natural partitioning so no single-task serialization point
-# exists at scale.
+# Pair graphs at or below this row count take the driver union-find
+# over the gate probe's own rows (`_components_from_rows`); above it,
+# the star-contraction loop runs on natural partitioning so no
+# single-task serialization point exists at scale.
 _SMALL_PAIR_GRAPH_ROWS = 100_000
 
 
-def _components_local(pairs: DataFrame) -> DataFrame:
-    """Single-pass union-find over a SMALL pair graph coalesced to one
-    partition — the size-gated fast path of ``_component_fixpoint``
-    (same pattern as the BPE trainer's local path: executor-side, not
-    a driver collect; the distributed star-contraction loop remains
-    the over-gate route). Union-by-min + path compression, so every
-    component's root IS its min id — byte-identical labels to the
-    fixpoint. One Spark job instead of 4-6 jobs x O(log^2 n) rounds."""
-    id_type = pairs.schema["a"].dataType.simpleString()
-
-    def uf(batches):
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:
-                parent[x], x = r, parent[x]
-            return r
-
-        ea: list = []
-        eb: list = []
-        for pdf in batches:
-            ea.extend(pdf["a"].tolist())
-            eb.extend(pdf["b"].tolist())
-        for x in ea:
-            parent.setdefault(x, x)
-        for x in eb:
-            parent.setdefault(x, x)
-        for x, y in zip(ea, eb):
-            rx, ry = find(x), find(y)
-            if rx != ry:
-                if ry < rx:
-                    rx, ry = ry, rx
-                parent[ry] = rx
-        ids = list(parent)
-        yield pd.DataFrame({"id": ids, "comp": [find(x) for x in ids]})
-
-    return pairs.coalesce(1).mapInPandas(uf, schema=f"id {id_type}, comp {id_type}")
-
-
-def _components_from_rows(spark: SparkSession, rows: list, id_type: str) -> DataFrame:
-    """Union-find over an already-collected (gate-bounded) pair list —
-    the fused fast path of ``_component_fixpoint`` (r12): the gate
-    probe's collect IS the component input, so the probe job and the
-    component pass are ONE action instead of probe + a second
-    (coalesce(1) + Python-worker) job whose task replays the same
-    union-find executor-side. Labels return as a LOCAL relation:
-    downstream consumers (groupBy / broadcast join) read it without
-    re-touching the pair lineage at all. Same union-by-min + path
-    compression as ``_components_local`` — byte-identical labels.
+def _components_from_rows(spark: SparkSession, head, id_type: str) -> DataFrame:
+    """Union-find over an already-collected (gate-bounded) pair table
+    (``head``, the ``pyarrow.Table`` the gate probe returned) — the
+    fast path of ``_component_fixpoint``: the probe's collect IS the
+    component input, so probe and component pass are ONE action.
+    Labels return as a LOCAL relation: downstream consumers (groupBy /
+    broadcast join) read it without re-touching the pair lineage at
+    all. Union-by-min + path compression, so every component's root IS
+    its min id — byte-identical labels to the distributed fixpoint.
     Driver traffic is bounded by the gate (≤ _SMALL_PAIR_GRAPH_ROWS
-    pair rows — the same bytes the old count probe already scanned,
-    now returned instead of discarded)."""
+    pair rows — the same bytes a count probe would scan, returned
+    instead of discarded)."""
     parent: dict = {}
 
     def find(x):
@@ -3791,8 +3738,7 @@ def _components_from_rows(spark: SparkSession, rows: list, id_type: str) -> Data
             parent[x], x = r, parent[x]
         return r
 
-    for row in rows:
-        a, b = row["a"], row["b"]
+    for a, b in zip(head.column("a").to_pylist(), head.column("b").to_pylist()):
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
@@ -3830,9 +3776,10 @@ def _component_fixpoint(
     something strictly smaller).
 
     Size-gated: the common case — near-dups are rare, the pair graph
-    is thousands of rows — takes ``_components_local`` (one
-    single-partition union-find job, identical labels); a huge pair
-    graph runs this loop on its natural partitioning end to end."""
+    is thousands of rows — takes ``_components_from_rows`` (union-find
+    on the driver over the gate probe's rows, identical labels, no
+    job beyond the probe); a huge pair graph runs this loop on its
+    natural partitioning end to end."""
     # Eager plans.pin (RELIABLE checkpoint), not persist and not
     # localCheckpoint: every round's result is MATERIALIZED and its
     # lineage cut, so round N can never replay rounds 1..N-1 — with
@@ -3854,8 +3801,8 @@ def _component_fixpoint(
     # pin()s the oriented edge list it iterates on.
     pairs = plans.keep(pairs)
     # r12 (VERDICT r11 item 2): the gate probe CHANGED from
-    # limit(cap+1).count() to take_wide (limit(cap+1).collect(), one
-    # parallel job): the probe already had to execute the pair
+    # limit(cap+1).count() to take_wide (limit(cap+1) collected as one
+    # parallel Arrow job): the probe already had to execute the pair
     # discovery — returning the gate-bounded rows instead of a count
     # lets the under-gate union-find run on the DRIVER over the rows
     # the probe just paid for, fusing probe + component pass into one
@@ -3983,7 +3930,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries one struct per cluster while a window would sort every
     member. Labels join to documents on the (tiny) clustered subset."""
     labels = _dup_component_labels(spark, sf_dir)
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     member = labels.join(docs, labels.id == docs.doc_id).select(
         F.col("comp").alias("cluster_id"), "doc_id", "n_chars"
     )
@@ -4031,7 +3978,7 @@ def session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines emit the same (user, sess) keys. (Same operator works on a
     stream with a watermark — this is the batch twin of streaming
     sessionization.)"""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     sw = (
         ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(
@@ -4074,7 +4021,7 @@ def order_price_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     to 128-bit, so the decimal mirror is also what keeps both engines
     identical). The float division happens ONCE per group at the end —
     F.variance's float running sums are partition-order-dependent."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     c = o.select(
         "o_orderstatus",
         F.round(F.col("o_totalprice") * 100).cast("decimal(38,0)").alias("p"),
@@ -4113,7 +4060,7 @@ def latest_order_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     under ties is undefined. One map-side-combinable aggregation — no
     window shuffle-and-sort over the whole fact table, which is the
     difference between one exchange and a full sort at 100 TB."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_custkey") < 100)
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_custkey") < 100)
     best = o.groupBy("o_custkey").agg(
         F.max(F.struct("o_orderdate", "o_orderkey", "o_totalprice")).alias("b")
     )
@@ -4144,7 +4091,7 @@ def sources_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar string so the result is hashable by any downstream
     canonicalizer (pandas sort_values dies on list cells) — same
     information, flat schema."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return docs.groupBy("lang").agg(
         F.array_join(F.sort_array(F.collect_set("source")), ";").alias("sources"),
         F.countDistinct("source").alias("n_sources"),
@@ -4168,7 +4115,7 @@ def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange, partial aggregation per set — the cheap way to get
     several marginal rollups of a 100 TB fact table when the full cube
     is 2^k times more groups than anyone reads."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     pre = o.select(
         "o_orderstatus",
         "o_orderpriority",
@@ -4204,7 +4151,7 @@ def unpivot_status_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     id/value mapping were wrong, the round trip would not reproduce it.
     Zero-count cells (NULL after pivot) are dropped like UNPIVOT
     drops NULLs."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     wide = (
         o.filter(F.col("o_orderstatus").isin("F", "O", "P"))
         .groupBy(F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias("month"))
@@ -4251,7 +4198,7 @@ def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out = ceil(tokens/stride)) over one scan; no Python, no
     shuffle. Chunk text re-joins the token slice so downstream
     operators see real strings."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     starts = F.sequence(
         F.lit(0), F.greatest(F.size(toks) - 33, F.lit(0)), F.lit(96)
@@ -4295,7 +4242,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact packing is inherently sequential; cumsum binning is one
     window per source partition and reproduces identically at any
     parallelism). Output: docs and tokens per (source, bin)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
         "source", "doc_id", F.size(F.split(F.col("text"), " ")).alias("n_tok")
     )
@@ -4336,7 +4283,7 @@ def oov_rate_topk_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     fall outside it — the go/no-go audit before committing a tokenizer
     vocab. Token table persists for its two uses; the vocab side is
     ~K rows, broadcast back. One division at the end."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     tok = plans.keep(
         docs.select(F.explode(F.split(F.lower(F.col("text")), " ")).alias("term"))
         .filter(F.col("term") != "")
@@ -4384,7 +4331,7 @@ def source_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     size-dampening exponent family), normalized over all sources. One
     keyed agg; the normalization window runs over #sources rows. The
     pow/div are single float expressions on aggregated exact counts."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     s = docs.groupBy("source").agg(
         F.sum(F.size(F.split(F.col("text"), " "))).cast("long").alias("n_tok"),
         F.count("*").alias("n_docs"),
@@ -4496,7 +4443,7 @@ def rolling_7d_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     span them). The window runs over the post-aggregation daily series
     (~2.4k rows), never the fact table; sums stay in integer cents
     inside the frame."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev_c")
     )
@@ -4537,7 +4484,7 @@ def conversion_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-stage funnel as self-joins is three shuffles of the fact table;
     this is one), then the strict ordering is checked on the tiny
     per-user row."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     first = lambda t: F.min(F.when(F.col("event_type") == t, F.col("ts")))  # noqa: E731
     f = ev.groupBy("user_id").agg(
         first("view").alias("t_view"),
@@ -4595,7 +4542,7 @@ def boilerplate_token_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``textstats.max_df_prune``). Output is per-doc token counts plus an
     md5 of the cleaned text so the differential check covers the full
     reassembled string."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     pruned = textstats.max_df_prune(docs, "text", max_df_millis=775)
     return pruned.select(
         "doc_id",
@@ -4638,7 +4585,7 @@ def zorder_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow codegen'd integer ops per row — negligible against the scan
     that feeds it; the layout write it powers is ``plans.
     write_zordered`` (file-skipping asserted in test_plans)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     base = o.select(
         (F.col("o_custkey") % 1024).alias("x"),
         (F.unix_date(F.to_date("o_orderdate")) % 1024).alias("y"),
@@ -4686,7 +4633,7 @@ def merge_upsert_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     key shuffle; balances stay in integer cents through the sum."""
     from .pipeline import merge_upsert
 
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     bal_c = F.round(F.col("c_acctbal") * 100).cast("long")
     tgt = c.select("c_custkey", "c_nationkey", bal_c.alias("bal_c"))
     upd = c.filter(F.col("c_custkey") % 10 == 0).select(
@@ -4725,7 +4672,7 @@ def approx_percentiles_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``p50/p95_within_1pct`` — abs(sketch − exact) ≤ 1% · exact — which
     the DuckDB oracle asserts as literal TRUE next to its own exact
     percentile_cont."""
-    o = plans.fan_out(_t(spark, sf_dir, "orders").select("o_orderstatus", "o_totalprice"))
+    o = plans.fan_out(load_table(spark, sf_dir, "orders").select("o_orderstatus", "o_totalprice"))
     agg = o.groupBy("o_orderstatus").agg(
         F.approx_percentile("o_totalprice", F.array(F.lit(0.5), F.lit(0.95)), 10000)
         .alias("pp"),
@@ -4769,7 +4716,7 @@ def weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject over a narrow expression — no shuffle."""
     from .ext.sampling import weighted_sample
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return weighted_sample(docs, "doc_id", "n_chars", 20).select(
         "doc_id", "n_chars", "priority"
     )
@@ -4797,7 +4744,7 @@ def event_transition_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle that at 100 TB is the unavoidable per-user ordering — then
     a keyed count over the tiny (type x type) space. Ties in ts break
     on event_id so the sequence is total-ordered and engine-stable."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
         "event_type", F.lead("event_type").over(w).alias("next_type")
@@ -4835,7 +4782,7 @@ def profile_orders_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     entirely (the HLL sketches merge instead). The 1-row result then
     explodes into the tall (col, n_null, n_distinct) shape — a
     constant-size reshape, not a data shuffle."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     aggs = [F.count("*").alias("__n")]
     for c in _PROFILE_COLS:
         aggs.append(F.count(c).alias(f"__nn_{c}"))
@@ -4921,7 +4868,7 @@ def peak_concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .incremental import sessionize
     from .plans import global_prefix_stats, keep
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     iv = (
         sessionize(ev, 1800)
         .groupBy("user_id", "session_idx")
@@ -4992,7 +4939,7 @@ def price_qty_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer cents — exact, order-invariant, map-side combinable — and
     the correlation formula is applied once in double at the end.
     The same one-shuffle partial-aggregate shape as any global agg."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     x = F.round(F.col("l_extendedprice") * 100).cast("decimal(38,0)")
     y = F.round(F.col("l_quantity")).cast("decimal(38,0)")
     m = li.agg(
@@ -5047,7 +4994,7 @@ def equidepth_price_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorts. Interpolated boundaries on integer-cent inputs are
     bit-identical across engines (verified), so strict-< bucketing
     cannot disagree."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     v = F.round(F.col("o_totalprice") * 100).cast("long")
     b = o.agg(
         F.percentile(v, F.array(*[F.lit(k / 10) for k in range(1, 10)])).alias("bnd")
@@ -5130,7 +5077,7 @@ def pq_compression_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     in test_ext."""
     from .ext.similarity import pq_encode
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     enc = pq_encode(emb, m=4, k=16)
     per_sub = enc.select(
         F.posexplode("codes").alias("s", "code"), F.col("recon_err")
@@ -5198,8 +5145,8 @@ def dq_orders_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the unavoidable key shuffle, independent of constraint count."""
     from .ext.expectations import Expectations
 
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
     exp = (
         Expectations()
         .not_null("o_custkey")
@@ -5274,7 +5221,7 @@ def _pagerank_part_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     (distinct pairs) and reused by reference."""
     from .ext.graph import pagerank_fixedpoint
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     # Integer node encoding (r11): part p<k> -> 2k, supplier s<k> ->
     # 2k+1 — the graph is isomorphic to the string-labeled one, and
     # ranks depend only on structure, so per-node ranks are
@@ -5341,7 +5288,7 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     array-typed cells, and the exploded form hash-checks every
     component individually (stricter than a whole-array compare).
     pos is 1-based to match SQL generate_subscripts."""
-    cent = similarity.mean_pool(_t(spark, sf_dir, "embeddings"), "label", "embedding")
+    cent = similarity.mean_pool(load_table(spark, sf_dir, "embeddings"), "label", "embedding")
     return cent.select(
         "label", "n", F.posexplode("centroid").alias("pos0", "c")
     ).select("label", "n", (F.col("pos0") + 1).cast("long").alias("pos"), "c")
@@ -5384,7 +5331,7 @@ def snapshot_diff_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     classification is pure codegen. Snapshots are carved
     deterministically from `orders` (mod-key deletions, mod-13 price
     drift) so both engines derive identical inputs."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     a = o.filter(F.col("o_orderkey") % 100 != 0).select(
         F.col("o_orderkey").alias("k"), cents.alias("cents_a")
@@ -5469,7 +5416,7 @@ def token_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both engines evaluate the identical double expression tree and
     round to 6 before ranking; min support 50 keeps the statistic
     stable (and the tail deterministic)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         (F.col("doc_id") % 10 == 0).alias("is_new"),
         F.explode(F.split(F.lower(F.col("text")), " ")).alias("tok"),
@@ -5544,7 +5491,7 @@ def bigram_xentropy_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the integer micro-bit exactness contract. Aggregate ratio uses
     exact integer numerators/denominators; per-doc extremes are one
     IEEE division each, so both engines agree bit-for-bit."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     per = textstats.bigram_xentropy(docs, "text", ("doc_id", "lang", "source"))
     doc_bits = -F.col("su").cast("double") / F.col("n") / 1e6
     return per.groupBy("lang", "source").agg(
@@ -5575,9 +5522,9 @@ def bloom_prune_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     then runs on the survivors. Bloom false positives cannot change
     the result (the join is still exact), so the oracle is the plain
     join — the sketch must be invisible in the output."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     sel = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_totalprice") > 450000)
         .select("o_orderkey")
     )
@@ -5632,7 +5579,7 @@ def encode_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     id 0. Output fingerprints the id sequence so the oracle (which
     must explode — SQL has no broadcast-map idiom) can agree on md5.
     The only wide ops are the vocab count and the top-K TakeOrdered."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(F.explode(F.split("text", " ")).alias("t"))
     vocab = (
         toks.groupBy("t")
@@ -5694,7 +5641,7 @@ def nfc_normalization_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines (combining acute/diaeresis around real doc prefixes;
     Spark embeds the literals, the oracle uses chr()), so the md5s
     only match if the UDF implements true NFC composition."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     raw = F.concat(
         F.lit("Cafe\u0301 nai\u0308ve "), F.substring("text", 1, 8)
     )
@@ -5730,7 +5677,7 @@ def ivm_merge_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     as string). At 100 TB the merge cost is |state| + |delta|, not
     |history| — the foundation of every streaming materialized view;
     the same algebra runs under foreachBatch in ``incremental``."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
 
     def agg_state(df: DataFrame) -> DataFrame:
@@ -5790,7 +5737,7 @@ def regression_price_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(38,0) so the closed form stays exact at any corpus size;
     the two final divisions are IEEE-deterministic. Single shuffle,
     map-side partial agg."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     x = F.col("l_quantity").cast("long")
     y = F.round(F.col("l_extendedprice") * 100).cast("long")
     m = li.groupBy("l_returnflag").agg(
@@ -5855,7 +5802,7 @@ def iqr_outliers_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     1.5·IQR broadcast back onto the scan, one keyed count. Two scans
     (quartiles, then flags), zero global sorts, no row leaves its
     partition unkeyed."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     v = F.round(F.col("o_totalprice") * 100).cast("long")
     c = o.select("o_orderstatus", v.alias("v"))
     q = c.groupBy("o_orderstatus").agg(
@@ -5924,7 +5871,7 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     production sketches that never need cross-engine replay."""
     from .ext import sketch as cms
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(F.explode(F.split("text", " ")).alias("t"))
     sk = cms.cms_build(toks, "t")
     top = (
@@ -5975,7 +5922,7 @@ def balance_bands_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("c_acctbal") * 100), F.col("c_custkey")
     )
     bal = F.round(F.col("c_acctbal") * 100).cast("long")
-    per = _t(spark, sf_dir, "customer").select(
+    per = load_table(spark, sf_dir, "customer").select(
         "c_nationkey",
         bal.alias("bal"),
         F.ntile(4).over(w).alias("band"),
@@ -6014,7 +5961,7 @@ def nullsafe_join_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the classic nullable-dimension-key trap. Spark hash-partitions
     null-safe keys like any other (nulls co-locate), so this stays a
     regular shuffle/broadcast hash join, not a nested loop."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     g = F.nullif(F.col("o_orderkey") % 7, F.lit(3))
     a = o.select(g.alias("ga")).groupBy("ga").agg(F.count(F.lit(1)).alias("na"))
     b = o.select(
@@ -6047,7 +5994,7 @@ def variant_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-native answer to schema-on-read JSON (contrast
     `json_props_extract`, which string-parses per get_json_object
     call). Oracle uses DuckDB's JSON operators on the same strings."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     k = F.expr("variant_get(parse_json(props), '$.k', 'bigint')")
     return ev.select("event_type", k.alias("k")).groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -6170,11 +6117,11 @@ def small_qty_revenue_q17ish(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is never shuffled at all. The 0.2*avg threshold is evaluated
     in INTEGER form (5*qty_cents*n < sum_cents) — no float compare can
     flip a borderline row between engines."""
-    part = _t(spark, sf_dir, "part").filter(
+    part = load_table(spark, sf_dir, "part").filter(
         F.col("p_brand").isin("Brand#1", "Brand#2")
     ).select("p_partkey")
     li = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
         .select(
             "l_partkey",
@@ -6225,7 +6172,7 @@ def scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary as microsecond-formatted strings."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     ch = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .filter(F.col("user_id") < 40)
         .select(
             "user_id", "event_type", "ts", "event_id",
@@ -6274,7 +6221,7 @@ def key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     global sort). At 100 TB this runs as a fraction of the join it
     protects, which is why skew checks belong in the pipeline, not in
     post-mortems."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     k = ev.groupBy("user_id").agg(F.count("*").alias("c"))
     t = k.agg(
         F.count("*").alias("n_keys"),
@@ -6323,7 +6270,7 @@ def mad_price_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _n(v: pd.Series) -> int:
         return len(v)
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderstatus").agg(
         _n("o_totalprice").alias("n"),
         F.round(_mad("o_totalprice"), 6).alias("mad_price"),
@@ -6353,7 +6300,7 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     the matrix is a two-key distinct count. Epoch seconds are floored
     to integers before any bucketing, so week boundaries are bit-exact
     across engines."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     f = ev.groupBy("user_id").agg(F.min("ts").alias("first_ts"))
     week = 604800
     e = ev.join(F.broadcast(f), "user_id").select(
@@ -6499,7 +6446,7 @@ def kmeans_lloyd_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment counts and picos-summed mean similarity match bit-for-
     bit after a full iteration. Per round the corpus shuffles exactly
     once (argmax combine), the update shuffles tasks×k sum-vectors."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     assigned, _cents = similarity.kmeans_lloyd(emb, "vec_id", "embedding", k=8, assign_passes=2)
     return assigned.groupBy("cent_id").agg(
         F.count("*").alias("n_members"),
@@ -6576,7 +6523,7 @@ def semantic_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is tiny relative to the corpus by construction. Both engines
     round the cosine to 12 decimals before the threshold so the gemm
     vs sequential-fold summation order cannot flip a borderline pair."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     cents = emb.orderBy("vec_id").limit(8).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("ce")
     )
@@ -6652,7 +6599,7 @@ def unpivot_order_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-shuffle projection (each input row expands to k rows in
     place); the only exchange is the upstream aggregate's. Values are
     integer (counts + exact cents) so the melt is type-stable."""
-    wide = _t(spark, sf_dir, "orders").groupBy("o_orderstatus").agg(
+    wide = load_table(spark, sf_dir, "orders").groupBy("o_orderstatus").agg(
         F.count("*").alias("n_orders"),
         F.countDistinct("o_custkey").alias("n_customers"),
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("revenue_cents"),
@@ -6782,11 +6729,11 @@ def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree ordering (orient edges low→high degree, bounding work by
     O(m^1.5)). Pair generation itself is bounded by order size²; the
     triangle joins shuffle the distinct edge list on its endpoints."""
-    pk = _t(spark, sf_dir, "part").filter(
+    pk = load_table(spark, sf_dir, "part").filter(
         F.col("p_brand").isin("Brand#1", "Brand#2", "Brand#3")
     ).select("p_partkey")
     inc = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .join(F.broadcast(pk), F.col("l_partkey") == F.col("p_partkey"))
         .select("l_orderkey", "l_partkey")
     )
@@ -7120,7 +7067,7 @@ def vocab_growth_by_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number() OVER (ORDER BY ...) would drag every token of a
     100 TB corpus through ONE partition). First-occurrence is a keyed
     min; decile assignment is exact integer arithmetic over (rn, N)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     w = docs.select("doc_id", F.split("text", " ").alias("ws")).filter(
         F.size("ws") >= 2
     )
@@ -7191,7 +7138,7 @@ def chunking_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     without a repartition."""
     from .ext.prep import chunk_documents
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     ch = chunk_documents(docs).join(docs.select("doc_id", "source"), "doc_id")
     return ch.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_chunks"),
@@ -7241,7 +7188,7 @@ def blocklist_filter_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     be pushed down; at 100 TB the join form also lets AQE skew-split a
     phrase that half the corpus contains). Flag rollup is a distinct +
     left join back, all map-side combinable."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     block = spark.createDataFrame([(p,) for p in _BLOCK_PHRASES], "phrase string")
     # bind the split ONCE, then pair adjacent words — the plan shape is
     # explicit instead of leaning on Catalyst subexpression elimination
@@ -7316,7 +7263,7 @@ def sequence_packing_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange + parallel per-partition running sums + broadcast carried
     offsets; no single-partition WindowExec). Span arithmetic is exact
     integer division, so the oracle is hash-exact."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id", "source", F.size(F.split("text", " ")).alias("nw")
     )
@@ -7447,7 +7394,7 @@ def token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     (deterministic range buckets + per-partition running sums + inlined offsets),
     with the corpus token total falling out of the same offsets pass,
     so selection stays fully parallel at any corpus size."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     wsplit = F.split("text", " ")
     scored = docs.select(
         "doc_id",
@@ -7505,7 +7452,7 @@ def try_cast_safety_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     '{'-prefixed props string is a guaranteed-malformed cast, proving
     the non-poisoning path; the JSON k extraction is the happy path.
     All narrow expressions in the scan stage; one rollup exchange."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     x = ev.select(
         "event_type",
         F.get_json_object("props", "$.k").try_cast("bigint").alias("k"),
@@ -7608,7 +7555,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     '•'-anchored replace semantics for merge application."""
     from .ext import prep
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     merges, state = prep.bpe_train(docs, "text", n_merges=_BPE_MERGES)
     state.unpersist()
     return spark.createDataFrame(
@@ -7626,7 +7573,7 @@ def bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus is never re-tokenized per merge."""
     from .ext import prep
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     merges, state = prep.bpe_train(docs, "text", n_merges=_BPE_MERGES)
     swc = (
         docs.select(
@@ -7734,7 +7681,7 @@ def url_canonicalize_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse to ONE canonical form — n_canonical == corpus rows while
     n_distinct_raw == 2x. Entirely codegen'd string/array expressions;
     one narrow pass plus the keyed count agg."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     u = docs.select(
         "source",
         F.explode(F.array(F.expr(_URL_V1_SQL), F.expr(_URL_V2_SQL))).alias("url"),
@@ -7781,7 +7728,7 @@ def ntile_analytics_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical in any engine."""
     from .plans import global_prefix_stats, ntile_from_rn
 
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     t: dict = {}
     ranked = global_prefix_stats(
         o.select("o_totalprice", "o_orderkey"),
@@ -7826,7 +7773,7 @@ def cube_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial aggregation; a UNION ALL of 4 groupbys would scan 4x).
     Money sums in exact integer cents via floor() (pinned cast
     semantics, see try_cast audit)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     cents = F.floor(F.col("o_totalprice") * 100).cast("long")
     return (
         o.cube("o_orderstatus", "o_orderpriority")
@@ -7878,7 +7825,7 @@ def matryoshka_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     become integer ppm BEFORE summation (engine-exact, same micro-unit
     discipline as mean_pool); one narrow pass, k-way explode of a
     3-element literal, keyed count/sum agg."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     full = F.expr(
         "aggregate(embedding, CAST(0 AS DOUBLE), (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
     )
@@ -7939,7 +7886,7 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison is engine-exact with no float tolerance. The exact side
     touches only candidate pairs (the verify-stage discipline: never
     all-pairs); shingles and signatures are computed once each."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sh = docs.select("doc_id", dedup.shingles_col("text").alias("shingles"))
     pairs = dedup.lsh_candidate_pairs(docs, shingles_df=sh)
     sigs = dedup.signatures_from_shingles(sh, "doc_id", "shingles")
@@ -8014,8 +7961,8 @@ def late_supplier_q21ish(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``n_supp > 1 AND n_late == 1`` for a row that is itself late. At
     100 TB that is two co-partitioned exchanges on l_orderkey instead
     of three, and AQE picks broadcast for the orders side prune."""
-    li = _t(spark, sf_dir, "lineitem")
-    od = _t(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    od = load_table(spark, sf_dir, "orders")
     ls = li.groupBy("l_orderkey", "l_suppkey").agg(F.max("l_shipdate").alias("max_ship"))
     j = ls.join(od, ls.l_orderkey == od.o_orderkey).select(
         F.col("l_orderkey").alias("ok"),
@@ -8091,7 +8038,7 @@ def interval_coverage_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     order. All integer seconds end-to-end."""
     from pyspark.sql.window import Window
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.unix_timestamp("ts").alias("s")
     )
     iv = ev.withColumn("e", F.col("s") + 300)
@@ -8149,7 +8096,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ranking window (``cosine_topk(exclude_same="label")``); at
     corpus scale swap the exact scan for ``ivf_topk``/``lsh_topk``
     candidates and keep this as the scoring stage."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     out = similarity.cosine_topk(
         emb, emb.filter(F.col("vec_id") % 97 == 1), k=5, exclude_same="label"
     )
@@ -8246,7 +8193,7 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores use the rational idf core and are added in FIXED term order
     so both engines execute the identical IEEE sequence (see
     bm25_keyword_search docstring)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     d = docs.select(
         "doc_id",
@@ -8391,7 +8338,7 @@ def quality_score_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     size."""
     from pyspark.sql.window import Window
 
-    labeled = _t(spark, sf_dir, "documents").select(
+    labeled = load_table(spark, sf_dir, "documents").select(
         F.col("n_chars").alias("score"),
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("pos"),
     )
@@ -8460,7 +8407,7 @@ def cross_source_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     its own row). Inverted-index self-join on the gram: one shuffle on
     the gram value, output bounded by |sources|². Exact integers; one
     double division."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     grams = docs.select(
         "source", F.explode(dedup.shingles_col("text", 8)).alias("gram")
     ).distinct()
@@ -8533,7 +8480,7 @@ def label_propagation_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-5 MEMBERSHIP, not intra-k order."""
     from pyspark.sql.window import Window
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     unlabeled = emb.filter(F.col("vec_id") % 7 == 0)
     labeled = emb.filter(F.col("vec_id") % 7 != 0)
     topk = similarity.cosine_topk(labeled, unlabeled, k=5)
@@ -8665,8 +8612,8 @@ def copurchase_lift_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     is Σ(basket size²), never #brands² against the full fact table;
     supports are broadcast back onto the pair table; top-20 is
     TakeOrderedAndProject."""
-    li = _t(spark, sf_dir, "lineitem")
-    pt = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    pt = load_table(spark, sf_dir, "part")
     # one exchange total on the heavy side: collapse each order to its
     # sorted distinct brand array, persist THAT (it feeds three
     # consumers: order count, supports, pair expansion) — pairs are
@@ -8755,7 +8702,7 @@ def order_price_higher_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the boundary. The one-pass map-side-partial shape of
     ``order_price_moments`` extended to 3rd/4th powers (v⁴ ≲ 6e22
     exceeds int64 — hence decimal(38) / HUGEINT accumulators)."""
-    c = _t(spark, sf_dir, "orders").select(
+    c = load_table(spark, sf_dir, "orders").select(
         "o_orderstatus", F.floor("o_totalprice").cast("long").alias("v")
     )
     vdec = F.col("v").cast("decimal(38,0)")
@@ -8821,7 +8768,7 @@ def sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded. Window-ends outside the observed day span are clipped so
     both engines agree on the frame."""
     days = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .select(
             (F.floor(F.unix_timestamp("ts") / 86400)).cast("long").alias("day"),
             "user_id",
@@ -8888,7 +8835,7 @@ def rolling_zscore_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     same sort; no self-join against history."""
     from pyspark.sql.window import Window
 
-    v = _t(spark, sf_dir, "events").select(
+    v = load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
         "ts",
@@ -9148,8 +9095,8 @@ def order_count_distribution_q13ish(spark: SparkSession, sf_dir: str) -> DataFra
     order customers. Scale: first agg shuffles on c_custkey (the join
     key — AQE coalesces to one exchange), second agg shuffles the tiny
     (k, count) domain."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderpriority") != "1-URGENT")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderpriority") != "1-URGENT")
     per_cust = (
         c.join(o, c["c_custkey"] == o["o_custkey"], "left_outer")
         .groupBy(c["c_custkey"])
@@ -9188,9 +9135,9 @@ def min_cost_supplier_q2ish(spark: SparkSession, sf_dir: str) -> DataFrame:
     second full fact scan). Ties keep all minimal suppliers, exactly
     like Q2. Restricting the fact rows to surviving parts cannot
     change those parts' minima (the filter is on part attributes)."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_size") >= 25)
-    s = _t(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_size") >= 25)
+    s = load_table(spark, sf_dir, "supplier")
     px = (
         li.join(
             F.broadcast(p.select("p_partkey", "p_brand")),
@@ -9437,7 +9384,7 @@ def bootstrap_revenue_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolated quantiles. Scale: the corpus is scanned once, fans
     out ×32 inside the scan stage (narrow), and shuffles only 32
     (rep, 2×int) partial rows."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     reps = F.explode(F.sequence(F.lit(0), F.lit(31))).alias("rep")
     draws = o.select(
         "o_orderkey",
@@ -9576,7 +9523,7 @@ def embedding_outlier_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ULP hazard at the threshold. Scale: one dim-explode shuffle builds
     per-label sums (map-side combinable), the centroid table (labels ×
     64 ints) broadcasts back, and each vector scores in place."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     m = e.select(
         "vec_id",
         "label",
@@ -9646,7 +9593,7 @@ def exp_smoothing_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     machines): one keyed agg builds the series, the fold is a scalar
     expression, only (key, list) rows shuffle — never a per-step
     iteration."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     monthly = o.groupBy(
         F.col("o_orderstatus").alias("status"),
         F.date_trunc("month", "o_orderdate").alias("m"),
@@ -9692,7 +9639,7 @@ def dense_ids_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-pattern, which is the point of the comparison). The per-source
     rollup (contiguous [min, max], order-sensitive checksum) pins every
     id while staying partition-count-independent."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     ids = plans.assign_dense_ids(docs, "source", "doc_id")
     return ids.groupBy("source").agg(
         F.count(F.lit(1)).alias("n"),
@@ -9729,7 +9676,7 @@ def ab_test_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     the conversion rate as one division. The z-statistic is driver
     arithmetic on these two rows; the engine's job is the exact counts
     under a user-keyed agg (one shuffle, map-side combinable)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     assign = ev.groupBy("user_id").agg(
         F.max((F.col("event_type") == "purchase").cast("long")).alias("converted")
     ).withColumn(
@@ -9918,8 +9865,8 @@ def bfs_distances_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     each round shuffles only the frontier, and a min-agg collapses
     revisits so the frontier never exceeds |reachable nodes|. The
     oracle walks the same graph with a depth-capped recursive CTE."""
-    part = _t(spark, sf_dir, "part")
-    li = _t(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
     sl = part.filter(F.col("p_size") >= 45).select("p_partkey", "p_brand")
     inc = (
         li.join(F.broadcast(sl), li["l_partkey"] == sl["p_partkey"])
@@ -9986,7 +9933,7 @@ def embedding_dim_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     per dimension, so ordering is engine-exact. Scale: the explode is
     narrow, the agg shuffles ≤ dims × partitions partial rows, top-10
     is a TakeOrdered."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     d = e.select(
         F.posexplode(
             F.expr("transform(embedding, x -> CAST(round(x * 1e6) AS BIGINT))")
@@ -10055,7 +10002,7 @@ def label_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shuffle <= labels x dims x partitions partial rows); the pair
     matrix is labels^2 — tiny for any realistic label set — built by
     a broadcast self-join on dim."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     d = e.select(
         "label",
         F.posexplode(
@@ -10127,7 +10074,7 @@ def pareto_front_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     #partitions x skyline-width rows), so the single-partition window
     there is fine. Dominance is transitive, so the result is exact and
     partitioning-independent."""
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     pairs = part.groupBy("p_retailprice", "p_size").agg(
         F.count(F.lit(1)).alias("n_parts")
     )
@@ -10227,7 +10174,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     r_lex = F.row_number().over(Window.orderBy(F.desc("score"), "doc_id"))
     lex_top = lex_top50.select("doc_id", r_lex.alias("r_lex"))
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     vecs = emb.select(
         F.col("vec_id").alias("doc_id"),
         F.expr("transform(embedding, x -> CAST(round(x * 1e6) AS BIGINT))").alias("v"),
@@ -10292,10 +10239,10 @@ def late_order_priority_q4ish(spark: SparkSession, sf_dir: str) -> DataFrame:
     widened or deduplicated by hand. Scale: one shuffle pair on
     orderkey for the semi join (date filter pushed to the orders
     scan), then a 5-row aggregate."""
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1997-01-01")
     )
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     late = o.join(
         li,
         (o["o_orderkey"] == li["l_orderkey"])
@@ -10335,11 +10282,11 @@ def bination_volume_q7ish(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides); supplier/customer/nation all ride broadcast hash joins, so
     the only real shuffle is lineitem⋈orders on orderkey. Revenue in
     exact integer cents; the per-group divide happens once."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    s = _t(spark, sf_dir, "supplier")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    s = load_table(spark, sf_dir, "supplier")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
     n1 = n.select(F.col("n_nationkey").alias("nk1"), F.col("n_name").alias("supp_nation"))
     n2 = n.select(F.col("n_nationkey").alias("nk2"), F.col("n_name").alias("cust_nation"))
     j = (
@@ -10403,13 +10350,13 @@ def market_share_q8ish(spark: SparkSession, sf_dir: str) -> DataFrame:
     float division per year happens after aggregation, identically in
     both engines. Part/customer/supplier/nation/region are all
     broadcast; lineitem⋈orders is the lone big shuffle."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
+    c = load_table(spark, sf_dir, "customer")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     n1 = n.select(F.col("n_nationkey").alias("nk1"), F.col("n_name").alias("supp_nation"))
     n2 = n.select(F.col("n_nationkey").alias("nk2"), F.col("n_regionkey").alias("rk2"))
     rev_c = F.round(F.col("l_extendedprice") * 100).cast("long") * (
@@ -10466,11 +10413,11 @@ def product_profit_q9ish(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact integers in cents·basis-points; the LIKE filter prunes
     part BEFORE its broadcast join so the fact rows that survive the
     orderkey shuffle are already product-line-only."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_name").contains("red"))
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_name").contains("red"))
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
     profit_c = F.round(F.col("l_extendedprice") * 100).cast("long") * (
         100 - F.round(F.col("l_discount") * 100).cast("long")
     ) - F.round(F.col("p_retailprice") * 100).cast("long") * 50 * F.round(
@@ -10520,9 +10467,9 @@ def part_value_fraction_q11ish(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-level aggregate never recomputes the base join. The fraction
     test multiplies integers (value_c * 1000 > total_c) so no float
     enters the comparison."""
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
+    li = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
     value_c = F.sum(
         F.round(F.col("l_extendedprice") * 100).cast("long")
         * F.round(F.col("l_quantity")).cast("long")
@@ -10574,10 +10521,10 @@ def ship_delay_priority_q12ish(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic pair of complementary CASE-sums splitting urgent from
     non-urgent priorities in one pass. One orderkey shuffle; the
     3-row aggregate is map-side combined."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1997-01-01")
     )
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     delay = (
         F.when(
             F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 120 DAYS"),
@@ -10622,10 +10569,10 @@ def promo_revenue_q14ish(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums are exact integers and the one divide + scale by 100 happens
     on the final scalar row. The month filter is pushed to the
     lineitem scan."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1997-03-01") & (F.col("l_shipdate") < "1997-04-01")
     )
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     rev_c = F.round(F.col("l_extendedprice") * 100).cast("long") * (
         100 - F.round(F.col("l_discount") * 100).cast("long")
     )
@@ -10668,10 +10615,10 @@ def top_supplier_q15ish(spark: SparkSession, sf_dir: str) -> DataFrame:
     all surface, exactly like the reference query. supplier joins
     broadcast. Exact integer cents end-to-end; one divide per output
     row."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1997-04-01")
     )
-    s = _t(spark, sf_dir, "supplier")
+    s = load_table(spark, sf_dir, "supplier")
     total_c = F.sum(
         F.round(F.col("l_extendedprice") * 100).cast("long")
         * (100 - F.round(F.col("l_discount") * 100).cast("long"))
@@ -10715,11 +10662,11 @@ def supplier_variety_q16ish(spark: SparkSession, sf_dir: str) -> DataFrame:
     coincide); the brand/size filters prune part before its broadcast
     join; COUNT(DISTINCT) expands to the standard two-level exchange
     Catalyst plans for distinct aggregation."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#13") & F.col("p_size").isin(5, 10, 15, 20)
     )
-    bad = _t(spark, sf_dir, "supplier").filter(F.col("s_name").endswith("7")).select(
+    bad = load_table(spark, sf_dir, "supplier").filter(F.col("s_name").endswith("7")).select(
         F.col("s_suppkey").alias("bad_sk")
     )
     return (
@@ -10756,9 +10703,9 @@ def big_order_customers_q18ish(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter, then joins back to orders on the SAME key (AQE reuses the
     partitioning) and broadcast to customer. Quantities are exact
     integers."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum(F.round("l_quantity").cast("long")).alias("total_qty"))
@@ -10801,8 +10748,8 @@ def disjunctive_revenue_q19ish(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantity ≤ 30) and pushes them to the scans, which is the entire
     point of Q19 as an optimizer test. part broadcasts; the output is
     one exact-integer sum divided once."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
     band = (
         ((F.col("p_brand") == "Brand#12") & F.col("p_size").between(1, 5)
          & F.col("l_quantity").between(1, 11))
@@ -10848,10 +10795,10 @@ def excess_suppliers_q20ish(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim. No DISTINCT is ever materialized — semi joins dedup for
     free. Scale: lineitem shuffles once on suppkey after the
     broadcast prune."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_name").startswith("small"))
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_4")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_name").startswith("small"))
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_4")
     movers = (
         li.join(F.broadcast(p), li["l_partkey"] == p["p_partkey"], "left_semi")
         .groupBy("l_suppkey")
@@ -10898,9 +10845,9 @@ def idle_rich_customers_q22ish(spark: SparkSession, sf_dir: str) -> DataFrame:
     dividing, so no float rounding can flip a boundary row in either
     engine. NOT IN orders becomes a LEFT ANTI join; the customer dim
     is the only shuffle participant."""
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 0.0)
+    c = load_table(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 0.0)
     o = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") >= "2000-01-01")
         .select("o_custkey")
     )
@@ -11045,7 +10992,7 @@ def domain_cap_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     mega-domain is the AQE skew case; the md5 sort key keeps its
     top-20 selection a bounded heap per task, and no global sort or
     driver-side state exists anywhere."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     rn = F.row_number().over(
         Window.partitionBy("source").orderBy(
             F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
@@ -11093,7 +11040,7 @@ def hll_sketch_union_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the DuckDB oracle asserts literal TRUE next to its own exact
     counts. The merge==direct determinism stays in pytest
     (test_hll_sketch_union_bounds)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     per_type = ev.groupBy("event_type").agg(
         F.hll_sketch_agg("user_id", F.lit(14)).alias("sk"),
         F.count_distinct("user_id").alias("exact_users"),
@@ -11257,7 +11204,7 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     until the final divide. Deterministic tie-break by (ts, event_id)
     on both engines."""
     _BAND_S = 3 * 86400  # the attribution window, in seconds
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "event_id",
         "user_id",
@@ -11338,7 +11285,7 @@ def mean_shift_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition window is over ~2.4k rows, not the fact table), and the
     argmax is a TakeOrderedAndProject. Deterministic tie-break on the
     earlier day."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev_c")
     )
@@ -11424,7 +11371,7 @@ def cusum_revenue_alarms(spark: SparkSession, sf_dir: str) -> DataFrame:
     HUGEINT): n·x_i − tot at petabyte daily volumes overflows int64,
     and the prefix sums grow another 3 decimal digits. Verified
     against a direct replay of the max-0 recurrence (pytest)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(
         F.col("o_orderstatus").alias("status"),
         F.col("o_orderdate").cast("date").alias("d"),
@@ -11493,8 +11440,8 @@ def join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     need a 1/p² correction), scale by 16. Flags how far uniform-key
     assumptions drift on real skew; deterministic md5 sampling keeps
     both engines bit-identical."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
     lc = li.groupBy(F.col("l_orderkey").alias("k")).agg(F.count(F.lit(1)).alias("cl"))
     oc = o.groupBy(F.col("o_orderkey").alias("k")).agg(F.count(F.lit(1)).alias("co"))
     hist = lc.join(oc, "k").select("k", (F.col("cl") * F.col("co")).alias("prod"))
@@ -11573,7 +11520,7 @@ def kaplan_meier_signup_to_purchase(spark: SparkSession, sf_dir: str) -> DataFra
     differential check exact. Scale: two keyed MIN rollups on
     user_id (co-partitioned join), a 1-row horizon broadcast, and a
     day-domain window."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     signup = ev.filter(F.col("event_type") == "signup").groupBy("user_id").agg(
         F.min("ts").alias("t0")
     )
@@ -11772,7 +11719,7 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plain keyed aggregation (no global-max job, no broadcast, no
     # cross join); the recency VALUE itself never reaches the output
     # (VERDICT r7 item 6: cut the fixed cost).
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     rollup = o.groupBy("o_custkey").agg(
         F.max("o_orderdate").alias("last_o"),
         F.count(F.lit(1)).alias("frequency"),
@@ -11855,7 +11802,7 @@ def weekday_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: daily rollup shuffle + a 7-row aggregate + a broadcast
     1-row total. DuckDB's dayofweek is 0-6 Sunday-first; Spark's
     dayofweek is 1-7 Sunday-first — aligned via (dayofweek - 1)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(
         F.col("o_orderdate").cast("date").alias("d"),
         (F.dayofweek("o_orderdate") - 1).cast("long").alias("dow"),
@@ -11902,7 +11849,7 @@ def benford_price_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     division/log10. One narrow pass + a 9-row rollup. (The synthetic
     uniform-ish prices will FLUNK Benford — the audit's point is to
     measure the divergence, not assume it passes.)"""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)
     digits = o.select(
         F.substring(
             F.round(F.col("o_totalprice") * 100).cast("long").cast("string"), 1, 1
@@ -11983,11 +11930,11 @@ def kcore_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver sees only convergence scalars (`ext/graph.py:kcore`)."""
     from .ext.graph import kcore
 
-    pk = _t(spark, sf_dir, "part").filter(
+    pk = load_table(spark, sf_dir, "part").filter(
         F.col("p_brand").isin("Brand#1", "Brand#2", "Brand#3")
     ).select("p_partkey")
     li = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .join(F.broadcast(pk), F.col("l_partkey") == F.col("p_partkey"))
         .select("l_orderkey", "l_partkey")
         .distinct()
@@ -12043,7 +11990,7 @@ def winsorize_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalars. The histogram trick is how exact quantiles stay feasible
     when rows >> distinct values — when the domain itself is huge,
     swap in percentile_approx and keep the same clamp."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     cents = o.select(F.round(F.col("o_totalprice") * 100).cast("long").alias("v"))
     hist = cents.groupBy("v").agg(F.count(F.lit(1)).alias("c"))
     w = Window.orderBy("v")
@@ -12095,7 +12042,7 @@ def forecast_revenue_q6ish(spark: SparkSession, sf_dir: str) -> DataFrame:
     appear in PushedFilters (date range + discount band + quantity are
     all parquet-min/max prunable). Revenue = price·discount in exact
     integer cents·bp, divided once."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1997-01-01")
         & (F.col("l_shipdate") < "1998-01-01")
         & (F.col("l_discount") >= 0.02)
@@ -12134,12 +12081,12 @@ def returned_revenue_q10ish(spark: SparkSession, sf_dir: str) -> DataFrame:
     both date and returnflag filters pushed below it), customer and
     nation broadcast, grouped exact-cents revenue, top-20 via
     TakeOrderedAndProject (no global sort)."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    o = _t(spark, sf_dir, "orders").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1997-01-01") & (F.col("o_orderdate") < "1997-07-01")
     )
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
     rev = F.round(F.col("l_extendedprice") * 100).cast("long") * (
         100 - F.round(F.col("l_discount") * 100).cast("long")
     )
@@ -12208,7 +12155,7 @@ def mojibake_repair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-fixed md5 over every repaired doc so the differential check
     proves byte-exact repair, not just counts. One narrow pass + one
     keyed agg."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     body = F.expr(_moji_plant_sql())
     corpus = docs.select("doc_id", "source", body.alias("body"))
     rep = F.col("body")
@@ -12260,7 +12207,7 @@ def top_event_trigram_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ts, event_id) so simultaneous events are deterministic. Scale:
     one hash exchange on user_id for the windows (bounded per-user
     state), one small rollup."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
         "event_type",
@@ -12310,7 +12257,7 @@ def neyman_allocation_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence in both engines. The allocator is the planning half of
     `stratified_sample_docs`: compute here, sample there. One keyed
     rollup + a 3-row broadcast total."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     # power sums in decimal(38,0) (DuckDB: HUGEINT): Σx² per stratum
     # passes ~4e19 at sf0.1, past int64 — int64 accumulation overflows
@@ -12442,7 +12389,7 @@ def kcenter_diverse_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     Total arithmetic O(K^2 * n) — negligible for K=8 — and the argmax
     row carries the winner's vector back so each round is exactly one
     job. The driver holds only the <=K chosen integer vectors."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     v = emb.select(
         F.col("vec_id").alias("id"),
         F.expr("transform(embedding, x -> CAST(round(x * 1e6) AS BIGINT))").alias("vv"),
@@ -12514,7 +12461,7 @@ def pareto_8020_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange over customers (not orders) + a 1-row reduce."""
     from .plans import global_prefix_stats
 
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     per_cust = o.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev_c")
     )
@@ -12608,7 +12555,6 @@ def jsonl_feed_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .sources import jsonl_source
 
-    tune(spark)
     schema = StructType(
         [StructField("id", LongType()), StructField("name", StringType())]
     )

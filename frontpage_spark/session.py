@@ -6,6 +6,14 @@ AQE on (runtime join re-planning, skew-join splitting, partition
 coalescing), shuffle partitions sized to the parallelism, Arrow for
 the rare pandas-UDF path, UTC session time zone for deterministic
 timestamp arithmetic.
+
+Runtime conf is written in exactly one place, ``tune``, and ``tune``
+has exactly two callers: the ``queries.register`` wrapper (before a
+build and a plan-cache hit alike) and the engine-owned recursion clone
+in ``queries.recursive_ancestor_depths``. No query build, table scan
+or gate probe writes conf, so the profile a query runs under depends
+only on its ``sf_dir``, never on which query (or which thread's query)
+ran before it.
 """
 
 from __future__ import annotations
@@ -25,6 +33,9 @@ RUNTIME_CONF = {
     # Dimension tables here are tiny (region/nation class); the threshold
     # mostly matters for AQE's runtime broadcast decisions.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # TIMESTAMP(NANOS) parquet columns read as bigint instead of failing;
+    # sources.NORMALIZE_TS_COLUMNS converts them back to timestamps.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
 
@@ -53,13 +64,22 @@ def _dir_bytes(path: str) -> int:
 
 
 def tune(spark: SparkSession, sf_dir: str | None = None) -> SparkSession:
-    """Apply runtime-settable conf to an externally-provided session.
+    """Apply the runtime profile for ``sf_dir`` to ``spark``.
 
     The driver harness hands us its own SparkSession; shuffle-partition
     count and AQE flags are runtime-settable, so queries get the tuned
     plan either way. When ``sf_dir`` is known and tiny, switch to the
     small-input profile (AQE off, few fixed shuffle partitions); at
     cluster scale the AQE profile always wins and is the default.
+
+    Only two callers exist, both at the session boundary: the
+    ``queries.register`` wrapper, which runs it before every build AND
+    every plan-cache hit, and the recursion clone, which a fresh
+    ``newSession()`` starts from the initial options rather than this
+    profile. A call from inside a build would switch the profile
+    mid-query (a no-``sf_dir`` call reverts to the large profile, so a
+    cache miss and a hit ran under different conf) and would rewrite
+    the conf every other thread's query on the session runs under.
     """
     small = sf_dir is not None and _dir_bytes(sf_dir) < _SMALL_INPUT_BYTES
     conf = dict(RUNTIME_CONF)

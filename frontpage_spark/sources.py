@@ -21,11 +21,12 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 # Timestamp columns whose physical parquet encoding has varied across
-# testdata generations: TIMESTAMP(NANOS) (Spark's vectorized reader
-# needs legacy.parquet.nanosAsLong → bigint), or TIMESTAMP(MICROS,
-# isAdjustedToUTC=false) (Spark reads timestamp_ntz). Either way we
-# normalize to TimestampType; the session time zone is UTC, so the
-# wall-clock values match DuckDB's naive read and oracle parity holds.
+# testdata generations: TIMESTAMP(NANOS) (read as bigint under
+# legacy.parquet.nanosAsLong, which session.RUNTIME_CONF sets), or
+# TIMESTAMP(MICROS, isAdjustedToUTC=false) (Spark reads timestamp_ntz).
+# Either way we normalize to TimestampType; the session time zone is
+# UTC, so the wall-clock values match DuckDB's naive read and oracle
+# parity holds.
 NORMALIZE_TS_COLUMNS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
@@ -55,11 +56,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ts_cols = NORMALIZE_TS_COLUMNS.get(name, ())
-    if ts_cols:
-        try:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     for c in ts_cols:
         dt = dict(df.dtypes).get(c)

@@ -1023,26 +1023,28 @@ def test_component_fixpoint_empty_and_single(spark):
 def test_pair_graph_partitioning_is_size_gated(spark):
     """VERDICT r2 item 1: a pair graph over the small-rows threshold must
     NOT collapse to one partition (no single-task serialization point at
-    scale); under the threshold the local union-find runs as ONE
-    single-partition job."""
-    from frontpage_spark.queries import _component_fixpoint, _components_local
+    scale); under the threshold the union-find runs on the driver over
+    the gate probe's rows and returns a local relation."""
+    from frontpage_spark.queries import _component_fixpoint
 
     big = spark.range(0, 500).select(
         (F.col("id") * 2).alias("a"), (F.col("id") * 2 + 1).alias("b")
     ).repartition(4)
-    # under the gate: the local path is ONE single-partition
-    # mapInPandas job
-    local = _components_local(big)
-    assert local.rdd.getNumPartitions() == 1
-    assert "MapInPandas" in local._jdf.queryExecution().executedPlan().toString()
+    # under the gate: labels are a local relation — no Python-worker
+    # stage and no shuffle left in the returned plan
+    local = _component_fixpoint(big)
+    local_plan = local._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in local_plan and "Exchange" not in local_plan
     # over the gate: the distributed star-contraction route, not the
     # local union-find (AQE may still coalesce the tiny OUTPUT to one
     # partition, so the discriminator is the plan shape)
     dist = _component_fixpoint(big, small_rows=100)
-    assert "MapInPandas" not in dist._jdf.queryExecution().executedPlan().toString()
+    dist_plan = dist._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in dist_plan and "LocalTableScan" not in dist_plan
     # and the fixpoint is still correct when the gate keeps >1 partition
     got = {r["id"]: r["comp"] for r in dist.collect()}
     assert len(got) == 1000 and all(got[2 * i] == 2 * i and got[2 * i + 1] == 2 * i for i in range(500))
+    assert {r["id"]: r["comp"] for r in local.collect()} == got
 
 
 def test_lsh_degenerate_bucket_guard(spark):

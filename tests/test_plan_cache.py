@@ -93,6 +93,27 @@ def test_cloned_session_builds_its_own_plan(spark):
     assert QUERIES["global_minmax"](clone, SF_DIR) is df
 
 
+def test_query_builds_leave_session_conf_unchanged(spark):
+    # tune() at the register wrapper is the only conf write a query
+    # makes: no build, cache hit, table scan or gate probe may change
+    # the conf that other queries on the session run under
+    from frontpage_spark.session import tune
+
+    clone = tune(spark.newSession(), SF_DIR)
+    before = clone.conf.getAll
+    for name in (
+        "phone_extract_literals",  # miss, then hit
+        "phone_extract_literals",
+        "html_extraction_golden",
+        "sessionize_users",  # scans events (timestamp normalization)
+        "dup_clusters",  # gate probe
+        "bpe_train_merges",  # gate probe + driver-loop build
+    ):
+        QUERIES[name](clone, SF_DIR).collect()
+        assert clone.conf.getAll == before, name
+    plans.release_kept()
+
+
 def test_session_cache_lru_bound():
     cache = SessionCache(cap=2)
     cache.put("a", 1)

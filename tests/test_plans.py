@@ -526,6 +526,28 @@ def test_pin_ckpt_dir_policy(monkeypatch):
     assert _resolve_ckpt_dir("yarn", "app1") == "hdfs:///ckpt"
 
 
+def test_take_wide_one_job_and_conf_free(spark):
+    from frontpage_spark.plans import take_wide
+    from frontpage_spark.queries import _last_job_id
+
+    key = "spark.sql.limit.initialNumPartitions"
+    assert key not in spark.conf.getAll
+    # explode hides the row count from the optimizer, so the limit
+    # stays in the plan (a Range alone would let Catalyst drop it)
+    df = spark.range(0, 2250, numPartitions=16).select(
+        "id", F.explode(F.sequence(F.lit(1), F.lit(16))).alias("k")
+    )
+    assert df.rdd.getNumPartitions() == 16
+    tracker = spark.sparkContext.statusTracker()
+    before = _last_job_id(tracker)
+    every = take_wide(df, 36_001)
+    assert _last_job_id(tracker) == before + 1
+    assert every.num_rows == 36_000
+    assert len(set(zip(every.column("id").to_pylist(), every.column("k").to_pylist()))) == 36_000
+    assert take_wide(df, 1000).num_rows == 1000
+    assert key not in spark.conf.getAll
+
+
 def test_rfm_segments_local_matches_distributed(spark, monkeypatch):
     """r11 size gate: the single-job numpy scoring kernel must be
     byte-identical to the distributed prefix-stats branch — same ntile
