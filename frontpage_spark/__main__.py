@@ -22,14 +22,14 @@ import sys
 
 
 def _sink_keys(spark, path: str):
-    """The uniq_id keys already in a parquet sink. Before the first
-    append the sink has no parquet footers: an empty key set then."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path).select("uniq_id")
-    except AnalysisException:
+    """The uniq_id keys already in a parquet sink, read with a declared
+    schema so no job infers it from the footers. Before the first
+    append the sink does not exist: an empty key set then, found by
+    asking the path's FileSystem rather than by failing a read."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if not hpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(hpath):
         return spark.createDataFrame([], "uniq_id string")
+    return spark.read.schema("uniq_id string").parquet(path)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -115,15 +115,15 @@ def main(argv: list[str] | None = None) -> int:
             write_append(dedup_new_keys(raw, _sink_keys(spark, args.out)), args.out)
             n_dead = dead.get["n"]
             print(
-                f"ingest: sink now has {spark.read.parquet(args.out).count()} rows"
+                f"ingest: sink now has {_sink_keys(spark, args.out).count()} rows"
                 f" ({n_dead} dead-lettered fetches)"
             )
         elif args.cmd == "etl":
             from .pipeline import run_batch, to_compat, write_append
+            from .schemas import RAW_SCHEMA, SITE_MAP_SCHEMA
             from .sources import csv_dimension
 
-            raw = spark.read.parquet(args.raw)
-            site_map = csv_dimension(spark, args.dim)
+            site_map = csv_dimension(spark, args.dim, schema=SITE_MAP_SCHEMA)
             if args.stream:
                 from .incremental import stream_pipeline
 
@@ -137,13 +137,14 @@ def main(argv: list[str] | None = None) -> int:
 
                 sq = stream_pipeline(
                     spark, args.raw, args.checkpoint or args.out + "_chk",
-                    body, schema=raw.schema, available_now=True,
+                    body, schema=RAW_SCHEMA, available_now=True,
                 )
                 sq.awaitTermination()
             else:
+                raw = spark.read.schema(RAW_SCHEMA).parquet(args.raw)
                 out = run_batch(raw, site_map, _sink_keys(spark, args.out))
                 write_append(to_compat(out), args.out)
-            print(f"etl: sink now has {spark.read.parquet(args.out).count()} rows")
+            print(f"etl: sink now has {_sink_keys(spark, args.out).count()} rows")
         elif args.cmd == "conform":
             import os
 

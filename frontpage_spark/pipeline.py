@@ -80,14 +80,17 @@ def enrich(clean: DataFrame, site_map: DataFrame, strict: bool = True) -> DataFr
 
 def to_compat(df: DataFrame) -> DataFrame:
     """Reference-compatibility boundary (SURVEY.md §1.4): arrays become
-    ';'-joined strings, NULL strings become ''. Timestamps stay typed."""
-    out = df
-    for c, t in df.dtypes:
+    ';'-joined strings, NULL strings become ''. Timestamps stay typed.
+    One projection, so the analyzer sees one Project, not one per column."""
+
+    def compat(c: str, t: str):
         if t.startswith("array"):
-            out = out.withColumn(c, FF.compat_join_array(c))
-        elif t == "string":
-            out = out.withColumn(c, FF.empty_on_null(c))
-    return out
+            return FF.compat_join_array(c).alias(c)
+        if t == "string":
+            return FF.empty_on_null(c).alias(c)
+        return F.col(c)
+
+    return df.select(*[compat(c, t) for c, t in df.dtypes])
 
 
 def dedup_new_keys(batch: DataFrame, existing: DataFrame, key: str = "uniq_id") -> DataFrame:

@@ -11198,12 +11198,16 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain user_id equi-join was QUADRATIC in a hot user (a zipf
     mega-user owning ~30% of events put ~1.8e9 candidate evaluations
     in one task — 189 s on the x10-zipf corpus, the standard §2.5
-    hot-key shape that AQE cannot split when it is off). The
+    hot-key shape that AQE cannot split when it is off). The band key
+    is integer floor division of ``unix_micros(ts)``, so losslessness
+    does not rest on how a double rounds at a band edge, and floor (not
+    truncation) keeps pre-1970 bands 3 days wide. The
     per-purchase argmax is a WindowGroupLimit-able rank over each
     purchase's candidate touches; revenue stays in integer cents
     until the final divide. Deterministic tie-break by (ts, event_id)
     on both engines."""
-    _BAND_S = 3 * 86400  # the attribution window, in seconds
+    _BAND_US = 3 * 86400 * 1_000_000  # the attribution window, in microseconds
+    band = F.expr(f"(unix_micros(ts) - pmod(unix_micros(ts), {_BAND_US})) div {_BAND_US}")
     ev = load_table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "event_id",
@@ -11216,10 +11220,9 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").alias("t_ts"),
         F.col("event_id").alias("t_id"),
         F.col("event_type").alias("channel"),
-        F.floor(F.col("ts").cast("double") / _BAND_S).alias("t_band"),
+        band.alias("t_band"),
     )
-    pband = F.floor(F.col("ts").cast("double") / _BAND_S)
-    pb = purchases.withColumn("p_band", F.explode(F.array(pband, pband - 1)))
+    pb = purchases.withColumn("p_band", F.explode(F.array(band, band - 1)))
     cand = pb.join(
         touches,
         (F.col("t_user") == F.col("user_id"))

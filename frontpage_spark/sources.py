@@ -102,7 +102,9 @@ def paginated_scan(
     return reduce(DataFrame.unionByName, pages) if pages else None
 
 
-FETCHED_SCHEMA = "scrape_date string, code int, url string, read string, error string"
+FETCHED_SCHEMA = (
+    "scrape_date string, code int, url string, read string, post_date_raw string, error string"
+)
 
 
 def fetch_documents(
@@ -131,9 +133,16 @@ def fetch_documents(
     ``mapInPandas``; repartition the URL frame to set fetch concurrency
     (politeness throttling = fewer partitions + backoff, the Spark
     equivalent of the reference's sleep_time). Output:
-    (scrape_date, code, url, read, error).
+    (scrape_date, code, url, read, post_date_raw, error).
+
+    ``post_date_raw`` (F4's 'Posted:' text, NULL for a failed fetch or
+    a page without one) is read in this same pass, while the page is
+    already in Python: record assembly keys on it, and a second Arrow
+    UDF over ``read`` would ship every page to Python again.
     """
     from time import sleep
+
+    from . import html
 
     def run(batches):
         import pandas as pd
@@ -158,9 +167,11 @@ def fetch_documents(
                     clock() if clock is not None
                     else __import__("datetime").datetime.now().strftime("%Y-%m-%d %H:%M:%S")
                 )
-                out.append((scrape_date, code, url, body, err))
+                out.append(
+                    (scrape_date, code, url, body, html._extract(body, "post_date_raw"), err)
+                )
             yield pd.DataFrame(
-                out, columns=["scrape_date", "code", "url", "read", "error"]
+                out, columns=["scrape_date", "code", "url", "read", "post_date_raw", "error"]
             )
 
     return urls.select(F.col(url_col)).mapInPandas(run, FETCHED_SCHEMA)
@@ -170,15 +181,17 @@ def assemble_raw(fetched: DataFrame) -> DataFrame:
     """S3 — record assembly: fetched documents → RAW_SCHEMA rows with the
     composite uniq_id (scraper.py:94-102,105-119,205). Failed fetches
     (code NULL) are excluded — they belong to the dead-letter channel.
-    Narrow per-row expressions + one Arrow pass for the post-date field.
+    Narrow per-row expressions only: the post date comes from the
+    ``post_date_raw`` column ``fetch_documents`` extracts, so no Python
+    runs here.
     """
-    from . import functions as FF, html
+    from . import functions as FF
 
     ok = fetched.filter(F.col("error").isNull() & F.col("code").isNotNull())
     with_key = ok.withColumn(
         "uniq_id",
         FF.uniq_id(
-            FF.format_ts(FF.parse_verbose_date(html.post_date_raw(F.col("read")))),
+            FF.format_ts(FF.parse_verbose_date(F.col("post_date_raw"))),
             FF.ad_id_from_url(F.col("url")),
             FF.site_id_from_url(F.col("url")),
             FF.category_from_url(F.col("url")),
@@ -193,10 +206,25 @@ def assemble_raw(fetched: DataFrame) -> DataFrame:
     )
 
 
-def csv_dimension(spark: SparkSession, path: str, column_map: dict[str, str] | None = None) -> DataFrame:
+def csv_dimension(
+    spark: SparkSession,
+    path: str,
+    column_map: dict[str, str] | None = None,
+    schema=None,
+) -> DataFrame:
     """S5 — CSV dimension source (reference: dict keyed on site_id,
-    etl_process.py:185-200). Small table; callers wrap in broadcast()."""
-    df = spark.read.option("header", True).csv(path)
+    etl_process.py:185-200). Small table; callers wrap in broadcast().
+
+    Without ``schema`` the header names the (string) columns, which
+    costs a job to read it. With ``schema`` there is no such job, and
+    columns bind by position, so the CSV must hold the schema's columns
+    in its order. ``enforceSchema=false`` checks the header by name: a
+    reordered or inserted column fails the read instead of binding the
+    wrong values."""
+    reader = spark.read.option("header", True)
+    if schema is not None:
+        reader = reader.schema(schema).option("enforceSchema", False)
+    df = reader.csv(path)
     if column_map:
         df = df.select([F.col(src).alias(dst) for src, dst in column_map.items()])
     return df

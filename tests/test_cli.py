@@ -3,6 +3,7 @@ conform (EP3) through `python -m frontpage_spark`'s main()."""
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from frontpage_spark.__main__ import main
@@ -14,6 +15,36 @@ HTML = (
     "<p class=\"metaInfoDisplay\">Poster's age: 25</p>"
     "<div>Location: midtown</div>"
 )
+
+DIM = (
+    "site_id,city,state,region,division,url\n"
+    "nyc,New York,NY,Northeast,Mid-Atlantic,u\n"
+    "sfo,San Francisco,CA,West,Pacific,u\n"
+)
+
+
+def _crawl(tmp_path, urls, dead=()):
+    """Payloads for ``urls`` (``dead`` ones get none) under an html dir,
+    a site CSV, and a runner for one ingest + `etl --stream` cycle."""
+    html_dir = tmp_path / "html"
+    html_dir.mkdir()
+    for u in urls:
+        if u not in dead:
+            (html_dir / (hashlib.md5(u.encode()).hexdigest() + ".html")).write_text(HTML)
+    dim = tmp_path / "dim.csv"
+    dim.write_text(DIM)
+    raw_dir, clean_dir = str(tmp_path / "raw"), str(tmp_path / "clean")
+
+    def cycle(*batch):
+        url_file = tmp_path / "urls.txt"
+        url_file.write_text("\n".join(batch) + "\n")
+        assert main(["ingest", "--urls", str(url_file), "--html-dir", str(html_dir),
+                     "--out", raw_dir, "--max-retries", "0",
+                     "--scrape-date", "2017-05-01 00:00:00"]) == 0
+        assert main(["etl", "--raw", raw_dir, "--dim", str(dim), "--out", clean_dir,
+                     "--stream"]) == 0
+
+    return cycle, raw_dir, clean_dir
 
 
 def _ingest_report(capsys) -> str:
@@ -33,11 +64,7 @@ def test_cli_ingest_etl_conform(spark, tmp_path, capsys):
     url_file = tmp_path / "urls.txt"
     url_file.write_text("\n".join(urls) + "\n")
     dim = tmp_path / "dim.csv"
-    dim.write_text(
-        "site_id,city,state,region,division,url\n"
-        "nyc,New York,NY,Northeast,Mid-Atlantic,u\n"
-        "sfo,San Francisco,CA,West,Pacific,u\n"
-    )
+    dim.write_text(DIM)
     raw_dir, clean_dir, conf_dir = (
         str(tmp_path / "raw"), str(tmp_path / "clean"), str(tmp_path / "conf"),
     )
@@ -98,33 +125,75 @@ def test_cli_etl_stream_dedups_across_runs(spark, tmp_path):
     starts with no sink at all, and a later run's epoch must see the keys
     earlier runs appended, so replayed raw rows never commit twice."""
     urls = ["http://nyc.example.com/cats/x/111", "http://sfo.example.com/dogs/x/222"]
-    html_dir = tmp_path / "html"
-    html_dir.mkdir()
-    for u in urls:
-        (html_dir / (hashlib.md5(u.encode()).hexdigest() + ".html")).write_text(HTML)
-    dim = tmp_path / "dim.csv"
-    dim.write_text(
-        "site_id,city,state,region,division,url\n"
-        "nyc,New York,NY,Northeast,Mid-Atlantic,u\n"
-        "sfo,San Francisco,CA,West,Pacific,u\n"
-    )
-    raw_dir, clean_dir = str(tmp_path / "raw"), str(tmp_path / "clean")
-    etl_args = ["etl", "--raw", raw_dir, "--dim", str(dim), "--out", clean_dir, "--stream"]
-
-    def ingest(*batch):
-        url_file = tmp_path / "urls.txt"
-        url_file.write_text("\n".join(batch) + "\n")
-        assert main(["ingest", "--urls", str(url_file), "--html-dir", str(html_dir),
-                     "--out", raw_dir, "--max-retries", "0",
-                     "--scrape-date", "2017-05-01 00:00:00"]) == 0
-
-    ingest(urls[0])
-    assert main(etl_args) == 0
+    cycle, raw_dir, clean_dir = _crawl(tmp_path, urls)
+    cycle(urls[0])
     assert spark.read.parquet(clean_dir).count() == 1
     # replay the committed raw row as a new file, next to a new URL
     spark.read.parquet(raw_dir).write.mode("append").parquet(raw_dir)
-    ingest(urls[1])
-    assert main(etl_args) == 0
+    cycle(urls[1])
     clean = spark.read.parquet(clean_dir)
     assert clean.count() == 2
     assert clean.select("uniq_id").distinct().count() == 2
+
+
+def _jobs_so_far(spark) -> int:
+    # every job of the SparkContext, whatever its job group: the stream's
+    # epochs run under the query's runId group, which
+    # statusTracker().getJobIdsForGroup(None) does not list
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def test_cli_warm_crawl_cycle_job_count(spark, tmp_path):
+    """A warm crawl cycle (ingest + `etl --stream` into existing sinks)
+    runs a fixed number of Spark jobs: the sinks' and the site CSV's
+    schemas are declared, so no job infers one. Inferring them cost six
+    more (18): one per sink read, plus the CSV header."""
+    urls = [f"http://{s}.example.com/cats/x/{i}" for i, s in enumerate(["nyc", "sfo"] * 3)]
+    cycle, raw_dir, clean_dir = _crawl(tmp_path, urls, dead=urls[5:])
+    cycle(*urls[:2])
+    before = _jobs_so_far(spark)
+    cycle(urls[0], *urls[2:])  # one re-crawl, three new pages, one dead
+    jobs = _jobs_so_far(spark) - before
+    assert spark.read.parquet(clean_dir).count() == 5
+    assert jobs == 12, jobs
+
+
+def test_cli_ingest_runs_one_python_pass(spark, tmp_path, monkeypatch):
+    """Ingest's write plan has one Python node, the fetch's MapInPandas:
+    record assembly reads the post date the fetch already extracted."""
+    from frontpage_spark import pipeline
+
+    written = []
+    write_append = pipeline.write_append
+
+    def capture(df, path):
+        written.append(df)
+        write_append(df, path)
+
+    monkeypatch.setattr(pipeline, "write_append", capture)
+    urls = ["http://nyc.example.com/cats/x/111", "http://sfo.example.com/dogs/x/222"]
+    cycle, raw_dir, _ = _crawl(tmp_path, urls)
+    cycle(*urls)
+    ingest_plan = written[0]._jdf.queryExecution().executedPlan().toString()
+    assert ingest_plan.count("MapInPandas") == 1, ingest_plan
+    assert "ArrowEvalPython" not in ingest_plan, ingest_plan
+    keys = {r["uniq_id"] for r in spark.read.parquet(raw_dir).collect()}
+    assert keys == {"2017-05-02 23:28:00-111-nyc-cats", "2017-05-02 23:28:00-222-sfo-dogs"}
+
+
+def test_cli_etl_rejects_site_csv_header_mismatch(spark, tmp_path):
+    """`etl --dim` checks the CSV header against SITE_MAP_SCHEMA by name:
+    columns bind by position, so the CSV must hold the schema's columns in
+    its order. Swapped columns fail the run instead of binding city to
+    site_id, and so does a column inserted among them."""
+    urls = ["http://nyc.example.com/cats/x/111"]
+    cycle, raw_dir, _ = _crawl(tmp_path, urls)
+    cycle(*urls)
+    swapped = tmp_path / "swapped.csv"
+    swapped.write_text(DIM.replace("site_id,city,", "city,site_id,", 1))
+    with pytest.raises(Exception, match="CSV header does not conform to the schema"):
+        main(["etl", "--raw", raw_dir, "--dim", str(swapped), "--out", str(tmp_path / "c2")])
+    extra = tmp_path / "extra.csv"
+    extra.write_text("".join(ln.replace(",", ",x,", 1) + "\n" for ln in DIM.splitlines()))
+    with pytest.raises(Exception, match="CSV header does not conform to the schema"):
+        main(["etl", "--raw", raw_dir, "--dim", str(extra), "--out", str(tmp_path / "c3")])

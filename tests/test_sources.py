@@ -721,3 +721,54 @@ def test_jsonl_ingest_quarantine_mode_conflict_raises(spark, tmp_path):
         jsonl_ingest(spark, str(src), schema, q2, ingest_token="t2")
     finally:
         plans.release_kept()
+
+
+def test_fetch_post_date_matches_udf_on_corpus(spark):
+    """``fetch_documents`` extracts ``post_date_raw`` in its own pass:
+    on every page of the 500-doc corpus, a page with no adInfo div and a
+    dead URL it equals ``html._extract``, and ``assemble_raw`` keys the
+    same uniq_ids as the Arrow UDF ``html.post_date_raw`` over ``read``."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from frontpage_spark import functions as FF, html
+    from frontpage_spark.sources import assemble_raw, fetch_documents
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    corpus = pq.read_table(os.path.join(root, "fixtures", "html_corpus.parquet")).to_pydict()
+    pages = {
+        f"http://site{k % 5}.example.com/cat{k % 3}/{k + 100000}/x": h
+        for k, h in zip(corpus["k"], corpus["html"])
+    }
+    pages["http://nyc.example.com/cats/x/7"] = '<div class="postingBody">no date</div>'
+    dead = "http://nyc.example.com/cats/x/dead"
+
+    def fetcher(url):
+        if url not in pages:
+            raise OSError("connection refused")
+        return 200, pages[url]
+
+    urls = spark.createDataFrame([(u,) for u in [*pages, dead]], ["url"]).repartition(4)
+    fetched = fetch_documents(urls, fetcher, max_retries=0, clock=lambda: "2017-06-01 00:00:00")
+
+    got = {r["url"]: r["post_date_raw"] for r in fetched.select("url", "post_date_raw").collect()}
+    want = {u: html._extract(pages.get(u), "post_date_raw") for u in [*pages, dead]}
+    assert got == want
+    assert got[dead] is None and got["http://nyc.example.com/cats/x/7"] is None
+    assert sum(v is not None for v in got.values()) > 400
+
+    url = F.col("url")
+    udf_keys = fetched.filter(F.col("error").isNull() & F.col("code").isNotNull()).select(
+        url,
+        FF.uniq_id(
+            FF.format_ts(FF.parse_verbose_date(html.post_date_raw(F.col("read")))),
+            FF.ad_id_from_url(url),
+            FF.site_id_from_url(url),
+            FF.category_from_url(url),
+        ).alias("uniq_id"),
+    )
+    want_keys = {r["url"]: r["uniq_id"] for r in udf_keys.collect()}
+    raw = assemble_raw(fetched).select(F.col("ad.url").alias("url"), "uniq_id")
+    assert {r["url"]: r["uniq_id"] for r in raw.collect()} == want_keys
+    assert len(want_keys) == len(pages)
