@@ -7,10 +7,12 @@ and scales by shuffle on content-derived keys.
 
 Scale notes (100 TB):
 - All shingle/minhash work is per-row array math (`transform`/
-  `array_min`) — zero shuffle until the candidate-pair join.
-- The candidate join shuffles on (band, minhash) — a content hash, so
-  it distributes uniformly *except* for monster clusters (boilerplate
-  docs). ``max_bucket`` caps those: LSH buckets larger than the cap are
+  `array_min`) — zero shuffle until the candidate-pair stage.
+- Every banded family (MinHash here, dHash here, hyperplane in
+  ``similarity``) expands pairs through ONE operator, ``band_pairs``,
+  which shuffles on (band, key) — a content hash, so it distributes
+  uniformly *except* for monster clusters (boilerplate docs).
+  ``max_bucket`` caps those: LSH buckets larger than the cap are
   dropped (standard practice — a bucket of k docs implies k²/2 pairs).
 - Portable hashing: md5 (identical in Spark and DuckDB) so every
   operator here is oracle-checkable; swap for xxhash64 when oracle
@@ -49,33 +51,19 @@ def shingles_col(text: Column | str, n: int = 3) -> Column:
     return F.when(F.size(grams) > 0, F.array_distinct(grams)).otherwise(F.array(c))
 
 
-def band_minhashes(shingles: Column, bands: int = DEFAULT_BANDS) -> Column:
-    """array of ``bands`` MinHash values: band b is the min over shingles
-    of the b-th 8-hex-char window of ONE md5 per shingle. Disjoint
-    windows of a cryptographic hash ≈ independent permutations, at a
-    quarter of the hash work of keyed per-band hashing.
+def band_minhashes(shingle_col: str, bands: int = DEFAULT_BANDS) -> Column:
+    """array of ``bands`` MinHash values over a NAMED shingle column:
+    band b is the min over shingles of the b-th 8-hex-char window of ONE
+    md5 per shingle. Disjoint windows of a cryptographic hash ≈
+    independent permutations, at a quarter of the hash work of keyed
+    per-band hashing.
 
     The md5 array is bound once as a lambda variable (single-element
     transform idiom) so project collapsing cannot re-inline the hash
-    pass into each band's min."""
-    hashes_once = F.transform(shingles, F.md5)
-
-    def mins(hs: Column) -> Column:
-        return F.array(
-            *[F.array_min(F.transform(hs, lambda h: F.substring(h, 1 + 8 * b, 8))) for b in range(bands)]
-        )
-
-    return F.element_at(F.transform(F.array(hashes_once), mins), 1)
-
-
-def _band_minhashes_sql(shingle_col: str, bands: int = DEFAULT_BANDS) -> Column:
-    """:func:`band_minhashes` as ONE ``F.expr`` over a NAMED shingle
-    column — the identical expression tree (same single-binding md5
-    idiom), parsed by the JVM in one py4j roundtrip. The lambda-builder
-    form above costs ~150 ms of py4j chatter per plan build, and the
-    dedup queries rebuild their plans every call (keep() makes them
-    plan-cache-ineligible by design), so construction cost is a real
-    per-query tax at bench scale (r11; same output, oracle-checked)."""
+    pass into each band's min. ONE ``F.expr``, parsed by the JVM in one
+    py4j roundtrip: the dedup queries rebuild their plans every call
+    (keep() makes them plan-cache-ineligible by design), so construction
+    cost is a real per-query tax at bench scale."""
     mins = ", ".join(
         f"array_min(transform(hs, h -> substring(h, {1 + 8 * b}, 8)))"
         for b in range(bands)
@@ -99,7 +87,7 @@ def signatures_from_shingles(
     thing you persist/write, not recompute per consumer."""
     return sh.select(
         id_col,
-        F.posexplode(_band_minhashes_sql(shingle_col, bands)).alias("band", "minhash"),
+        F.posexplode(band_minhashes(shingle_col, bands)).alias("band", "minhash"),
     )
 
 
@@ -111,51 +99,48 @@ def minhash_signatures(
     return signatures_from_shingles(sh, id_col, "shingles", bands)
 
 
-def lsh_candidate_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bands: int = DEFAULT_BANDS,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
-    shingles_df: DataFrame | None = None,
+def band_pairs(
+    sigs: DataFrame, id_col: str, key_col: str, max_bucket: int | None = None
 ) -> DataFrame:
-    """Distinct candidate near-dup pairs (a < b) sharing any band bucket.
+    """Distinct (a, b) pairs, ``a < b`` by value, of ids sharing any
+    (band, ``key_col``) bucket of an (id, band, key) relation — the one
+    pair-expansion stage of every banded near-dup family (MinHash,
+    hyperplane, dHash).
 
-    Plan: signatures are computed once (narrow); a count aggregate per
-    (band, minhash) — map-side combinable, constant memory per key —
-    decides which buckets are usable (2..max_bucket members), and only
-    THOSE signatures flow into the collect_list that materializes a
-    bucket's id list. The guard is structural, not advisory: a
-    degenerate signature (empty text, boilerplate) owning half the
-    corpus is dropped by the count stage and never reaches an
-    aggregation buffer. Both the count and the collect shuffle on the
-    same (band, minhash) key, so the signature subplan's exchange is
-    reused rather than recomputed. Pairs (a < b) are generated *per
-    bucket row* with transform/slice — no self-join — so bucket caps
-    bound the quadratic pair work.
-    """
-    if shingles_df is not None:
-        sigs = signatures_from_shingles(shingles_df, id_col, "shingles", bands)
-    else:
-        sigs = minhash_signatures(df, id_col, text_col, bands)
-    # consumed twice (bucket-size count, then the gated collect) — the
-    # signature pass is the expensive narrow stage (one md5 per
-    # shingle), so cache it rather than replay it; bounded-lifetime
-    # keep() releases the block once later queries rotate it out.
-    sigs = _keep(sigs)
-    usable_keys = (
-        sigs.groupBy("band", "minhash")
-        .agg(F.count("*").alias("n"))
-        .filter((F.col("n") >= 2) & (F.col("n") <= max_bucket))
-        .select("band", "minhash")
-    )
-    buckets = (
-        sigs.join(usable_keys, ["band", "minhash"], "left_semi")
-        .groupBy("band", "minhash")
-        .agg(F.collect_list(id_col).alias("ids"))
-    )
-    # one F.expr, not nested python lambdas — same tree, one py4j
-    # roundtrip instead of dozens per build (see _band_minhashes_sql)
+    Plan: one groupBy folds the signature stream into bucket id lists,
+    and transform/slice expands the pairs *per bucket row* — no
+    self-join, so the signature subplan executes once and there is one
+    exchange, on (band, key). A bucket's id list lives in one
+    aggregation buffer (ids only, never payloads).
+
+    ``max_bucket`` set: a count aggregate per (band, key) — map-side
+    combinable, constant memory per key — decides which buckets are
+    usable (2..max_bucket rows), and only THOSE signatures flow into the
+    collect_list. The guard is structural, not advisory: a degenerate
+    signature (empty text, boilerplate) owning half the corpus is
+    dropped by the count stage and never reaches an aggregation buffer.
+    Both aggregates shuffle on the same key, so the exchange is reused.
+    ``max_bucket=None``: no count stage, singleton buckets are dropped
+    after the collect — for families whose buckets are bounded by
+    construction, or where a cap would break losslessness."""
+    keys = ["band", key_col]
+    if max_bucket is not None:
+        # consumed twice (bucket-size count, then the gated collect) —
+        # cache rather than replay the signature pass; bounded-lifetime
+        # keep() releases the block once later queries rotate it out.
+        sigs = _keep(sigs)
+        usable_keys = (
+            sigs.groupBy(*keys)
+            .agg(F.count("*").alias("n"))
+            .filter((F.col("n") >= 2) & (F.col("n") <= max_bucket))
+            .select(*keys)
+        )
+        sigs = sigs.join(usable_keys, keys, "left_semi")
+    buckets = sigs.groupBy(*keys).agg(F.collect_list(id_col).alias("ids"))
+    if max_bucket is None:
+        buckets = buckets.filter(F.size("ids") >= 2)
+    # one F.expr, not nested python lambdas: one py4j roundtrip per
+    # build instead of dozens
     pairs = F.expr(
         "flatten(transform(array_sort(ids), (x, i) -> "
         "transform(slice(array_sort(ids), i + 2, size(ids)), "
@@ -164,11 +149,29 @@ def lsh_candidate_pairs(
     return (
         buckets.select(F.explode(pairs).alias("p"))
         # strict BY VALUE: a duplicated id in a bucket would otherwise
-        # emit an a==b self-pair (the self-join form's a < b excluded it)
+        # emit an a==b self-pair
         .filter(F.col("p.a") < F.col("p.b"))
         .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
         .distinct()
     )
+
+
+def lsh_candidate_pairs(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    bands: int = DEFAULT_BANDS,
+    max_bucket: int = DEFAULT_MAX_BUCKET,
+    shingles_df: DataFrame | None = None,
+) -> DataFrame:
+    """Distinct candidate near-dup pairs (a < b) sharing any MinHash band
+    bucket: narrow signatures, then :func:`band_pairs` with the
+    degenerate-bucket cap (a bucket of k docs implies k²/2 pairs)."""
+    if shingles_df is not None:
+        sigs = signatures_from_shingles(shingles_df, id_col, "shingles", bands)
+    else:
+        sigs = minhash_signatures(df, id_col, text_col, bands)
+    return band_pairs(sigs, id_col, "minhash", max_bucket)
 
 
 def exact_dup_stats(df: DataFrame, text_col: str = "text", group_col: str = "source") -> DataFrame:
@@ -501,23 +504,33 @@ def hamming_near_dup(
     lo_col: str = "dhash_lo",
     max_hamming: int = 3,
 ) -> DataFrame:
-    """Banded Hamming self-join over 64-bit signatures split into two
-    32-bit halves: candidates must share one of four 16-bit bands, then
-    exact popcount-of-XOR verifies ``hamming <= max_hamming``.
+    """Banded Hamming near-dup over 64-bit signatures split into two
+    32-bit halves: candidates must share one of four 16-bit bands
+    (:func:`band_pairs`), then exact popcount-of-XOR verifies
+    ``hamming <= max_hamming``.
 
     LOSSLESS for ``max_hamming <= 3`` by pigeonhole: 4 bands, at most 3
-    differing bits, so some band is bit-identical — band-join recall is
-    exactly 1 and an all-pairs oracle must agree. One shuffle on
+    differing bits, so some band is bit-identical — band recall is
+    exactly 1 and an all-pairs oracle must agree. So the buckets are
+    NOT capped (a cap would drop true pairs). One shuffle on
     (band, value) — never on raw content — and each bucket holds only
     signatures that agree on 16 bits, so bucket width is bounded by the
-    corpus's true duplicate structure (cf. the LSH degenerate-bucket
-    guard; dHash of non-duplicate content is ~uniform on 2^16 per band).
+    corpus's true duplicate structure (dHash of non-duplicate content
+    is ~uniform on 2^16 per band).
     """
     if max_hamming > 3:
         raise ValueError("4x16 banding is only lossless for max_hamming <= 3")
-    hi, lo = F.col(hi_col), F.col(lo_col)
-    banded = hashes.select(
-        F.col(id_col), hi.alias("hi"), lo.alias("lo"),
+    # read three times (banding, then each verify side); without a cache
+    # the upstream signature computation (often a decode/hash Arrow
+    # pass) runs once per reader
+    proj = _keep(
+        hashes.select(
+            F.col(id_col).alias("id"), F.col(hi_col).alias("hi"), F.col(lo_col).alias("lo")
+        )
+    )
+    hi, lo = F.col("hi"), F.col("lo")
+    banded = proj.select(
+        "id",
         F.posexplode(
             F.array(
                 lo.bitwiseAND(F.lit(65535)),
@@ -527,25 +540,18 @@ def hamming_near_dup(
             )
         ).alias("band", "bv"),
     )
-    # both join sides read `banded`; without a cache the upstream
-    # signature computation (often a decode/hash Arrow pass) runs twice
-    banded = _keep(banded)
-    a = banded.select(
-        F.col(id_col).alias("a"), F.col("hi").alias("hia"),
-        F.col("lo").alias("loa"), "band", "bv",
-    )
-    b = banded.select(
-        F.col(id_col).alias("b"), F.col("hi").alias("hib"),
-        F.col("lo").alias("lob"), "band", "bv",
-    )
+    a = proj.select(F.col("id").alias("a"), F.col("hi").alias("hia"), F.col("lo").alias("loa"))
+    b = proj.select(F.col("id").alias("b"), F.col("hi").alias("hib"), F.col("lo").alias("lob"))
     ham = F.bit_count(F.col("hia").bitwiseXOR(F.col("hib"))) + F.bit_count(
         F.col("loa").bitwiseXOR(F.col("lob"))
     )
     return (
-        a.join(b, ["band", "bv"])
-        .filter(F.col("a") < F.col("b"))
+        band_pairs(banded, "id", "bv")
+        .join(a, "a")
+        .join(b, "b")
         .withColumn("hamming", ham.cast("int"))
         .filter(F.col("hamming") <= max_hamming)
         .select("a", "b", "hamming")
+        # an id listed twice (two signatures) joins each of its rows
         .distinct()
     )

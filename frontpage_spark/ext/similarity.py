@@ -22,6 +22,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .dedup import band_pairs
+
+
 def _dot(a: str, b: str) -> Column:
     """Dot product of two float-array columns in double.
 
@@ -409,7 +412,9 @@ def lsh_signature(vec_col: str, planes: int = 8, dim: int = 64) -> Column:
 
 def _plane_matrix(planes: int, dim: int):
     """The md5-parity ±1 hyperplanes as a (planes, dim) float64 numpy
-    matrix — same values as `_plane_literals`, for the Arrow path."""
+    matrix: h_p[i] = +1 if the first hex nibble of md5('{p}:{i}') is odd
+    else -1. The one generator behind the Arrow path and the SQL
+    literal (`_plane_literals`)."""
     import hashlib
 
     import numpy as np
@@ -440,7 +445,8 @@ def _band_sigs_arrow(
     once, the EXACT recurrence of the SQL aggregate(zip_with(...),
     0.0, +) the DuckDB oracle retraces — float32→float64 promotion and
     ±1 products are exact, so every intermediate double is bit-equal
-    to the expr path (asserted by test_lsh_band_sigs_arrow_equals_expr).
+    to the pure-Column fold (asserted by
+    test_lsh_band_sigs_arrow_equals_expr).
     (An earlier np.cumsum-over-dim formulation was also bit-exact but
     materialized a rows×planes×dim float64 tensor per chunk — ~100 MB
     of allocation churn per task whose mmap/THP behavior made the
@@ -451,7 +457,7 @@ def _band_sigs_arrow(
     non-finite dots — Spark SQL (and DuckDB) order NaN greater than
     every double so ``NaN > 0`` is TRUE there, while numpy's is False
     (ADVICE r4) — so a NaN/Inf vector is rejected loudly here rather
-    than silently producing a signature the expr path would disagree
+    than silently producing a signature the SQL fold would disagree
     with. (The synthetic corpus is finite; real ingest should gate
     non-finite vectors at the source.)"""
     import numpy as np
@@ -499,21 +505,14 @@ def _band_sigs_arrow(
 
 
 def _plane_literals(planes: int, dim: int) -> Column:
-    """array<array<double>> literal of deterministic ±1 hyperplanes."""
-    import hashlib
-
-    rows = []
-    for p in range(planes):
-        row = []
-        for i in range(dim):
-            h = hashlib.md5(f"{p}:{i}".encode()).hexdigest()
-            row.append(1.0 if int(h[0], 16) % 2 else -1.0)
-        rows.append(row)
+    """array<array<double>> literal (``1.0D``/``-1.0D``) of the
+    `_plane_matrix` hyperplanes."""
     # ONE parsed expression, not planes*dim F.lit() Columns: each
     # Column constructor is a py4j round trip, and 100x64 of them cost
     # multiple seconds of driver time PER QUERY CONSTRUCTION.
     arr = ", ".join(
-        "array(" + ", ".join(f"{v:.1f}D" for v in row) + ")" for row in rows
+        "array(" + ", ".join(f"{v:.1f}D" for v in row) + ")"
+        for row in _plane_matrix(planes, dim)
     )
     return F.expr(f"array({arr})")
 
@@ -594,108 +593,38 @@ def lsh_band_candidates(
     bands: int = LSH_ND_BANDS,
     planes: int = LSH_ND_PLANES,
     dim: int = 64,
-    sig_impl: str = "arrow",
 ) -> DataFrame:
     """Candidate (a, b) pairs (a < b) sharing at least one band of
     random-hyperplane sign bits — the blocking stage of embedding
     near-dup dedup (MinHash-LSH's banding scheme transplanted to
-    cosine space; reference parity: the same candidates->verify
-    discipline as `ext/dedup.lsh_candidate_pairs` for text).
+    cosine space; the same (id, band, key) -> `dedup.band_pairs` stage
+    as `dedup.lsh_candidate_pairs` for text).
 
-    ``sig_impl``: "arrow" (default) computes signatures in ONE
-    vectorized batch pass (`_band_sigs_arrow` — interpreted HOF
-    lambdas are ~100x slower and the expr subplan would be evaluated
-    once per self-join side); "expr" keeps the pure-Column form as the
-    executable reference both implementations are equality-tested
-    against.
+    Signatures come from ONE vectorized batch pass (`_band_sigs_arrow`;
+    interpreted HOF lambdas are ~100x slower). Deterministic end-to-end:
+    hyperplanes are md5-derived +-1 values (`_plane_matrix`), signatures
+    a sequential double fold per plane — bit-identical in any engine
+    that folds doubles in index order, which is what makes the whole
+    pipeline DuckDB-oracle-checkable.
 
-    Deterministic end-to-end: hyperplanes are md5-derived +-1 literals
-    (`_plane_literals`), signatures a sequential double fold per plane
-    — bit-identical in any engine that folds doubles in index order,
-    which is what makes the whole pipeline DuckDB-oracle-checkable.
+    Buckets are not capped: they are geometrically small (~n/2^planes),
+    and the pathological case (massive exact-duplicate vectors) belongs
+    to exact dedup upstream."""
+    from .. import plans
 
-    Scale shape: one narrow pass computes bands*planes sign bits per
-    row (JVM codegen, no shuffle), one explode to (id, band, sig), one
-    shuffle on (band, sig) for the self-join, DISTINCT to merge
-    multi-band collisions. Nothing is ever broadcast or collected;
-    bucket sizes are geometrically small (2^-planes) so no salt is
-    needed."""
-    if sig_impl == "arrow":
-        # fan_out (r12, VERDICT r11 item 4): the signature pass is the
-        # one Python stage in this pipeline, and on a single-split scan
-        # (the local single-row-group files) it runs as ONE task — a
-        # serialization point the rest of the plan then inherits.
-        # 8-way, not full width: per-row signature cost is microseconds
-        # so the per-task fixed cost (worker fork + Arrow handshake)
-        # dominates past ~8 tasks at bench scale — the same measured
-        # trade as the media codec queries (_tw min_parts=8). No-op on
-        # a production multi-split table. The candidate SET is
-        # partitioning-independent: bucket membership is a pure row
-        # function and the per-bucket id list is array_sort()ed before
-        # pair expansion.
-        from .. import plans
-
-        exploded = _band_sigs_arrow(
-            plans.fan_out(corpus, 8), id_col, vec_col, bands, planes, dim
-        )
-    else:
-        total = bands * planes
-        # ONE nested-lambda expression computes all bands*planes sign
-        # bits: transform over the plane literals, sequential double
-        # fold per plane (index order — the bit-exact contract the
-        # DuckDB oracle mirrors and the Arrow path reproduces).
-        sigs = corpus.select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("e")
-        ).withColumn("__planes", _plane_literals(total, dim))
-        bits = F.expr(
-            "transform(__planes, h -> CASE WHEN "
-            "aggregate(zip_with(e, h, (x, v) -> CAST(x AS DOUBLE) * v), "
-            "CAST(0 AS DOUBLE), (acc, v) -> acc + v) > 0 THEN '1' ELSE '0' END)"
-        )
-        band_sigs = [
-            F.array_join(F.slice(F.col("__bits"), g * planes + 1, planes), "")
-            for g in range(bands)
-        ]
-        exploded = sigs.withColumn("__bits", bits).select(
-            "id", F.posexplode(F.array(*band_sigs)).alias("band", "sig")
-        )
-    # Pairs are generated PER BUCKET ROW, not via a (band, sig)
-    # self-join: one groupBy folds the signature stream into bucket id
-    # lists (singletons dropped), and transform/slice expands a < b
-    # pairs inside each bucket. Same candidate set (the DuckDB oracle
-    # keeps its self-join formulation), strictly better plan: the
-    # signature pass executes ONCE (the r4 self-join evaluated the
-    # Python stage once per side and broadcast one copy — measured
-    # 2-9 s swings at sf0.1 from the double fork + broadcast build),
-    # and there is exactly one exchange, on (band, sig). Scale note:
-    # a bucket's id list lives in one aggregation buffer (8 B/id —
-    # ids only, never vectors); hyperplane buckets are geometrically
-    # small (~n/2^planes), and the pathological case (massive
-    # exact-duplicate vectors) belongs to exact dedup upstream, which
-    # is also where the self-join would have produced the same
-    # quadratic pair count anyway.
-    ids = F.array_sort(F.col("ids"))
-    pairs = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + F.lit(2), F.size(ids)),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    return (
-        exploded.groupBy("band", "sig")
-        .agg(F.collect_list("id").alias("ids"))
-        .filter(F.size("ids") >= 2)
-        .select(F.explode(pairs).alias("p"))
-        # strict BY VALUE, not just by position: a duplicated id in a
-        # bucket would otherwise emit an a==b self-pair (the self-join
-        # formulation's a < b excluded it)
-        .filter(F.col("p.a") < F.col("p.b"))
-        .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .distinct()
-    )
+    # fan_out (r12, VERDICT r11 item 4): the signature pass is the one
+    # Python stage in this pipeline, and on a single-split scan (the
+    # local single-row-group files) it runs as ONE task — a
+    # serialization point the rest of the plan then inherits. 8-way,
+    # not full width: per-row signature cost is microseconds so the
+    # per-task fixed cost (worker fork + Arrow handshake) dominates past
+    # ~8 tasks at bench scale — the same measured trade as the media
+    # codec queries (_tw min_parts=8). No-op on a production multi-split
+    # table. The candidate SET is partitioning-independent: bucket
+    # membership is a pure row function and band_pairs sorts each
+    # bucket's id list before pair expansion.
+    sigs = _band_sigs_arrow(plans.fan_out(corpus, 8), id_col, vec_col, bands, planes, dim)
+    return band_pairs(sigs, "id", "sig")
 
 
 def lsh_near_dup_pairs(

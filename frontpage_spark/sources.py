@@ -13,6 +13,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from .schemas import TESTDATA_TABLES
 from .session import session_cache
@@ -206,28 +207,21 @@ def assemble_raw(fetched: DataFrame) -> DataFrame:
     )
 
 
-def csv_dimension(
-    spark: SparkSession,
-    path: str,
-    column_map: dict[str, str] | None = None,
-    schema=None,
-) -> DataFrame:
+def csv_dimension(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     """S5 — CSV dimension source (reference: dict keyed on site_id,
     etl_process.py:185-200). Small table; callers wrap in broadcast().
 
-    Without ``schema`` the header names the (string) columns, which
-    costs a job to read it. With ``schema`` there is no such job, and
-    columns bind by position, so the CSV must hold the schema's columns
-    in its order. ``enforceSchema=false`` checks the header by name: a
-    reordered or inserted column fails the read instead of binding the
-    wrong values."""
-    reader = spark.read.option("header", True)
-    if schema is not None:
-        reader = reader.schema(schema).option("enforceSchema", False)
-    df = reader.csv(path)
-    if column_map:
-        df = df.select([F.col(src).alias(dst) for src, dst in column_map.items()])
-    return df
+    Columns bind to ``schema`` by position, so the CSV must hold the
+    schema's columns in its order, and no job is spent inferring them.
+    ``enforceSchema=false`` checks the header by name: a reordered or
+    inserted column fails the read instead of binding the wrong
+    values."""
+    return (
+        spark.read.option("header", True)
+        .schema(schema)
+        .option("enforceSchema", False)
+        .csv(path)
+    )
 
 
 def text_params(spark: SparkSession, path: str) -> DataFrame:

@@ -1069,6 +1069,40 @@ def test_lsh_degenerate_bucket_guard(spark):
     assert {(r["a"], r["b"]) for r in rows} == {(1000, 1001)}
 
 
+def test_band_pairs_bucket_boundaries(spark):
+    """band_pairs at its exact edges, against hand-computed pairs: a
+    bucket of exactly max_bucket rows expands, one more row drops it;
+    an id listed twice in a bucket gives no (x, x) pair; a pair that
+    collides in two bands comes out once; max_bucket=None expands a
+    large bucket in full. Ids are inserted out of order: a < b is by
+    value."""
+    from itertools import combinations
+
+    rows = (
+        [(i, 0, "k3") for i in (3, 1, 2)]  # exactly max_bucket=3 rows
+        + [(i, 0, "k4") for i in (13, 10, 12, 11)]  # max_bucket + 1 rows
+        + [(21, 1, "dup"), (20, 1, "dup"), (20, 1, "dup")]  # 20 twice
+        + [(31, 0, "p"), (30, 0, "p"), (31, 1, "p"), (30, 1, "p")]  # 2 bands
+        + [(i, 2, "big") for i in range(149, 99, -1)]  # 50 rows
+        + [(40, 0, "single")]
+    )
+    sigs = spark.createDataFrame(rows, "id long, band int, key string")
+
+    def pairs(max_bucket):
+        got = [(r["a"], r["b"]) for r in dedup.band_pairs(sigs, "id", "key", max_bucket).collect()]
+        assert len(got) == len(set(got))  # distinct
+        return set(got)
+
+    capped = {(1, 2), (1, 3), (2, 3), (20, 21), (30, 31)}
+    assert pairs(3) == capped
+    assert pairs(4) == capped | set(combinations(range(10, 14), 2))
+    assert pairs(None) == (
+        capped
+        | set(combinations(range(10, 14), 2))
+        | set(combinations(range(100, 150), 2))
+    )
+
+
 def test_ann_recall_gate(spark):
     """VERDICT r2 item 7: recall@10 thresholds as a CI gate, not just a
     report — trained-IVF must not recall WORSE than sampled-IVF on the
@@ -1335,10 +1369,10 @@ def test_lsh_near_dup_recall_one_for_exact_dups(spark):
 
 def test_lsh_band_sigs_arrow_equals_expr(spark):
     """The Arrow signature pass must be BYTE-identical to the pure-Column
-    reference: np.cumsum's sequential left fold reproduces the SQL
+    reference: its sequential left fold over dim reproduces the SQL
     aggregate() fold exactly (float32→double promotion and ±1 products
     are exact), so every (id, band, sig) row — and therefore every
-    candidate pair — matches."""
+    candidate pair `band_pairs` expands from them — matches."""
     from frontpage_spark.ext import similarity
 
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
@@ -1361,17 +1395,15 @@ def test_lsh_band_sigs_arrow_equals_expr(spark):
     band_sigs = [
         F.array_join(F.slice(F.col("__bits"), g * 10 + 1, 10), "") for g in range(10)
     ]
-    expr = {
-        (r["id"], r["band"]): r["sig"]
-        for r in sigs.withColumn("__bits", bits)
-        .select("id", F.posexplode(F.array(*band_sigs)).alias("band", "sig"))
-        .collect()
-    }
+    expr_sigs = sigs.withColumn("__bits", bits).select(
+        "id", F.posexplode(F.array(*band_sigs)).alias("band", "sig")
+    )
+    expr = {(r["id"], r["band"]): r["sig"] for r in expr_sigs.collect()}
     assert len(arrow) == emb.count() * 10
     assert arrow == expr  # every (id, band) -> sig bit string identical
-    # and the derived candidate pairs match between implementations
-    ca = similarity.lsh_band_candidates(emb, sig_impl="arrow").orderBy("a", "b").collect()
-    ce = similarity.lsh_band_candidates(emb, sig_impl="expr").orderBy("a", "b").collect()
+    # and the derived candidate pairs match the reference's
+    ca = similarity.lsh_band_candidates(emb).orderBy("a", "b").collect()
+    ce = dedup.band_pairs(expr_sigs, "id", "sig").orderBy("a", "b").collect()
     assert ca == ce
 
 

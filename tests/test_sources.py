@@ -3,6 +3,7 @@ text params, bounded pagination."""
 
 from pyspark.sql import functions as F
 
+from frontpage_spark.schemas import SITE_MAP_SCHEMA
 from frontpage_spark.sources import (
     csv_dimension,
     load_table,
@@ -21,11 +22,15 @@ def test_load_table_nano_ts(spark):
 
 def test_csv_dimension(spark, tmp_path):
     p = tmp_path / "dim.csv"
-    p.write_text("site_id,city,state\nnyc,New York,NY\nsfo,San Francisco,CA\n")
-    df = csv_dimension(spark, str(p))
-    assert sorted(r["site_id"] for r in df.collect()) == ["nyc", "sfo"]
-    mapped = csv_dimension(spark, str(p), {"site_id": "id", "city": "town"})
-    assert mapped.columns == ["id", "town"]
+    p.write_text(
+        "site_id,city,state,region,division,url\n"
+        "nyc,New York,NY,Northeast,Middle Atlantic,https://newyork.craigslist.org\n"
+        "sfo,San Francisco,CA,West,Pacific,https://sfbay.craigslist.org\n"
+    )
+    df = csv_dimension(spark, str(p), SITE_MAP_SCHEMA)
+    assert df.columns == SITE_MAP_SCHEMA.fieldNames()
+    got = sorted((r["site_id"], r["city"], r["division"]) for r in df.collect())
+    assert got == [("nyc", "New York", "Middle Atlantic"), ("sfo", "San Francisco", "Pacific")]
 
 
 def test_text_params_normalize(spark, tmp_path):

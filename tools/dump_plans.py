@@ -81,9 +81,9 @@ SELECTED = {
         "itself is scanned once and never shuffled."
     ),
     "embedding_near_dup_lsh": (
-        "Embedding near-dup SCALE path (banded-LSH candidates → exact verify): one narrow "
-        "codegen pass computes all band signatures from the inlined hyperplane literal (no "
-        "shuffle); ONE exchange on (band,sig) buckets the self-join; candidate pairs then "
+        "Embedding near-dup SCALE path (banded-LSH candidates → exact verify): one Arrow "
+        "pass computes all band signatures (no shuffle); ONE exchange groups (band,sig) "
+        "buckets and a<b pairs are generated per bucket row (dedup.band_pairs); candidate pairs then "
         "re-join the corpus twice by id for the exact cosine — every stage is bucketed or "
         "keyed, nothing all-pairs, nothing collected. Candidate volume ≈ bands/2^planes of "
         "C(n,2) on uncorrelated data and output-linear once true dups dominate."
@@ -199,8 +199,9 @@ SELECTED = {
     ),
     "image_dhash_near_dup": (
         "Image near-dup: BMP payloads reduce to 64-bit dHash signatures in one Arrow "
-        "pass (cached for both join sides); the self-join keys on 16-bit signature "
-        "bands — lossless at Hamming ≤3 by pigeonhole — and popcount-of-XOR verifies. "
+        "pass (cached for banding and both verify sides); pairs are generated per 16-bit "
+        "signature-band bucket (dedup.band_pairs, uncapped) — lossless at Hamming ≤3 by "
+        "pigeonhole — and popcount-of-XOR verifies. "
         "Pixels never shuffle; only 8-byte signatures do."
     ),
     "benchmark_contamination": (
