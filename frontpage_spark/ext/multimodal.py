@@ -168,57 +168,6 @@ def decode_y4m(b: bytes) -> tuple[int, int, int]:
 # operators
 # --------------------------------------------------------------------------
 
-def read_media_dir(
-    spark: "SparkSession",  # noqa: F821
-    path: str,
-    glob: str | None = None,
-    recursive: bool = True,
-) -> DataFrame:
-    """Ingest raw media FILES into the ``MEDIA_SCHEMA`` via Spark's
-    ``binaryFile`` source — the front door for corpora that arrive as
-    objects on a store rather than pre-packed parquet.
-
-    The reader parallelizes over files (one row per file: path, length,
-    modificationTime, content) and supports ``pathGlobFilter`` +
-    ``recursiveFileLookup``, so partition-directory layouts prune at the
-    listing. Kind classification is JVM-side on the magic bytes — no
-    Python touches payloads that fail classification. ``media_id`` is
-    ``xxhash64(path)``: deterministic, collision-resistant enough for
-    corpus-scale keys, and computable without reading content.
-
-    Scale notes: binaryFile caps at ``spark.sql.sources.binaryFile.maxLength``
-    (2 GB); each file is one task's row, so millions of small files need
-    the listing parallelism binaryFile already has, while huge files
-    should be sharded upstream.
-    """
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    raw = reader.load(path)
-    magic = F.expr("substring(content, 1, 9)")
-    kind = (
-        F.when(F.expr("substring(content, 1, 2)") == F.lit(b"BM"), "image")
-        .when(
-            (F.expr("substring(content, 1, 4)") == F.lit(b"RIFF"))
-            & (F.expr("substring(content, 9, 4)") == F.lit(b"WAVE")),
-            "audio",
-        )
-        .when(magic == F.lit(b"YUV4MPEG2"), "video")
-        .otherwise(F.lit(None).cast("string"))
-    )
-    return raw.select(
-        F.xxhash64("path").alias("media_id"),
-        kind.alias("kind"),
-        F.col("content").alias("payload"),
-        F.create_map(
-            F.lit("path"), F.col("path"),
-            F.lit("length"), F.col("length").cast("string"),
-            F.lit("mtime"), F.col("modificationTime").cast("string"),
-        ).alias("meta"),
-    )
-
 _KIND_MOD = {"image": 0, "audio": 1, "video": 2}
 
 
@@ -540,25 +489,11 @@ AUDIO_RMS_SCHEMA = T.StructType(
 )
 
 
-def _wav_pcm16_samples(b: bytes) -> list[int]:
-    """Signed 16-bit little-endian samples from the data chunk (channels
-    interleaved; chunk walk mirrors ``decode_wav``)."""
-    pos, data = 12, b""
-    if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-        raise ValueError("not a WAV")
-    while pos + 8 <= len(b):
-        cid, csize = b[pos : pos + 4], struct.unpack_from("<I", b, pos + 4)[0]
-        if cid == b"data":
-            data = b[pos + 8 : pos + 8 + csize]
-        pos += 8 + csize + (csize & 1)
-    n = len(data) // 2
-    return list(struct.unpack(f"<{n}h", data[: 2 * n]))
-
-
 def _wav_pcm16_np(b: bytes) -> "numpy.ndarray":  # noqa: F821
-    """Vectorized variant of ``_wav_pcm16_samples``: the data chunk as
-    an int64 numpy array (int64 up front so sample² and Σ never touch
-    int16/int32 overflow)."""
+    """Signed 16-bit little-endian samples of the data chunk (channels
+    interleaved; chunk walk mirrors ``decode_wav``) as an int64 numpy
+    array (int64 up front so sample² and Σ never touch int16/int32
+    overflow)."""
     import numpy as np
 
     pos, data = 12, b""

@@ -50,12 +50,6 @@ def hash_sample(
     return df.filter(hash_bucket(key, hex_digits) < F.lit(thresh))
 
 
-def hash_sample_threshold(rate: float, hex_digits: int = 4) -> str:
-    """The hex threshold string ``hash_sample`` compares against —
-    exposed so oracle SQL can embed the identical literal."""
-    return format(int(rate * 16 ** hex_digits), f"0{hex_digits}x")
-
-
 def stratified_sample(
     df: DataFrame, stratum: str, key: str, n_per_stratum: int
 ) -> DataFrame:
@@ -116,18 +110,3 @@ def assign_split(
         F.when(b < F.lit(t1), "train").when(b < F.lit(t2), "val").otherwise("test")
     )
 
-
-def write_split(
-    df: DataFrame,
-    key: str,
-    path: str,
-    ratios: tuple[float, float] = (0.8, 0.1),
-) -> None:
-    """Materialize the train/val/test split in ONE pass: the label
-    becomes a hive partition column, so the write fans out to
-    ``split=train/ split=val/ split=test/`` directories without
-    scanning the input three times, and downstream readers prune to
-    one split for free."""
-    df.withColumn("split", assign_split(key, ratios)).write.mode(
-        "overwrite"
-    ).partitionBy("split").parquet(path)

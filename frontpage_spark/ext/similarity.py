@@ -704,23 +704,6 @@ def quantize_int8(
     )
 
 
-def l2_normalize(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """Unit-norm embeddings (double precision): x / ||x||2. Normalizing
-    once up front turns every later cosine into a plain dot product —
-    at scale this halves the arithmetic of similarity joins and makes
-    quantized dot products directly comparable. Zero vectors pass
-    through unchanged. Output: (id, unit array<double>)."""
-    n = F.sqrt(_norm2(vec_col))
-    return df.select(F.col(id_col), F.col(vec_col), n.alias("__n")).select(
-        F.col(id_col),
-        F.when(F.col("__n") == 0.0, F.transform(F.col(vec_col), lambda x: x.cast("double")))
-        .otherwise(F.transform(F.col(vec_col), lambda x: x.cast("double") / F.col("__n")))
-        .alias("unit"),
-    )
-
-
 def _sq_dist(a, b) -> Column:
     """Sequential-fold squared L2 distance, computed entirely in DOUBLE:
     float32 inputs are promoted BEFORE the subtract/multiply so every
@@ -812,70 +795,6 @@ def pq_encode(
         sum(err_cols[1:], err_cols[0]).alias("recon_err"),
     )
     return out
-
-
-def pq_adc_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    m: int = 4,
-    n_codewords: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k over PQ codes: each query
-    precomputes an m x n_codewords table of squared distances from its
-    subvectors to every codeword, then a corpus row's approximate
-    distance is just m table LOOKUPS summed — the scan never touches
-    the original vectors, only the 2-byte codes, which is the whole
-    point of PQ at 100 TB (memory traffic shrinks by the compression
-    factor; the float math per pair drops from O(dim) to O(m)).
-
-    Shape: codes computed once (narrow); distance tables ride on the
-    (small) broadcast query side; the scan is an all-pairs
-    crossJoin like ``cosine_topk``'s exact baseline — IVF-style cell
-    pruning composes on top (encode per cell, probe cells first).
-    Output: (qid, cid, adc_dist, rank) — approximate by construction.
-    """
-    enc = pq_encode(corpus, m, n_codewords, id_col, vec_col, dim)
-    cb = _pq_codebook(corpus, m, n_codewords, id_col, vec_col, dim)
-    sub = dim // m
-    qtab = queries.crossJoin(F.broadcast(cb)).select(
-        F.col(id_col).alias("qid"),
-        F.array(
-            *[
-                F.transform(
-                    F.element_at("codebook", F.lit(s)),
-                    lambda cwst: _sq_dist(
-                        cwst["cw"], F.slice(vec_col, s * sub + 1, sub)
-                    ),
-                )
-                for s in range(m)
-            ]
-        ).alias("dtabs"),
-    )
-    adc = sum(
-        (
-            F.element_at(F.element_at("dtabs", s + 1), F.element_at("codes", s + 1) + 1)
-            for s in range(1, m)
-        ),
-        F.element_at(F.element_at("dtabs", 1), F.element_at("codes", 1) + 1),
-    )
-    scored = (
-        enc.select(F.col(id_col).alias("cid"), "codes")
-        .crossJoin(F.broadcast(qtab))
-        .filter(F.col("cid") != F.col("qid"))
-        .select("qid", "cid", adc.alias("adc_dist"))
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("qid").orderBy(F.col("adc_dist"), F.col("cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "cid", "adc_dist", "rank")
-    )
 
 
 def mean_pool(

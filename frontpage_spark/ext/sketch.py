@@ -7,11 +7,9 @@ function, so — like `plans.bloom_prune` — the sketch is built from
 first principles with the same partial-combine shape as
 `similarity.mean_pool`:
 
-- hash positions are Spark expressions (md5-derived by default — the
+- hash positions are Spark expressions (md5-derived — the
   engine-portable hash this repo uses everywhere a DuckDB oracle must
-  replay the pipeline; ``hash_impl="xxhash64"`` keeps the ~2-3x
-  cheaper JVM hash for production sketches that never need
-  cross-engine replay), one position per depth row, so build and
+  replay the pipeline), one position per depth row, so build and
   probe share semantics;
 - each task folds ITS rows into one depth×width int64 counter matrix
   (`mapInPandas`), so the shuffle carries (tasks × d·w) counters, not
@@ -32,19 +30,12 @@ CMS_DEPTH = 5
 CMS_WIDTH = 2048
 
 
-def _cms_cells(key: Column, width: int, depth: int, hash_impl: str = "md5") -> Column:
+def _cms_cells(key: Column, width: int, depth: int) -> Column:
     """One flattened cell index per depth row: row j probes position
-    j·width + (h(key, j) mod width). Default h is the first 8 hex
-    chars of md5('j:' || key) — 32 uniform bits, bit-identical in any
-    engine with md5 (the DuckDB oracle for `cms_heavy_hitters` rebuilds
-    the same grid); "xxhash64" swaps in the cheaper JVM hash."""
-    if hash_impl == "xxhash64":
-        return F.array(
-            *[
-                F.lit(j * width) + F.pmod(F.xxhash64(key, F.lit(j)), F.lit(width))
-                for j in range(depth)
-            ]
-        )
+    j·width + (h(key, j) mod width). h is the first 8 hex chars of
+    md5('j:' || key) — 32 uniform bits, bit-identical in any engine
+    with md5 (the DuckDB oracle for `cms_heavy_hitters` rebuilds the
+    same grid)."""
     return F.array(
         *[
             F.lit(j * width)
@@ -64,7 +55,6 @@ def cms_build(
     key_col: str,
     width: int = CMS_WIDTH,
     depth: int = CMS_DEPTH,
-    hash_impl: str = "md5",
 ) -> DataFrame:
     """One-row DataFrame holding the counter matrix (flattened
     array<bigint> of length depth·width) as column ``cms``."""
@@ -84,7 +74,7 @@ def cms_build(
             yield pd.DataFrame({"pm": [m.tolist()]})
 
     partial = df.select(
-        _cms_cells(F.col(key_col), width, depth, hash_impl).alias("__cells")
+        _cms_cells(F.col(key_col), width, depth).alias("__cells")
     ).mapInPandas(build, schema="pm array<bigint>")
     zeros = F.array_repeat(F.lit(0).cast("long"), n_cells)
     return partial.agg(
@@ -103,12 +93,11 @@ def cms_estimate(
     width: int = CMS_WIDTH,
     depth: int = CMS_DEPTH,
     out_col: str = "est",
-    hash_impl: str = "md5",
 ) -> DataFrame:
     """Join the broadcast 1-row sketch onto a candidate-key DataFrame
     and add the min-over-depth estimate (O(depth) array probes/row)."""
     probes = F.transform(
-        _cms_cells(F.col(key_col), width, depth, hash_impl),
+        _cms_cells(F.col(key_col), width, depth),
         lambda c: F.element_at(F.col("cms"), c.cast("int") + 1),
     )
     return (

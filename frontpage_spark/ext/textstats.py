@@ -44,13 +44,6 @@ def distinct_ratio(text: Column | str) -> Column:
     return F.size(F.array_distinct(toks)).cast("double") / F.size(toks).cast("double")
 
 
-def avg_token_len(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    toks = F.split(c, " ")
-    total = F.aggregate(F.transform(toks, F.length), F.lit(0), lambda a, x: a + x)
-    return total.cast("double") / F.size(toks).cast("double")
-
-
 def char_entropy(text: Column | str) -> Column:
     """Character-level Shannon entropy (bits/char) — the classic
     gibberish / boilerplate / low-quality signal (random bytes score
@@ -124,14 +117,6 @@ def with_char_entropy(
     )
     ent = F.when(n > 0, F.log2(n) - s / n).otherwise(F.lit(0.0))
     return df.withColumn(out_col, ent)
-
-
-def stopword_ratio(text: Column | str, lang: str = "en") -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    toks = F.split(F.lower(c), " ")
-    markers = F.array(*[F.lit(m) for m in LANG_MARKERS[lang]])
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(markers, t)))
-    return hits.cast("double") / F.size(toks).cast("double")
 
 
 def lang_id_heuristic(text: Column | str) -> Column:

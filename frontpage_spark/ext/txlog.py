@@ -1,12 +1,11 @@
 """Minimal multi-version transaction log for parquet tables.
 
-Closes the gap left by ``pipeline.merge_upsert_path``'s epoch fence
-(VERDICT r2, "What's missing" #1): that protocol detects lost updates
-but readers can still observe the directory-swap window. Here the
-table is a *log of commits over immutable data files* — the shape of
-Delta Lake / Iceberg — so readers always resolve a consistent
-snapshot and concurrent writers are arbitrated by atomic
-create-if-absent on the next commit file.
+The engine's one MERGE commit protocol (``merge``). The table is a
+*log of commits over immutable data files* — the shape of Delta Lake /
+Iceberg — so readers always resolve a consistent snapshot and
+concurrent writers are arbitrated by atomic create-if-absent on the
+next commit file: a writer that loses the race gets ``TxConflict``,
+never a silent lost update.
 
 Reference semantics being replaced: the reference's sink is Postgres,
 where a UNIQUE constraint arbitrates concurrent scraper inserts and

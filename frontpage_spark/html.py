@@ -353,40 +353,3 @@ def extract_fields(html: Column | str) -> Column:
     locations, other_ads) extracted from an HTML column."""
     return _get_extract_all()(F.col(html) if isinstance(html, str) else html)
 
-
-def make_extractor(field: str):
-    """Build a pandas UDF extracting one field from an HTML column.
-    (Single-field convenience; multi-field consumers should use
-    ``extract_fields`` — one Arrow pass for all six.)"""
-
-    @pandas_udf("string")
-    def extract(html: pd.Series) -> pd.Series:
-        return html.map(lambda h: _extract(h, field))
-
-    return extract
-
-
-# Public column builders (F4 outer part lives in functions.parse_verbose_date)
-def post_date_raw(html: Column | str) -> Column:
-    return make_extractor("post_date_raw")(F.col(html) if isinstance(html, str) else html)
-
-
-def post_title(html: Column | str) -> Column:
-    return make_extractor("post_title")(F.col(html) if isinstance(html, str) else html)
-
-
-def post_body(html: Column | str) -> Column:
-    return make_extractor("post_body")(F.col(html) if isinstance(html, str) else html)
-
-
-def poster_age(html: Column | str) -> Column:
-    return make_extractor("poster_age")(F.col(html) if isinstance(html, str) else html)
-
-
-def locations(html: Column | str) -> Column:
-    return make_extractor("locations")(F.col(html) if isinstance(html, str) else html)
-
-
-def other_ads(html: Column | str) -> Column:
-    """';'-joined hrefs (compat form, etl_process.py:72)."""
-    return make_extractor("other_ads")(F.col(html) if isinstance(html, str) else html)

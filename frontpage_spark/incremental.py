@@ -44,12 +44,6 @@ def delta_scan(
     return delta
 
 
-def exclude_dead_letter(batch: DataFrame, quarantine: DataFrame, key: str = "uniq_id") -> DataFrame:
-    """P2/ST4 — drop rows already known to fail. Anti-join (quarantine is
-    usually tiny → AQE broadcasts it)."""
-    return batch.join(quarantine.select(key), key, "left_anti")
-
-
 def stream_pipeline(
     spark: SparkSession,
     source_path: str,
@@ -85,39 +79,6 @@ def stream_pipeline(
     else:
         writer = writer.trigger(processingTime=f"{trigger_seconds or 600} seconds")
     return writer.start()
-
-
-def stream_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str = "user_id",
-    left_ts: str = "l_ts",
-    right_ts: str = "r_ts",
-    max_gap: str = "10 minutes",
-    watermark: str = "30 minutes",
-    how: str = "inner",
-) -> DataFrame:
-    """Stream-stream interval join: each left event matches right events
-    of the same key within ``(left_ts, left_ts + max_gap]`` — the
-    click→purchase attribution shape. BOTH sides carry watermarks plus
-    the time-bound join condition, so Spark can size and EVICT the
-    buffered state on each side (without the bound, stream-stream join
-    state grows forever). Works identically on batch frames (minus the
-    state semantics) — the test runs both.
-
-    ``how="left_outer"`` emits unconverted clicks too (NULL right
-    side) — but only once the watermark has passed a click's match
-    window, because until then a purchase could still arrive; streams
-    that simply stop advancing never flush their tail (the documented
-    outer-join caveat, asserted in the test)."""
-    lw = left.withWatermark(left_ts, watermark)
-    rw = right.withWatermark(right_ts, watermark)
-    cond = (
-        (lw[key] == rw[key])
-        & (rw[right_ts] > lw[left_ts])
-        & (rw[right_ts] <= F.expr(f"{left_ts} + interval {max_gap}"))
-    )
-    return lw.join(rw, cond, how).drop(rw[key])
 
 
 def stream_dedup(

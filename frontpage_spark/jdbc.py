@@ -9,10 +9,11 @@ those over Spark's JDBC data source so the SAME pipeline semantics
 (``dedup_new_keys``, ``write_append``) run against a real database:
 
 - reads go through ``spark.read.format("jdbc")`` so the database does
-  projection/filter work server-side (``pushdown_query``), and big
-  tables are split into range-partitioned parallel reads — the shape a
-  1000-executor cluster needs (one JDBC cursor per partition, not one
-  giant serialized result).
+  projection/filter work server-side (``pushdown_query``); the reader's
+  own ``partitionColumn``/``lowerBound``/``upperBound``/``numPartitions``
+  options split big tables into range-partitioned parallel reads — the
+  shape a 1000-executor cluster needs (one JDBC cursor per partition,
+  not one giant serialized result).
 - writes use mode("append"); insert-if-absent is the anti-join against
   the sink's key set (the UNIQUE-index semantics), exactly like the
   parquet path. A real Postgres deployment at scale would stage + MERGE
@@ -58,34 +59,6 @@ def _opts(url: str, properties: dict[str, str] | None) -> dict[str, str]:
     if properties:
         out.update(properties)
     return out
-
-
-def jdbc_table(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    partition_col: str | None = None,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    num_partitions: int | None = None,
-    properties: dict[str, str] | None = None,
-) -> DataFrame:
-    """S4/S7 read side — a warehouse table as a DataFrame.
-
-    With ``partition_col`` (+ bounds), Spark opens ``num_partitions``
-    JDBC cursors with non-overlapping WHERE ranges — the only way a
-    JDBC read scales past one task. Catalyst pushes projections and
-    filters into each cursor's SQL (verify via ``PushedFilters`` in
-    `.explain`)."""
-    reader = spark.read.format("jdbc").options(**_opts(url, properties)).option("dbtable", table)
-    if partition_col is not None:
-        reader = (
-            reader.option("partitionColumn", partition_col)
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-            .option("numPartitions", str(num_partitions or 8))
-        )
-    return reader.load()
 
 
 def pushdown_query(
@@ -152,70 +125,6 @@ def insert_if_absent(
     dedup_new_keys(df, existing, key=key).write.format("jdbc").options(
         **_opts(url, properties)
     ).option("dbtable", table).mode("append").save()
-
-
-PG_URL = "jdbc:postgresql://localhost:5432/frontpage"
-
-
-def dialect_ddl(
-    spark: SparkSession,
-    schema,
-    table: str,
-    url: str = PG_URL,
-    unique_key: str | None = "uniq_id",
-) -> str:
-    """CREATE TABLE DDL for ``schema`` under the JDBC dialect that ``url``
-    selects — type names come from Spark's REAL dialect registry
-    (``JdbcDialects.get``), not a local guess, so this is exactly the
-    mapping ``write_jdbc`` uses at table-creation time. With
-    ``unique_key``, appends the UNIQUE constraint the reference's raw
-    sink declares (`scraper.py:153-156`: ``uniq_id TEXT UNIQUE``) —
-    what makes ``insert_if_absent`` / ON CONFLICT meaningful."""
-    jvm = spark._jvm
-    dialect = jvm.org.apache.spark.sql.jdbc.JdbcDialects.get(url)
-    cols = []
-    for field in schema.fields:
-        jdt = jvm.org.apache.spark.sql.types.DataType.fromJson(field.dataType.json())
-        opt = dialect.getJDBCType(jdt)
-        if opt.isEmpty():
-            # dialect falls back to Spark's common mapping
-            opt = jvm.org.apache.spark.sql.execution.datasources.jdbc.JdbcUtils.getCommonJDBCType(jdt)
-        if opt.isEmpty():
-            raise ValueError(f"no JDBC type for {field.name}: {field.dataType}")
-        name = dialect.quoteIdentifier(field.name)
-        null = "" if field.nullable else " NOT NULL"
-        cols.append(f"{name} {opt.get().databaseTypeDefinition()}{null}")
-    if unique_key is not None:
-        if unique_key not in {f.name for f in schema.fields}:
-            raise ValueError(
-                f"unique_key {unique_key!r} not in schema fields "
-                f"{[f.name for f in schema.fields]}; pass unique_key=None "
-                "for schemas without a natural key"
-            )
-        cols.append(f"UNIQUE ({dialect.quoteIdentifier(unique_key)})")
-    return f"CREATE TABLE {_check_ident(table, 'table name')} ({', '.join(cols)})"
-
-
-def pg_insert_on_conflict_sql(table: str, columns: list[str], key: str = "uniq_id") -> str:
-    """The Postgres-native insert-or-skip statement for the reference's
-    raw sink (`scraper.py:211-218`): psycopg2 there relies on the UNIQUE
-    index rejecting dup keys per-row; the modern server-side equivalent
-    is ``INSERT ... ON CONFLICT (key) DO NOTHING``. Use from a
-    ``foreachPartition`` writer against a real Postgres when per-row
-    conflict-skip must happen IN the database (concurrent writers);
-    ``insert_if_absent`` above is the engine-side anti-join form that
-    needs no dialect support and is what the tests execute end-to-end
-    over Derby.
-
-    Placeholders are ``%s`` (DB-API *pyformat*): every Python Postgres
-    driver a foreachPartition writer would use (psycopg2, pg8000)
-    speaks pyformat and REJECTS JDBC-style ``?`` markers."""
-    collist = ", ".join(_pg_quote(c) for c in columns)
-    params = ", ".join("%s" for _ in columns)
-    return (
-        f'INSERT INTO {_check_ident(table, "table name")} ({collist}) '
-        f"VALUES ({params}) ON CONFLICT ({_pg_quote(key)}) DO NOTHING"
-    )
 
 
 def jdbc_delta_scan(

@@ -12,7 +12,6 @@ dimension join is a broadcast (≤479-row class table).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.window import Window
 
 from . import functions as FF, html
 
@@ -174,79 +173,6 @@ def merge_upsert(target: DataFrame, updates: DataFrame, key: str) -> DataFrame:
     return kept.unionByName(upd)
 
 
-class ConcurrentWriteError(RuntimeError):
-    """Raised when a MERGE loses the commit race: the table advanced past
-    the epoch this writer read, so applying its rewrite would silently
-    drop the other writer's changes (lost update)."""
-
-
-def _merge_log_dir(path: str) -> str:
-    return path.rstrip("/") + "__log"
-
-
-def _merge_epoch(path: str) -> int:
-    """Highest committed epoch recorded in the sink's commit log (0 if
-    the table has never been merged)."""
-    import os
-    import re
-
-    d = _merge_log_dir(path)
-    if not os.path.isdir(d):
-        return 0
-    eps = [
-        int(m.group(1))
-        for f in os.listdir(d)
-        if (m := re.fullmatch(r"e(\d+)\.commit", f))
-    ]
-    return max(eps, default=0)
-
-
-def merge_upsert_path(spark, path: str, updates: DataFrame, key: str) -> None:
-    """MERGE into a parquet sink with an epoch-fenced temp-dir swap — a
-    minimal optimistic-concurrency commit protocol in the shape of a
-    table format's transaction log (reference semantics: Postgres's
-    UNIQUE constraint arbitrates concurrent inserts,
-    ``scraper.py:153-156,211-218``; here a commit marker arbitrates
-    concurrent rewrites).
-
-    Protocol: (1) read the current epoch E from the sidecar commit log;
-    (2) fully materialize the merged result into a temp dir; (3) claim
-    epoch E+1 by O_CREAT|O_EXCL-creating ``e{E+1}.commit`` — the
-    filesystem's atomic create-if-absent is the arbiter, exactly
-    Delta's putIfAbsent contract; (4) only the claim winner swaps the
-    data directory. A writer that raced and lost finds the marker
-    already present, deletes its temp output, and raises
-    ``ConcurrentWriteError`` — the lost update is DETECTED, never
-    silently applied. Readers during the swap window may need a retry;
-    that (not correctness of committed data) is the remaining gap to a
-    full multi-version log.
-    """
-    import json
-    import os
-    import shutil
-
-    target = spark.read.parquet(path)
-    epoch = _merge_epoch(path)
-    merged = merge_upsert(target, updates, key)
-    tmp = path.rstrip("/") + f"__merge_tmp_e{epoch + 1}_{os.getpid()}"
-    merged.write.mode("overwrite").parquet(tmp)
-    os.makedirs(_merge_log_dir(path), exist_ok=True)
-    marker = os.path.join(_merge_log_dir(path), f"e{epoch + 1}.commit")
-    try:
-        fd = os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise ConcurrentWriteError(
-            f"merge into {path!r} read epoch {epoch} but epoch {epoch + 1} "
-            "was committed by another writer; rerun the merge against the "
-            "current table state"
-        ) from None
-    with os.fdopen(fd, "w") as fh:
-        json.dump({"epoch": epoch + 1, "key": key, "pid": os.getpid()}, fh)
-    shutil.rmtree(path)
-    os.rename(tmp, path)
-
-
 def observed_batch(raw: DataFrame, observation=None) -> DataFrame:
     """Attach single-pass pipeline observability to a raw batch via
     ``DataFrame.observe`` — the Spark-native replacement for the
@@ -273,47 +199,3 @@ def observed_batch(raw: DataFrame, observation=None) -> DataFrame:
         F.max("scrape_date").alias("max_scrape_date"),
     )
 
-
-def apply_cdc(
-    target: DataFrame,
-    changes: DataFrame,
-    key: str,
-    op_col: str = "op",
-    ts_col: str = "ts",
-    seq_col: str | None = None,
-) -> DataFrame:
-    """Apply a Debezium-shaped change batch (op ∈ {I, U, D} per key) to
-    a snapshot: the LAST change per key wins (ordered by ``ts_col``
-    then op), deletes drop the key, inserts/updates upsert the
-    payload. This is the canonical "CDC stream → warehouse table" step
-    a `foreachBatch` body runs against the txlog sink.
-
-    Determinism contract: pass ``seq_col`` (the source's offset / LSN /
-    event id — every real CDC feed has one) as the final tie-break;
-    without it the batch must be unique on (key, ts_col, op_col), since
-    two changes sharing all three but carrying different payloads would
-    make the winner partition-order-dependent (ADVICE r3).
-
-    Shape: one rank-filter per key over the CHANGE batch (WindowGroup-
-    Limit; the batch, not the table, pays the window), then a single
-    anti-join (drop every changed key from the target) + union of the
-    surviving upserts — the same one-shuffle MERGE form as
-    ``merge_upsert``. Idempotent: applying the same batch twice is a
-    no-op (asserted in tests)."""
-    # the source sequence is the AUTHORITATIVE order within a timestamp;
-    # op is only the last-resort tie-break (with a seq, same-ts U-then-D
-    # must delete — op letters would wrongly rank 'U' above 'D')
-    order = [F.desc(ts_col)]
-    if seq_col is not None:
-        order.append(F.desc(seq_col))
-    order.append(F.desc(op_col))
-    w = Window.partitionBy(key).orderBy(*order)
-    last = (
-        changes.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    kept = target.join(last.select(key), key, "left_anti")
-    drop_cols = [op_col, ts_col] + ([seq_col] if seq_col is not None else [])
-    upserts = last.filter(F.col(op_col) != "D").drop(*drop_cols)
-    return kept.unionByName(upserts)

@@ -9,11 +9,11 @@ co-location across many jobs):
   out over n sub-keys, the other side is replicated n×. Turns one
   monster partition into n even ones at the cost of replicating the
   (small) build side.
-- ``write_bucketed`` / ``bucketed_table``   hash-bucketed tables on the
-  join/agg key: every subsequent join or aggregation on that key runs
-  shuffle-FREE (verified in tests by asserting no Exchange in the
-  plan). This is how a 100 TB fact table amortizes its one shuffle
-  across every downstream query.
+- ``write_bucketed``  hash-bucketed tables on the join/agg key (read
+  back with ``spark.table``): every later join or aggregation on
+  that key runs shuffle-FREE (verified in tests by asserting no
+  Exchange in the plan). This is how a 100 TB fact table amortizes
+  its one shuffle across every downstream query.
 """
 
 from __future__ import annotations
@@ -273,10 +273,6 @@ def write_bucketed(
     if sort:
         w = w.sortBy(key)
     w.saveAsTable(table)
-
-
-def bucketed_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
 
 
 def write_partitioned(df: DataFrame, path: str, *cols: str) -> None:

@@ -5867,8 +5867,7 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-over-depth probe; integer adds commute, so the grid (and thus
     every estimate) is bit-identical for any partitioning AND engine.
     The overcount-only invariant (est ≥ true, bounded excess) stays
-    pinned in test_ext; ``hash_impl='xxhash64'`` remains for
-    production sketches that never need cross-engine replay."""
+    pinned in test_ext."""
     from .ext import sketch as cms
 
     docs = load_table(spark, sf_dir, "documents")

@@ -40,11 +40,13 @@ RUNTIME_CONF = {
 
 
 def default_parallelism() -> int:
-    """$SPARK_GRAFT_CPUS, else the cores this process may run on."""
+    """$SPARK_GRAFT_CPUS when it is a positive integer, else the cores
+    this process may run on (``local[0]`` fails at session start)."""
     try:
-        return int(os.environ["SPARK_GRAFT_CPUS"])
+        n = int(os.environ["SPARK_GRAFT_CPUS"])
     except (KeyError, ValueError):
-        return len(os.sched_getaffinity(0))
+        n = 0
+    return n if n >= 1 else len(os.sched_getaffinity(0))
 
 
 # Below this much input, AQE is a net loss: each adaptive query stage
@@ -210,11 +212,12 @@ def get_spark(app_name: str = "frontpage_spark", master: str | None = None) -> S
         # mapInPandas stage re-dispatches through bloated long-lived
         # workers, while a forked child off the daemon is clean and
         # costs ~ms on Linux. Arrow-batched stages here are seconds
-        # long, so per-task spawn amortizes to noise; flip this back on
-        # for sub-second micro-batch streaming workloads. Both figures
+        # long, so per-task spawn amortizes to noise. Both figures
         # predate the daemon's importer-cache clear (daemon_preload.py),
-        # which took ~0.27 s of zip re-reading off every forked task:
-        # re-measure before trusting them either way.
+        # which took ~0.27 s of zip re-reading off every forked task.
+        # Sub-second micro-batches gain nothing from reuse either: the
+        # crawl cycle's etl parse job (896 pages, 1 task, 4 cores) took
+        # 0.398 s with reuse on vs 0.386 s off.
         .config("spark.python.worker.reuse", "false")
         # Pre-import numpy/pandas/pyarrow in the worker daemon so every
         # forked worker inherits them copy-on-write (see

@@ -15,7 +15,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
-from .schemas import TESTDATA_TABLES
 from .session import session_cache
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -65,16 +64,6 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
         elif dt == "timestamp_ntz":  # micros, no zone — UTC session makes this exact
             df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register the testdata tables as temp views for spark.sql use."""
-    for t in TESTDATA_TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
 def paginated_scan(

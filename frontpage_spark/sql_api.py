@@ -98,12 +98,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> list[str]:
     return list(TESTDATA_TABLES)
 
 
-def register_all(spark: SparkSession, sf_dir: str) -> None:
-    register_functions(spark)
-    register_udtfs(spark)
-    register_views(spark, sf_dir)
-
-
 class ChunkTokens:
     """Python UDTF (Spark 3.5+ table function): overlapping token-window
     chunker as a LATERAL-joinable table function —

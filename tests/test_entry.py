@@ -24,6 +24,46 @@ def test_contract_shape():
     assert rows_only == set()
 
 
+# The registry's identity: a move or split of queries.py must keep
+# all three. ORACLE_SHA256 hashes the registration-ordered (name,
+# oracle SQL) list with the repo root written as "<repo>", so the
+# fixture paths some oracles embed do not depend on the checkout.
+N_QUERIES = 219
+ORACLE_SHA256 = "4f6be9664fe2afb44f33334d77b0fae0fff29e4522de31da6288fd38625646a6"
+SAMPLE_HEAD = [  # the first 50 of queries(), which a correctness sample reads
+    "sessionize_users_stitch", "sessionize_users", "dup_clusters", "dedup_keep_best",
+    "jsonl_feed_channels", "html_extraction_golden", "html_clean_projection",
+    "clean_derivation_layer", "clean_projection_urls", "rfm_segments",
+    "peak_concurrent_sessions", "kcenter_diverse_seeds", "embedding_knn_lsh",
+    "embedding_knn_ivf", "token_budget_selection", "minhash_lsh_candidates",
+    "near_dup_verified", "embedding_near_dup", "embedding_near_dup_lsh",
+    "semantic_dedup_report", "pagerank_part_supplier", "prefix_filtered_jaccard",
+    "bpe_train_merges", "kmeans_lloyd_counts", "phone_mine_segments", "url_parse_tokens",
+    "group_counts_q1", "incremental_delta_scan", "conform_temporal", "conform_referential",
+    "session_window_stats", "tumbling_window_counts", "dedup_exact", "simhash_buckets",
+    "cdc_substring_dups", "benchmark_contamination", "split_leakage_audit",
+    "tfidf_top_terms", "bm25_keyword_search", "quality_filter_funnel",
+    "stream_near_dup_batch_core", "stream_near_dup_tiebreak_core",
+    "stateful_type_counts_batch", "ann_recall_eval", "semantic_decontamination",
+    "image_dhash_near_dup", "video_scene_changes", "multimodal_decode",
+    "phone_extract_literals", "frontier_politeness_schedule",
+]
+
+
+def test_registry_digest():
+    import hashlib
+    import json
+    import os
+
+    from frontpage_spark.queries import ORACLES, QUERIES
+
+    root = os.path.dirname(os.path.abspath(entry_mod.__file__))
+    pairs = [[name, ORACLES[name].replace(root, "<repo>")] for name in QUERIES]
+    assert len(QUERIES) == N_QUERIES
+    assert hashlib.sha256(json.dumps(pairs).encode()).hexdigest() == ORACLE_SHA256
+    assert list(entry_mod.queries())[:50] == SAMPLE_HEAD
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     rows = df.collect()

@@ -223,38 +223,6 @@ def test_synthesize_then_fused_equals_two_pass(spark):
         assert got == want and got
 
 
-def test_read_media_dir_binary_file_source(spark, tmp_path):
-    """binaryFile ingestion: raw files on disk → MEDIA_SCHEMA rows with
-    JVM-side magic-byte classification, then the normal decode path."""
-    seed = b"0123456789abcdef"
-    (tmp_path / "a.bmp").write_bytes(multimodal.make_bmp(20, 10, seed))
-    (tmp_path / "b.wav").write_bytes(multimodal.make_wav(77, seed))
-    sub = tmp_path / "nested"
-    sub.mkdir()
-    (sub / "c.y4m").write_bytes(multimodal.make_y4m(8, 4, 2, seed))
-    (tmp_path / "junk.bin").write_bytes(b"\x00\x01not-a-container")
-
-    media = multimodal.read_media_dir(spark, str(tmp_path))
-    rows = {r["meta"]["path"].rsplit("/", 1)[-1]: r for r in media.collect()}
-    assert rows["a.bmp"]["kind"] == "image"
-    assert rows["b.wav"]["kind"] == "audio"
-    assert rows["c.y4m"]["kind"] == "video"  # recursiveFileLookup found it
-    assert rows["junk.bin"]["kind"] is None  # unclassified, not dropped
-    assert rows["a.bmp"]["meta"]["length"] == str(54 + ((20 * 3 + 3) // 4) * 4 * 10)
-
-    decoded = {
-        r["media_id"]: r
-        for r in multimodal.decode_media(media.filter(F.col("kind").isNotNull())).collect()
-    }
-    assert {(d["width"], d["height"], d["frames"]) for d in decoded.values()} == {
-        (20, 10, 1), (77, 1, 1), (8, 4, 2)
-    }
-
-    # glob filter prunes at the listing — only the wav survives
-    only_wav = multimodal.read_media_dir(spark, str(tmp_path), glob="*.wav")
-    assert [r["kind"] for r in only_wav.collect()] == ["audio"]
-
-
 def test_rolling_hash_fingerprint(spark):
     from frontpage_spark.ext import textstats as ts
     from pyspark.sql import functions as F
@@ -475,14 +443,6 @@ def test_quantize_int8_roundtrip(spark):
     # dequantized values within one quantization step
     for x, c in zip(rows[0][1], got[0]["codes"]):
         assert abs(x - c * 4.0 / 127) <= 4.0 / 127
-
-
-def test_l2_normalize(spark):
-    rows = [(0, [3.0, 4.0]), (1, [0.0, 0.0])]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    got = {r["vec_id"]: r["unit"] for r in similarity.l2_normalize(df).collect()}
-    assert got[0] == pytest.approx([0.6, 0.8])
-    assert got[1] == [0.0, 0.0]  # zero vector passes through
 
 
 def test_mean_pool_exact(spark):
@@ -746,34 +706,23 @@ def test_weighted_sample_bias_and_plan(spark):
     assert ids1 == ids2
 
 
-def test_split_writer_disjoint_exhaustive(spark, tmp_path):
+def test_split_writer_disjoint_exhaustive(spark):
     import os
 
-    from frontpage_spark.ext.sampling import assign_split, write_split
+    from frontpage_spark.ext.sampling import assign_split
     from pyspark.sql import functions as F
 
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     docs = spark.read.parquet(os.path.join(sf, "documents.parquet"))
-    path = str(tmp_path / "splits")
-    write_split(docs, "doc_id", path)
-    back = spark.read.parquet(path)
-    n = docs.count()
+    labeled = docs.select("doc_id", assign_split("doc_id").alias("split"))
+    counts = {r.split: r.n for r in labeled.groupBy("split").agg(F.count("*").alias("n")).collect()}
     # exhaustive and disjoint: every row lands in exactly one split
-    assert back.count() == n
-    assert back.select("doc_id").distinct().count() == n
-    counts = {r.split: r.n for r in back.groupBy("split").agg(F.count("*").alias("n")).collect()}
     assert set(counts) <= {"train", "val", "test"}
+    assert sum(counts.values()) == docs.count()
     assert counts["train"] > counts.get("val", 0)
-    # deterministic: labels recomputed in-memory match the written dirs
-    mem = docs.select("doc_id", assign_split("doc_id").alias("split"))
-    joined = back.select("doc_id", "split").join(
-        mem.withColumnRenamed("split", "mem_split"), "doc_id"
-    )
-    assert joined.filter(F.col("split") != F.col("mem_split")).count() == 0
-    # directory pruning: reading one split touches only its directory
-    one = spark.read.parquet(path).filter(F.col("split") == "train")
-    files = one.inputFiles()
-    assert files and all("split=train" in f for f in files) or one.count() == counts["train"]
+    # deterministic: labels recomputed over another partitioning match
+    again = docs.repartition(3).select("doc_id", assign_split("doc_id").alias("again"))
+    assert labeled.join(again, "doc_id").filter(F.col("split") != F.col("again")).count() == 0
 
 
 def test_pq_encode_properties(spark):
@@ -806,40 +755,6 @@ def test_pq_encode_properties(spark):
     )
     assert j.filter(F.col("c1") != F.col("c2")).count() == 0
     out.unpersist()
-
-
-def test_pq_adc_recall_beats_chance(spark):
-    import os
-
-    from frontpage_spark.ext.similarity import _sq_dist, pq_adc_topk
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    emb = spark.read.parquet(os.path.join(sf, "embeddings.parquet"))
-    q = emb.filter(F.col("vec_id") < 20)
-    adc = pq_adc_topk(emb, q, k=10)
-    c = emb.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("ce"))
-    qq = q.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qe"))
-    ex = (
-        c.crossJoin(F.broadcast(qq))
-        .filter(F.col("cid") != F.col("qid"))
-        .withColumn("d", _sq_dist(F.col("qe"), F.col("ce")))
-    )
-    w = Window.partitionBy("qid").orderBy("d", "cid")
-    ex = (
-        ex.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 10)
-        .select("qid", "cid")
-    )
-    n_q = q.count()
-    hits = adc.select("qid", "cid").intersect(ex).count()
-    recall = hits / (10 * n_q)
-    # sample-codebook PQ is coarse, but far above chance (10/N ~ 2%)
-    assert recall >= 0.15, recall
-    # distances are non-negative and ranks are dense 1..10 per query
-    assert adc.filter(F.col("adc_dist") < 0).count() == 0
-    assert adc.groupBy("qid").count().filter(F.col("count") != 10).count() == 0
 
 
 def test_nfc_normalize_composes(spark):

@@ -5,7 +5,6 @@ from pyspark.sql import functions as F
 
 from frontpage_spark.incremental import (
     delta_scan,
-    exclude_dead_letter,
     sessionize,
     stream_pipeline,
     windowed_counts,
@@ -26,12 +25,6 @@ def test_delta_scan_incrementality(spark, raw):
     processed2 = processed.union(batch.select("uniq_id"))
     batch2 = delta_scan(raw, processed2, batch_size=50, order_col="id")
     assert [r["uniq_id"] for r in batch2.collect()] == ["k8", "k9"]
-
-
-def test_dead_letter_exclusion(spark, raw):
-    q = spark.createDataFrame([("k1",), ("k3",)], ["uniq_id"])
-    got = exclude_dead_letter(raw, q)
-    assert got.count() == 8 and not {"k1", "k3"} & {r["uniq_id"] for r in got.collect()}
 
 
 def test_sessionize_gap(spark):
@@ -277,50 +270,6 @@ def test_stream_dedup_within_watermark_restart(spark, tmp_path):
     assert {r["uniq_id"] for r in out.collect()} == {"k1", "k2", "k3"}
 
 
-def test_stream_interval_join(spark, tmp_path):
-    """Stream-stream interval join with watermarks on both sides:
-    purchases attribute to the click within the preceding 10 minutes."""
-    from datetime import datetime
-
-    from frontpage_spark.incremental import stream_interval_join
-
-    clicks_rows = [
-        (1, datetime(2024, 1, 1, 0, 0)),
-        (2, datetime(2024, 1, 1, 1, 0)),
-    ]
-    buys_rows = [
-        (1, datetime(2024, 1, 1, 0, 5)),    # within 10 min of click -> match
-        (1, datetime(2024, 1, 1, 0, 20)),   # too late -> no match
-        (2, datetime(2024, 1, 1, 0, 50)),   # before the click -> no match
-    ]
-    # batch semantics
-    clicks = spark.createDataFrame(clicks_rows, "user_id long, l_ts timestamp")
-    buys = spark.createDataFrame(buys_rows, "user_id long, r_ts timestamp")
-    got = stream_interval_join(clicks, buys).collect()
-    assert len(got) == 1 and got[0]["l_ts"] == datetime(2024, 1, 1, 0, 0)
-
-    # streaming semantics: same result through a real micro-batch query
-    csrc, bsrc = str(tmp_path / "c"), str(tmp_path / "b")
-    sink, chk = str(tmp_path / "out"), str(tmp_path / "chk")
-    clicks.write.parquet(csrc)
-    buys.write.parquet(bsrc)
-    cs = spark.readStream.schema("user_id long, l_ts timestamp").parquet(csrc)
-    bs = spark.readStream.schema("user_id long, r_ts timestamp").parquet(bsrc)
-    q = (
-        stream_interval_join(cs, bs)
-        .select("user_id", "l_ts", "r_ts")
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", chk)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = spark.read.parquet(sink).collect()
-    assert len(out) == 1 and out[0]["r_ts"] == datetime(2024, 1, 1, 0, 5)
-
-
 def test_windowed_counts_drops_late_data(spark, tmp_path):
     """Append-mode watermarked aggregation: an event arriving after the
     watermark passed its window never reaches the sink."""
@@ -416,8 +365,7 @@ def test_streaming_ivm_state_merge(spark, tmp_path):
             )
         except Exception:
             merged = delta
-        # state swap: write aside, then replace (same pattern as
-        # pipeline.merge_upsert_path)
+        # state swap: write aside, then replace
         merged.localCheckpoint().coalesce(1).write.mode("overwrite").parquet(state_path)
 
     q = stream_pipeline(
@@ -686,57 +634,6 @@ def test_streaming_partitioned_parquet_file_sink(spark, tmp_path):
     )
     assert "PartitionFilters: [isnotnull(event_type" in plan
     assert after.filter(F.col("event_type") == "purchase").count() == 1
-
-
-def test_stream_interval_left_outer_join_emits_unmatched(spark, tmp_path):
-    """Outer stream-stream join: a click with no purchase in its window
-    emits with a NULL right side once the watermark passes its window;
-    the tail click (watermark never overtakes it) stays buffered —
-    the documented outer-join flush semantics."""
-    from datetime import datetime
-
-    from frontpage_spark.incremental import stream_interval_join
-
-    clicks_rows = [
-        (1, datetime(2024, 1, 1, 0, 0)),   # no purchase -> outer row
-        (2, datetime(2024, 1, 1, 1, 0)),   # matched
-        (3, datetime(2024, 1, 1, 6, 0)),   # advances the watermark far
-    ]
-    buys_rows = [
-        (2, datetime(2024, 1, 1, 1, 5)),
-        (3, datetime(2024, 1, 1, 6, 1)),
-    ]
-    clicks = spark.createDataFrame(clicks_rows, "user_id long, l_ts timestamp")
-    buys = spark.createDataFrame(buys_rows, "user_id long, r_ts timestamp")
-
-    # batch semantics: plain left outer
-    got = {r["user_id"]: r for r in stream_interval_join(clicks, buys, how="left_outer").collect()}
-    assert got[1]["r_ts"] is None and got[2]["r_ts"] is not None
-
-    csrc, bsrc = str(tmp_path / "c"), str(tmp_path / "b")
-    sink, chk = str(tmp_path / "out"), str(tmp_path / "chk")
-    clicks.write.parquet(csrc)
-    buys.write.parquet(bsrc)
-    cs = spark.readStream.schema("user_id long, l_ts timestamp").parquet(csrc)
-    bs = spark.readStream.schema("user_id long, r_ts timestamp").parquet(bsrc)
-    q = (
-        stream_interval_join(cs, bs, how="left_outer")
-        .select("user_id", "l_ts", "r_ts")
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", chk)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = {r["user_id"]: r for r in spark.read.parquet(sink).collect()}
-    # user1's window (0:00-0:10) is far behind the final watermark
-    # (~5:30) -> unmatched row flushed with NULL purchase
-    assert out[1]["r_ts"] is None
-    assert out[2]["r_ts"] == datetime(2024, 1, 1, 1, 5)
-    # user3 matched inside its window; the inner result always emits
-    assert out[3]["r_ts"] == datetime(2024, 1, 1, 6, 1)
 
 
 def test_stream_near_dup_dedup(spark, tmp_path):

@@ -145,14 +145,14 @@ def test_validate_batch_quarantines_with_reason(spark, raw, site_map, tmp_path):
     quarantine_append(bad, qpath)
     back = spark.read.parquet(qpath)
     assert back.count() == 2 and set(back.columns) == {"uniq_id", "reason", "quarantined_at"}
-    # and feeds straight back into the P2 exclusion filter
-    from frontpage_spark.incremental import exclude_dead_letter
+    # and feeds straight back into the batch's P2 exclusion
+    empty_sink = spark.createDataFrame([], "uniq_id string")
+    out = run_batch(raw, site_map, empty_sink, quarantine_keys=back)
+    assert [r["uniq_id"] for r in out.collect()] == ["k1"]
 
-    assert exclude_dead_letter(clean_bad, back).count() == 1
 
-
-def test_merge_upsert_idempotent_and_inserts(spark, tmp_path):
-    from frontpage_spark.pipeline import merge_upsert, merge_upsert_path
+def test_merge_upsert_idempotent_and_inserts(spark):
+    from frontpage_spark.pipeline import merge_upsert
 
     tgt = spark.createDataFrame(
         [(1, "a", 10), (2, "b", 20), (3, "c", 30)], ["k", "name", "v"]
@@ -166,52 +166,6 @@ def test_merge_upsert_idempotent_and_inserts(spark, tmp_path):
     # applying the same batch to the merged result changes nothing
     twice = merge_upsert(once, upd, "k")
     assert sorted(map(tuple, twice.collect())) == sorted(map(tuple, once.collect()))
-
-    # sink-path variant round-trips through parquet with a dir swap
-    path = str(tmp_path / "sink")
-    tgt.write.parquet(path)
-    merge_upsert_path(spark, path, upd, "k")
-    merge_upsert_path(spark, path, upd, "k")  # idempotent on disk too
-    back = {r.k: (r.name, r.v) for r in spark.read.parquet(path).collect()}
-    assert back == got
-
-
-def test_merge_upsert_concurrent_writer_loses_loudly(spark, tmp_path, monkeypatch):
-    """VERDICT r2 item 4: two interleaved writers — the second to claim
-    the epoch must raise ConcurrentWriteError and leave the winner's
-    committed data untouched (lost-update DETECTION, not silent clobber)."""
-    import glob
-
-    from frontpage_spark import pipeline
-    from frontpage_spark.pipeline import ConcurrentWriteError, merge_upsert_path
-
-    path = str(tmp_path / "sink")
-    spark.createDataFrame([(1, 10), (2, 20)], ["k", "v"]).write.parquet(path)
-
-    upd_a = spark.createDataFrame([(1, 111)], ["k", "v"])   # writer A (stale)
-    upd_b = spark.createDataFrame([(2, 222)], ["k", "v"])   # writer B (wins)
-
-    # Writer B runs start-to-finish first; its commit claims epoch 1.
-    merge_upsert_path(spark, path, upd_b, "k")
-    assert pipeline._merge_epoch(path) == 1
-
-    # Writer A interleaved: it read epoch 0 BEFORE B committed. Replay
-    # that history by pinning its epoch read to the stale value.
-    monkeypatch.setattr(pipeline, "_merge_epoch", lambda p: 0)
-    with pytest.raises(ConcurrentWriteError):
-        merge_upsert_path(spark, path, upd_a, "k")
-    monkeypatch.undo()
-
-    # B's committed state intact; A's temp dir cleaned up.
-    back = {r.k: r.v for r in spark.read.parquet(path).collect()}
-    assert back == {1: 10, 2: 222}
-    assert glob.glob(str(tmp_path / "sink__merge_tmp_*")) == []
-
-    # A non-racing retry (fresh epoch read) now succeeds.
-    merge_upsert_path(spark, path, upd_a, "k")
-    back = {r.k: r.v for r in spark.read.parquet(path).collect()}
-    assert back == {1: 111, 2: 222}
-    assert pipeline._merge_epoch(path) == 2
 
 
 def test_observed_batch_metrics_single_pass(spark):
@@ -233,54 +187,3 @@ def test_observed_batch_metrics_single_pass(spark):
     assert m["n_null_keys"] == 1
     assert m["approx_keys"] == 2
     assert m["max_scrape_date"] == "2024-01-04 00:00:00"
-
-
-def test_apply_cdc_last_wins_and_deletes(spark):
-    from frontpage_spark.pipeline import apply_cdc
-
-    target = spark.createDataFrame(
-        [("k1", 10), ("k2", 20), ("k3", 30)], ["uniq_id", "val"]
-    )
-    changes = spark.createDataFrame(
-        [
-            ("U", 1, "k1", 11),
-            ("U", 2, "k1", 12),   # later update wins
-            ("D", 1, "k2", 0),    # delete k2
-            ("I", 1, "k4", 40),   # insert new key
-            ("I", 1, "k5", 50),
-            ("D", 2, "k5", 0),    # inserted then deleted in-batch -> absent
-        ],
-        ["op", "ts", "uniq_id", "val"],
-    )
-    out = apply_cdc(target, changes, "uniq_id")
-    got = {r["uniq_id"]: r["val"] for r in out.collect()}
-    assert got == {"k1": 12, "k3": 30, "k4": 40}
-    # idempotence: re-applying the same batch is a no-op
-    again = apply_cdc(out, changes, "uniq_id")
-    assert {r["uniq_id"]: r["val"] for r in again.collect()} == got
-
-
-def test_apply_cdc_seq_outranks_op_within_equal_ts(spark):
-    """With seq_col, the source sequence decides within an equal ts: a
-    same-ts U(seq=5) then D(seq=6) must DELETE (op-letter ordering
-    would wrongly keep the update)."""
-    from frontpage_spark.pipeline import apply_cdc
-
-    target = spark.createDataFrame([("k1", 10)], ["uniq_id", "val"])
-    changes = spark.createDataFrame(
-        [("U", 7, 5, "k1", 11), ("D", 7, 6, "k1", 0)],
-        ["op", "ts", "seq", "uniq_id", "val"],
-    )
-    out = apply_cdc(target, changes, "uniq_id", seq_col="seq")
-    assert out.collect() == []
-    # and the reverse order of arrival rows changes nothing
-    out2 = apply_cdc(
-        target,
-        spark.createDataFrame(
-            [("D", 7, 6, "k1", 0), ("U", 7, 5, "k1", 11)],
-            ["op", "ts", "seq", "uniq_id", "val"],
-        ),
-        "uniq_id",
-        seq_col="seq",
-    )
-    assert out2.collect() == []

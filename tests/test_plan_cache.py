@@ -274,7 +274,7 @@ def test_default_parallelism_env_and_fallback(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     assert default_parallelism() == 3
     usable = len(os.sched_getaffinity(0))
-    for bad in ("", "four"):
+    for bad in ("", "four", "0", "-2"):
         monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
         assert default_parallelism() == usable
     monkeypatch.delenv("SPARK_GRAFT_CPUS")
@@ -282,7 +282,7 @@ def test_default_parallelism_env_and_fallback(monkeypatch):
 
 
 def test_jdbc_identifier_validation():
-    from frontpage_spark.jdbc import _check_ident, _pg_quote, pg_insert_on_conflict_sql
+    from frontpage_spark.jdbc import _check_ident, _pg_quote
 
     assert _check_ident("ads_raw") == "ads_raw"
     assert _check_ident("app.ads_raw") == "app.ads_raw"
@@ -290,5 +290,3 @@ def test_jdbc_identifier_validation():
         with pytest.raises(ValueError):
             _check_ident(bad)
     assert _pg_quote('we"ird') == '"we""ird"'
-    sql = pg_insert_on_conflict_sql("t", ["a", 'b"c'], key="k")
-    assert '"b""c"' in sql and 'ON CONFLICT ("k") DO NOTHING' in sql

@@ -4,7 +4,7 @@ shuffle-free."""
 import pytest
 from pyspark.sql import functions as F
 
-from frontpage_spark.plans import bucketed_table, count_exchanges, salted_join, write_bucketed
+from frontpage_spark.plans import count_exchanges, salted_join, write_bucketed
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -39,11 +39,11 @@ def test_bucketed_join_no_shuffle(spark, tmp_path):
         b = spark.range(0, 1000).select(F.col("id").alias("k"), (F.col("id") * 3).alias("b"))
         write_bucketed(a, "bkt_a", "k", n_buckets=4)
         write_bucketed(b, "bkt_b", "k", n_buckets=4)
-        joined = bucketed_table(spark, "bkt_a").join(bucketed_table(spark, "bkt_b"), "k")
+        joined = spark.table("bkt_a").join(spark.table("bkt_b"), "k")
         assert joined.count() == 1000
         assert count_exchanges(joined) == 0  # bucketing replaced the shuffle
         # same key aggregation is also exchange-free
-        agg = bucketed_table(spark, "bkt_a").groupBy("k").agg(F.sum("a").alias("s"))
+        agg = spark.table("bkt_a").groupBy("k").agg(F.sum("a").alias("s"))
         agg.collect()
         assert count_exchanges(agg) == 0
     finally:

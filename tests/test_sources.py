@@ -732,7 +732,7 @@ def test_fetch_post_date_matches_udf_on_corpus(spark):
     """``fetch_documents`` extracts ``post_date_raw`` in its own pass:
     on every page of the 500-doc corpus, a page with no adInfo div and a
     dead URL it equals ``html._extract``, and ``assemble_raw`` keys the
-    same uniq_ids as the Arrow UDF ``html.post_date_raw`` over ``read``."""
+    same uniq_ids as the Arrow UDF ``html.extract_fields`` over ``read``."""
     import os
 
     import pyarrow.parquet as pq
@@ -767,7 +767,7 @@ def test_fetch_post_date_matches_udf_on_corpus(spark):
     udf_keys = fetched.filter(F.col("error").isNull() & F.col("code").isNotNull()).select(
         url,
         FF.uniq_id(
-            FF.format_ts(FF.parse_verbose_date(html.post_date_raw(F.col("read")))),
+            FF.format_ts(FF.parse_verbose_date(html.extract_fields(F.col("read"))["post_date_raw"])),
             FF.ad_id_from_url(url),
             FF.site_id_from_url(url),
             FF.category_from_url(url),

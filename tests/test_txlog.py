@@ -444,54 +444,3 @@ def test_txlog_python_datasource_sink(spark, tmp_path):
         spark.range(5).toDF("id").write.format("txlog").option("path", t).mode(
             "overwrite"
         ).save()
-
-
-def test_streaming_cdc_apply_into_txlog(spark, tmp_path):
-    """CDC end-to-end: a stream of Debezium-shaped change files applied
-    per micro-batch through pipeline.apply_cdc into a txlog table —
-    last-change-per-key wins inside a batch, deletes remove rows, and
-    a checkpointed restart with no new data changes nothing."""
-    import os
-    from frontpage_spark.pipeline import apply_cdc
-    from frontpage_spark.ext import txlog
-
-    src_dir = str(tmp_path / "changes")
-    tbl = str(tmp_path / "tbl")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src_dir)
-    schema = "op string, ts long, uniq_id string, val long"
-
-    spark.createDataFrame(
-        [("I", 1, "k1", 10), ("I", 1, "k2", 20)], schema
-    ).coalesce(1).write.json(src_dir + "/b0")
-    spark.createDataFrame(
-        [("U", 2, "k1", 11), ("D", 2, "k2", 0), ("I", 2, "k3", 30)], schema
-    ).coalesce(1).write.json(src_dir + "/b1")
-
-    txlog.append(spark.createDataFrame([], "uniq_id string, val long"), tbl)
-
-    def upsert(batch, _bid):
-        if batch.isEmpty():
-            return
-        current = txlog.read(batch.sparkSession, tbl)
-        merged = apply_cdc(current, batch, "uniq_id")
-        txlog.overwrite(merged, tbl)
-
-    def run_once():
-        (
-            spark.readStream.schema(schema)
-            .json(src_dir + "/*")
-            .writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination(120)
-        )
-
-    run_once()
-    got = {r["uniq_id"]: r["val"] for r in txlog.read(spark, tbl).collect()}
-    assert got == {"k1": 11, "k3": 30}
-    v_before = txlog.current_version(tbl)
-    run_once()  # restart with no new files -> no-op
-    assert txlog.current_version(tbl) == v_before
-    assert {r["uniq_id"]: r["val"] for r in txlog.read(spark, tbl).collect()} == got
