@@ -43,14 +43,18 @@ PR_SCALE = 10**12
 # scale is dominated by Spark's per-job scheduling floor, not by data.
 _SMALL_EDGE_ROWS = 4_000_000
 
+# damping 85/100 as an exact integer ratio (the pagerank_part_supplier
+# oracle hard-codes the same 85/100)
+_DAMPING_NUM = 85
+_DAMPING_DEN = 100
+# rounds between plans.pin lineage cuts in the distributed loops
+_CHECKPOINT_EVERY = 4
+# kcore's convergence rail: peeling that has not converged by then raises
+_KCORE_MAX_ROUNDS = 50
+
 
 def _pagerank_local(
-    edges: DataFrame,
-    iterations: int,
-    damping_num: int,
-    damping_den: int,
-    bidirected: bool = False,
-    dedup_edges: bool = False,
+    edges: DataFrame, iterations: int, bidirected: bool, dedup_edges: bool
 ) -> DataFrame:
     """Single-job exact-integer PageRank over a SMALL edge list
     coalesced to one partition — executor-side (mapInPandas), not a
@@ -100,7 +104,7 @@ def _pagerank_local(
             outdeg = outdeg + np.bincount(di, minlength=n)
         outdeg = outdeg.astype(np.int64)
         r = np.full(n, PR_SCALE // n, dtype=np.int64)
-        jump = ((damping_den - damping_num) * PR_SCALE) // (damping_den * n)
+        jump = ((_DAMPING_DEN - _DAMPING_NUM) * PR_SCALE) // (_DAMPING_DEN * n)
         for _ in range(iterations):
             # per-edge contribution; every edge ROW contributes (so a
             # multigraph weighs parallel edges), matching the
@@ -109,10 +113,10 @@ def _pagerank_local(
             # weighted bincount accumulates in float64 — exact here:
             # every term and every partial sum is an integer below the
             # total mass PR_SCALE = 1e12 << 2^53
-            c = (damping_num * r[si]) // (damping_den * outdeg[si])
+            c = (_DAMPING_NUM * r[si]) // (_DAMPING_DEN * outdeg[si])
             agg = np.bincount(di, weights=c, minlength=n)
             if bidirected:
-                c2 = (damping_num * r[di]) // (damping_den * outdeg[di])
+                c2 = (_DAMPING_NUM * r[di]) // (_DAMPING_DEN * outdeg[di])
                 agg = agg + np.bincount(si, weights=c2, minlength=n)
             r = jump + agg.astype(np.int64)
         yield pd.DataFrame({"node": np.asarray(nodes), "r": r})
@@ -125,10 +129,6 @@ def _pagerank_local(
 def pagerank_fixedpoint(
     edges: DataFrame,
     iterations: int = 3,
-    damping_num: int = 85,
-    damping_den: int = 100,
-    checkpoint_every: int = 4,
-    broadcast_state: bool = True,
     small_edges: int = _SMALL_EDGE_ROWS,
     bidirected: bool = False,
     edge_rows_hint: int | None = None,
@@ -142,13 +142,11 @@ def pagerank_fixedpoint(
     simplified treatment; feed a bidirected edge list if the graph
     should be leak-free).
 
-    ``broadcast_state=True`` hints the node-sized sides (ranks,
+    The distributed loop hints the node-sized sides (ranks,
     out-degrees, contributions) into broadcast joins so each iteration
     costs ONE shuffle (the dst aggregation) and the edge list never
     moves — required when AQE is off, since rank tables sit behind
-    shuffles where static planning can't see their (small) size. Set
-    False for billion-node graphs where ranks exceed broadcast limits;
-    the joins then shuffle on src/node and AQE handles skew."""
+    shuffles where static planning can't see their (small) size."""
     # Size-gate: small graphs take the single-job local path,
     # byte-identical output. ``edge_rows_hint`` (an UPPER BOUND on the
     # edge rows, e.g. the base table's parquet-footer count) decides
@@ -180,9 +178,7 @@ def pagerank_fixedpoint(
         dedup_edges = False
         gated_small = edges.limit(small_edges + 1).count() * mult <= small_edges
     if gated_small:
-        return _pagerank_local(
-            edges, iterations, damping_num, damping_den, bidirected, dedup_edges
-        )
+        return _pagerank_local(edges, iterations, bidirected, dedup_edges)
     if bidirected:
         edges = edges.unionByName(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -206,33 +202,32 @@ def pagerank_fixedpoint(
         .select("node", F.expr(f"CAST({PR_SCALE} AS BIGINT) div __N").alias("r"))
     )
     jump = F.expr(
-        f"CAST({(damping_den - damping_num) * PR_SCALE} AS BIGINT) div "
-        f"(CAST({damping_den} AS BIGINT) * __N)"
+        f"CAST({(_DAMPING_DEN - _DAMPING_NUM) * PR_SCALE} AS BIGINT) div "
+        f"(CAST({_DAMPING_DEN} AS BIGINT) * __N)"
     )
-    maybe_b = F.broadcast if broadcast_state else (lambda df: df)
     for i in range(iterations):
         contrib = (
-            edges.join(maybe_b(r.withColumnRenamed("node", "src")), "src")
-            .join(maybe_b(outdeg), "src")
+            edges.join(F.broadcast(r.withColumnRenamed("node", "src")), "src")
+            .join(F.broadcast(outdeg), "src")
             .select(
                 F.col("dst").alias("node"),
                 F.expr(
-                    f"(CAST({damping_num} AS BIGINT) * r) div "
-                    f"(CAST({damping_den} AS BIGINT) * outdeg)"
+                    f"(CAST({_DAMPING_NUM} AS BIGINT) * r) div "
+                    f"(CAST({_DAMPING_DEN} AS BIGINT) * outdeg)"
                 ).alias("c"),
             )
             .groupBy("node")
             .agg(F.sum("c").alias("c"))
         )
         r = (
-            nodes.join(maybe_b(contrib), "node", "left")
+            nodes.join(F.broadcast(contrib), "node", "left")
             .crossJoin(F.broadcast(n_df))
             .select(
                 "node",
                 (jump + F.coalesce(F.col("c"), F.lit(0))).cast("long").alias("r"),
             )
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
+        if (i + 1) % _CHECKPOINT_EVERY == 0 and i + 1 < iterations:
             r = pin(r)
     # eager checkpoint materializes the final ranks so the loop
     # invariants can be RELEASED here instead of leaking cached blocks
@@ -248,8 +243,6 @@ def kcore(
     k: int,
     src: str = "src",
     dst: str = "dst",
-    max_rounds: int = 50,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """k-core decomposition by iterative peeling: repeatedly delete
     nodes with degree < k (in the CURRENT subgraph) until none remain;
@@ -262,7 +255,7 @@ def kcore(
     node sets; the only driver scalar is the convergence count. The
     edge list SHRINKS monotonically, so round cost decays; peeling
     converges in ≤ diameter-ish rounds on real graphs (bounded here by
-    ``max_rounds``, asserted converged). ``plans.pin`` every few
+    ``_KCORE_MAX_ROUNDS``, asserted converged). ``plans.pin`` every few
     rounds truncates lineage exactly like the component fixpoint.
 
     Edges are treated as undirected; pass a symmetrized list or rely
@@ -280,14 +273,14 @@ def kcore(
     # is this round's n_cur (recounting cur re-ran the whole
     # uncheckpointed lineage a second time per round — ADVICE r3)
     n_cur = cur.count()
-    for rnd in range(max_rounds):
+    for rnd in range(_KCORE_MAX_ROUNDS):
         deg = cur.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.filter(F.col("deg") >= k).select("a")
         nxt = (
             cur.join(keep, "a", "left_semi")
             .join(keep.select(F.col("a").alias("b")), "b", "left_semi")
         )
-        if rnd % checkpoint_every == checkpoint_every - 1:
+        if rnd % _CHECKPOINT_EVERY == _CHECKPOINT_EVERY - 1:
             nxt = pin(nxt)
         # converged when no node fell below k this round
         n_nxt = nxt.count()
@@ -296,5 +289,5 @@ def kcore(
             break
         n_cur = n_nxt
     else:
-        raise RuntimeError(f"kcore did not converge in {max_rounds} rounds")
+        raise RuntimeError(f"kcore did not converge in {_KCORE_MAX_ROUNDS} rounds")
     return cur.groupBy(F.col("a").alias("node")).agg(F.count(F.lit(1)).alias("degree"))

@@ -1,21 +1,24 @@
 """Similarity search over an embedding column (array<float>).
 
-Two paths:
-- ``cosine_topk``    exact brute-force top-k — the correctness baseline.
-  Dot products are computed with per-term decimal accumulation so the
-  result is bit-deterministic regardless of partitioning (and matches
-  the DuckDB oracle exactly): float32 inputs make each pairwise product
-  exact in double; casting the product to DECIMAL(38,25) then summing
-  decimals removes float reassociation entirely.
-- ``lsh_topk``       scale path: random-hyperplane LSH bucketing. The
-  hyperplanes are derived deterministically from md5, so the operator
-  needs no stored model state; candidates are only compared within a
-  bucket (shuffle key = signature), then exact-scored.
+Two scoring families, each written once:
+- the expression fold: ``_dot`` / ``_norm2`` are sequential double
+  folds over the array in index order, bit-deterministic for a pair
+  regardless of partitioning, which the DuckDB oracles retrace.
+  ``_cos`` is the one cosine over them, ``_side`` the one
+  (id, vector, norm) projection a join side is built from, and
+  ``_top_k`` / ``_rank_candidates`` the one per-query ranking tail.
+  ``cosine_topk`` (exact brute force), ``ivf_topk`` and ``lsh_topk``
+  (approximate) differ only in which candidate pairs they score.
+- the numpy gemm: ``_gemm_blocks`` folds vectors into block rows and
+  ``_gemm_cosines`` scores a block against itself or a block pair with
+  one BLAS product (``cosine_pairs_blocked``, ``cosine_pairs_within``).
+  Its summation order differs from the fold, so the two families are
+  never mixed at one site; gemm consumers round before thresholding.
 
 Scale notes (100 TB): brute force is O(Q×N) — fine for small Q (it is
 a broadcast of Q against a scan of N, no shuffle of the corpus).
-``lsh_topk`` shuffles the corpus once on the signature; probing with
-multi-probe (flipping one bit) trades recall for fan-out.
+``lsh_topk`` shuffles the corpus once on the signature; multi-probe
+(flipping one bit) trades query-side fan-out for recall.
 """
 
 from __future__ import annotations
@@ -44,6 +47,42 @@ def _norm2(a: str) -> Column:
     )
 
 
+def _cos(ea: str, eb: str, na: str, nb: str) -> Column:
+    """Cosine of two vector columns from their precomputed squared norms."""
+    return _dot(ea, eb) / (F.sqrt(na) * F.sqrt(nb))
+
+
+def _side(df: DataFrame, id_col: str, vec_col: str, i: str, e: str, n: str, *extra) -> DataFrame:
+    """One scoring side: (i = id, e = vector, n = squared norm, *extra).
+    The norm is folded once per vector here; the join the side feeds
+    stops Catalyst's project-collapsing from re-inlining it per pair,
+    so scoring a pair costs one dot product plus two lookups."""
+    return df.select(
+        F.col(id_col).alias(i), F.col(vec_col).alias(e), _norm2(vec_col).alias(n), *extra
+    )
+
+
+def _top_k(scored: DataFrame, part: str, score: str, tie: str, k: int, rank: str) -> DataFrame:
+    """The ``k`` best rows per ``part`` by ``score`` descending, ties to
+    the lowest ``tie``, numbered 1..k in ``rank``."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy(part).orderBy(F.col(score).desc(), F.col(tie))
+    return scored.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
+
+
+def _rank_candidates(cand: DataFrame, k: int) -> DataFrame:
+    """Exact-score (query, corpus) candidate rows — the ``_side`` columns
+    qid/qe/qn and cid/ce/cn — and keep each query's top ``k``, self
+    pairs excluded. Output: (qid, cid, cosine, rank)."""
+    scored = cand.filter(F.col("cid") != F.col("qid")).withColumn(
+        "cosine", _cos("qe", "ce", "qn", "cn")
+    )
+    return _top_k(scored, "qid", "cosine", "cid", k, "rank").select(
+        "qid", "cid", "cosine", "rank"
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -55,10 +94,9 @@ def cosine_topk(
     """Exact top-k cosine neighbors for each query vector.
 
     ``queries`` must be small (it is broadcast); the corpus is scanned
-    once. Norms are computed ONCE per vector on each join input — the
-    join boundary stops Catalyst's project-collapsing from re-inlining
-    them per pair — so scoring a pair costs one dot product plus two
-    cached lookups. The only shuffle is on qid for the top-k ranking.
+    once. Norms are computed ONCE per vector on each join input
+    (``_side``), so scoring a pair costs one dot product plus two cached
+    lookups. The only shuffle is on qid for the top-k ranking.
     Output: (qid, cid, cosine, rank).
 
     ``exclude_same``: name of a column present in BOTH inputs; pairs
@@ -66,25 +104,16 @@ def cosine_topk(
     hard-negative-mining shape for contrastive training: neighbors
     that score high but carry a different label.
     """
-    q_cols = [F.col(id_col).alias("qid"), F.col(vec_col).alias("qe"), _norm2(vec_col).alias("qn")]
-    c_cols = [F.col(id_col).alias("cid"), F.col(vec_col).alias("ce"), _norm2(vec_col).alias("cn")]
+    q_extra, c_extra = [], []
     if exclude_same is not None:
-        q_cols.append(F.col(exclude_same).alias("qlab"))
-        c_cols.append(F.col(exclude_same).alias("clab"))
-    q = queries.select(*q_cols)
-    c = corpus.select(*c_cols)
-    scored = c.crossJoin(F.broadcast(q)).filter(F.col("cid") != F.col("qid"))
+        q_extra.append(F.col(exclude_same).alias("qlab"))
+        c_extra.append(F.col(exclude_same).alias("clab"))
+    q = _side(queries, id_col, vec_col, "qid", "qe", "qn", *q_extra)
+    c = _side(corpus, id_col, vec_col, "cid", "ce", "cn", *c_extra)
+    cand = c.crossJoin(F.broadcast(q))
     if exclude_same is not None:
-        scored = scored.filter(F.col("clab") != F.col("qlab"))
-    scored = scored.withColumn("cosine", _dot("qe", "ce") / (F.sqrt("qn") * F.sqrt("cn")))
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "cid", "cosine", "rank")
-    )
+        cand = cand.filter(F.col("clab") != F.col("qlab"))
+    return _rank_candidates(cand, k)
 
 
 def cosine_pairs(
@@ -96,20 +125,65 @@ def cosine_pairs(
     embedding-cosine near-dup detection. O(N²): use directly on samples
     or LSH-blocked candidates; at corpus scale run ``lsh_topk``-style
     bucketing first and this as the verify stage. Norms precomputed once
-    per side (join barrier prevents re-inlining per pair).
+    per side (``_side``).
     Output: (a, b, cosine)."""
-    x = corpus.select(
-        F.col(id_col).alias("a"), F.col(vec_col).alias("ea"), _norm2(vec_col).alias("na")
-    )
-    y = corpus.select(
-        F.col(id_col).alias("b"), F.col(vec_col).alias("eb"), _norm2(vec_col).alias("nb")
-    )
+    x = _side(corpus, id_col, vec_col, "a", "ea", "na")
+    y = _side(corpus, id_col, vec_col, "b", "eb", "nb")
     return (
         x.crossJoin(y)
         .filter(F.col("a") < F.col("b"))
-        .withColumn("cosine", _dot("ea", "eb") / (F.sqrt("na") * F.sqrt("nb")))
+        .withColumn("cosine", _cos("ea", "eb", "na", "nb"))
         .select("a", "b", "cosine")
     )
+
+
+def _gemm_blocks(corpus: DataFrame, key: Column, id_col: str, vec_col: str) -> DataFrame:
+    """Fold the corpus into one (g = key, ids, vs) row per key value.
+
+    Null id/vector rows are dropped UP FRONT: collect_list drops nulls
+    per-column, so two separate collect_list(id)/collect_list(v) aggs
+    would silently mis-align ids with vectors whenever exactly one of
+    the pair is null. Collecting ONE struct makes the alignment
+    structural on top of the filter: ids[i] is always the id of
+    vs[i]."""
+    return (
+        corpus.select(
+            key.alias("g"),
+            F.col(id_col).alias("id"),
+            F.col(vec_col).cast("array<double>").alias("v"),
+        )
+        .filter(F.col("id").isNotNull() & F.col("v").isNotNull())
+        .groupBy("g")
+        .agg(F.collect_list(F.struct("id", "v")).alias("rows"))
+        .select("g", F.col("rows.id").alias("ids"), F.col("rows.v").alias("vs"))
+    )
+
+
+def _gemm_cosines(vs_a, vs_b=None, triu: bool = True):
+    """(i, j, cosine) for one gemm: a block against itself (``vs_b``
+    None: ``A @ A.T``) or a block pair (``A @ B.T``); ``triu`` selects
+    the i<j upper triangle, otherwise the full i x j cross.
+
+    Fails LOUDLY on degenerate vectors: numpy 0/0 would silently emit
+    NaN, and Spark orders NaN above every threshold — the expression
+    path errors under ANSI mode instead (DIVIDE_BY_ZERO)."""
+    import numpy as np
+
+    A = np.array([np.asarray(v) for v in vs_a])
+    B = A if vs_b is None else np.array([np.asarray(v) for v in vs_b])
+    na = np.sqrt((A * A).sum(axis=1))
+    nb = na if vs_b is None else np.sqrt((B * B).sum(axis=1))
+    if not (np.isfinite(A).all() and np.isfinite(B).all()) or (na == 0).any() or (nb == 0).any():
+        raise ValueError(
+            "zero-norm or non-finite embedding in a cosine gemm block — "
+            "gate degenerate vectors upstream"
+        )
+    cos = (A @ B.T) / np.outer(na, nb)
+    if triu:
+        i, j = np.triu_indices(len(A), k=1)
+    else:
+        i, j = map(np.ravel, np.indices((len(A), len(B))))
+    return i, j, cos[i, j]
 
 
 def cosine_pairs_blocked(
@@ -117,58 +191,34 @@ def cosine_pairs_blocked(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_blocks: int = 8,
-    threshold: float | None = None,
-    values_only: bool = False,
 ) -> DataFrame:
-    """All a<b embedding pairs with their cosine, computed as blocked
-    matrix products — the scale path for the verify stage of
-    embedding-cosine near-dup (same output contract as
-    ``cosine_pairs``, which stays as the expression-level oracle
-    baseline).
+    """The cosine of every a<b embedding pair, computed as blocked
+    matrix products — the scale path for an all-pairs cosine profile
+    (``cosine_pairs`` stays as the expression-level baseline it is
+    tested against). Output: (cosine), one row per unordered pair: an
+    aggregate-only consumer (the near-dup count profile) never reads
+    the ids, and Catalyst cannot prune columns through an opaque Python
+    map, so the kernel ships cosines only.
 
     Plan shape: one narrow hash on the id assigns each vector to one of
     ``n_blocks`` blocks; one shuffle groups each block into a single
-    row (ids + vectors); a B x (B+1)/2 self-join of block rows fans out
-    the block pairs; an Arrow ``mapInPandas`` scores each block pair
-    with ONE numpy/BLAS gemm instead of |pairs| interpreted array
+    row (``_gemm_blocks``); a B x (B+1)/2 self-join of block rows fans
+    out the block pairs; an Arrow ``mapInPandas`` scores each block
+    pair with ONE numpy/BLAS gemm instead of |pairs| interpreted array
     folds. Each unordered id pair lands in exactly one (bi <= bj) block
-    pair, so no dedup pass is needed.
+    pair, so no dedup pass is needed. A zero-norm or non-finite vector
+    raises (``_gemm_cosines``).
 
     Scale notes (100 TB): pick n_blocks so a block row stays ~MBs
     (block_size x dim x 8B); replication is (B+1) copies of the corpus
     — the inherent all-pairs cost — but arithmetic runs at gemm speed
     and each block pair is an independent task, so the stage scales
-    linearly with executors. ``threshold`` prunes the Arrow return
-    traffic inside the UDF (near-dup keeps ~0 of the pairs at 0.9+).
-    Output: (a, b, cosine) — or just (cosine) with ``values_only``
-    (r11, guide §4.1): an aggregate-only consumer (the near-dup count
-    profile) never reads the ids, but Catalyst cannot prune columns
-    through an opaque Python map, so the kernel itself must skip the
-    id gather/min/max and ship 1/3 of the Arrow bytes. The cosine
-    multiset is identical by construction (same gemm, same i<j / cross
-    pair selection).
+    linearly with executors.
     """
     import pandas as pd
 
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    # Null id/vector rows are dropped UP FRONT: collect_list drops nulls
-    # per-column, so two separate collect_list(id)/collect_list(v) aggs
-    # would silently mis-align ids with vectors whenever exactly one of
-    # the pair is null (the expression path this replaces produced a
-    # null cosine that the caller filtered). Collecting ONE struct makes
-    # the alignment structural on top of the filter.
-    blocks = (
-        corpus.select(
-            F.pmod(F.hash(F.col(id_col)), F.lit(n_blocks)).alias("blk"),
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        )
-        .filter(F.col("id").isNotNull() & F.col("v").isNotNull())
-        .groupBy("blk")
-        .agg(F.collect_list(F.struct("id", "v")).alias("rows"))
-        .select(
-            "blk", F.col("rows.id").alias("ids"), F.col("rows.v").alias("vs")
-        )
+    blocks = _gemm_blocks(
+        corpus, F.pmod(F.hash(F.col(id_col)), F.lit(n_blocks)), id_col, vec_col
     )
     # Task width for the gemm stage (r12): one partition per block pair
     # put B(B+1)/2 = 36 single-gemm tasks on the executor — with fresh
@@ -186,50 +236,23 @@ def cosine_pairs_blocked(
     n_pairs = n_blocks * (n_blocks + 1) // 2
     par = corpus.sparkSession.sparkContext.defaultParallelism
     bp = (
-        blocks.select(
-            F.col("blk").alias("bi"), F.col("ids").alias("ids_a"), F.col("vs").alias("vs_a")
-        )
+        blocks.select(F.col("g").alias("bi"), F.col("vs").alias("vs_a"))
         .join(
-            blocks.select(
-                F.col("blk").alias("bj"), F.col("ids").alias("ids_b"), F.col("vs").alias("vs_b")
-            ),
+            blocks.select(F.col("g").alias("bj"), F.col("vs").alias("vs_b")),
             F.col("bi") <= F.col("bj"),
         )
         .repartition(min(n_pairs, max(1, par // 2)))
     )
 
     def score(batches):
-        import numpy as np
-
         for pdf in batches:
             for row in pdf.itertuples(index=False):
-                ids_a = np.asarray(row.ids_a)
-                ids_b = np.asarray(row.ids_b)
-                A = np.array([np.asarray(v) for v in row.vs_a])
-                B = np.array([np.asarray(v) for v in row.vs_b])
-                cos = (A @ B.T) / np.outer(
-                    np.sqrt((A * A).sum(axis=1)), np.sqrt((B * B).sum(axis=1))
-                )
-                if row.bi == row.bj:
-                    i, j = np.triu_indices(len(ids_a), k=1)
-                else:
-                    i, j = map(np.ravel, np.indices((len(ids_a), len(ids_b))))
-                c = cos[i, j]
-                if values_only:
-                    if threshold is not None:
-                        c = c[c >= threshold]
-                    yield pd.DataFrame({"cosine": c})
-                    continue
-                u, v = ids_a[i], ids_b[j]
-                if threshold is not None:
-                    keep = c >= threshold
-                    u, v, c = u[keep], v[keep], c[keep]
-                lo, hi = np.minimum(u, v), np.maximum(u, v)
-                yield pd.DataFrame({"a": lo, "b": hi, "cosine": c})
+                # a diagonal block pair still multiplies two arrays
+                # (A @ B.T, never syrk), keeping every cosine's last bit
+                _i, _j, c = _gemm_cosines(row.vs_a, row.vs_b, triu=row.bi == row.bj)
+                yield pd.DataFrame({"cosine": c})
 
-    if values_only:
-        return bp.mapInPandas(score, schema="cosine double")
-    return bp.mapInPandas(score, schema=f"a {id_type}, b {id_type}, cosine double")
+    return bp.mapInPandas(score, schema="cosine double")
 
 
 def cosine_pairs_within(
@@ -242,12 +265,12 @@ def cosine_pairs_within(
     LSH buckets, shard keys) with their cosine — never across groups.
 
     Plan shape: one shuffle folds each group into a block row
-    (ids + vectors); an Arrow ``mapInPandas`` scores each group with
-    ONE numpy/BLAS gemm instead of |pairs| interpreted array folds
-    (the same trade ``cosine_pairs_blocked`` makes for the all-pairs
-    case). Group population is the caller's knob — SemDeDup grows k
-    with the corpus precisely so cells stay task-sized; a group that
-    outgrows a task should be sub-blocked with the blocked variant.
+    (``_gemm_blocks``); an Arrow ``mapInPandas`` scores each group with
+    ONE numpy/BLAS gemm (``_gemm_cosines``) instead of |pairs|
+    interpreted array folds (the same trade ``cosine_pairs_blocked``
+    makes for the all-pairs case). Group population is the caller's
+    knob — SemDeDup grows k with the corpus precisely so cells stay
+    task-sized.
 
     Float contract: cosines come from float64 gemm, whose summation
     order differs from a sequential fold — callers thresholding
@@ -258,20 +281,7 @@ def cosine_pairs_within(
 
     id_type = corpus.schema[id_col].dataType.simpleString()
     g_type = corpus.schema[group_col].dataType.simpleString()
-    # Same null-alignment hazard as cosine_pairs_blocked: filter null
-    # ids/vectors first, then collect ONE struct so ids[i] is always
-    # the id of vs[i] by construction.
-    blocks = (
-        corpus.select(
-            F.col(group_col).alias("g"),
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        )
-        .filter(F.col("id").isNotNull() & F.col("v").isNotNull())
-        .groupBy("g")
-        .agg(F.collect_list(F.struct("id", "v")).alias("rows"))
-        .select("g", F.col("rows.id").alias("ids"), F.col("rows.v").alias("vs"))
-    )
+    blocks = _gemm_blocks(corpus, F.col(group_col), id_col, vec_col)
 
     def score(batches):
         import numpy as np
@@ -281,20 +291,8 @@ def cosine_pairs_within(
                 ids = np.asarray(row.ids)
                 if len(ids) < 2:
                     continue
-                A = np.array([np.asarray(v) for v in row.vs])
-                nrm = np.sqrt((A * A).sum(axis=1))
-                # fail LOUDLY on degenerate vectors: numpy 0/0 would
-                # silently emit NaN, and Spark orders NaN above every
-                # threshold — the expression path this replaces errors
-                # under ANSI mode instead (DIVIDE_BY_ZERO)
-                if not np.isfinite(A).all() or (nrm == 0).any():
-                    raise ValueError(
-                        "cosine_pairs_within: zero-norm or non-finite embedding "
-                        f"in group {row.g!r} — gate degenerate vectors upstream"
-                    )
-                cos = (A @ A.T) / np.outer(nrm, nrm)
-                i, j = np.triu_indices(len(ids), k=1)
-                u, v, c = ids[i], ids[j], cos[i, j]
+                i, j, c = _gemm_cosines(row.vs)
+                u, v = ids[i], ids[j]
                 lo, hi = np.minimum(u, v), np.maximum(u, v)
                 # strict a < b BY VALUE: duplicate ids in a group would
                 # otherwise emit a==b self-pairs (the SQL expression
@@ -334,8 +332,6 @@ def ivf_topk(
     pass, typically over a sample).
     Output: (qid, cid, cosine, rank) — approximate (recall < 1).
     """
-    from pyspark.sql.window import Window
-
     if train_passes == 1:
         # a single "pass" cannot both assign and update — a silent
         # fallback to sampled centroids here would hand the caller an
@@ -345,54 +341,29 @@ def ivf_topk(
             "for a Lloyd-trained codebook (passes alternate assign/update)"
         )
     if train_passes >= 2:
-        _assigned, trained = kmeans_lloyd(
+        _assigned, cents = kmeans_lloyd(
             corpus, id_col, vec_col, k=n_centroids, assign_passes=train_passes
         )
-        cents = trained.select(
-            "cent_id", F.col("ce").alias("cent"), _norm2("ce").alias("cent_n")
-        )
     else:
-        cents = (
-            corpus.orderBy(id_col)
-            .limit(n_centroids)
-            .select(F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cent"), _norm2(vec_col).alias("cent_n"))
+        cents = corpus.orderBy(id_col).limit(n_centroids).select(
+            F.col(id_col).alias("cent_id"), F.col(vec_col).alias("ce")
+        )
+    cents = _side(cents, "cent_id", "ce", "cent_id", "cent", "cent_n")
+
+    def assign(side: DataFrame, idc: str, vc: str, nc: str, probes: int) -> DataFrame:
+        # The side's norm rides through cell assignment as a named
+        # column so final scoring pays a lookup, not an O(dim) fold per
+        # candidate pair.
+        scored = side.crossJoin(F.broadcast(cents)).withColumn(
+            "__sim", _cos(vc, "cent", nc, "cent_n")
+        )
+        return _top_k(scored, idc, "__sim", "cent_id", probes, "__r").select(
+            F.col(idc), F.col(vc), F.col(nc), F.col("cent_id").alias("cell")
         )
 
-    def assign(df: DataFrame, idc: str, vc: str, nc: str, out: str, probes: int) -> DataFrame:
-        # The precomputed vector norm rides through cell assignment as a
-        # named column so final scoring pays a lookup, not an O(dim) fold
-        # per candidate pair (mirrors cosine_topk's qn/cn design).
-        scored = (
-            df.select(F.col(idc), F.col(vc), _norm2(vc).alias(nc))
-            .crossJoin(F.broadcast(cents))
-            .withColumn("__sim", _dot(vc, "cent") / (F.sqrt(nc) * F.sqrt("cent_n")))
-        )
-        w = Window.partitionBy(idc).orderBy(F.col("__sim").desc(), F.col("cent_id"))
-        return (
-            scored.withColumn("__r", F.row_number().over(w))
-            .filter(F.col("__r") <= probes)
-            .select(F.col(idc), F.col(vc), F.col(nc), F.col("cent_id").alias(out))
-        )
-
-    c = assign(
-        corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("ce")),
-        "cid", "ce", "cn", "cell", 1,
-    )
-    q = assign(
-        queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qe")),
-        "qid", "qe", "qn", "cell", nprobe,
-    )
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .filter(F.col("cid") != F.col("qid"))
-        .withColumn("cosine", _dot("qe", "ce") / (F.sqrt("qn") * F.sqrt("cn")))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "cid", "cosine", "rank")
-    )
+    c = assign(_side(corpus, id_col, vec_col, "cid", "ce", "cn"), "cid", "ce", "cn", 1)
+    q = assign(_side(queries, id_col, vec_col, "qid", "qe", "qn"), "qid", "qe", "qn", nprobe)
+    return _rank_candidates(c.join(F.broadcast(q), "cell"), k)
 
 
 def lsh_signature(vec_col: str, planes: int = 8, dim: int = 64) -> Column:
@@ -525,56 +496,38 @@ def lsh_topk(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    probe_bits: int = 1,
 ) -> DataFrame:
     """Approximate top-k: bucket corpus and queries by hyperplane
     signature, exact-score only within matching buckets.
 
-    ``probe_bits=1`` enables standard multiprobe: each query probes its
-    own bucket PLUS every Hamming-distance-1 neighbor (planes+1 buckets
-    total) — near-misses where one hyperplane split a close pair are
-    recovered, the dominant LSH recall failure. Comparisons grow from
-    N/2^planes to (planes+1)·N/2^planes — still exponential savings,
-    and only the (tiny, broadcast) query side fans out; the corpus is
-    hashed and shuffled exactly once. ``probe_bits=0`` probes the exact
-    bucket only. Output: (qid, cid, cosine, rank) — rank within
-    retrieved candidates.
+    Multiprobe: each query probes its own bucket PLUS every
+    Hamming-distance-1 neighbor (planes+1 buckets total) — near-misses
+    where one hyperplane split a close pair are recovered, the dominant
+    LSH recall failure. Comparisons grow from N/2^planes to
+    (planes+1)·N/2^planes — still exponential savings, and only the
+    (tiny, broadcast) query side fans out; the corpus is hashed and
+    shuffled exactly once. Output: (qid, cid, cosine, rank) — rank
+    within retrieved candidates.
     """
     planes_lit = _plane_literals(planes, dim)
-    # Norms computed once per side before the bucket join (cosine_topk's
-    # qn/cn design) — scoring a candidate pair costs one dot product plus
-    # two column lookups, not two extra O(dim) folds.
-    c = corpus.select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("ce"), _norm2(vec_col).alias("cn")
-    ).withColumn("__planes", planes_lit).withColumn(
-        "sig", lsh_signature("ce", planes, dim)
-    ).drop("__planes")
-    q = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qe"), _norm2(vec_col).alias("qn")
-    ).withColumn("__planes", planes_lit).withColumn(
-        "sig", lsh_signature("qe", planes, dim)
-    ).drop("__planes")
-    if probe_bits:
-        flips = F.expr(
-            f"transform(sequence(1, {planes}), i -> concat("
-            "substring(sig, 1, i - 1), "
-            "CASE WHEN substring(sig, i, 1) = '1' THEN '0' ELSE '1' END, "
-            f"substring(sig, i + 1, {planes} - i)))"
-        )
-        q = q.withColumn("sig", F.explode(F.array_insert(flips, 1, F.col("sig"))))
-    scored = (
-        c.join(F.broadcast(q), "sig")
-        .filter(F.col("cid") != F.col("qid"))
-        .withColumn("cosine", _dot("qe", "ce") / (F.sqrt("qn") * F.sqrt("cn")))
-    )
-    from pyspark.sql.window import Window
 
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "cid", "cosine", "rank")
+    def signed(side: DataFrame, e: str) -> DataFrame:
+        return (
+            side.withColumn("__planes", planes_lit)
+            .withColumn("sig", lsh_signature(e, planes, dim))
+            .drop("__planes")
+        )
+
+    c = signed(_side(corpus, id_col, vec_col, "cid", "ce", "cn"), "ce")
+    q = signed(_side(queries, id_col, vec_col, "qid", "qe", "qn"), "qe")
+    flips = F.expr(
+        f"transform(sequence(1, {planes}), i -> concat("
+        "substring(sig, 1, i - 1), "
+        "CASE WHEN substring(sig, i, 1) = '1' THEN '0' ELSE '1' END, "
+        f"substring(sig, i + 1, {planes} - i)))"
     )
+    q = q.withColumn("sig", F.explode(F.array_insert(flips, 1, F.col("sig"))))
+    return _rank_candidates(c.join(F.broadcast(q), "sig"), k)
 
 
 # banded-LSH near-dup defaults: 10 bands x 10 hyperplanes. Random-pair
@@ -653,23 +606,12 @@ def lsh_near_dup_pairs(
     # scan + norm once and both joins read the cache (eviction-safe —
     # lineage intact). Identical pairs by construction: the same rows
     # feed the same sequential folds, only their source changes.
-    proj = plans.keep(
-        corpus.select(
-            F.col(id_col).alias("__i"),
-            F.col(vec_col).alias("__e"),
-            _norm2(vec_col).alias("__n"),
-        )
-    )
-    x = proj.select(
-        F.col("__i").alias("a"), F.col("__e").alias("ea"), F.col("__n").alias("na")
-    )
-    y = proj.select(
-        F.col("__i").alias("b"), F.col("__e").alias("eb"), F.col("__n").alias("nb")
-    )
+    x = plans.keep(_side(corpus, id_col, vec_col, "a", "ea", "na"))
+    y = x.select(F.col("a").alias("b"), F.col("ea").alias("eb"), F.col("na").alias("nb"))
     return (
         cand.join(x, "a")
         .join(y, "b")
-        .withColumn("cosine", F.round(_dot("ea", "eb") / (F.sqrt("na") * F.sqrt("nb")), 12))
+        .withColumn("cosine", F.round(_cos("ea", "eb", "na", "nb"), 12))
         .filter(F.col("cosine") >= threshold)
         .select("a", "b", "cosine")
     )
@@ -888,19 +830,9 @@ def assign_cosine(
     shuffle carries ONE row per vector, not one per (vector, centroid)
     (a row_number window would sort k× the corpus). Keeps the vector
     column so the Lloyd update can consume the output directly."""
-    c = cents.select(
-        F.col("cent_id"), F.col("ce"), _norm2("ce").alias("cn")
-    )
-    v = df.select(
-        F.col(id_col), F.col(vec_col).alias("e"), _norm2(vec_col).alias("en")
-    )
-    dot = F.expr(
-        "aggregate(zip_with(e, ce, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    scored = v.crossJoin(F.broadcast(c)).withColumn(
-        "sim", dot / (F.sqrt("en") * F.sqrt("cn"))
-    )
+    c = _side(cents, "cent_id", "ce", "cent_id", "ce", "cn")
+    v = _side(df, id_col, vec_col, id_col, "e", "en")
+    scored = v.crossJoin(F.broadcast(c)).withColumn("sim", _cos("e", "ce", "en", "cn"))
     best = scored.groupBy(id_col).agg(
         F.max(F.struct(F.col("sim"), (-F.col("cent_id")).alias("nc"))).alias("b"),
         F.first("e").alias("e"),

@@ -149,21 +149,14 @@ def doc_fingerprint(text: Column | str, k: int = 5) -> Column:
     return F.md5(F.concat_ws("", F.slice(F.array_sort(hashes), 1, k)))
 
 
-# Tiny sentiment lexicon (word → integer weight); real pipelines would
-# broadcast a table (AFINN-class) — the join shape is identical.
+# Tiny sentiment lexicon (word → integer weight), scored by
+# ``sentiment_col``; the sentiment_by_source oracle joins it as a table.
 SENTIMENT_LEXICON: dict[str, int] = {
     "good": 2, "great": 3, "excellent": 4, "love": 3, "happy": 2,
     "nice": 1, "best": 3, "better": 1,
     "bad": -2, "terrible": -3, "awful": -4, "hate": -3, "sad": -2,
     "poor": -1, "worst": -3, "worse": -1,
 }
-
-
-def sentiment_lexicon_df(spark) -> DataFrame:
-    """The lexicon as a broadcastable dimension table (word, weight)."""
-    return spark.createDataFrame(
-        sorted(SENTIMENT_LEXICON.items()), ["word", "weight"]
-    )
 
 
 def sentiment_col(text: Column | str) -> Column:
@@ -177,28 +170,6 @@ def sentiment_col(text: Column | str) -> Column:
         pat = r"(?<![^ ])" + w + r"(?![^ ])"
         total = total + F.lit(v) * F.regexp_count(c, F.lit(pat))
     return total
-
-
-def sentiment_scores(
-    df: DataFrame, spark, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Per-doc sentiment: explode tokens → broadcast-join the lexicon →
-    sum weights. Map-side partial aggregation keeps the shuffle at one
-    row per (doc, partition); docs with no lexicon hits score 0 via the
-    left join + coalesce. This is the shape that scales to a large
-    (table-sized) lexicon; ``sentiment_col`` is the shuffle-free fast
-    path for literal-sized lexicons.
-    Output: (id, sentiment)."""
-    lex = F.broadcast(sentiment_lexicon_df(spark))
-    toks = df.select(
-        F.col(id_col), F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("word")
-    )
-    hits = toks.join(lex, "word", "inner").groupBy(id_col).agg(
-        F.sum("weight").alias("sentiment")
-    )
-    return df.select(id_col).join(hits, id_col, "left").select(
-        id_col, F.coalesce("sentiment", F.lit(0)).alias("sentiment")
-    )
 
 
 # Karp-Rabin rolling-hash parameters, shared with the DuckDB oracle.

@@ -64,17 +64,15 @@ def clean_projection(raw: DataFrame) -> DataFrame:
     return derive_clean(with_h)
 
 
-def enrich(clean: DataFrame, site_map: DataFrame, strict: bool = True) -> DataFrame:
+def enrich(clean: DataFrame, site_map: DataFrame) -> DataFrame:
     """J2 — broadcast dimension join on site_id.
 
     The reference KeyErrors on unknown site_ids (etl_process.py:320-323)
-    — inner-join semantics. strict=True keeps that (rows with unknown
-    sites drop out and belong in the dead-letter channel); strict=False
-    left-joins with NULL enrichment.
+    — inner-join semantics: rows with unknown sites drop out and belong
+    in the dead-letter channel.
     """
-    how = "inner" if strict else "left"
     dim = F.broadcast(site_map.select("site_id", "city", "state", "region", "division"))
-    return clean.join(dim, "site_id", how)
+    return clean.join(dim, "site_id", "inner")
 
 
 def to_compat(df: DataFrame) -> DataFrame:
@@ -117,7 +115,7 @@ def run_batch(
     if quarantine_keys is not None:
         batch = batch.join(quarantine_keys.select("uniq_id"), "uniq_id", "left_anti")
     cleaned = clean_projection(batch)
-    enriched = enrich(cleaned, site_map, strict=True)
+    enriched = enrich(cleaned, site_map)
     return dedup_new_keys(enriched, existing_keys)
 
 

@@ -1224,10 +1224,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Round BEFORE thresholding (both sides): the gemm path's BLAS
         # summation order differs from DuckDB's sequential fold, so a pair
         # within float noise of 0.5/0.8 could otherwise flip a count.
-        # values_only (r11): the aggregate below never reads the ids, and
-        # an opaque Python map defeats column pruning — emit cosine only
-        # (1/3 the Arrow bytes, no id gather in the kernel).
-        pairs = similarity.cosine_pairs_blocked(emb, values_only=True).withColumn(
+        pairs = similarity.cosine_pairs_blocked(emb).withColumn(
             "cosine", F.round("cosine", 12)
         )
     return pairs.agg(
@@ -1399,17 +1396,13 @@ def semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     12 digits BEFORE thresholding on both engines, sequential-fold dot
     products, so the DuckDB mirror is hash-exact."""
     emb = load_table(spark, sf_dir, "embeddings")
-    ev = emb.filter(F.col("vec_id") % 97 == 0).select(
-        F.col("vec_id").alias("b"), F.col("embedding").alias("eb"),
-        similarity._norm2("embedding").alias("nb"),
+    ev = similarity._side(
+        emb.filter(F.col("vec_id") % 97 == 0), "vec_id", "embedding", "b", "eb", "nb"
     )
-    co = emb.filter(F.col("vec_id") % 97 != 0).select(
-        F.col("vec_id").alias("a"), F.col("embedding").alias("ea"),
-        similarity._norm2("embedding").alias("na"),
+    co = similarity._side(
+        emb.filter(F.col("vec_id") % 97 != 0), "vec_id", "embedding", "a", "ea", "na"
     )
-    cos = F.round(
-        similarity._dot("ea", "eb") / (F.sqrt("na") * F.sqrt("nb")), 12
-    )
+    cos = F.round(similarity._cos("ea", "eb", "na", "nb"), 12)
     return (
         co.crossJoin(F.broadcast(ev))
         .select("a", cos.alias("cos"))
@@ -1707,9 +1700,8 @@ _LEX_VALUES_SQL = ", ".join(
 def sentiment_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lexicon sentiment scoring rolled up per source. Uses the
     shuffle-free literal-lexicon path (textstats.sentiment_col: one
-    codegen'd regexp_count per word); textstats.sentiment_scores is the
-    broadcast-join shape for table-sized lexicons — both produce the
-    same scores (the oracle uses the join formulation)."""
+    codegen'd regexp_count per word); the oracle computes the same
+    scores with the explode + lexicon-join formulation."""
     docs = _tw(spark, sf_dir, "documents")
     per_doc = docs.select("source", textstats.sentiment_col("text").alias("sentiment"))
     return per_doc.groupBy("source").agg(
@@ -2328,7 +2320,7 @@ def html_clean_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         _CLEAN_SITES,
         "site_id string, city string, state string, region string, division string",
     )
-    return to_compat(enrich(clean_projection(raw), site_map, strict=True))
+    return to_compat(enrich(clean_projection(raw), site_map))
 
 
 def _lsh_planes_duck(planes: int, dim: int = 64) -> str:
@@ -3167,37 +3159,19 @@ _KM_CN = "list_sum([CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE) for i in gener
 def kmeans_assign_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One Lloyd/k-means ASSIGNMENT step: broadcast the 8 centroids
     (deterministic sample standing in for the trained codebook), score
-    every vector against all centroids in one narrow pass, argmin via a
-    per-vector window, then count members and mean similarity per cell.
-    This is the iterated kernel of embedding clustering at corpus scale:
-    no shuffle of the corpus except the final small aggregation (the
-    centroid cross join is map-side against a broadcast).
+    every vector against all centroids in one narrow pass, argmax via
+    ``similarity.assign_cosine``'s map-side-combinable
+    ``max(struct(sim, -cent_id))`` (ties → lowest cent_id, the oracle's
+    ``ORDER BY sim DESC, cent_id``), then count members and mean
+    similarity per cell. This is the iterated kernel of embedding
+    clustering at corpus scale: the corpus shuffles one row per vector,
+    and the centroid cross join is map-side against a broadcast.
 
     The per-pair cosine is rounded to 12 decimals and summed as exact
     integer picos before the mean so the cross-engine float-sum order
     cannot flip the output."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = (
-        emb.orderBy("vec_id")
-        .limit(8)
-        .select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("embedding").alias("ce"),
-            similarity._norm2("embedding").alias("cn"),
-        )
-    )
-    v = emb.select(
-        F.col("vec_id"), F.col("embedding").alias("e"), similarity._norm2("embedding").alias("en")
-    )
-    dot = F.expr(
-        "aggregate(zip_with(e, ce, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    scored = v.crossJoin(F.broadcast(cents)).withColumn(
-        "sim", dot / (F.sqrt("en") * F.sqrt("cn"))
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), "cent_id")
-    assigned = scored.withColumn("r", F.row_number().over(w)).filter(F.col("r") == 1)
+    assigned, _cents = similarity.kmeans_lloyd(emb, "vec_id", "embedding", k=8, assign_passes=1)
     return assigned.groupBy("cent_id").agg(
         F.count("*").alias("n_members"),
         F.round(
@@ -6523,10 +6497,7 @@ def semantic_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     round the cosine to 12 decimals before the threshold so the gemm
     vs sequential-fold summation order cannot flip a borderline pair."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = emb.orderBy("vec_id").limit(8).select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("ce")
-    )
-    assigned = similarity.assign_cosine(emb, cents)
+    assigned, _cents = similarity.kmeans_lloyd(emb, "vec_id", "embedding", k=8, assign_passes=1)
     # within-cell pairs via one gemm per cell (cosine_pairs_within)
     # instead of |pairs| interpreted folds; gemm summation order
     # differs from the oracle's sequential fold, so BOTH sides round
@@ -7825,12 +7796,8 @@ def matryoshka_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline as mean_pool); one narrow pass, k-way explode of a
     3-element literal, keyed count/sum agg."""
     emb = load_table(spark, sf_dir, "embeddings")
-    full = F.expr(
-        "aggregate(embedding, CAST(0 AS DOUBLE), (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
-    )
-    head = F.expr(
-        "aggregate(slice(embedding, 1, k), CAST(0 AS DOUBLE), (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
-    )
+    full = similarity._norm2("embedding")
+    head = similarity._norm2("slice(embedding, 1, k)")
     per_k = emb.select(
         F.explode(F.array(*[F.lit(k) for k in _MRL_DIMS])).alias("k"), "embedding"
     ).select("k", F.round(F.lit(1000000.0) * head / full).cast("long").alias("retained_ppm"))

@@ -255,49 +255,34 @@ def test_cosine_pairs(spark):
 
 
 def test_cosine_pairs_blocked_matches_expr(spark):
-    """The gemm-blocked path must produce the same pair set and the
-    same cosines (to float slop) as the expression baseline, for every
-    blocking factor — each unordered pair exactly once."""
+    """The gemm-blocked path must produce the same cosine multiset (to
+    float slop) as the expression baseline, for every blocking factor —
+    each unordered pair exactly once."""
     from frontpage_spark.ext import similarity
 
     rows = [(i, [float((i * 7 + j * 3) % 5) - 2.0 for j in range(4)]) for i in range(1, 14)]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    want = {(r["a"], r["b"]): r["cosine"] for r in similarity.cosine_pairs(df).collect()}
+    want = sorted(r["cosine"] for r in similarity.cosine_pairs(df).collect())
+    assert len(want) == 13 * 12 // 2
     for nb in (1, 3, 8):
-        got = {
-            (r["a"], r["b"]): r["cosine"]
-            for r in similarity.cosine_pairs_blocked(df, n_blocks=nb).collect()
-        }
-        assert set(got) == set(want)
-        assert all(abs(got[k] - want[k]) < 1e-12 for k in want)
-    # Threshold checks filter BOTH sides by one rule: the two paths
-    # compute a cosine with different summation orders, so a value
-    # within float noise of 0.5 may be kept by one and dropped by the
-    # other. Pairs inside that band are excluded on both sides (ADVICE
-    # r12); every pair clear of it must agree exactly.
-    def clear(v):
-        return abs(v - 0.5) > 1e-9
+        got = similarity.cosine_pairs_blocked(df, n_blocks=nb)
+        assert got.columns == ["cosine"]
+        got = sorted(r["cosine"] for r in got.collect())
+        assert len(got) == len(want)
+        assert all(abs(a - b) < 1e-12 for a, b in zip(got, want)), nb
 
-    thr = {
-        (r["a"], r["b"])
-        for r in similarity.cosine_pairs_blocked(df, n_blocks=3, threshold=0.5).collect()
-    }
-    assert thr <= set(want)
-    assert {k for k in thr if clear(want[k])} == {
-        k for k, v in want.items() if v >= 0.5 and clear(v)
-    }
-    # values_only (r11): identical cosine MULTISET, no id columns,
-    # including under a threshold
-    for kw in ({}, {"threshold": 0.5}):
-        vo = similarity.cosine_pairs_blocked(df, n_blocks=3, values_only=True, **kw)
-        assert vo.columns == ["cosine"]
-        got_vals = sorted(r["cosine"] for r in vo.collect())
-        want_vals = sorted(want.values())
-        if "threshold" in kw:
-            got_vals = [v for v in got_vals if clear(v)]
-            want_vals = [v for v in want_vals if v >= 0.5 and clear(v)]
-        assert len(got_vals) == len(want_vals)
-        assert all(abs(a - b) < 1e-12 for a, b in zip(got_vals, want_vals))
+
+def test_cosine_pairs_blocked_rejects_zero_norm(spark):
+    # a zero-norm vector fails LOUDLY in the blocked kernel too: numpy
+    # 0/0 would emit NaN, which Spark orders above every threshold
+    from frontpage_spark.ext import similarity
+
+    zero = spark.createDataFrame(
+        [(1, [0.0, 0.0]), (2, [1.0, 0.0]), (3, [0.0, 1.0])], ["vec_id", "embedding"]
+    )
+    for nb in (1, 2):
+        with pytest.raises(Exception, match="zero-norm|PythonException"):
+            similarity.cosine_pairs_blocked(zero, n_blocks=nb).collect()
 
 
 def test_cosine_pairs_within_matches_expr(spark):
@@ -336,7 +321,10 @@ def test_sentiment_scores(spark):
         [(1, "a good great day"), (2, "terrible awful stuff"), (3, "neutral words only")],
         ["doc_id", "text"],
     )
-    got = {r["doc_id"]: r["sentiment"] for r in ts.sentiment_scores(df, spark).collect()}
+    got = {
+        r["doc_id"]: r["sentiment"]
+        for r in df.select("doc_id", ts.sentiment_col("text").alias("sentiment")).collect()
+    }
     assert got == {1: 5, 2: -7, 3: 0}  # good(2)+great(3); terrible(-3)+awful(-4); no hits
 
 
@@ -841,6 +829,46 @@ def test_kmeans_lloyd_blobs(spark):
         m32 = np.array(blob, dtype=np.float32).astype(float)
         want = np.round(m32 * 1e6).sum(axis=0) / len(blob) / 1e6
         assert np.allclose(cent[cid], want, atol=0, rtol=0)
+
+
+def test_kmeans_assign_counts_tie_goes_to_lowest_cent(spark, tmp_path):
+    """A vector equidistant (bit-exactly) from two centroids joins the
+    LOWER cent_id on both engines: assign_cosine's max(struct(sim,
+    -cent_id)) against the oracle's ORDER BY sim DESC, cent_id."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from frontpage_spark.queries import ORACLES, QUERIES
+
+    def vec(hot):  # {dim: value} -> 8-dim vector
+        return [hot.get(d, 0.0) for d in range(8)]
+
+    # centroids = the first 8 ids: one-hot e0..e7
+    rows = [vec({d: 1.0}) for d in range(8)]
+    rows += [
+        vec({1: 1.0, 4: 1.0}),  # id 9: ties cents 2 and 5 -> 2
+        vec({6: 3.0, 2: 3.0}),  # id 10: ties cents 3 and 7 -> 3
+        vec({0: 0.5, 7: 0.5}),  # id 11: ties cents 1 and 8 -> 1
+        vec({0: 1.0, 1: 2.0}),  # id 12: no tie, cent 2
+    ]
+    path = tmp_path / "embeddings.parquet"
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array(range(1, len(rows) + 1), pa.int64()),
+            "embedding": pa.array(rows, pa.list_(pa.float32())),
+            "label": pa.array([0] * len(rows), pa.int32()),
+        }),
+        path,
+    )
+    got = sorted(
+        tuple(r) for r in QUERIES["kmeans_assign_counts"](spark, str(tmp_path)).collect()
+    )
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{path}'")
+    oracle = sorted(tuple(r) for r in con.execute(ORACLES["kmeans_assign_counts"]).fetchall())
+    assert got == oracle
+    assert {c: n for c, n, _ in got} == {1: 2, 2: 3, 3: 2, 4: 1, 5: 1, 6: 1, 7: 1, 8: 1}
 
 
 def test_ivf_trained_codebook(spark, vectors):
@@ -1388,12 +1416,12 @@ def test_cosine_pairs_within_degenerate_inputs(spark):
         for r in similarity.cosine_pairs_within(holey, "cell").collect()
     }
     assert set(got) == {(1, 3)} and abs(got[(1, 3)]) < 1e-12
-    # same hazard in the blocked all-pairs variant
-    got_b = {
-        (r["a"], r["b"]): r["cosine"]
+    # same hazard in the blocked all-pairs variant: one pair, cosine 0.0
+    got_b = [
+        r["cosine"]
         for r in similarity.cosine_pairs_blocked(holey.drop("cell"), n_blocks=2).collect()
-    }
-    assert set(got_b) == {(1, 3)} and abs(got_b[(1, 3)]) < 1e-12
+    ]
+    assert got_b == [0.0]
 
 
 def test_pagerank_null_edges_dropped_both_paths(spark):

@@ -78,16 +78,15 @@ def test_to_compat_boundary(spark, raw):
 
 def test_enrich_inner_semantics(spark, raw, site_map):
     clean = clean_projection(raw)
-    got = enrich(clean, site_map, strict=True)
+    got = enrich(clean, site_map)
     rows = {r["uniq_id"]: r for r in got.collect()}
     assert rows["k1"]["city"] == "New York" and rows["k1"]["region"] == "Northeast"
     assert rows["k2"]["state"] == "CA"
-    # strict drops nothing here (all sites known); unknown site drops out
+    # the inner join drops nothing here (all sites known); unknown site drops out
     clean_bad = clean.withColumn(
         "site_id", F.when(F.col("uniq_id") == "k1", "nope").otherwise(F.col("site_id"))
     )
-    assert enrich(clean_bad, site_map, strict=True).count() == 2
-    assert enrich(clean_bad, site_map, strict=False).count() == 3
+    assert enrich(clean_bad, site_map).count() == 2
 
 
 def test_dedup_idempotent(spark, raw):

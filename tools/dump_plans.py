@@ -76,9 +76,9 @@ SELECTED = {
         "ranks ~sessions rows, never raw events."
     ),
     "kmeans_assign_counts": (
-        "Lloyd assignment step: centroids broadcast (8 rows), per-vector argmin via window "
-        "over 8 candidates, final aggregate exchanges ~8 rows of partial sums. The corpus "
-        "itself is scanned once and never shuffled."
+        "Lloyd assignment step: centroids broadcast (8 rows), per-vector argmax as "
+        "assign_cosine's map-side-combinable max(struct(sim, -cent_id)) aggregate (the corpus "
+        "shuffles one row per vector, not 8), final aggregate exchanges ~8 rows of partial sums."
     ),
     "embedding_near_dup_lsh": (
         "Embedding near-dup SCALE path (banded-LSH candidates → exact verify): one Arrow "
