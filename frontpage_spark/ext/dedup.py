@@ -17,9 +17,20 @@ Scale notes (100 TB):
 - Portable hashing: md5 (identical in Spark and DuckDB) so every
   operator here is oracle-checkable; swap for xxhash64 when oracle
   parity is not needed (faster, same structure).
+
+Set-similarity thresholds (Jaccard, containment) are decided by ONE
+rule, ``_fraction``: the threshold becomes an exact fraction p/q and
+every threshold predicate of the shingle-set family — ``jaccard_pairs``,
+``prefix_filter_pairs``' PPJoin filters and verify, and the LSH verify
+stages in ``queries`` — is an integer cross-multiplication over bigint
+counts, never a double comparison. Candidate pairs are verified by ONE
+stage, ``pair_overlaps``: (a, b, n_inter, sz_a, sz_b) with one
+``array_intersect`` per pair.
 """
 
 from __future__ import annotations
+
+from fractions import Fraction
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -27,6 +38,80 @@ from ..plans import keep as _keep
 
 DEFAULT_BANDS = 4
 DEFAULT_MAX_BUCKET = 100
+_MAX_DEN = 1 << 20
+
+
+def _fraction(threshold: float) -> tuple[int, int]:
+    """``threshold`` as the exact fraction ``(p, q)`` its decimal
+    literal names: ``Fraction(str(threshold))``. Raises ``ValueError``
+    unless ``0 < t <= 1`` and ``q <= 2**20``.
+
+    Why ``x / y >= t`` in doubles equals ``q·x >= p·y`` in integers,
+    for every count ratio ``x / y`` with ``0 < y < 2**30``:
+    ``str`` round-trips a Python float, so ``RN(p/q) == t``. If
+    ``x/y >= p/q``, monotone rounding gives ``RN(x/y) >= RN(p/q) = t``.
+    If ``x/y < p/q``, the gap is at least ``1/(y·q) >= 2**-50``, wider
+    than the whole set of reals that round to any ``t <= 1`` (under
+    ``2**-52``), so ``RN(x/y) < t``. Both engines divide exactly
+    representable counts with one correctly rounded division, so the
+    integer predicates below keep exactly the pairs the division form
+    (and the DuckDB oracles, which still divide) keep. A threshold like
+    ``0.1 + 0.2`` (= 0.30000000000000004) has q > 2**20 and is refused
+    rather than silently compared with rounding."""
+    t = Fraction(str(threshold))
+    if not 0 < t <= 1 or t.denominator > _MAX_DEN:
+        raise ValueError(
+            f"threshold {threshold!r} must be in (0, 1] with a denominator <= 2**20"
+        )
+    return t.numerator, t.denominator
+
+
+def jaccard_at_least(threshold: float) -> Column:
+    """Jaccard ``n_inter / (sz_a + sz_b - n_inter) >= t`` as the exact
+    integer predicate ``(p+q)·n_inter >= p·(sz_a + sz_b)`` over bigint
+    columns (see ``_fraction``)."""
+    p, q = _fraction(threshold)
+    return F.lit(p + q) * F.col("n_inter") >= F.lit(p) * (F.col("sz_a") + F.col("sz_b"))
+
+
+def containment_at_least(threshold: float) -> Column:
+    """Containment ``n_inter / least(sz_a, sz_b) >= t`` as the exact
+    integer predicate ``q·n_inter >= p·least(sz_a, sz_b)`` (see ``_fraction``)."""
+    p, q = _fraction(threshold)
+    return F.lit(q) * F.col("n_inter") >= F.lit(p) * F.least("sz_a", "sz_b")
+
+
+def jaccard_col() -> Column:
+    """The emitted Jaccard value: one double division of the exact
+    counts, the same expression the oracles compute."""
+    return F.col("n_inter").cast("double") / (
+        F.col("sz_a") + F.col("sz_b") - F.col("n_inter")
+    ).cast("double")
+
+
+def pair_overlaps(
+    pairs: DataFrame, sets: DataFrame, id_col: str = "doc_id", set_col: str = "shingles"
+) -> DataFrame:
+    """The verify stage of every candidate-pair near-dup query: join
+    each side's distinct-element set to the (a, b) candidates and
+    return ``(a, b, n_inter, sz_a, sz_b)`` as bigints, with ONE
+    ``array_intersect`` per pair. A threshold filter on the result is
+    pushed into the second join's condition, which then evaluates the
+    intersect once (the integer predicates divide nothing, so the
+    intersect is not repeated in a denominator)."""
+    sa = sets.select(F.col(id_col).alias("a"), F.col(set_col).alias("set_a"))
+    sb = sets.select(F.col(id_col).alias("b"), F.col(set_col).alias("set_b"))
+    return (
+        pairs.join(sa, "a")
+        .join(sb, "b")
+        .select(
+            "a",
+            "b",
+            F.size(F.array_intersect("set_a", "set_b")).cast("long").alias("n_inter"),
+            F.size("set_a").cast("long").alias("sz_a"),
+            F.size("set_b").cast("long").alias("sz_b"),
+        )
+    )
 
 
 def tokens_col(text: Column | str) -> Column:
@@ -223,7 +308,9 @@ def jaccard_pairs(
     The inverted-index self-join shuffles on the shingle value; intended
     for a sampled/blocked subset — for full-corpus near-dup at scale use
     ``lsh_candidate_pairs`` first, then verify candidates with this.
-    Jaccard emitted as a single exact double division (deterministic)."""
+    Jaccard emitted as a single exact double division (deterministic);
+    the threshold is the exact integer ``jaccard_at_least``."""
+    keep_pair = jaccard_at_least(threshold)
     sh = df.select(F.col(id_col), F.explode(shingles_col(text_col)).alias("shingle"))
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
     a = sh.select(F.col(id_col).alias("a"), "shingle")
@@ -232,20 +319,15 @@ def jaccard_pairs(
         a.join(b, "shingle")
         .filter(F.col("a") < F.col("b"))
         .groupBy("a", "b")
-        .agg(F.count("*").alias("inter"))
+        .agg(F.count("*").alias("n_inter"))
     )
-    sa = sizes.select(F.col(id_col).alias("a"), F.col("sz").alias("sza"))
-    sb = sizes.select(F.col(id_col).alias("b"), F.col("sz").alias("szb"))
+    sa = sizes.select(F.col(id_col).alias("a"), F.col("sz").alias("sz_a"))
+    sb = sizes.select(F.col(id_col).alias("b"), F.col("sz").alias("sz_b"))
     return (
         inter.join(sa, "a")
         .join(sb, "b")
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("sza") + F.col("szb") - F.col("inter")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
+        .filter(keep_pair)
+        .select("a", "b", jaccard_col().alias("jaccard"))
     )
 
 
@@ -371,8 +453,14 @@ def prefix_filter_pairs(
     re-sort sets (groupBy id), one prefix-token join, one verify join
     touching only candidates. No LSH false negatives, no all-pairs —
     the deterministic alternative to MinHash when exact recall at a
-    known threshold is required."""
+    known threshold is required.
+
+    Every filter is integer arithmetic on t = p/q (``_fraction``):
+    ``ceil(p·n/q)`` is ``(p·n + q - 1) div q``, so no prefix length,
+    length bound or overlap bound depends on double rounding."""
     from pyspark.sql.window import Window
+
+    p, q = _fraction(threshold)
 
     # The 64-bit token dictionary is applied AT THE EXPLODE (r11): every
     # downstream stage — the frequency window's exchange, the per-doc
@@ -406,14 +494,10 @@ def prefix_filter_pairs(
     sets = sorted_sets.select(
         F.col(id_col),
         F.expr("transform(toks, x -> x.tok)").alias("s"),
-        F.size("toks").alias("sz"),
+        F.size("toks").cast("long").alias("sz"),
     ).withColumn(
         "prefix",
-        F.slice(
-            "s",
-            F.lit(1),
-            (F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1).cast("int"),
-        ),
+        F.slice("s", F.lit(1), F.expr(f"sz - ({p} * sz + {q - 1}) div {q} + 1").cast("int")),
     )
     # four consumers below (two prefix explodes, two verify sides) —
     # without a persist each one replays shingle + freq + sort from the
@@ -422,12 +506,12 @@ def prefix_filter_pairs(
     # Candidate generation with the full PPJoin filter stack — each
     # filter is LOSSLESS (the oracle equivalence proves it):
     #  * prefix filter: join only the rare prefixes (above);
-    #  * length filter: J >= t forces min(sz)/max(sz) >= t;
+    #  * length filter: J >= t forces q·min(sz) >= p·max(sz);
     #  * positional filter: a token shared at 0-based positions (i, j)
     #    of the globally-sorted sets bounds the overlap by
     #    min(i, j) + 1 + min(sza-i-1, szb-j-1), which is an upper
     #    bound on |a ∩ b| for EVERY shared token, so requiring it to
-    #    reach alpha = ceil(t/(1+t)·(sza+szb)) (the overlap J >= t
+    #    reach alpha = ceil(p/(p+q)·(sza+szb)) (the overlap J >= t
     #    needs) never drops a true pair.
     # Verify cost is linear in surviving candidates, so these cheap
     # in-join predicates are where the join volume actually falls.
@@ -441,9 +525,7 @@ def prefix_filter_pairs(
         F.col("sz").alias("szb"),
         F.posexplode("prefix").alias("j", "tok"),
     )
-    alpha = F.ceil(
-        F.lit(threshold) / (1.0 + threshold) * (F.col("sza") + F.col("szb"))
-    )
+    alpha = F.expr(f"({p} * (sza + szb) + {p + q - 1}) div {p + q}")
     ubound = (
         F.least(F.col("i"), F.col("j"))
         + 1
@@ -452,48 +534,15 @@ def prefix_filter_pairs(
     cand = (
         pa.join(pb, "tok")
         .filter(F.col("a") < F.col("b"))
-        .filter(
-            F.least("sza", "szb").cast("double")
-            >= F.lit(threshold) * F.greatest("sza", "szb").cast("double")
-        )
+        .filter(F.lit(q) * F.least("sza", "szb") >= F.lit(p) * F.greatest("sza", "szb"))
         .filter(ubound >= alpha)
         .select("a", "b")
         .distinct()
     )
-    xa = sets.select(F.col(id_col).alias("a"), F.col("s").alias("sa"), F.col("sz").alias("sza"))
-    xb = sets.select(F.col(id_col).alias("b"), F.col("s").alias("sb"), F.col("sz").alias("szb"))
-    inter = F.size(F.array_intersect("sa", "sb"))
-    union_sz = (F.col("sza") + F.col("szb") - inter).cast("double")
-    jaccard = inter.cast("double") / union_sz
-    # The threshold filter references both verify sides, so Catalyst
-    # folds it into the last join's CONDITION — and the filter-as-
-    # division form evaluates array_intersect TWICE per candidate
-    # (numerator + denominator; the join-condition path gets no
-    # common-subexpression elimination). For a DYADIC threshold
-    # (t = p/2^k — 0.5 here) the equivalent single-intersect integer
-    # form  inter·(1+t) >= t·(sza+szb)  is EXACT: every product is a
-    # (small-int x dyadic) double, so both sides are computed without
-    # rounding, and the division form equals the same rational
-    # predicate because |inter/u - t| is either 0 or >= 1/(2u) —
-    # far above half-ulp for any real set size. Identical survivors by
-    # construction (asserted against the division form in tests and by
-    # the all-shingle oracle), ~one intersect per candidate instead of
-    # two: measured 70 -> 46 s at sf1 (40.5M candidates). Non-dyadic
-    # thresholds keep the division form — for them the integer form
-    # can flip an exact-boundary pair (e.g. inter/u == 1/5 vs the
-    # double literal 0.2), so the rewrite would not be lossless.
-    scaled = threshold * float(1 << 20)
-    if scaled == int(scaled):  # dyadic with <= 20 fraction bits
-        keep_pair = inter.cast("double") * F.lit(1.0 + threshold) >= F.lit(
-            threshold
-        ) * (F.col("sza") + F.col("szb")).cast("double")
-    else:
-        keep_pair = jaccard >= threshold
     return (
-        cand.join(xa, "a")
-        .join(xb, "b")
-        .filter(keep_pair)
-        .select("a", "b", jaccard.alias("jaccard"))
+        pair_overlaps(cand, sets, id_col, "s")
+        .filter(jaccard_at_least(threshold))
+        .select("a", "b", jaccard_col().alias("jaccard"))
     )
 
 

@@ -868,6 +868,19 @@ _MINHASH_SIGS_SQL = " UNION ALL ".join(
     f"SELECT doc_id, {b} AS band, list_min(list_transform(hs, h -> substr(h, {1 + 8 * b}, 8))) AS minhash FROM hashed"
     for b in range(dedup.DEFAULT_BANDS)
 )
+# MinHash LSH candidate pairs over a ``sigs`` CTE: the count-capped
+# buckets and the bucket self-join (the SQL twin of dedup.band_pairs
+# with DEFAULT_MAX_BUCKET), shared by the oracles that read them.
+_LSH_PAIRS_SQL = f"""ok AS (
+      SELECT band, minhash FROM sigs GROUP BY band, minhash
+      HAVING COUNT(*) <= {dedup.DEFAULT_MAX_BUCKET}
+    ),
+    bounded AS (SELECT sigs.* FROM sigs JOIN ok USING (band, minhash)),
+    pairs AS (
+      SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
+      FROM bounded a JOIN bounded b USING (band, minhash)
+      WHERE a.doc_id < b.doc_id
+    )"""
 
 
 # ---- streaming batch cores under DuckDB oracles (VERDICT r5 item 6) ------
@@ -975,16 +988,7 @@ def stream_near_dup_tiebreak_core(spark: SparkSession, sf_dir: str) -> DataFrame
     sh AS (SELECT doc_id, {SHINGLES_SQL} AS shingles FROM docs),
     hashed AS (SELECT doc_id, list_transform(shingles, s -> md5(s)) AS hs FROM sh),
     sigs AS ({_MINHASH_SIGS_SQL}),
-    ok AS (
-      SELECT band, minhash FROM sigs GROUP BY band, minhash
-      HAVING COUNT(*) <= {dedup.DEFAULT_MAX_BUCKET}
-    ),
-    bounded AS (SELECT sigs.* FROM sigs JOIN ok USING (band, minhash)),
-    pairs AS (
-      SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-      FROM bounded a JOIN bounded b USING (band, minhash)
-      WHERE a.doc_id < b.doc_id
-    )
+    {_LSH_PAIRS_SQL}
     SELECT COUNT(*) AS n_candidate_pairs,
            COUNT(DISTINCT a) AS n_left_docs,
            COUNT(DISTINCT b) AS n_right_docs
@@ -2765,16 +2769,7 @@ def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh AS (SELECT doc_id, {SHINGLES_SQL} AS shingles FROM docs),
     hashed AS (SELECT doc_id, list_transform(shingles, s -> md5(s)) AS hs FROM sh),
     sigs AS ({_MINHASH_SIGS_SQL}),
-    ok AS (
-      SELECT band, minhash FROM sigs GROUP BY band, minhash
-      HAVING COUNT(*) <= {dedup.DEFAULT_MAX_BUCKET}
-    ),
-    bounded AS (SELECT sigs.* FROM sigs JOIN ok USING (band, minhash)),
-    pairs AS (
-      SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-      FROM bounded a JOIN bounded b USING (band, minhash)
-      WHERE a.doc_id < b.doc_id
-    )
+    {_LSH_PAIRS_SQL}
     SELECT p.a, p.b,
            CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
              / (len(sa.shingles) + len(sb.shingles) - len(list_intersect(sa.shingles, sb.shingles)))
@@ -2805,17 +2800,12 @@ def near_dup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _tw(spark, sf_dir, "documents")
     sh = plans.keep(docs.select(F.col("doc_id"), dedup.shingles_col("text").alias("shingles")))
     pairs = dedup.lsh_candidate_pairs(docs, shingles_df=sh)
-    sa = sh.select(F.col("doc_id").alias("a"), F.col("shingles").alias("sh_a"))
-    sb = sh.select(F.col("doc_id").alias("b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    # Jaccard >= 0.2 is the exact 6·n_inter >= sz_a + sz_b: one
+    # array_intersect per candidate (dedup._fraction has the argument)
     return (
-        sb.join(sa.join(pairs, "a"), "b")
-        .withColumn(
-            "jaccard",
-            inter.cast("double") / (F.size("sh_a") + F.size("sh_b") - inter),
-        )
-        .filter(F.col("jaccard") >= 0.2)
-        .select("a", "b", "jaccard")
+        dedup.pair_overlaps(pairs, sh)
+        .filter(dedup.jaccard_at_least(0.2))
+        .select("a", "b", dedup.jaccard_col().alias("jaccard"))
     )
 
 
@@ -3676,7 +3666,7 @@ def _dup_component_labels(
         )
         .select("a", "b")
     )
-    pairs = plans.keep(star.unionByName(rep_pairs))
+    pairs = star.unionByName(rep_pairs)
     if small_rows is None:
         return _component_fixpoint(pairs)
     # probe/fault harness hook: force one side of the components gate
@@ -6508,8 +6498,9 @@ def semantic_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.round("cosine", 12) > 0.5)
         .select("a", "b")
     )
-    pairs = plans.keep(pairs)
     cnt: dict = {}
+    # _component_fixpoint keep()s this same frame object, so the
+    # over-gate pair count below reads the cached pairs
     labels = _component_fixpoint(pairs, pair_count_out=cnt)
     # Report assembly (r11): the old form paid THREE extra jobs for two
     # scalars — emb count + pairs count as separate aggregates, each
@@ -7864,20 +7855,9 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("a", "b")
         .agg(F.sum(F.when(F.col("ma") == F.col("mb"), 1).otherwise(0)).alias("n_match_bands"))
     )
-    sets = sh.select("doc_id", F.array_distinct("shingles").alias("s"))
-    xa = sets.select(F.col("doc_id").alias("a"), F.col("s").alias("sa_set"))
-    xb = sets.select(F.col("doc_id").alias("b"), F.col("s").alias("sb_set"))
-    exact = (
-        pairs.join(xa, "a")
-        .join(xb, "b")
-        .select(
-            "a",
-            "b",
-            F.size(F.array_intersect("sa_set", "sb_set")).cast("long").alias("n_inter"),
-            (
-                F.size("sa_set") + F.size("sb_set") - F.size(F.array_intersect("sa_set", "sb_set"))
-            ).cast("long").alias("n_union"),
-        )
+    # shingles_col is already distinct, so the shingle arrays are the sets
+    exact = dedup.pair_overlaps(pairs, sh).select(
+        "a", "b", "n_inter", (F.col("sz_a") + F.col("sz_b") - F.col("n_inter")).alias("n_union")
     )
     return est.join(exact, ["a", "b"]).select(
         "a", "b", F.col("n_match_bands").cast("long").alias("n_match_bands"), "n_inter", "n_union"
@@ -8082,16 +8062,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh AS (SELECT doc_id, {SHINGLES_SQL} AS shingles FROM docs),
     hashed AS (SELECT doc_id, list_transform(shingles, s -> md5(s)) AS hs FROM sh),
     sigs AS ({_MINHASH_SIGS_SQL}),
-    ok AS (
-      SELECT band, minhash FROM sigs GROUP BY band, minhash
-      HAVING COUNT(*) <= {dedup.DEFAULT_MAX_BUCKET}
-    ),
-    bounded AS (SELECT sigs.* FROM sigs JOIN ok USING (band, minhash)),
-    pairs AS (
-      SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-      FROM bounded a JOIN bounded b USING (band, minhash)
-      WHERE a.doc_id < b.doc_id
-    )
+    {_LSH_PAIRS_SQL}
     SELECT p.a, p.b,
            CAST(len(list_intersect(sa.shingles, sb.shingles)) AS BIGINT) AS n_inter,
            CAST(LEAST(len(sa.shingles), len(sb.shingles)) AS BIGINT) AS sz_small,
@@ -8113,28 +8084,24 @@ def shingle_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-stage discipline as ``near_dup_verified`` — LSH discovery,
     exact verify touching only candidates — so the full corpus is
     covered without an all-pairs join; only the similarity measure at
-    the verify stage differs. Exact integer intersection; one double
-    division at the boundary."""
+    the verify stage differs. Exact integer intersection; the threshold
+    is the integer 10·n_inter >= 3·sz_small, the emitted containment one
+    double division."""
     docs = _tw(spark, sf_dir, "documents")
     sh = plans.keep(docs.select(F.col("doc_id"), dedup.shingles_col("text").alias("shingles")))
     pairs = dedup.lsh_candidate_pairs(docs, shingles_df=sh)
-    sa = sh.select(F.col("doc_id").alias("a"), F.col("shingles").alias("sh_a"))
-    sb = sh.select(F.col("doc_id").alias("b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    sz_small = F.least(F.size("sh_a"), F.size("sh_b"))
-    out = (
-        sb.join(sa.join(pairs, "a"), "b")
-        .withColumn("containment", inter.cast("double") / sz_small.cast("double"))
-        .filter(F.col("containment") >= 0.3)
+    sz_small = F.least("sz_a", "sz_b")
+    return (
+        dedup.pair_overlaps(pairs, sh)
+        .filter(dedup.containment_at_least(0.3))
         .select(
             "a",
             "b",
-            inter.cast("long").alias("n_inter"),
-            sz_small.cast("long").alias("sz_small"),
-            "containment",
+            "n_inter",
+            sz_small.alias("sz_small"),
+            (F.col("n_inter").cast("double") / sz_small.cast("double")).alias("containment"),
         )
     )
-    return out
 
 
 # ---- BM25 keyword retrieval ----------------------------------------------
@@ -8473,16 +8440,7 @@ def label_propagation_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh AS (SELECT doc_id, {SHINGLES_SQL} AS shingles FROM docs),
     hashed AS (SELECT doc_id, list_transform(shingles, s -> md5(s)) AS hs FROM sh),
     sigs AS ({_MINHASH_SIGS_SQL}),
-    ok AS (
-      SELECT band, minhash FROM sigs GROUP BY band, minhash
-      HAVING COUNT(*) <= {dedup.DEFAULT_MAX_BUCKET}
-    ),
-    bounded AS (SELECT sigs.* FROM sigs JOIN ok USING (band, minhash)),
-    pairs AS (
-      SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-      FROM bounded a JOIN bounded b USING (band, minhash)
-      WHERE a.doc_id < b.doc_id
-    ),
+    {_LSH_PAIRS_SQL},
     splits AS (
       SELECT doc_id,
              CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'cccc' THEN 'train'
@@ -9676,16 +9634,7 @@ def ab_test_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     hashed AS (SELECT doc_id, list_transform(shingles, s -> md5(s)) AS hs FROM sh),
     sigs AS ({{sigs}}),
-    ok AS (
-      SELECT band, minhash FROM sigs GROUP BY band, minhash
-      HAVING COUNT(*) <= {dedup.DEFAULT_MAX_BUCKET}
-    ),
-    bounded AS (SELECT sigs.* FROM sigs JOIN ok USING (band, minhash)),
-    pairs AS (
-      SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-      FROM bounded a JOIN bounded b USING (band, minhash)
-      WHERE a.doc_id < b.doc_id
-    )
+    {_LSH_PAIRS_SQL}
     SELECT COUNT(*) AS n_candidate_pairs,
            COUNT(DISTINCT a) AS n_left_docs,
            COUNT(DISTINCT b) AS n_right_docs

@@ -1181,10 +1181,7 @@ def test_prefix_filter_pairs_lossless_and_pruning(spark, docs):
     }
     assert pref == naive and naive  # identical pairs AND values, non-empty
 
-    # r12: the verify filter takes the single-intersect integer form
-    # for DYADIC thresholds (0.5 above) and keeps the division form
-    # otherwise — both branches must agree with the naive join. 0.3 is
-    # non-dyadic, so this exercises the division branch explicitly.
+    # a second threshold whose double is not exact (0.3 = 3/10)
     naive_03 = {
         (r.a, r.b): r.jaccard
         for r in dedup.jaccard_pairs(docs, threshold=0.3).collect()
@@ -1235,6 +1232,157 @@ def test_prefix_filter_pairs_lossless_and_pruning(spark, docs):
     # and losslessness holds here too: no pair reaches t=0.5 anyway
     assert dedup.prefix_filter_pairs(boiler, threshold=0.5).count() == 0
     assert dedup.jaccard_pairs(boiler, threshold=0.5).count() == 0
+
+
+def _words(tag, lo, hi):
+    """Words ``tag<i>`` for i in [lo, hi), space-joined: hi - lo - 2
+    word 3-gram shingles; texts over one tag share the shingles of the
+    overlap of their ranges."""
+    return " ".join(f"{tag}{i}" for i in range(lo, hi))
+
+
+def test_prefix_filter_pairs_keeps_exact_jaccard_boundary(spark):
+    """A 3-shingle doc inside a 15-shingle doc has Jaccard exactly
+    3/15 = 0.2. In doubles, ceil(0.2/1.2 * 18) is 4, so a float overlap
+    bound drops the pair; the integer bound (1·18 + 5) div 6 = 3 keeps it."""
+    docs = spark.createDataFrame(
+        [(1, _words("w", 0, 5)), (2, _words("w", 0, 17))], "doc_id long, text string"
+    )
+    got = {(r.a, r.b): r.jaccard for r in dedup.prefix_filter_pairs(docs, threshold=0.2).collect()}
+    assert got == {(1, 2): 0.2}
+
+
+def test_set_similarity_thresholds_exact_at_planted_boundaries(spark):
+    """For each t = p/q, docs of p·m shingles inside docs of q·m shingles
+    (Jaccard exactly t) and of p·m - 1 inside q·m (just below), over a
+    private vocabulary per pair. At every t both joins return exactly the
+    pairs with Jaccard >= t as rationals. Several of these pairs are
+    dropped by float PPJoin filters: ceil(0.55·100) is 56 (prefix) and
+    55 >= 0.55·100 is false (length); the overlap bound overshoots at
+    0.65, 0.8 and 0.9."""
+    from fractions import Fraction
+
+    rows, truth = [], {}
+    for t in (0.2, 0.55, 0.65, 0.8, 0.9):
+        f = Fraction(str(t))
+        for m in range(1, 8):
+            small, big = f.numerator * m, f.denominator * m
+            if big > 100:
+                break
+            for inner in (small, small - 1):
+                if inner < 1:
+                    continue
+                tag, a = f"t{len(rows)}w", len(rows)
+                rows += [(a, _words(tag, 0, inner + 2)), (a + 1, _words(tag, 0, big + 2))]
+                truth[(a, a + 1)] = Fraction(inner, big)
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    for t in (0.2, 0.55, 0.65, 0.8, 0.9):
+        want = {k: float(j) for k, j in truth.items() if j >= Fraction(str(t))}
+        naive = {(r.a, r.b): r.jaccard for r in dedup.jaccard_pairs(docs, threshold=t).collect()}
+        pref = {(r.a, r.b): r.jaccard for r in dedup.prefix_filter_pairs(docs, threshold=t).collect()}
+        assert naive == want, t
+        assert pref == want, t
+        assert t in want.values()
+
+
+@pytest.mark.parametrize("bad", [0, 1.5, 0.1 + 0.2])
+def test_set_similarity_threshold_rejected(spark, docs, bad):
+    """Thresholds outside (0, 1], or whose shortest decimal needs a
+    denominator above 2**20 (0.1 + 0.2 = 0.30000000000000004), raise
+    instead of being compared with rounding."""
+    for build in (
+        lambda: dedup.jaccard_pairs(docs, threshold=bad),
+        lambda: dedup.prefix_filter_pairs(docs, threshold=bad),
+        lambda: dedup.jaccard_at_least(bad),
+        lambda: dedup.containment_at_least(bad),
+    ):
+        with pytest.raises(ValueError):
+            build()
+
+
+def _lsh_collide(text_a, text_b):
+    """True when the two texts share a MinHash band (``band_minhashes``
+    over ``shingles_col``, computed in Python)."""
+    import hashlib
+
+    def bands(text):
+        w = text.split(" ")
+        sh = {" ".join(w[i : i + 3]) for i in range(len(w) - 2)} or {text}
+        hs = [hashlib.md5(x.encode()).hexdigest() for x in sh]
+        return [min(h[8 * b : 8 * b + 8] for h in hs) for b in range(dedup.DEFAULT_BANDS)]
+
+    return any(x == y for x, y in zip(bands(text_a), bands(text_b)))
+
+
+def _candidate_pair(make):
+    """The first ``make(tag)`` text pair that shares a MinHash band."""
+    for k in range(1000):
+        a, b = make(f"v{k}x")
+        if _lsh_collide(a, b):
+            return a, b
+    raise AssertionError("no colliding pair")
+
+
+def _query_vs_oracle(spark, tmp_path, name, texts):
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from frontpage_spark.queries import ORACLES, QUERIES
+
+    path = tmp_path / "documents.parquet"
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array(range(1, len(texts) + 1), pa.int64()),
+            "text": texts,
+            "lang": ["en"] * len(texts),
+            "source": ["s"] * len(texts),
+            "n_chars": pa.array([len(t) for t in texts], pa.int64()),
+        }),
+        path,
+    )
+    got = sorted(tuple(r) for r in QUERIES[name](spark, str(tmp_path)).collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+    oracle = sorted(tuple(r) for r in con.execute(ORACLES[name]).fetchall())
+    assert got == oracle
+    return got
+
+
+def test_near_dup_verified_exact_boundary_matches_oracle(spark, tmp_path):
+    """LSH candidates at Jaccard exactly 3/15 = 0.2 (kept: 6·3 >= 3 + 15)
+    and 3/16 (dropped) verify the same on Spark and DuckDB."""
+    at = _candidate_pair(lambda g: (_words(g, 0, 5), _words(g, 0, 17)))
+    below = _candidate_pair(lambda g: (_words(g + "b", 0, 5), _words(g + "b", 0, 18)))
+    got = _query_vs_oracle(spark, tmp_path, "near_dup_verified", [*at, *below])
+    assert got == [(1, 2, 0.2)]
+
+
+def test_shingle_containment_exact_boundary_matches_oracle(spark, tmp_path):
+    """LSH candidates of 10 shingles each sharing 3 (containment exactly
+    0.3: kept, 10·3 >= 3·10) and sharing 2 (0.2: dropped) verify the same
+    on Spark and DuckDB."""
+    at = _candidate_pair(lambda g: (_words(g, 0, 12), _words(g, 7, 19)))
+    below = _candidate_pair(lambda g: (_words(g + "b", 0, 12), _words(g + "b", 8, 20)))
+    got = _query_vs_oracle(spark, tmp_path, "shingle_containment_pairs", [*at, *below])
+    assert got == [(1, 2, 3, 10, 0.3)]
+
+
+@pytest.mark.parametrize("name", ["dup_clusters", "semantic_dedup_report"])
+def test_component_queries_keep_each_frame_once(spark, name):
+    """The pair frame reaches ``_component_fixpoint``, which keep()s it;
+    the query itself must not keep the same frame a second time."""
+    from collections import Counter
+
+    from frontpage_spark import plans
+    from frontpage_spark.queries import QUERIES
+
+    from .conftest import SF_DIR
+
+    with plans.keep_capture() as captured:
+        QUERIES[name].__wrapped__(spark, SF_DIR).collect()
+    counts = Counter(id(df) for df in captured)
+    assert counts and max(counts.values()) == 1
 
 
 def test_image_dhash_parses_real_bmp(spark):
