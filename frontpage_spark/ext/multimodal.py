@@ -13,49 +13,63 @@ fully parseable with the stdlib (``struct`` + text headers):
   ``YUV4MPEG2 W<w> H<h> ...\\n`` followed by ``FRAME\\n`` + packed
   4:2:0 planes per frame.
 
-``synthesize_media`` builds deterministic, *spec-valid* payloads from any
-string column (the image/audio libs aren't in this container, so the
-pixel/sample content is md5-derived filler — but the containers are real
-and the decoders parse actual bytes, not metadata side-channels).
-``decode_media`` / ``resize_media`` / ``frame_sample`` then parse, resample
-and index those bytes for real.
+An operator is one :class:`MediaOp`: a per-payload kernel
+``rows(media_id, kind, payload)`` plus its output schema and the one
+payload kind it reads. ``DECODE``, ``FRAMES``, ``LUMA``, ``DHASH``,
+``rms(window)`` and ``resize(width, height)`` are the operators. Each
+runs in one Arrow pass two ways:
+
+- :func:`synthesize` builds deterministic, *spec-valid* payloads from
+  any string column (the image/audio libs aren't in this container, so
+  the pixel/sample content is md5-derived filler — but the containers
+  are real and the decoders parse actual bytes, not metadata
+  side-channels) and applies the operator in the SAME Python worker, so
+  payload bytes never cross the JVM boundary;
+- :func:`apply` runs the operator over a stored ``MEDIA_SCHEMA`` table.
 
 Scale notes (100 TB): binary payloads ride in Arrow record batches —
 keep ``spark.sql.execution.arrow.maxRecordsPerBatch`` modest for large
 blobs and repartition by a content hash so hot keys don't pin one
-executor. Decode is a narrow per-row pass (no shuffle); resize changes
-payload size but not row count; frame_sample is the explode-shaped op
-(row fan-out = frame count).
+executor. Every operator is a narrow per-row pass (no shuffle); resize
+changes payload size but not row count; FRAMES, LUMA and rms are
+explode-shaped (row fan-out = frames or windows).
 """
 
 from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
+from itertools import repeat
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),  # image | audio | video
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("meta", T.MapType(T.StringType(), T.StringType())),
-    ]
-)
 
-DECODED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("n_bytes", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("frames", T.IntegerType()),
-        T.StructField("checksum", T.StringType()),
-    ]
+def _schema(**fields: T.DataType) -> T.StructType:
+    return T.StructType([T.StructField(n, t) for n, t in fields.items()])
+
+
+_L, _I, _S = T.LongType(), T.IntegerType(), T.StringType()
+
+MEDIA_SCHEMA = _schema(
+    media_id=_L,
+    kind=_S,  # image | audio | video
+    payload=T.BinaryType(),
+    meta=T.MapType(_S, _S),
 )
+DECODED_SCHEMA = _schema(
+    media_id=_L, kind=_S, n_bytes=_I, width=_I, height=_I, frames=_I, checksum=_S
+)
+RESIZED_SCHEMA = _schema(
+    media_id=_L, kind=_S, payload=T.BinaryType(), width=_I, height=_I
+)
+FRAME_SCHEMA = _schema(media_id=_L, kind=_S, frame_no=_I, frame_offset=_I)
+LUMA_SCHEMA = _schema(media_id=_L, frame_no=_I, luma_sum=_L, y_bytes=_I)
+AUDIO_RMS_SCHEMA = _schema(
+    media_id=_L, window_idx=_I, n_samples=_I, sumsq=_L, peak=_I
+)
+DHASH_SCHEMA = _schema(media_id=_L, dhash_hi=_L, dhash_lo=_L, width=_I, height=_I)
 
 
 # --------------------------------------------------------------------------
@@ -71,15 +85,19 @@ def _bmp_row_size(width: int) -> int:
     return ((width * 3 + 3) // 4) * 4  # 24bpp rows pad to 4-byte boundary
 
 
-def make_bmp(width: int, height: int, seed: bytes) -> bytes:
-    """24-bit BI_RGB BMP: BITMAPFILEHEADER + BITMAPINFOHEADER + rows."""
-    row = _bmp_row_size(width)
-    image_size = row * height
+def _bmp_header(width: int, height: int) -> bytes:
+    """BITMAPFILEHEADER + BITMAPINFOHEADER of a 24-bit BI_RGB image."""
+    image_size = _bmp_row_size(width) * height
     file_header = struct.pack("<2sIHHI", b"BM", 54 + image_size, 0, 0, 54)
     dib = struct.pack(
         "<IiiHHIIiiII", 40, width, height, 1, 24, 0, image_size, 2835, 2835, 0, 0
     )
-    return file_header + dib + _fill(seed, image_size)
+    return file_header + dib
+
+
+def make_bmp(width: int, height: int, seed: bytes) -> bytes:
+    """24-bit BI_RGB BMP: BITMAPFILEHEADER + BITMAPINFOHEADER + rows."""
+    return _bmp_header(width, height) + _fill(seed, _bmp_row_size(width) * height)
 
 
 def make_wav(n_samples: int, seed: bytes, channels: int = 1, rate: int = 8000) -> bytes:
@@ -129,24 +147,32 @@ def decode_bmp(b: bytes) -> tuple[int, int, int]:
     return width, abs(height), 1  # negative height = top-down rows
 
 
-def decode_wav(b: bytes) -> tuple[int, int, int]:
-    """(n_samples, channels, frames=1) from a RIFF/WAVE chunk walk."""
+def _wav_chunks(b: bytes) -> Iterator[tuple[bytes, int, int]]:
+    """(chunk id, body offset, body size) of each RIFF/WAVE chunk."""
     if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
         raise ValueError("not a WAV")
-    pos, channels, bits, data_size = 12, 1, 16, 0
+    pos = 12
     while pos + 8 <= len(b):
-        cid, csize = b[pos : pos + 4], struct.unpack_from("<I", b, pos + 4)[0]
+        csize = struct.unpack_from("<I", b, pos + 4)[0]
+        yield b[pos : pos + 4], pos + 8, csize
+        pos += 8 + csize + (csize & 1)  # RIFF chunks are word-aligned
+
+
+def decode_wav(b: bytes) -> tuple[int, int, int]:
+    """(n_samples, channels, frames=1) from a RIFF/WAVE chunk walk."""
+    channels, bits, data_size = 1, 16, 0
+    for cid, body, csize in _wav_chunks(b):
         if cid == b"fmt ":
-            _, channels, _, _, _, bits = struct.unpack_from("<HHIIHH", b, pos + 8)
+            _, channels, _, _, _, bits = struct.unpack_from("<HHIIHH", b, body)
         elif cid == b"data":
             data_size = csize
-        pos += 8 + csize + (csize & 1)  # RIFF chunks are word-aligned
     n_samples = data_size // max(1, channels * bits // 8)
     return n_samples, channels, 1
 
 
-def decode_y4m(b: bytes) -> tuple[int, int, int]:
-    """(width, height, n_frames) from a YUV4MPEG2 stream header + walk."""
+def _y4m_walk(b: bytes) -> tuple[int, int, list[tuple[int, int]]]:
+    """(width, height, frames) of a YUV4MPEG2 stream, where frames holds
+    one (FRAME marker offset, Y-plane offset) pair per frame."""
     if not b.startswith(b"YUV4MPEG2"):
         raise ValueError("not a y4m")
     nl = b.index(b"\n")
@@ -157,435 +183,32 @@ def decode_y4m(b: bytes) -> tuple[int, int, int]:
         elif tok[:1] == b"H":
             height = int(tok[1:])
     frame_size = width * height * 3 // 2
-    pos, frames = nl + 1, 0
+    pos, frames = nl + 1, []
     while pos + 6 <= len(b) and b[pos : pos + 5] == b"FRAME":
-        frames += 1
-        pos = b.index(b"\n", pos) + 1 + frame_size
+        y0 = b.index(b"\n", pos) + 1
+        frames.append((pos, y0))
+        pos = y0 + frame_size
     return width, height, frames
 
 
-# --------------------------------------------------------------------------
-# operators
-# --------------------------------------------------------------------------
-
-_KIND_MOD = {"image": 0, "audio": 1, "video": 2}
-
-
-def synthesize_media(
-    df: DataFrame, id_col: str, text_col: str, only: str | None = None
-) -> DataFrame:
-    """Deterministic media table from any string column — *spec-valid*
-    BMP/WAV/Y4M payloads whose dimensions are pure functions of the text
-    byte length L (so an independent oracle can predict the decoded
-    metadata without parsing bytes):
-
-    - id % 3 == 0 → image: BMP, w = L%101+1, h = L%53+1
-    - id % 3 == 1 → audio: WAV, mono 16-bit, n_samples = L%1024+1
-    - id % 3 == 2 → video: y4m, w = (L%16+1)*2, h = (L%8+1)*2,
-      frames = L%4+1 (even dims: 4:2:0 chroma subsampling)
-
-    ``only`` restricts synthesis to one kind by filtering rows BEFORE
-    the Arrow pass on the same ``pmod(id, 3)`` the kind dispatch uses
-    (Python ``%`` with a positive modulus == Spark ``pmod``, for every
-    long). Single-kind consumers (dHash, RMS, luma) drop the other
-    kinds anyway — the pre-filter just stops their payloads from being
-    built and shipped through Arrow at all, and it pushes down to the
-    parquet scan as an ordinary deterministic predicate.
-    """
-    if only is not None:
-        df = df.filter(
-            F.pmod(F.col(id_col).cast("long"), F.lit(3)) == _KIND_MOD[only]
-        )
-    return df.select(
-        F.col(id_col).cast("long").alias(id_col), F.col(text_col)
-    ).mapInPandas(_synth_run(id_col, text_col), MEDIA_SCHEMA)
-
-
-def _synth_run(id_col: str, text_col: str):
-    """Batch function of :func:`synthesize_media` — factored out so the
-    fused single-pass operators (:func:`synthesize_then`) can compose it
-    with a consumer's batch function inside ONE Python worker."""
-
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for media_id, text in zip(pdf[id_col], pdf[text_col]):
-                raw = str(text).encode("utf-8")
-                n, seed = len(raw), hashlib.md5(raw).digest()
-                k = int(media_id) % 3
-                if k == 0:
-                    kind, payload = "image", make_bmp(n % 101 + 1, n % 53 + 1, seed)
-                elif k == 1:
-                    kind, payload = "audio", make_wav(n % 1024 + 1, seed)
-                else:
-                    kind, payload = "video", make_y4m(
-                        (n % 16 + 1) * 2, (n % 8 + 1) * 2, n % 4 + 1, seed
-                    )
-                out.append((int(media_id), kind, payload, {"src": "synthetic"}))
-            yield pd.DataFrame(out, columns=["media_id", "kind", "payload", "meta"])
-
-    return run
-
-
-def synthesize_then(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    consumer_run,
-    out_schema,
-    only: str | None = None,
-) -> DataFrame:
-    """FUSED synthesize→consume in ONE Arrow pass (r11, guide §4.1/§8):
-    the consumer's batch function runs on the synthesizer's output
-    batches inside the same Python worker, so payload bytes never cross
-    the JVM boundary at all — the previous two chained ``mapInPandas``
-    stages serialized every payload Python→JVM→Python within the task.
-    Byte-identical outputs by construction (the consumer sees exactly
-    the frames ``synthesize_media`` would have produced; equivalence
-    tested per consumer). On a REAL media table (payloads from storage,
-    not synthesized) the unfused consumers apply unchanged."""
-    if only is not None:
-        df = df.filter(
-            F.pmod(F.col(id_col).cast("long"), F.lit(3)) == _KIND_MOD[only]
-        )
-    synth = _synth_run(id_col, text_col)
-
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        yield from consumer_run(synth(batches))
-
-    return df.select(
-        F.col(id_col).cast("long").alias(id_col), F.col(text_col)
-    ).mapInPandas(run, out_schema)
-
-
-_DECODERS = {"image": decode_bmp, "audio": decode_wav, "video": decode_y4m}
-
-
-def _decode_one(payload: bytes, kind: str) -> dict[str, int | str]:
-    width, height, frames = _DECODERS[kind](payload)
-    return {
-        "n_bytes": len(payload),
-        "width": width,
-        "height": height,
-        "frames": frames,
-        "checksum": hashlib.md5(payload).hexdigest(),
-    }
-
-
-def _decode_run():
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for media_id, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                d = _decode_one(bytes(payload), kind)
-                d["media_id"] = media_id
-                d["kind"] = kind
-                out.append(d)
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "kind", "n_bytes", "width", "height", "frames", "checksum"],
-            )
-
-    return run
-
-
-def decode_media(df: DataFrame) -> DataFrame:
-    """Arrow-batched decode/feature-extract over a media DataFrame: parse
-    each payload's real container header (BMP/WAV/Y4M) into typed
-    metadata. `mapInPandas` streams Arrow batches through Python once —
-    no per-row Python round trips. Narrow (no shuffle)."""
-    return df.select("media_id", "kind", "payload").mapInPandas(
-        _decode_run(), DECODED_SCHEMA
-    )
-
-
-def synthesize_decoded(
-    df: DataFrame, id_col: str, text_col: str, only: str | None = None
-) -> DataFrame:
-    """Fused ``decode_media(synthesize_media(df))`` — see
-    :func:`synthesize_then`."""
-    return synthesize_then(df, id_col, text_col, _decode_run(), DECODED_SCHEMA, only)
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-    ]
-)
-
-
-def resize_media(df: DataFrame, width: int = 224, height: int = 224) -> DataFrame:
-    """Real image resize: decode the BMP pixel grid, nearest-neighbor
-    resample to (width, height), re-encode as BMP — one Arrow pass, the
-    shape of a thumbnail/model-input stage. Only images are resized;
-    other kinds pass through with width/height = -1."""
-
-    def resize_bmp(b: bytes) -> bytes:
-        sw, sh, _ = decode_bmp(b)
-        src_row = _bmp_row_size(sw)
-        pixels = b[54:]
-        dst_row = _bmp_row_size(width)
-        out = bytearray()
-        for y in range(height):
-            sy = y * sh // height
-            line = bytearray()
-            for x in range(width):
-                sx = x * sw // width
-                o = sy * src_row + sx * 3
-                line += pixels[o : o + 3]
-            line += b"\x00" * (dst_row - len(line))
-            out += line
-        file_header = struct.pack("<2sIHHI", b"BM", 54 + len(out), 0, 0, 54)
-        dib = struct.pack(
-            "<IiiHHIIiiII", 40, width, height, 1, 24, 0, len(out), 2835, 2835, 0, 0
-        )
-        return file_header + dib + bytes(out)
-
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for media_id, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                b = bytes(payload)
-                if kind == "image":
-                    out.append((media_id, kind, resize_bmp(b), width, height))
-                else:
-                    out.append((media_id, kind, b, -1, -1))
-            yield pd.DataFrame(
-                out, columns=["media_id", "kind", "payload", "width", "height"]
-            )
-
-    return df.select("media_id", "kind", "payload").mapInPandas(run, RESIZED_SCHEMA)
-
-
-def video_luma_profile(df: DataFrame) -> DataFrame:
-    """Per-frame EXACT luma mass from the real y4m bytes: for every
-    video payload, walk the FRAME-delimited stream and sum the Y plane
-    (the first w*h bytes of each 4:2:0 frame) into one BIGINT per
-    frame — the content-level primitive scene-change detection runs
-    on. Integer sums, so a DuckDB oracle can predict them
-    arithmetically from the synth spec (fill = md5-seeded 16-byte
-    cycle) and any byte the parser mis-addresses breaks the match.
-    Non-video rows are skipped. Narrow mapInPandas, no shuffle; row
-    fan-out = frames."""
-    return df.select("media_id", "kind", "payload").mapInPandas(
-        _luma_run(), _LUMA_SCHEMA
-    )
-
-
-_LUMA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_no", T.IntegerType()),
-        T.StructField("luma_sum", T.LongType()),
-        T.StructField("y_bytes", T.IntegerType()),
-    ]
-)
-
-
-def _luma_run():
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for media_id, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                if kind != "video":
-                    continue
-                b = bytes(payload)
-                w, h, _ = decode_y4m(b)
-                wh = w * h
-                frame_size = wh * 3 // 2
-                pos, no = b.index(b"\n") + 1, 0
-                while pos + 5 <= len(b) and b[pos : pos + 5] == b"FRAME":
-                    y0 = b.index(b"\n", pos) + 1
-                    out.append((media_id, no, sum(b[y0 : y0 + wh]), wh))
-                    pos = y0 + frame_size
-                    no += 1
-            yield pd.DataFrame(
-                out, columns=["media_id", "frame_no", "luma_sum", "y_bytes"]
-            )
-
-    return run
-
-
-def synthesize_luma(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Fused ``video_luma_profile(synthesize_media(df, only='video'))``
-    — see :func:`synthesize_then`."""
-    return synthesize_then(df, id_col, text_col, _luma_run(), _LUMA_SCHEMA, "video")
-
-
-def frame_sample(df: DataFrame, every_n: int = 1) -> DataFrame:
-    """Frame sampling: for video payloads, parse the y4m stream and emit
-    one row per kept frame with its REAL byte offset (every ``every_n``-th
-    frame); non-video rows emit a single frame 0 at offset 0. The
-    explode-shaped (UDTF-like) media op — row fan-out = frames kept."""
-    return df.select("media_id", "kind", "payload").mapInPandas(
-        _frame_run(every_n), _FRAME_SCHEMA
-    )
-
-
-_FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("frame_no", T.IntegerType()),
-        T.StructField("frame_offset", T.IntegerType()),
-    ]
-)
-
-
-def _frame_run(every_n: int):
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for media_id, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                b = bytes(payload)
-                if kind == "video":
-                    w, h, _ = decode_y4m(b)
-                    frame_size = w * h * 3 // 2
-                    pos, no = b.index(b"\n") + 1, 0
-                    while pos + 5 <= len(b) and b[pos : pos + 5] == b"FRAME":
-                        if no % every_n == 0:
-                            out.append((media_id, kind, no, pos))
-                        pos = b.index(b"\n", pos) + 1 + frame_size
-                        no += 1
-                else:
-                    out.append((media_id, kind, 0, 0))
-            yield pd.DataFrame(
-                out, columns=["media_id", "kind", "frame_no", "frame_offset"]
-            )
-
-    return run
-
-
-def synthesize_frames(
-    df: DataFrame, id_col: str, text_col: str, every_n: int = 1
-) -> DataFrame:
-    """Fused ``frame_sample(synthesize_media(df))`` — see
-    :func:`synthesize_then`. All kinds (non-video rows emit frame 0)."""
-    return synthesize_then(df, id_col, text_col, _frame_run(every_n), _FRAME_SCHEMA)
-
-
-AUDIO_RMS_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("window_idx", T.IntegerType()),
-        T.StructField("n_samples", T.IntegerType()),
-        T.StructField("sumsq", T.LongType()),
-        T.StructField("peak", T.IntegerType()),
-    ]
-)
+def decode_y4m(b: bytes) -> tuple[int, int, int]:
+    """(width, height, n_frames) from a YUV4MPEG2 stream header + walk."""
+    width, height, frames = _y4m_walk(b)
+    return width, height, len(frames)
 
 
 def _wav_pcm16_np(b: bytes) -> "numpy.ndarray":  # noqa: F821
     """Signed 16-bit little-endian samples of the data chunk (channels
-    interleaved; chunk walk mirrors ``decode_wav``) as an int64 numpy
-    array (int64 up front so sample² and Σ never touch int16/int32
-    overflow)."""
+    interleaved) as an int64 numpy array (int64 up front so sample² and
+    Σ never touch int16/int32 overflow)."""
     import numpy as np
 
-    pos, data = 12, b""
-    if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-        raise ValueError("not a WAV")
-    while pos + 8 <= len(b):
-        cid, csize = b[pos : pos + 4], struct.unpack_from("<I", b, pos + 4)[0]
+    data = b""
+    for cid, body, csize in _wav_chunks(b):
         if cid == b"data":
-            data = b[pos + 8 : pos + 8 + csize]
-        pos += 8 + csize + (csize & 1)
+            data = b[body : body + csize]
     n = len(data) // 2
     return np.frombuffer(data[: 2 * n], dtype="<i2").astype(np.int64)
-
-
-def audio_rms_windows(df: DataFrame, window: int = 256) -> DataFrame:
-    """Per-window audio energy features over PCM WAV payloads: for each
-    ``window``-sample slice, the exact integer Σsample² (RMS numerator)
-    and peak |sample| — the loudness/silence profile a speech-data
-    pipeline filters on (silence trimming, clipping detection) before
-    any model runs.
-
-    Arrow-batched ``mapInPandas``; NARROW — each payload expands to its
-    own windows on the same partition, no shuffle. All-integer outputs
-    (RMS stays a rational √(sumsq/n) for the caller) so downstream
-    aggregation is engine-exact. Non-audio rows are dropped inside the
-    pass, keeping the scan single. The per-sample math is vectorized
-    (``frombuffer`` + ``ufunc.reduceat`` per window start), so the
-    Python cost per payload is O(#windows) bookkeeping, not
-    O(#samples) interpreter loops."""
-    return df.select("media_id", "kind", "payload").mapInPandas(
-        _rms_run(window), AUDIO_RMS_SCHEMA
-    )
-
-
-def _rms_run(window: int):
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import numpy as np
-        import pandas as pd
-
-        cols = ["media_id", "window_idx", "n_samples", "sumsq", "peak"]
-        for pdf in batches:
-            ids, widx, ns, sums, peaks = [], [], [], [], []
-            for media_id, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                if kind != "audio":
-                    continue
-                s = _wav_pcm16_np(bytes(payload))
-                n = len(s)
-                if n == 0:
-                    continue
-                starts = np.arange(0, n, window)
-                sums.append(np.add.reduceat(s * s, starts))
-                peaks.append(np.maximum.reduceat(np.abs(s), starts))
-                widx.append(np.arange(len(starts), dtype=np.int32))
-                nsamp = np.full(len(starts), window, dtype=np.int32)
-                nsamp[-1] = n - starts[-1]
-                ns.append(nsamp)
-                ids.append(np.full(len(starts), media_id, dtype=np.int64))
-            if ids:
-                yield pd.DataFrame(
-                    {
-                        "media_id": np.concatenate(ids),
-                        "window_idx": np.concatenate(widx),
-                        "n_samples": np.concatenate(ns),
-                        "sumsq": np.concatenate(sums),
-                        "peak": np.concatenate(peaks).astype(np.int32),
-                    }
-                )
-            else:
-                yield pd.DataFrame({c: [] for c in cols})
-
-    return run
-
-
-def synthesize_rms(
-    df: DataFrame, id_col: str, text_col: str, window: int = 256
-) -> DataFrame:
-    """Fused ``audio_rms_windows(synthesize_media(df, only='audio'))``
-    — see :func:`synthesize_then`."""
-    return synthesize_then(
-        df, id_col, text_col, _rms_run(window), AUDIO_RMS_SCHEMA, "audio"
-    )
-
-
-DHASH_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("dhash_hi", T.LongType()),
-        T.StructField("dhash_lo", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-    ]
-)
 
 
 def _bmp_dhash(b: bytes) -> tuple[int, int, int, int]:
@@ -615,41 +238,215 @@ def _bmp_dhash(b: bytes) -> tuple[int, int, int, int]:
     return hi, lo, w, h
 
 
-def image_dhash(df: DataFrame) -> DataFrame:
-    """Perceptual difference-hash per image payload — the standard
-    near-duplicate-image signature (64 gradient-sign bits; similar
-    images differ in a few bits, unrelated ones in ~32).
+# --------------------------------------------------------------------------
+# operators
+# --------------------------------------------------------------------------
 
-    Parses the real BMP bytes (header offsets, bottom-up padded rows).
-    Arrow-batched ``mapInPandas``, NARROW — one pass, no shuffle; the
-    64-bit signature is what shuffles downstream, never pixels. That is
-    the 100 TB contract for image dedup: reduce each image to 8 bytes
-    in place, then run set operations on signatures only. Non-image
-    rows are dropped inside the pass."""
-    return df.select("media_id", "kind", "payload").mapInPandas(
-        _dhash_run(), DHASH_SCHEMA
-    )
+class MediaOp(NamedTuple):
+    """One media operator. ``rows(media_id, kind, payload)`` returns the
+    output rows of one payload, as tuples in ``schema`` order. ``kind``
+    is the one payload kind the operator reads (None: every kind); rows
+    of other kinds are filtered out before the Arrow pass."""
+
+    kind: str | None
+    schema: T.StructType
+    rows: Callable[[int, str, bytes], Iterable[tuple]]
 
 
-def _dhash_run():
+_KINDS = ("image", "audio", "video")  # synthesized kind = _KINDS[id pmod 3]
+_DECODERS = {"image": decode_bmp, "audio": decode_wav, "video": decode_y4m}
+
+
+def _decode_rows(media_id: int, kind: str, payload: bytes) -> list[tuple]:
+    width, height, frames = _DECODERS[kind](payload)
+    checksum = hashlib.md5(payload).hexdigest()
+    return [(media_id, kind, len(payload), width, height, frames, checksum)]
+
+
+def _frame_rows(media_id: int, kind: str, payload: bytes) -> list[tuple]:
+    if kind != "video":
+        return [(media_id, kind, 0, 0)]
+    return [
+        (media_id, kind, no, pos)
+        for no, (pos, _) in enumerate(_y4m_walk(payload)[2])
+    ]
+
+
+def _luma_rows(media_id: int, kind: str, payload: bytes) -> list[tuple]:
+    w, h, frames = _y4m_walk(payload)
+    wh = w * h
+    return [
+        (media_id, no, sum(payload[y0 : y0 + wh]), wh)
+        for no, (_, y0) in enumerate(frames)
+    ]
+
+
+def _dhash_rows(media_id: int, kind: str, payload: bytes) -> list[tuple]:
+    return [(media_id, *_bmp_dhash(payload))]
+
+
+# Arrow-batched decode/feature-extract: parse each payload's real
+# container header (BMP/WAV/Y4M) into typed metadata.
+DECODE = MediaOp(None, DECODED_SCHEMA, _decode_rows)
+
+# Frame index: one row per video frame with its REAL byte offset in the
+# y4m stream; non-video rows emit a single frame 0 at offset 0.
+FRAMES = MediaOp(None, FRAME_SCHEMA, _frame_rows)
+
+# Per-frame EXACT luma mass: the Y plane (the first w*h bytes of each
+# 4:2:0 frame) summed into one BIGINT per frame — the content-level
+# primitive scene-change detection runs on. Integer sums, so a DuckDB
+# oracle can predict them arithmetically from the synth spec and any
+# byte the parser mis-addresses breaks the match.
+LUMA = MediaOp("video", LUMA_SCHEMA, _luma_rows)
+
+# Perceptual difference-hash per image — the standard near-duplicate
+# image signature (64 gradient-sign bits; similar images differ in a
+# few bits, unrelated ones in ~32) from the real BMP bytes (header
+# offsets, bottom-up padded rows). Each image reduces to 8 bytes in
+# place; only signatures shuffle downstream, never pixels.
+DHASH = MediaOp("image", DHASH_SCHEMA, _dhash_rows)
+
+
+def rms(window: int = 256) -> MediaOp:
+    """Per-window audio energy over PCM WAV payloads: for each
+    ``window``-sample slice, the exact integer Σsample² (RMS numerator)
+    and peak |sample| — the loudness/silence profile a speech-data
+    pipeline filters on (silence trimming, clipping detection) before
+    any model runs. All-integer outputs (RMS stays a rational
+    √(sumsq/n) for the caller) so downstream aggregation is
+    engine-exact. The per-sample math is vectorized (``frombuffer`` +
+    ``ufunc.reduceat`` per window start), so the Python cost per
+    payload is O(#windows), not O(#samples) interpreter loops."""
+
+    def rows(media_id: int, kind: str, payload: bytes) -> Iterable[tuple]:
+        import numpy as np
+
+        s = _wav_pcm16_np(payload)
+        n = len(s)
+        if n == 0:
+            return ()
+        starts = np.arange(0, n, window)
+        sums = np.add.reduceat(s * s, starts)
+        peaks = np.maximum.reduceat(np.abs(s), starts)
+        nsamp = np.full(len(starts), window, dtype=np.int32)
+        nsamp[-1] = n - starts[-1]
+        return zip(
+            repeat(media_id), range(len(starts)), nsamp.tolist(),
+            sums.tolist(), peaks.tolist(),
+        )
+
+    return MediaOp("audio", AUDIO_RMS_SCHEMA, rows)
+
+
+def resize(width: int = 224, height: int = 224) -> MediaOp:
+    """Real image resize: decode the BMP pixel grid, nearest-neighbor
+    resample to (width, height), re-encode as BMP — the shape of a
+    thumbnail/model-input stage. Only images are resized; other kinds
+    pass through with width/height = -1."""
+
+    def rows(media_id: int, kind: str, b: bytes) -> list[tuple]:
+        if kind != "image":
+            return [(media_id, kind, b, -1, -1)]
+        sw, sh, _ = decode_bmp(b)
+        src_row = _bmp_row_size(sw)
+        pixels = b[54:]
+        dst_row = _bmp_row_size(width)
+        out = bytearray()
+        for y in range(height):
+            sy = y * sh // height
+            line = bytearray()
+            for x in range(width):
+                sx = x * sw // width
+                o = sy * src_row + sx * 3
+                line += pixels[o : o + 3]
+            line += b"\x00" * (dst_row - len(line))
+            out += line
+        return [(media_id, kind, _bmp_header(width, height) + bytes(out), width, height)]
+
+    return MediaOp(None, RESIZED_SCHEMA, rows)
+
+
+def _synth_one(media_id: int, text: str) -> tuple[int, str, bytes]:
+    """The synthesized (media_id, kind, payload) of one text row."""
+    raw = str(text).encode("utf-8")
+    n, seed = len(raw), hashlib.md5(raw).digest()
+    kind = _KINDS[media_id % 3]
+    if kind == "image":
+        payload = make_bmp(n % 101 + 1, n % 53 + 1, seed)
+    elif kind == "audio":
+        payload = make_wav(n % 1024 + 1, seed)
+    else:
+        payload = make_y4m((n % 16 + 1) * 2, (n % 8 + 1) * 2, n % 4 + 1, seed)
+    return media_id, kind, payload
+
+
+# synthesize() with no operator: the media table itself
+_MEDIA = MediaOp(None, MEDIA_SCHEMA, lambda m, k, p: [(m, k, p, {"src": "synthetic"})])
+
+
+def _runner(op: MediaOp, id_col: str | None = None, text_col: str | None = None):
+    """The Arrow batch function applying ``op`` to each payload — of a
+    stored media table, or synthesized from (id_col, text_col)."""
+    cols = op.schema.fieldNames()
+
     def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
         import pandas as pd
 
         for pdf in batches:
-            out = []
-            for media_id, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                if kind != "image":
-                    continue
-                hi, lo, w, h = _bmp_dhash(bytes(payload))
-                out.append((int(media_id), hi, lo, w, h))
-            yield pd.DataFrame(
-                out, columns=["media_id", "dhash_hi", "dhash_lo", "width", "height"]
-            )
+            if id_col is None:
+                media = zip(pdf["media_id"], pdf["kind"], pdf["payload"])
+            else:
+                media = (_synth_one(int(i), t) for i, t in zip(pdf[id_col], pdf[text_col]))
+            out = [r for m, k, p in media for r in op.rows(int(m), k, bytes(p))]
+            yield pd.DataFrame(out, columns=cols)
 
     return run
 
 
-def synthesize_dhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Fused ``image_dhash(synthesize_media(df, only='image'))`` — see
-    :func:`synthesize_then`."""
-    return synthesize_then(df, id_col, text_col, _dhash_run(), DHASH_SCHEMA, "image")
+def apply(df: DataFrame, op: MediaOp) -> DataFrame:
+    """``op`` over a stored ``MEDIA_SCHEMA`` table — one narrow Arrow
+    pass, no shuffle."""
+    if op.kind is not None:
+        df = df.filter(F.col("kind") == op.kind)
+    return df.select("media_id", "kind", "payload").mapInPandas(_runner(op), op.schema)
+
+
+def synthesize(
+    df: DataFrame, id_col: str, text_col: str, op: MediaOp | None = None
+) -> DataFrame:
+    """Deterministic media from any string column, fused with ``op`` in
+    ONE Arrow pass (None: the ``MEDIA_SCHEMA`` table itself). The
+    payloads are *spec-valid* BMP/WAV/Y4M whose dimensions are pure
+    functions of the text byte length L (so an independent oracle can
+    predict the decoded metadata without parsing bytes):
+
+    - id % 3 == 0 → image: BMP, w = L%101+1, h = L%53+1
+    - id % 3 == 1 → audio: WAV, mono 16-bit, n_samples = L%1024+1
+    - id % 3 == 2 → video: y4m, w = (L%16+1)*2, h = (L%8+1)*2,
+      frames = L%4+1 (even dims: 4:2:0 chroma subsampling)
+
+    ``op`` runs on the synthesized payloads inside the same Python
+    worker, so payload bytes never cross the JVM boundary; its output
+    equals ``apply(synthesize(df, id_col, text_col), op)`` row for row.
+    An operator that reads one kind filters rows BEFORE the pass on the
+    same ``pmod(id, 3)`` the kind dispatch uses (Python ``%`` with a
+    positive modulus == Spark ``pmod``, for every long), so other
+    kinds' payloads are never built; the predicate pushes down to the
+    parquet scan.
+
+    The rows then fan out to ``plans.PY_STAGE_WIDTH`` tasks: a local
+    single-row-group file scans as ONE task, which would run the whole
+    Python pass on one core (no-op on a multi-split table)."""
+    from .. import plans  # driver-side only: workers never import it
+
+    op = op or _MEDIA
+    if op.kind is not None:
+        df = df.filter(
+            F.pmod(F.col(id_col).cast("long"), F.lit(3)) == _KINDS.index(op.kind)
+        )
+    return (
+        plans.fan_out(df, plans.PY_STAGE_WIDTH)
+        .select(F.col(id_col).cast("long").alias(id_col), F.col(text_col))
+        .mapInPandas(_runner(op, id_col, text_col), op.schema)
+    )

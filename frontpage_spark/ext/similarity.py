@@ -568,15 +568,16 @@ def lsh_band_candidates(
     # fan_out (r12, VERDICT r11 item 4): the signature pass is the one
     # Python stage in this pipeline, and on a single-split scan (the
     # local single-row-group files) it runs as ONE task — a
-    # serialization point the rest of the plan then inherits. 8-way,
-    # not full width: per-row signature cost is microseconds so the
-    # per-task fixed cost (worker fork + Arrow handshake) dominates past
-    # ~8 tasks at bench scale — the same measured trade as the media
-    # codec queries (_tw min_parts=8). No-op on a production multi-split
-    # table. The candidate SET is partitioning-independent: bucket
-    # membership is a pure row function and band_pairs sorts each
-    # bucket's id list before pair expansion.
-    sigs = _band_sigs_arrow(plans.fan_out(corpus, 8), id_col, vec_col, bands, planes, dim)
+    # serialization point the rest of the plan then inherits.
+    # PY_STAGE_WIDTH, not full width: per-row signature cost is
+    # microseconds, the same measured trade as the synthetic media
+    # codecs. No-op on a production multi-split table. The candidate SET
+    # is partitioning-independent: bucket membership is a pure row
+    # function and band_pairs sorts each bucket's id list before pair
+    # expansion.
+    sigs = _band_sigs_arrow(
+        plans.fan_out(corpus, plans.PY_STAGE_WIDTH), id_col, vec_col, bands, planes, dim
+    )
     return band_pairs(sigs, "id", "sig")
 
 

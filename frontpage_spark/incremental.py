@@ -353,17 +353,8 @@ def stream_near_dup_dedup(
                 dup_ids.unpersist()
             sigs.unpersist()
 
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return (
-        reader.parquet(source_path)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    return stream_pipeline(
+        spark, source_path, checkpoint_path, process, schema, max_files_per_trigger
     )
 
 
@@ -455,7 +446,7 @@ def windowed_counts(events: DataFrame, window: str = "10 minutes", watermark: st
     )
 
 
-def stateful_user_counts(stream: DataFrame, timeout_minutes: int | None = None) -> DataFrame:
+def stateful_user_counts(stream: DataFrame) -> DataFrame:
     """ST-extension — custom stateful streaming operator via
     applyInPandasWithState: a per-user running event count + max-ts
     watermark that survives across micro-batches (the kind of state the
@@ -465,11 +456,10 @@ def stateful_user_counts(stream: DataFrame, timeout_minutes: int | None = None) 
     State is keyed by user_id (shuffle key), one row of state per user;
     Arrow-batched on both sides. Works only on streaming DataFrames.
 
-    ``timeout_minutes`` enables ProcessingTimeTimeout state eviction;
-    default None = NoTimeout (this pyspark build's worker crashes on
-    setTimeoutDuration — state then lives for the query lifetime, which
-    is fine for bounded keyspaces; at an unbounded 100 TB keyspace use
-    the timeout or a TTL'd state store).
+    No state timeout (this pyspark build's worker crashes on
+    ``setTimeoutDuration``): state lives for the query lifetime, which
+    is fine for bounded keyspaces; an unbounded 100 TB keyspace needs a
+    TTL'd state store.
     """
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -493,33 +483,22 @@ def stateful_user_counts(stream: DataFrame, timeout_minutes: int | None = None) 
             if len(pdf):
                 max_ts = max(max_ts, int(pdf["ts_long"].max()))
         state.update((n, max_ts))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
         yield pd.DataFrame({"user_id": [key[0]], "n_events": [n], "max_ts": [max_ts]})
 
     prepared = stream.select(
         F.col("user_id").cast("long").alias("user_id"),
         F.unix_timestamp("ts").alias("ts_long"),
     )
-    timeout_conf = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_minutes is not None
-        else GroupStateTimeout.NoTimeout
-    )
     return prepared.groupBy("user_id").applyInPandasWithState(
-        update, out_schema, state_schema, "update", timeout_conf
+        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
 
 
-def stateful_seen_filter(
-    stream: DataFrame,
-    key: str = "uniq_id",
-    ttl_minutes: int | None = None,
-) -> DataFrame:
+def stateful_seen_filter(stream: DataFrame, key: str = "uniq_id") -> DataFrame:
     """ST-extension — first-seen filter via ``transformWithStateInPandas``
     (Spark 4's arbitrary-state operator, the successor to
     applyInPandasWithState): emit each key's FIRST row only, remember
-    the key in a per-key ValueState, optionally TTL'd.
+    the key in a per-key ValueState.
 
     This is the third point on the streaming-dedup spectrum:
 
@@ -527,11 +506,12 @@ def stateful_seen_filter(
       against all history, rescans the sink keys per batch;
     - ``stream_dedup`` (dropDuplicatesWithinWatermark): bounded state,
       but eviction is tied to EVENT-TIME watermark progress;
-    - this: explicit state with PROCESSING-TIME TTL — the shape for
-      keyspaces where event time is unreliable (crawler re-fetches)
-      but memory must stay bounded. State lives in the checkpointed
-      state store (use the RocksDB provider at scale — disk-backed,
-      changelog-checkpointed; per-key state here is a single long).
+    - this: explicit per-key state, independent of event time — the
+      shape for keyspaces where event time is unreliable (crawler
+      re-fetches). State is never evicted and lives in the
+      checkpointed state store (use the RocksDB provider at scale —
+      disk-backed, changelog-checkpointed; per-key state here is a
+      single long).
 
     Runtime dependency: transformWithState's Python driver worker and
     task workers drive the JVM state server over a protobuf socket
@@ -557,9 +537,7 @@ def stateful_seen_filter(
     class FirstSeen(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
             self._seen = handle.getValueState(
-                "seen",
-                StructType([StructField("one", LongType())]),
-                ttlDurationMs=ttl_minutes * 60 * 1000 if ttl_minutes else None,
+                "seen", StructType([StructField("one", LongType())])
             )
 
         def handleInputRows(self, key_tuple, rows, timer_values):
@@ -795,6 +773,14 @@ def _plan_size_bytes(df: DataFrame) -> int | None:
         return None
 
 
+def sessionize_gate(size: int | None) -> str:
+    """The plan ``sessionize(plan=None)`` picks for an input whose
+    Catalyst size estimate is ``size`` bytes (None: unknown)."""
+    if size is not None and size <= _SESSIONIZE_STITCH_BYTES:
+        return "classic"
+    return "stitch"
+
+
 def _sessionize_classic(
     events: DataFrame, gap_seconds: int
 ) -> DataFrame:
@@ -879,12 +865,7 @@ def sessionize(
     buckets in order reproduces the exact event sequence, gaps are the
     same epoch diffs, and the flag prefix sums telescope."""
     if plan is None:
-        size = _plan_size_bytes(events)
-        plan = (
-            "classic"
-            if size is not None and size <= _SESSIONIZE_STITCH_BYTES
-            else "stitch"
-        )
+        plan = sessionize_gate(_plan_size_bytes(events))
     if plan == "classic":
         return _sessionize_classic(events, gap_seconds)
     if plan != "stitch":

@@ -201,6 +201,17 @@ def take_wide(df: DataFrame, n: int):
     return df.limit(n).toArrow()
 
 
+# fan_out width for a Python (Arrow) stage whose per-row cost is
+# microseconds — the synthetic media codecs and the LSH signature pass.
+# At full default parallelism the per-task fixed cost (worker fork +
+# Arrow handshake) dominates: a media query at sf0.1, measured when
+# synthesis and decode were still two chained Arrow stages, took 1.7 s
+# 64-way vs 0.65 s 8-way for the same result. On real multi-MB payloads
+# per-row cost dominates instead and the scan is already wide (fan_out
+# is a no-op).
+PY_STAGE_WIDTH = 8
+
+
 def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     """Input-split compensation for CPU-bound narrow stages.
 

@@ -124,21 +124,12 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-def _tw(spark: SparkSession, sf_dir: str, name: str, min_parts: int | None = None) -> DataFrame:
+def _tw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan + ``plans.fan_out`` — for queries whose narrow per-row CPU
     (regex/md5/Arrow) dominates: the local single-row-group files scan
     as ONE split, which would serialize the heavy stage on one core
-    (no-op on a production multi-split table).
-
-    ``min_parts``: override the fan width. The codec (mapInPandas)
-    queries pass 8 — their measured per-row Python cost on synthetic
-    media is microseconds, so at full default parallelism the
-    per-task fixed cost (worker fork + Arrow handshake, x2 for the
-    chained synthesize→decode Python stages) dominates: 64-way fan =
-    1.7 s vs 8-way = 0.65 s for the same result at sf0.1. On real
-    multi-MB payloads per-row cost dominates instead and the scan is
-    already wide, making fan_out a no-op either way."""
-    return plans.fan_out(load_table(spark, sf_dir, name), min_parts)
+    (no-op on a production multi-split table)."""
+    return plans.fan_out(load_table(spark, sf_dir, name))
 
 
 # --------------------------------------------------------------------------
@@ -2527,16 +2518,12 @@ def embedding_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal decode: binary payload column → Arrow-batched REAL
     container parse (BMP/WAV/Y4M headers, ext/multimodal.py) → typed
-    metadata. Narrow mapInPandas pass, no shuffle on a multi-split
-    table; locally the single-row-group file scans as ONE task, which
-    would run the whole synthesize+parse Python chain on one core —
-    ``_tw(min_parts=8)`` fans it out exactly like every other media
-    query (this one and multimodal_frames had missed the r7 sweep;
-    measured sf0.1 warm 0.52s -> ~0.2s)."""
+    metadata. One narrow mapInPandas pass (synthesis fused with
+    ``multimodal.DECODE``), no shuffle on a multi-split table."""
     from .ext import multimodal
 
-    docs = _tw(spark, sf_dir, "documents", min_parts=8)
-    return multimodal.synthesize_decoded(docs, "doc_id", "text").select(
+    docs = load_table(spark, sf_dir, "documents")
+    return multimodal.synthesize(docs, "doc_id", "text", multimodal.DECODE).select(
         "media_id", "kind", "n_bytes", "width", "height", "frames"
     )
 
@@ -3258,15 +3245,15 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video frame sampling over REAL container bytes: synthesize y4m
-    streams, then ``frame_sample`` parses each stream and emits one row
+    streams, then ``multimodal.FRAMES`` parses each stream and emits one row
     per frame with its actual byte offset. The oracle predicts the
     offsets arithmetically from the synth spec — a bug in either the
     encoder's layout or the parser's walk breaks the match. Explode-
     shaped fan-out (rows = frames), narrow, no shuffle."""
     from .ext import multimodal
 
-    docs = _tw(spark, sf_dir, "documents", min_parts=8).filter(F.col("doc_id") % 3 == 2)
-    return multimodal.synthesize_frames(docs, "doc_id", "text").select(
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 == 2)
+    return multimodal.synthesize(docs, "doc_id", "text", multimodal.FRAMES).select(
         "media_id", "frame_no", "frame_offset"
     )
 
@@ -3857,13 +3844,15 @@ def _component_fixpoint(
 )
 def dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERS: connected components over the blocked-
-    Levenshtein pair graph via iterative min-label propagation — each
-    round is one join + one keyed min-agg, looping until no label
-    changes (the standard dedup-grouping step after pair discovery; at
-    corpus scale rounds are O(log diameter) and each is a pair of
-    shuffles). The DuckDB oracle computes the same components with a
-    recursive CTE — two entirely different fixpoint engines agreeing on
-    the partition."""
+    Levenshtein pair graph (the standard dedup-grouping step after pair
+    discovery), labelled by each component's minimum id through
+    ``_component_fixpoint``: a pair graph under its size gate is
+    labelled by union-find on the driver over the gate probe's rows;
+    above it, alternating large-star / small-star contraction rounds of
+    keyed min-aggs and equi-joins run in O(log² n) rounds whatever the
+    component diameter. The DuckDB oracle computes the same components
+    with a recursive CTE — two entirely different fixpoint engines
+    agreeing on the partition."""
     labels = _dup_component_labels(spark, sf_dir)
     return labels.groupBy(F.col("comp").alias("cluster_id")).agg(
         F.count("*").alias("n_members")
@@ -6957,7 +6946,7 @@ def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 def video_scene_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scene-change detection over REAL video container bytes: parse
     each y4m stream, sum every frame's Y plane exactly
-    (``multimodal.video_luma_profile``), and flag a cut wherever the
+    (``multimodal.LUMA``), and flag a cut wherever the
     luma mass jumps by more than 4 gray levels per pixel between
     adjacent frames (integer comparison |Δ| > 4·w·h — no floats). The
     oracle recomputes every frame's luma arithmetically from the synth
@@ -6966,15 +6955,15 @@ def video_scene_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same trust chain as multimodal_frames, extended from layout to
     CONTENT.
 
-    Plan: narrow synthesize→profile Arrow passes (row fan-out =
-    frames), then a lag window PARTITIONED by media (keyed, never
+    Plan: one narrow Arrow pass, synthesis fused with the profile (row
+    fan-out = frames), then a lag window PARTITIONED by media (keyed, never
     global) and a keyed rollup. At 100 TB of video this is the
     shuffle-light shape: per-frame stats stay with their media key
     end to end."""
     from .ext import multimodal
 
-    docs = _tw(spark, sf_dir, "documents", min_parts=8).filter(F.col("doc_id") % 3 == 2)
-    lum = multimodal.synthesize_luma(docs, "doc_id", "text")
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 == 2)
+    lum = multimodal.synthesize(docs, "doc_id", "text", multimodal.LUMA)
     w = Window.partitionBy("media_id").orderBy("frame_no")
     diffs = lum.select(
         "media_id",
@@ -8851,7 +8840,7 @@ _AUDIO_RMS_ORACLE_CTE = """
 )
 def audio_rms_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Loudness/silence profile over REAL PCM bytes: synthesize WAV
-    payloads, then ``audio_rms_windows`` parses the 16-bit samples and
+    payloads, then ``multimodal.rms`` parses the 16-bit samples and
     emits exact integer Σsample² and peak |sample| per 256-sample
     window — the features a speech pipeline thresholds for silence
     trimming and clipping detection.
@@ -8867,8 +8856,8 @@ def audio_rms_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload's partition, all-integer outputs."""
     from .ext import multimodal
 
-    docs = _tw(spark, sf_dir, "documents", min_parts=8)
-    return multimodal.synthesize_rms(docs, "doc_id", "text", window=256)
+    docs = load_table(spark, sf_dir, "documents")
+    return multimodal.synthesize(docs, "doc_id", "text", multimodal.rms(256))
 
 
 # ---- PPJoin prefix-filtered similarity join --------------------------------
@@ -8905,7 +8894,7 @@ def prefix_filtered_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- image perceptual hash (dHash) -----------------------------------------
 # Shared oracle CTE: closed-form dHash from md5(text). The synthesized
-# BMP (multimodal.synthesize_media) fills pixel rows with the 16-byte
+# BMP (multimodal.synthesize) fills pixel rows with the 16-byte
 # md5 digest tiled, so the byte at linear offset o is digest[o % 16] and
 # every sampled grayscale cell — hence every gradient-sign bit — has a
 # closed form in SQL. The Spark side parses the real BMP container
@@ -8957,7 +8946,7 @@ _DHASH_ORACLE_CTE = """
 def image_dhash_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-image perceptual difference-hash (64 gradient-sign bits as
     two 32-bit halves) over REAL BMP payloads — the signature stage of
-    image dedup. ``multimodal.image_dhash`` walks the actual container
+    image dedup. ``multimodal.DHASH`` walks the actual container
     bytes (data-offset header field, bottom-up rows, 4-byte row
     padding, 9×8 nearest-neighbor grayscale grid); the oracle predicts
     every bit closed-form from md5(text) because the synthetic pixel
@@ -8965,8 +8954,8 @@ def image_dhash_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     8 bytes in place — nothing but signatures ever shuffles."""
     from .ext import multimodal
 
-    docs = _tw(spark, sf_dir, "documents", min_parts=8)
-    return multimodal.synthesize_dhash(docs, "doc_id", "text")
+    docs = load_table(spark, sf_dir, "documents")
+    return multimodal.synthesize(docs, "doc_id", "text", multimodal.DHASH)
 
 
 @register(
@@ -8991,9 +8980,9 @@ def image_dhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify on candidates only, never an all-pairs comparison."""
     from .ext import multimodal
 
-    docs = _tw(spark, sf_dir, "documents", min_parts=8)
+    docs = load_table(spark, sf_dir, "documents")
     return dedup.hamming_near_dup(
-        multimodal.synthesize_dhash(docs, "doc_id", "text"), max_hamming=3
+        multimodal.synthesize(docs, "doc_id", "text", multimodal.DHASH), max_hamming=3
     )
 
 
@@ -9186,9 +9175,9 @@ def image_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     signatures and (a, b) id pairs ever shuffles."""
     from .ext import multimodal
 
-    docs = _tw(spark, sf_dir, "documents", min_parts=8)
+    docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.hamming_near_dup(
-        multimodal.synthesize_dhash(docs, "doc_id", "text")
+        multimodal.synthesize(docs, "doc_id", "text", multimodal.DHASH)
     ).select("a", "b")
     labels = _component_fixpoint(pairs)
     return labels.groupBy(F.col("comp").alias("cluster_id")).agg(
@@ -9378,8 +9367,8 @@ def audio_silence_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-media shuffle, which carries only flagged window indices."""
     from .ext import multimodal
 
-    docs = _tw(spark, sf_dir, "documents", min_parts=8)
-    w = multimodal.synthesize_rms(docs, "doc_id", "text", window=256)
+    docs = load_table(spark, sf_dir, "documents")
+    w = multimodal.synthesize(docs, "doc_id", "text", multimodal.rms(256))
     flagged = (
         w.filter(F.col("sumsq") < F.lit(358000000).cast("long") * F.col("n_samples"))
         .withColumn(

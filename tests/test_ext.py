@@ -129,8 +129,8 @@ def test_multimodal_plumbing(spark):
         [(0, "hello world"), (1, "abc"), (2, "a video doc"), (-4, "neg id")],
         ["doc_id", "text"],
     )
-    media = multimodal.synthesize_media(docs, "doc_id", "text")
-    decoded = multimodal.decode_media(media)
+    media = multimodal.synthesize(docs, "doc_id", "text")
+    decoded = multimodal.apply(media, multimodal.DECODE)
     rows = {r["media_id"]: r for r in decoded.collect()}
     assert set(decoded.columns) == {
         "media_id", "kind", "n_bytes", "width", "height", "frames", "checksum"
@@ -150,77 +150,58 @@ def test_multimodal_plumbing(spark):
     # negative id: Python % keeps pmod semantics (-4 % 3 == 2 → video)
     assert rows[-4]["kind"] == "video"
 
-    # frame_sample emits real byte offsets for each kept video frame
+    # FRAMES emits real byte offsets for each video frame
     frames = {
         r["frame_no"]: r["frame_offset"]
-        for r in multimodal.frame_sample(media).filter(F.col("media_id") == 2).collect()
+        for r in multimodal.apply(media, multimodal.FRAMES)
+        .filter(F.col("media_id") == 2)
+        .collect()
     }
     head_len = len(b"YUV4MPEG2 W24 H8 F25:1 Ip A1:1\n")
     stride = 6 + 24 * 8 * 3 // 2
     assert frames == {n: head_len + n * stride for n in range(4)}
 
     # resize re-encodes a real BMP at the target dims
-    resized = {r["media_id"]: r for r in multimodal.resize_media(media, 32, 16).collect()}
+    resized = {
+        r["media_id"]: r
+        for r in multimodal.apply(media, multimodal.resize(32, 16)).collect()
+    }
     img = resized[0]
     assert img["width"] == 32
     assert multimodal.decode_bmp(bytes(img["payload"])) == (32, 16, 1)
     assert resized[1]["width"] == -1  # pass-through for non-image kinds
 
 
-def test_synthesize_media_only_prefilter(spark):
-    # `only=` must equal full synthesis + kind filter, byte for byte,
-    # including negative ids (Spark pmod == Python % for positive mod).
+@pytest.mark.parametrize(
+    "op",
+    [
+        multimodal.DECODE,
+        multimodal.FRAMES,
+        multimodal.LUMA,
+        multimodal.DHASH,
+        multimodal.rms(64),
+        multimodal.resize(32, 16),
+    ],
+    ids=["decode", "frames", "luma", "dhash", "rms", "resize"],
+)
+def test_synthesize_fused_equals_apply(spark, op):
+    # synthesis fused with an operator in one Arrow pass returns exactly
+    # the rows of the operator applied to the synthesized media table,
+    # payload bytes included. Negative ids check that the kind prefilter
+    # (Spark pmod) selects the rows the kind dispatch (Python %) builds.
     docs = spark.createDataFrame(
-        [(i, f"doc {i} " * (i % 7 + 1)) for i in range(-5, 10)],
-        ["doc_id", "text"],
-    )
-    full = multimodal.synthesize_media(docs, "doc_id", "text")
-    for kind in ("image", "audio", "video"):
-        want = {
-            r["media_id"]: bytes(r["payload"])
-            for r in full.filter(F.col("kind") == kind).collect()
-        }
-        got = {
-            r["media_id"]: bytes(r["payload"])
-            for r in multimodal.synthesize_media(
-                docs, "doc_id", "text", only=kind
-            ).collect()
-        }
-        assert got == want, kind
-
-
-def test_synthesize_then_fused_equals_two_pass(spark):
-    # the fused single-Arrow-pass operators must return exactly the
-    # rows the synthesize->consume two-pass composition returns (r11)
-    docs = spark.createDataFrame(
-        [(i, f"doc {i} body " * (i % 9 + 1)) for i in range(24)],
+        [(i, f"doc {i} body " * (i % 9 + 1)) for i in range(-7, 24)],
         ["doc_id", "text"],
     )
 
     def rows(df):
         return sorted(tuple(r) for r in df.collect())
 
-    media_all = multimodal.synthesize_media(docs, "doc_id", "text")
-    pairs = [
-        (multimodal.synthesize_decoded(docs, "doc_id", "text"),
-         multimodal.decode_media(media_all)),
-        (multimodal.synthesize_frames(docs, "doc_id", "text"),
-         multimodal.frame_sample(media_all)),
-        (multimodal.synthesize_dhash(docs, "doc_id", "text"),
-         multimodal.image_dhash(
-             multimodal.synthesize_media(docs, "doc_id", "text", only="image"))),
-        (multimodal.synthesize_rms(docs, "doc_id", "text", window=64),
-         multimodal.audio_rms_windows(
-             multimodal.synthesize_media(docs, "doc_id", "text", only="audio"),
-             window=64)),
-        (multimodal.synthesize_luma(docs, "doc_id", "text"),
-         multimodal.video_luma_profile(
-             multimodal.synthesize_media(docs, "doc_id", "text", only="video"))),
-    ]
-    for fused, two_pass in pairs:
-        assert fused.columns == two_pass.columns
-        got, want = rows(fused), rows(two_pass)
-        assert got == want and got
+    fused = multimodal.synthesize(docs, "doc_id", "text", op)
+    two_pass = multimodal.apply(multimodal.synthesize(docs, "doc_id", "text"), op)
+    assert fused.columns == two_pass.columns == op.schema.fieldNames()
+    got, want = rows(fused), rows(two_pass)
+    assert got == want and got
 
 
 def test_rolling_hash_fingerprint(spark):
@@ -1157,7 +1138,7 @@ def test_audio_rms_windows_closed_form(spark):
     )
     rows = {
         r["window_idx"]: r
-        for r in multimodal.audio_rms_windows(df, window=8).collect()
+        for r in multimodal.apply(df, multimodal.rms(8)).collect()
     }
     assert set(rows) == {0, 1, 2}
     full = sum(v * v for v in expect)
@@ -1391,8 +1372,8 @@ def test_image_dhash_parses_real_bmp(spark):
     rows = [(0, "the same document text here"), (3, "the same document text here"),
             (6, "a completely different story about ships")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    media = multimodal.synthesize_media(df, "doc_id", "text")
-    got = {r["media_id"]: r for r in multimodal.image_dhash(media).collect()}
+    media = multimodal.synthesize(df, "doc_id", "text")
+    got = {r["media_id"]: r for r in multimodal.apply(media, multimodal.DHASH).collect()}
     assert set(got) == {0, 3, 6}
     assert got[0]["dhash_hi"] == got[3]["dhash_hi"]
     assert got[0]["dhash_lo"] == got[3]["dhash_lo"]

@@ -55,13 +55,8 @@ TEST_ONLY = {
     "sql_api.register_functions": "§2.5 scalars as SQL functions (COVERAGE API row)",
     "sql_api.register_udtfs": "chunk_tokens table function (COVERAGE API row)",
     "sql_api.ChunkTokens": "the UDTF class register_udtfs registers as chunk_tokens",
-    "ext.multimodal.synthesize_media": "unfused synthesis; the fused queries are tested against it",
-    "ext.multimodal.decode_media": "unfused decode of a stored media table; synthesize_decoded's reference",
-    "ext.multimodal.resize_media": "BMP nearest-neighbour resize (COVERAGE multimodal row)",
-    "ext.multimodal.video_luma_profile": "unfused luma profile; reference for synthesize_luma",
-    "ext.multimodal.frame_sample": "unfused frame sampling; reference for synthesize_frames",
-    "ext.multimodal.audio_rms_windows": "unfused RMS windows; reference for synthesize_rms",
-    "ext.multimodal.image_dhash": "unfused dHash; reference for synthesize_dhash",
+    "ext.multimodal.apply": "an operator over a stored media table; the fused synthesize path is tested against it",
+    "ext.multimodal.resize": "BMP nearest-neighbour resize (COVERAGE multimodal row)",
     "ext.pysource.ListingDataSource": "S1 as a registered Python DataSource (spark.read.format)",
     "ext.pysource.TxlogDataSource": "txlog sink through the DataSource V2 write API",
     "ext.pysource.ListingReader": "batch reader ListingDataSource hands spark.read",

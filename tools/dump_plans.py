@@ -343,8 +343,8 @@ SELECTED = {
         "assignment integer arithmetic over (rn, N)."
     ),
     "video_scene_changes": (
-        "Content-level video op: two narrow Arrow passes (synthesize, "
-        "per-frame Y-plane luma sums from real y4m bytes), then a lag "
+        "Content-level video op: one narrow Arrow pass (synthesis fused "
+        "with per-frame Y-plane luma sums from real y4m bytes), then a lag "
         "window PARTITIONED by media and a keyed rollup -- per-frame "
         "stats never leave their media key."
     ),

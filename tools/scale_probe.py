@@ -370,6 +370,7 @@ def _gate_diag(spark, sf_dir: str) -> dict:
     from frontpage_spark.incremental import (
         _SESSIONIZE_STITCH_BYTES,
         _plan_size_bytes,
+        sessionize_gate,
     )
     from frontpage_spark.sources import load_table
 
@@ -377,11 +378,7 @@ def _gate_diag(spark, sf_dir: str) -> dict:
     return {
         "events_plan_bytes": size,
         "sessionize_gate_bytes": _SESSIONIZE_STITCH_BYTES,
-        "sessionize_gated_plan": (
-            "classic"
-            if size is not None and size <= _SESSIONIZE_STITCH_BYTES
-            else "stitch"
-        ),
+        "sessionize_gated_plan": sessionize_gate(size),
     }
 
 

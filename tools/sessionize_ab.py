@@ -111,6 +111,7 @@ def main() -> int:
         _SESSIONIZE_STITCH_BYTES,
         _plan_size_bytes,
         sessionize,
+        sessionize_gate,
     )
     from frontpage_spark.session import get_spark
     from frontpage_spark.sources import load_table
@@ -142,15 +143,11 @@ def main() -> int:
             "passes": passes,
             "plan_bytes": est,
             "gate_bytes": _SESSIONIZE_STITCH_BYTES,
-            "gated_pick": (
-                "classic"
-                if est is not None and est <= _SESSIONIZE_STITCH_BYTES
-                else "stitch"
-            ),
+            "gated_pick": sessionize_gate(est),
         }
         if neargate:
             rec["neargate_factor"] = factor
-            rec["under_gate"] = bool(est is not None and est <= _SESSIONIZE_STITCH_BYTES)
+            rec["under_gate"] = sessionize_gate(est) == "classic"
             hot = ev.filter(F.col("user_id") == 424242).count()
             rec["hot_key_share"] = round(hot / rec["rows"], 3)
         for name, build in forms.items():
