@@ -467,36 +467,6 @@ def bloom_prune(
     )
 
 
-def assign_dense_ids(
-    df: DataFrame, *order_cols: str, id_col: str = "dense_id", n_parts: int | None = None
-) -> DataFrame:
-    """Contiguous 0..n-1 ids in global ``order_cols`` order WITHOUT a
-    single-partition sort — the scalable zipWithIndex replacement:
-
-    1. a deterministic bucket id from sampled range boundaries (the
-       ``global_prefix_stats`` recipe — boundaries are literals, so
-       placement is a pure function of the row and ids never vary);
-    2. per-partition ``row_number`` (each bucket is its own window
-       group, so the sort parallelizes);
-    3. partition row-counts — #partitions scalars, the only driver
-       data — cumsum into per-partition offsets, shipped back.
-
-    ``monotonically_increasing_id`` is NOT this: it's non-contiguous
-    and order-free. A global ``row_number() OVER (ORDER BY ...)`` IS
-    this semantically, but Spark executes it on ONE partition — the
-    1000-executor anti-pattern. Requires ``order_cols`` to be a total
-    order (unique); ties would make ids partition-placement-dependent.
-
-    Since round 6 this is a thin wrapper over ``global_prefix_stats``
-    (the generalized two-pass rank/prefix-sum helper): dense id =
-    global row number − 1.
-    """
-    out = global_prefix_stats(
-        df, [F.col(c) for c in order_cols], rn_col=id_col, n_parts=n_parts
-    )
-    return out.withColumn(id_col, (F.col(id_col) - 1).cast("long"))
-
-
 def _sort_pairs(order_cols):
     """Normalize ``order_cols`` entries into (Column, ascending) pairs.
 
@@ -693,66 +663,54 @@ def global_prefix_stats(
     order WITHOUT a single-partition WindowExec — the scalable form of
     ``row_number()/SUM() OVER (ORDER BY ...)``, which Spark otherwise
     executes by moving EVERY row to one partition (the 1000-executor
-    anti-pattern; VERDICT r5 item 1).
+    anti-pattern; VERDICT r5 item 1). The input is never materialized:
+    lineage stays intact, so a lost executor just recomputes its split.
 
-    Recipe (no materialization of the input — VERDICT r6 item 1; the
-    round-6 form pinned ``repartitionByRange``'s sampled boundaries
-    with an eager full-relation ``localCheckpoint``, which at 100 TB
-    writes the whole relation to executor-local disk AND severs
-    lineage, so one lost executor fails the job):
+    Recipe — two bounded auxiliary jobs and ONE full-row exchange:
 
-    1. ONE bounded sampling job picks explicit range boundaries: the
-       ``n_parts*60`` rows with the smallest ``xxhash64`` of the order
-       key (a TakeOrderedAndProject over the column-pruned key
-       projection — fully parallel, driver receives only the sample;
-       no count job, no RNG — and even sample nondeterminism would be
-       harmless, the boundaries are collected once and embedded as
-       literals so every downstream job shares them), sorted
-       driver-side in the total order, evenly-spaced boundary tuples
-       kept as PYTHON LITERALS;
-    2. ``__part`` = a deterministic bucket id computed FROM THE ROW
-       VALUES by a binary-search CASE tree over those literals
-       (``_bucket_tree``, O(log n_parts) per row) — the cross-job
-       nondeterminism that forced the round-6 checkpoint
-       (repartitionByRange resamples boundaries per execution) is gone
-       by construction, lineage stays intact, and a lost executor just
-       recomputes its split;
-    3. per-partition counts and sums (ONE aggregation job — map-side
-       combined, shuffles #partitions scalar rows) cumsum into
-       exclusive offsets at the driver;
+    1. ONE sampling job picks range boundaries: the ``n_parts*60`` rows
+       with the smallest ``xxhash64`` of the order key (a
+       TakeOrderedAndProject over the column-pruned key projection —
+       parallel, no count job, no RNG), sorted driver-side in the total
+       order; ``n_parts - 1`` evenly spaced tuples become SQL literals.
+    2. ``__part`` = bucket id = #boundaries <= the row's key, computed
+       FROM THE ROW by a branchless binary search over those literals
+       (``_bucket_search_sql``, O(log n_parts) per row). It is a pure
+       function of the row, so every job that evaluates it agrees on
+       placement.
+    3. ONE aggregation job (map-side combined, shuffles #buckets scalar
+       rows) gives per-bucket counts and sums, cumsummed at the driver
+       into exclusive offsets — one dense literal array per output
+       column, indexed by bucket id (an empty bucket carries the
+       running offset). Offsets are ``bigint``, or ``double`` for float
+       sums; any other sum type raises ``TypeError``.
     4. the final plan hash-exchanges on ``__part`` once (the window's
-       own partitioning), runs ONE partition-local sort feeding BOTH
-       the per-partition ``row_number`` and every per-partition running
-       sum, and ships the offsets back size-gated: ≤64 partitions
-       inline as literal-map lookups (zero extra plan nodes — the
-       measured winner at local scale), above that a broadcast hash
-       join on the partition id (O(1) per row at ANY width).
+       own partitioning), runs ONE partition-local sort feeding the
+       per-partition ``row_number`` and every running sum, and adds
+       ``element_at(offsets, __part + 1)`` — O(1) per row at any
+       partition count, no join and no extra plan node.
 
-    Cost: two bounded auxiliary jobs (sample + offsets — they shuffle
-    only scalars) and exactly ONE full-row exchange (down from round
-    6's two exchanges plus a full local-disk materialization). The
-    input lineage is recomputed by the auxiliary jobs, so callers
-    whose input is an expensive derived relation (a multi-join rollup)
-    should ``persist`` THAT bounded rollup themselves — see
-    ``rfm_segments`` — rather than have this helper pin an unbounded
-    relation for everyone. Several independent orderings over the same
-    relation should ride ``global_prefix_stats_multi``, which shares
-    the sample and offsets jobs across all of them.
+    The auxiliary jobs recompute the input lineage, so a caller whose
+    input is an expensive derived relation (a multi-join rollup) should
+    ``persist`` THAT bounded rollup itself — see ``rfm_segments``.
+    Several independent orderings over the same relation should ride
+    ``global_prefix_stats_multi``, which shares the sample and offsets
+    jobs across all of them.
 
     ``order_cols``: list of Column expressions forming a total order —
     plain Column = ascending, ``(Column, "desc")`` for descending
     (ties would make prefix sums placement-dependent). Null ordering
     follows Spark's defaults: ASC = NULLS FIRST, DESC = NULLS LAST.
     ``sums``: {source_col: output_col} inclusive running sums in the
-    global order (integral or double; sums ride the source column's
-    Spark type — note float sums accumulate per-partition + offset, a
-    DIFFERENT addition order than one sequential window, so
-    cross-engine exact comparison needs integer sums, e.g. cents; every
-    registry consumer and the fuzz generator sum integers). Downstream
-    rank-family functions are arithmetic over ``rn_col`` and the
-    (broadcastable) total count: ntile via ``ntile_from_rn``,
-    percent_rank = (rn-1)/(N-1), cume_dist = rn/N (total orders have
-    no ties).
+    global order (integral → bigint, float → double; note float sums
+    accumulate per-partition + offset, a DIFFERENT addition order than
+    one sequential window, so cross-engine exact comparison needs
+    integer sums, e.g. cents; every registry consumer and the fuzz
+    generator sum integers). ``rn_col`` is ``bigint``. Downstream
+    rank-family functions are arithmetic over ``rn_col`` and the total
+    count: ntile via ``ntile_from_rn``, percent_rank = (rn-1)/(N-1),
+    cume_dist = rn/N (total orders have no ties).
+    ``n_parts``: bucket count; defaults to ``spark.sql.shuffle.partitions``.
     ``totals``: pass a dict to receive {rn_col: N, source_col: total}
     — the grand totals fall out of the offsets pass for free, saving
     callers a separate aggregation job.
@@ -762,6 +720,18 @@ def global_prefix_stats(
         [{"order": order_cols, "sums": sums, "rn_col": rn_col, "totals": totals}],
         n_parts=n_parts,
     )
+
+
+def _offset_type(df: DataFrame, src: str) -> str:
+    """SQL type of a running-sum offset: Spark's sum result type for
+    integral (bigint) and float (double) columns. Other types would need
+    that result type threaded through; no consumer sums them."""
+    t = df.schema[src].dataType.simpleString()
+    if t in ("tinyint", "smallint", "int", "bigint"):
+        return "bigint"
+    if t in ("float", "double"):
+        return "double"
+    raise TypeError(f"global_prefix_stats: unsupported sum column type {t} for {src!r}")
 
 
 def global_prefix_stats_multi(
@@ -786,15 +756,13 @@ def global_prefix_stats_multi(
     shuffles only #buckets·K scalar rows; (c) the K windows chain in
     the single final plan exactly as K sequential hash exchanges —
     the same exchanges K separate jobs would each pay once."""
+    import re
+
     from pyspark.sql.window import Window
 
-    if n_parts is not None:
-        nb = int(n_parts)
-    else:
-        try:
-            nb = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            nb = 32
+    if n_parts is None:
+        n_parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    nb = int(n_parts)
 
     parsed = []
     for sp in specs:
@@ -816,53 +784,37 @@ def global_prefix_stats_multi(
         for src in p["sums"]:
             if src not in all_srcs:
                 all_srcs.append(src)
+    off_types = {src: _offset_type(df, src) for src in all_srcs}
 
-    # --- job 1: ONE boundary sample serving every spec. The sample
-    # also carries the sum source columns: when it EXHAUSTS the input
-    # (n <= cap — the size-gate pattern), the driver already holds
-    # every key, so the per-bucket counts/sums fall out here and the
-    # offsets job is skipped entirely (3 jobs -> 2 for bounded
-    # rollups like rfm_segments; unbounded inputs take the normal
-    # aggregation path).
+    # --- job 1: ONE boundary sample serving every spec. TakeOrdered
+    # keeps `cap` rows PER PARTITION before the driver merge, so the cap
+    # stays at boundary-sample size (measured: cap 32k turned a 0.1s
+    # sample into 0.6s+ on a 15k-row rollup).
     flat = [
         (k, i, c)
         for k, p in enumerate(parsed)
         for i, c in enumerate(p["keys"])
     ]
-    proj = df.select(
-        *[c.alias(f"__b{k}_{i}") for k, i, c in flat],
-        *[F.col(src).alias(f"__sum_{j}") for j, src in enumerate(all_srcs)],
-    )
-    # cap sizing: TakeOrdered keeps `cap` rows PER PARTITION before the
-    # driver merge, so a large cap inflates the sample job even when
-    # the input is small (measured: cap 32k turned a 0.1s sample into
-    # 0.6s+ on a 15k-row rollup) — keep it at boundary-sample size and
-    # let the exhausted fast path engage only for genuinely tiny inputs
+    proj = df.select(*[c.alias(f"__b{k}_{i}") for k, i, c in flat])
     cap = min(max(nb * 60, 200), 200_000)
     hash_cols = [F.col(f"__b{k}_{i}") for k, i, _ in flat]
     samp_rows = proj.orderBy(F.xxhash64(*hash_cols).asc()).limit(cap).collect()
-    exhausted = len(samp_rows) < cap
-    key_types = {
-        (k, i): proj.schema[f"__b{k}_{i}"].dataType.simpleString() for k, i, _ in flat
-    }
     for k, p in enumerate(parsed):
-        vals = [
-            tuple(r[f"__b{k}_{i}"] for i in range(len(p["keys"]))) for r in samp_rows
+        nk = len(p["keys"])
+        vals = [tuple(r[f"__b{k}_{i}"] for i in range(nk)) for r in samp_rows]
+        p["bounds"] = _pick_bounds(vals, nb, _cmp_factory(p["ascs"]))
+        p["types"] = [
+            proj.schema[f"__b{k}_{i}"].dataType.simpleString() for i in range(nk)
         ]
-        p["cmp"] = _cmp_factory(p["ascs"])
-        p["bounds"] = _pick_bounds(vals, nb, p["cmp"])
-        p["types"] = [key_types[(k, i)] for i in range(len(p["keys"]))]
 
     # The bucket expression is generated SQL, so each key expression
     # needs a referencable NAME: plain named columns are used as-is,
     # computed expressions are materialized once as __gk{k}_{i}.
-    import re as _re
-
     gk_cols: dict[str, "Column"] = {}
     for k, p in enumerate(parsed):
         names = []
         for i, c in enumerate(p["keys"]):
-            m = _re.fullmatch(r"Column<'([A-Za-z_][A-Za-z0-9_]*)'>", repr(c))
+            m = re.fullmatch(r"Column<'([A-Za-z_][A-Za-z0-9_]*)'>", repr(c))
             if m:
                 names.append(m.group(1))
             else:
@@ -881,132 +833,48 @@ def global_prefix_stats_multi(
     )
 
     # --- job 2: ONE offsets aggregation (plain groupBy for K=1,
-    # GROUPING SETS above; SKIPPED when the sample exhausted the
-    # input — the driver computes the identical per-bucket rollup from
-    # the collected rows). Bucket ids are never NULL, so a result row
+    # GROUPING SETS above). Bucket ids are never NULL, so a result row
     # belongs to spec k iff its __part{k} is non-NULL.
-    collected = None
-    if not exhausted:
-        aggs = [F.count(F.lit(1)).alias("__n")] + [
-            F.sum(src).alias(f"__s_{i}") for i, src in enumerate(all_srcs)
-        ]
-        part_cols = [F.col(f"__part{k}") for k in range(K)]
-        if K == 1:
-            grouped = wp.groupBy(part_cols[0]).agg(*aggs)
-        else:
-            grouped = wp.groupingSets([[pc] for pc in part_cols], *part_cols).agg(*aggs)
-        collected = grouped.collect()
+    aggs = [F.count(F.lit(1)).alias("__n")] + [
+        F.sum(src).alias(f"__s_{i}") for i, src in enumerate(all_srcs)
+    ]
+    part_cols = [F.col(f"__part{k}") for k in range(K)]
+    if K == 1:
+        grouped = wp.groupBy(part_cols[0]).agg(*aggs)
+    else:
+        grouped = wp.groupingSets([[pc] for pc in part_cols], *part_cols).agg(*aggs)
+    collected = grouped.collect()
 
     out = wp
-    drop_cols: list[str] = []
     for k, p in enumerate(parsed):
-        srcs = list(p["sums"])
-        src_idx = {src: all_srcs.index(src) for src in srcs}
-        if exhausted:
-            # merge-walk the fully-collected keys in this spec's order
-            # against its sorted bounds: bucket(x) = #bounds <= x,
-            # identical to the SQL binary search by construction
-            import functools
-
-            nk = len(p["keys"])
-            rows_k = sorted(
-                (
-                    (
-                        tuple(r[f"__b{k}_{i}"] for i in range(nk)),
-                        [r[f"__sum_{src_idx[src]}"] for src in srcs],
-                    )
-                    for r in samp_rows
-                ),
-                key=functools.cmp_to_key(
-                    lambda a, b, _c=p["cmp"]: _c(a[0], b[0])
-                ),
-            )
-            cnt: dict[int, list] = {}
-            bi, bounds, cmp = 0, p["bounds"], p["cmp"]
-            for key, sums_v in rows_k:
-                while bi < len(bounds) and cmp(bounds[bi], key) <= 0:
-                    bi += 1
-                slot = cnt.setdefault(bi, [0] + [0] * len(srcs))
-                slot[0] += 1
-                for j, v in enumerate(sums_v):
-                    slot[j + 1] += v or 0
-            off_rows, acc_n = [], 0
-            acc_s = {src: 0 for src in srcs}
-            for pid in sorted(cnt):
-                off_rows.append((pid, acc_n, *[acc_s[src] for src in srcs]))
-                acc_n += cnt[pid][0]
-                for j, src in enumerate(srcs):
-                    acc_s[src] += cnt[pid][j + 1]
-        else:
-            rows = sorted(
-                (r[f"__part{k}"], r) for r in collected if r[f"__part{k}"] is not None
-            )
-            off_rows, acc_n = [], 0
-            acc_s = {src: 0 for src in srcs}
-            for pid, r in rows:
-                off_rows.append((pid, acc_n, *[acc_s[src] for src in srcs]))
-                acc_n += r["__n"]
-                for src in srcs:
-                    acc_s[src] += r[f"__s_{src_idx[src]}"] or 0
-        if p["totals"] is not None:
-            p["totals"][p["rn"]] = acc_n
-            p["totals"].update(acc_s)
-
         pc = f"__part{k}"
-        drop_cols.append(pc)
+        per_bucket = {r[pc]: r for r in collected if r[pc] is not None}
+        srcs = list(p["sums"])
+        aggs_k = ["__n"] + [f"__s_{all_srcs.index(src)}" for src in srcs]
+        # exclusive running offsets for bucket ids 0..#bounds — dense, so
+        # the lookup is one array index per row
+        offs, acc = [], [0] * len(aggs_k)
+        for b in range(len(p["bounds"]) + 1):
+            offs.append(acc)
+            r = per_bucket.get(b)
+            if r is not None:
+                acc = [a + (r[agg] or 0) for a, agg in zip(acc, aggs_k)]
+        if p["totals"] is not None:
+            p["totals"].update(zip([p["rn"], *srcs], acc))
+
+        def _offset(j, t):
+            arr = F.array(*[F.lit(o[j]) for o in offs]).cast(f"array<{t}>")
+            return F.element_at(arr, F.col(pc) + 1)
+
         w = Window.partitionBy(pc).orderBy(*p["sort"])
         wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-        if len(off_rows) <= 64:
-            # FEW partitions: inline the offsets as literal-map lookups
-            # — zero extra plan nodes, and a <=64-entry scan per row is
-            # cheaper than a broadcast exchange per pass (measured:
-            # three chained passes cost ~0.4 s/pass more as joins at
-            # local scale)
-            def _map(i, _rows=off_rows):
-                items = {pid: r[i] for pid, *r in _rows} or {0: 0}
-                return F.create_map(*[F.lit(x) for kv in items.items() for x in kv])
-
+        out = out.withColumn(p["rn"], F.row_number().over(w) + _offset(0, "bigint"))
+        for j, src in enumerate(srcs, 1):
             out = out.withColumn(
-                p["rn"], (F.row_number().over(w) + _map(0)[F.col(pc)]).cast("long")
-            )
-            for i, src in enumerate(srcs):
-                out = out.withColumn(
-                    p["sums"][src], F.sum(src).over(wrun) + _map(i + 1)[F.col(pc)]
-                )
-            continue
-
-        # MANY partitions (the cluster case): a literal map would scan
-        # its entries linearly per ROW — broadcast-join the offsets
-        # table instead (O(1) hash lookup per row at any partition
-        # count). Typed: integral sums offset as long, float as double
-        # (other sum types would need the Spark sum result type
-        # threaded through — no consumer sums them, so fail loudly).
-        def _off_type(src):
-            t = wp.schema[src].dataType.simpleString()
-            if t in ("tinyint", "smallint", "int", "bigint"):
-                return "bigint"
-            if t in ("float", "double"):
-                return "double"
-            raise TypeError(
-                f"global_prefix_stats: unsupported sum column type {t} for {src!r}"
+                p["sums"][src], F.sum(src).over(wrun) + _offset(j, off_types[src])
             )
 
-        off_schema = f"{pc} int, __off_rn bigint" + "".join(
-            f", __off_{i} {_off_type(src)}" for i, src in enumerate(srcs)
-        )
-        off_df = df.sparkSession.createDataFrame(off_rows, off_schema)
-        out = out.join(F.broadcast(off_df), pc)
-        out = out.withColumn(
-            p["rn"], (F.row_number().over(w) + F.col("__off_rn")).cast("long")
-        )
-        for i, src in enumerate(srcs):
-            out = out.withColumn(
-                p["sums"][src], F.sum(src).over(wrun) + F.col(f"__off_{i}")
-            )
-        out = out.drop("__off_rn", *[f"__off_{i}" for i in range(len(srcs))])
-
-    return out.drop(*drop_cols, *gk_cols)
+    return out.drop(*[f"__part{k}" for k in range(K)], *gk_cols)
 
 
 def ntile_from_rn(rn, n: int, total: int):

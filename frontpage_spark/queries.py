@@ -4801,7 +4801,7 @@ def peak_concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed agg shrinks events -> sessions), then +1/-1 boundary points
     with a running sum. The global cumsum is the two-phase prefix sum
     (``plans.global_prefix_stats``): deterministic range buckets on the sweep
-    order + per-partition running sums in parallel + broadcast carried
+    order + per-bucket running sums in parallel + shipped carried
     offsets — no single-partition WindowExec even though the sweep is
     globally ordered (VERDICT r5 item 1). Ties (+1 sorts before -1 at
     the same instant; then user/session) are total-ordered so both
@@ -7013,7 +7013,7 @@ def vocab_growth_by_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
     The global occurrence position runs over the EXPLODED token
     stream — the largest input any ranking operator here sees — via
     ``plans.global_prefix_stats`` (deterministic range buckets on (doc_id, pos) +
-    parallel per-partition row_number + broadcast offsets; the naive
+    parallel per-bucket row_number + shipped offsets; the naive
     row_number() OVER (ORDER BY ...) would drag every token of a
     100 TB corpus through ONE partition). First-occurrence is a keyed
     min; decile assignment is exact integer arithmetic over (rn, N)."""
@@ -7210,7 +7210,7 @@ def sequence_packing_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The layout is a GLOBAL ordered prefix sum over every document —
     the third operator riding ``plans.global_prefix_stats`` (range
-    exchange + parallel per-partition running sums + broadcast carried
+    buckets + parallel per-bucket running sums + shipped carried
     offsets; no single-partition WindowExec). Span arithmetic is exact
     integer division, so the oracle is hash-exact."""
     docs = load_table(spark, sf_dir, "documents")
@@ -7670,7 +7670,7 @@ def ntile_analytics_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     over a deterministic total order — WITHOUT the global ORDER BY
     WindowExec (which moves every order to ONE partition): the global
     row number comes from ``plans.global_prefix_stats`` (range
-    exchange + parallel per-partition sort + broadcast offsets), and
+    buckets + parallel per-bucket sort + shipped offsets), and
     since (o_totalprice, o_orderkey) is a total order the whole rank
     family is arithmetic over (rn, N): ntile via ``ntile_from_rn``,
     percent_rank = (rn-1)/(N-1), cume_dist = rn/N. Per-decile MIN/MAX
@@ -9545,15 +9545,18 @@ def exp_smoothing_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dense_ids_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contiguous surrogate ids in (source, doc_id) order via
-    ``plans.assign_dense_ids`` — deterministic range buckets + per-partition
-    row_number + offset cumsum, never a one-partition global sort (the
-    oracle's literal ``row_number() OVER (ORDER BY ...)`` IS that
-    anti-pattern, which is the point of the comparison). The per-source
-    rollup (contiguous [min, max], order-sensitive checksum) pins every
-    id while staying partition-count-independent."""
+    """Contiguous surrogate ids in (source, doc_id) order: the global
+    row number from ``plans.global_prefix_stats`` minus one —
+    deterministic range buckets + per-partition row_number + offset
+    cumsum, never a one-partition global sort (the oracle's literal
+    ``row_number() OVER (ORDER BY ...)`` IS that anti-pattern, which is
+    the point of the comparison). The per-source rollup (contiguous
+    [min, max], order-sensitive checksum) pins every id while staying
+    partition-count-independent."""
     docs = load_table(spark, sf_dir, "documents")
-    ids = plans.assign_dense_ids(docs, "source", "doc_id")
+    ids = plans.global_prefix_stats(
+        docs, [F.col("source"), F.col("doc_id")], rn_col="dense_id"
+    ).withColumn("dense_id", F.col("dense_id") - 1)
     return ids.groupBy("source").agg(
         F.count(F.lit(1)).alias("n"),
         F.min("dense_id").alias("min_id"),
@@ -11611,10 +11614,9 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~0.2 s/job local stage-scheduling floor (rollup+persist+sample
     ~0.55 s, GROUPING-SETS offsets ~0.2 s, final exec 0.29 s) + plan
     build. The r8 horizon removal cut the 4th action (global-max
-    broadcast); the remaining three are structural: the offsets MUST be
-    driver literals for the zero-join literal-map form (the measured
-    winner over per-pass broadcast joins, see plans.py), and sample ->
-    offsets -> final is a data dependency chain. This is a per-JOB
+    broadcast); the remaining three are structural: the offsets are
+    driver literals (a dense array per pass, read with no join), and
+    sample -> offsets -> final is a data dependency chain. This is a per-JOB
     constant, not a per-row cost — the sf1 run shows it amortizing
     (8.5x gap at 10x data, trending down) and the 20x probe is 2.6x."""
     from .plans import global_prefix_stats_multi, keep, ntile_from_rn
@@ -12362,7 +12364,7 @@ def pareto_8020_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup). The crossing point is found with an integer cross-
     multiplication (cum·5 ≥ tot·4 — no float threshold), prefix sums
     come from ``plans.global_prefix_stats`` — deterministic range buckets + parallel
-    per-partition running sums + broadcast offsets, NO single-partition
+    per-bucket running sums + shipped offsets, NO single-partition
     WindowExec (VERDICT r5 item 1) — and the grand totals fall out of
     its offsets pass for free. Scale: keyed rollup shuffle + one range
     exchange over customers (not orders) + a 1-row reduce."""

@@ -132,11 +132,15 @@ class SessionCache:
             return value
 
     def put(self, key, value) -> None:
+        # evict before inserting, so that no reader ever sees more
+        # than ``cap`` entries, not even halfway through a put
         with self._lock:
+            if key in self._entries:
+                self._entries.move_to_end(key)
+            else:
+                while len(self._entries) >= self._cap:
+                    self._entries.popitem(last=False)
             self._entries[key] = value
-            self._entries.move_to_end(key)
-            while len(self._entries) > self._cap:
-                self._entries.popitem(last=False)
 
     def get_or_put(self, key, build):
         """Cached value for ``key``, else ``build()`` stored under it.

@@ -245,15 +245,18 @@ def test_dynamic_partition_pruning_from_dim_join(spark, tmp_path):
     assert q.count() == 40
 
 
-def test_assign_dense_ids_contiguous_and_ordered(spark):
-    """Dense ids are 0..n-1, follow the global order, and never funnel
-    through a one-partition sort (multiple range partitions hold data)."""
-    from frontpage_spark.plans import assign_dense_ids
+def test_global_prefix_stats_dense_ids_contiguous_and_ordered(spark):
+    """Dense ids (global row number - 1, the ``dense_ids_documents``
+    form) are 0..n-1, follow the global order, and never funnel through
+    a one-partition sort (multiple range partitions hold data)."""
+    from frontpage_spark.plans import global_prefix_stats
 
     df = spark.createDataFrame(
         [(k, i) for i in range(500) for k in ("b", "a")], ["k", "i"]
     )
-    out = assign_dense_ids(df, "k", "i", n_parts=8)
+    out = global_prefix_stats(
+        df, [F.col("k"), F.col("i")], rn_col="dense_id", n_parts=8
+    ).withColumn("dense_id", F.col("dense_id") - 1)
     rows = sorted(out.collect(), key=lambda r: r["dense_id"])
     assert [r["dense_id"] for r in rows] == list(range(1000))
     assert [(r["k"], r["i"]) for r in rows] == sorted(
@@ -427,45 +430,62 @@ def test_no_unpartitioned_window_over_unbounded_rows(spark):
 
 
 def test_global_prefix_stats_matches_window(spark):
-    """global_prefix_stats (range-partitioned two-pass rank/prefix-sum)
+    """global_prefix_stats (range-bucketed two-pass rank/prefix-sum)
     must reproduce row_number()/SUM() OVER (ORDER BY ...) and the
     SQL-standard ntile exactly — including descending orders, totals
-    reporting, and an empty input."""
+    reporting, an empty input, and bucket counts on both sides of 64
+    (the edge of the former literal-map/broadcast-join fork). An input
+    with fewer rows than buckets (bucket 0 stays empty: the first
+    boundary is the smallest key) rides the same offsets job. At 128
+    buckets the plan
+    holds one hash exchange per spec and no broadcast."""
     from pyspark.sql.window import Window
-    from frontpage_spark.plans import global_prefix_stats, ntile_from_rn
+    from frontpage_spark.plans import (
+        global_prefix_stats,
+        global_prefix_stats_multi,
+        ntile_from_rn,
+    )
+
+    def check(df, order, ref_order, n_parts):
+        w = Window.orderBy(*ref_order)
+        ref = df.select(
+            "id",
+            F.row_number().over(w).cast("long").alias("rn"),
+            F.sum("k").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)).alias("ck"),
+            F.ntile(7).over(w).cast("long").alias("t7"),
+        )
+        t: dict = {}
+        got = global_prefix_stats(
+            df, order, sums={"k": "ck"}, rn_col="rn", n_parts=n_parts, totals=t
+        )
+        assert dict(got.dtypes)["rn"] == "bigint"
+        n = df.count()
+        assert t["rn"] == n and t["k"] == sum(r["k"] for r in df.select("k").collect())
+        got = got.select("id", "rn", "ck", ntile_from_rn(F.col("rn"), 7, n).alias("t7"))
+        ref_rows = {r["id"]: (r["rn"], r["ck"], r["t7"]) for r in ref.collect()}
+        got_rows = {r["id"]: (r["rn"], r["ck"], r["t7"]) for r in got.collect()}
+        assert got_rows == ref_rows, n_parts
+        return got
 
     df = spark.range(0, 997).select(
         F.col("id"),
         (F.xxhash64("id") % 50).alias("v"),
         F.pmod(F.xxhash64("id", F.lit(1)), F.lit(1000)).alias("k"),
     )
-    # reference: the single-partition global window
-    w = Window.orderBy(F.desc("v"), F.col("id"))
-    ref = df.select(
-        "id",
-        F.row_number().over(w).cast("long").alias("rn"),
-        F.sum("k").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)).alias("ck"),
-        F.ntile(7).over(w).cast("long").alias("t7"),
+    for n_parts in (13, 64, 65, 128):
+        got = check(df, [(F.col("v"), "desc"), F.col("id")], [F.desc("v"), F.col("id")], n_parts)
+    two = global_prefix_stats_multi(
+        df,
+        [{"order": [F.col("id")], "rn_col": "a"}, {"order": [F.col("v"), F.col("id")]}],
+        n_parts=128,
     )
-    t: dict = {}
-    got = global_prefix_stats(
-        df, [(F.col("v"), "desc"), F.col("id")], sums={"k": "ck"}, rn_col="rn",
-        n_parts=13, totals=t,
-    ).select("id", "rn", "ck", ntile_from_rn(F.col("rn"), 7, t["rn"]).alias("t7"))
-    assert t["rn"] == 997
-    ref_rows = {r["id"]: (r["rn"], r["ck"], r["t7"]) for r in ref.collect()}
-    got_rows = {r["id"]: (r["rn"], r["ck"], r["t7"]) for r in got.collect()}
-    assert got_rows == ref_rows
-    # wide-partition path: >64 partitions switches the offset shipping
-    # from literal maps to the broadcast-joined offsets table — results
-    # must be identical
-    t128: dict = {}
-    wide = global_prefix_stats(
-        df, [(F.col("v"), "desc"), F.col("id")], sums={"k": "ck"}, rn_col="rn",
-        n_parts=128, totals=t128,
-    ).select("id", "rn", "ck", ntile_from_rn(F.col("rn"), 7, t128["rn"]).alias("t7"))
-    wide_rows = {r["id"]: (r["rn"], r["ck"], r["t7"]) for r in wide.collect()}
-    assert wide_rows == ref_rows and t128["rn"] == 997
+    for out, n_specs in ((got, 1), (two, 2)):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastExchange" not in plan, plan
+        assert count_exchanges(out) == n_specs, plan
+    small = spark.range(0, 5).select(F.col("id"), F.pmod(F.xxhash64("id"), F.lit(97)).alias("k"))
+    got = check(small, [F.col("id")], [F.col("id")], 8)
+    assert dict(got.dtypes)["ck"] == "bigint"
     # N < n: each row its own bucket (ntile edge case, no div-by-zero)
     small = spark.range(0, 3).select(F.col("id"))
     t2: dict = {}
@@ -476,26 +496,33 @@ def test_global_prefix_stats_matches_window(spark):
     t3: dict = {}
     empty = global_prefix_stats(small.filter("id < 0"), [F.col("id")], totals=t3)
     assert empty.count() == 0 and t3["rn"] == 0
+    # offsets are bigint or double; any other sum type fails before a job runs
+    with pytest.raises(TypeError, match="unsupported sum column type decimal"):
+        global_prefix_stats(
+            df.withColumn("k", F.col("k").cast("decimal(10,0)")), [F.col("id")],
+            sums={"k": "ck"},
+        )
+
 
 
 def test_global_prefix_stats_exhausted_sample_driver_offsets(spark):
-    """When the boundary sample exhausts the input (n <= cap), the
-    offsets aggregation is computed DRIVER-side from the collected
-    rows (round-7 size gate) — totals, ranks, and prefix sums must be
-    identical to the window reference on that path. (The build's job
-    count is not asserted: collect() on a sorted limit uses Spark's
-    progressive take, which may probe in several jobs.)"""
+    """When the boundary sample exhausts the input (n <= cap) the
+    offsets come from the same bucketed job as on a large input (the
+    former driver-side offsets path is gone) — totals, ranks, and
+    prefix sums must be identical to the window reference, and a float
+    sum column gets double offsets."""
     from pyspark.sql.window import Window
 
     from frontpage_spark.plans import global_prefix_stats
 
     df = spark.range(0, 150).select(
-        F.col("id"), F.pmod(F.xxhash64("id"), F.lit(97)).alias("k")
+        F.col("id"), F.pmod(F.xxhash64("id"), F.lit(97)).cast("double").alias("k")
     )
     t: dict = {}
     got = global_prefix_stats(
         df, [F.col("id")], sums={"k": "ck"}, rn_col="rn", n_parts=8, totals=t
     )
+    assert dict(got.dtypes)["ck"] == "double"
     # exhaustion precondition of this test: n < cap (cap >= 200)
     assert t["rn"] == 150 and t["k"] == sum(
         r["k"] for r in df.select("k").collect()
@@ -505,7 +532,6 @@ def test_global_prefix_stats_exhausted_sample_driver_offsets(spark):
         "id", F.row_number().over(Window.orderBy("id")).cast("long").alias("rn"),
         F.sum("k").over(w).alias("ck")).collect()}
     assert {r["id"]: (r["rn"], r["ck"]) for r in got.collect()} == ref
-
 
 def test_pin_ckpt_dir_policy(monkeypatch):
     """ADVICE r9 (low): pin()'s tempdir fallback is only reliable when

@@ -231,10 +231,11 @@ SELECTED = {
         "resampled copies of the data."
     ),
     "dense_ids_documents": (
-        "Dense id assignment: range exchange + per-physical-partition "
-        "row_number windows (parallel, one window group per partition) + "
-        "broadcast offset map — contiguous global ids with no single-partition "
-        "sort anywhere in the plan."
+        "Dense id assignment: global_prefix_stats row number - 1 -- one "
+        "hash exchange on the sampled range bucket + per-bucket "
+        "row_number windows (parallel, one window group per bucket) + "
+        "dense offset-array lookup — contiguous global ids with no "
+        "single-partition sort anywhere in the plan."
     ),
     "segment_dedup_prune": (
         "RefinedWeb-style span dedup: segment explode -> one exchange on the "
@@ -289,16 +290,16 @@ SELECTED = {
     ),
     "ntile_analytics_orders": (
         "Round-6 global-window fix: the rank family rides "
-        "plans.global_prefix_stats -- RangePartitioning exchange, "
-        "per-partition Sort+Window (partitioned by __part, fully "
-        "parallel), broadcast offset map; ntile/percent_rank/cume_dist "
+        "plans.global_prefix_stats -- one hash exchange on the sampled "
+        "range bucket __part, per-bucket Sort+Window (fully parallel), "
+        "dense offset-array lookup; ntile/percent_rank/cume_dist "
         "are pure arithmetic over (rn, N). No Exchange SinglePartition, "
         "no unpartitioned WindowExec anywhere (plan-sweep-asserted)."
     ),
     "pareto_8020_customers": (
         "Round-6 global-window fix: customer rollup -> "
-        "global_prefix_stats prefix sum (range exchange + parallel "
-        "running sums + broadcast carried offsets); grand totals come "
+        "global_prefix_stats prefix sum (bucket hash exchange + parallel "
+        "running sums + dense offset-array lookup); grand totals come "
         "from the same offsets pass as literals, so the old broadcast "
         "total crossJoin disappeared too."
     ),
@@ -313,7 +314,7 @@ SELECTED = {
         "job and its broadcast cross join are gone -- ordering by "
         "last_o ASC is identical to recency DESC), persisted once, "
         "then three chained per-__part window exchanges from one "
-        "global_prefix_stats_multi call with literal-map offsets; "
+        "global_prefix_stats_multi call with dense offset arrays; "
         "quintiles are arithmetic over (rn, N). 3 actions total."
     ),
     "peak_concurrent_sessions": (

@@ -562,7 +562,7 @@ def main() -> None:
         global PROBE_QUERIES
         PROBE_QUERIES = HEAVY_QUERIES
 
-    from frontpage_spark.session import get_spark
+    from frontpage_spark.session import default_parallelism, get_spark
 
     spark = get_spark("scale_probe")
     spark.sparkContext.setLogLevel("ERROR")
@@ -601,7 +601,7 @@ def main() -> None:
         f"# SCALE_PROBE — sf0.1 x1 vs x{factor} (expanding key space)",
         "",
         "Generated by `python tools/scale_probe.py` — wall-clock per operator",
-        f"(median of {PROBE_PASSES} warm passes, noop sink, local[32]) at 1x",
+        f"(median of {PROBE_PASSES} warm passes, noop sink, local[{default_parallelism()}]) at 1x",
         f"and {factor}x rows. Replicas offset every key column and lightly",
         f"perturb document text, so the {factor}x corpus behaves like a",
         f"mirror-heavy crawl: every document gains {factor}-1 near-copies.",
