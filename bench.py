@@ -6,8 +6,17 @@ ONE JSON line:
 Also times the DuckDB oracle for each query (the practical baseline per
 BASELINE.md) by DEFAULT — per-query oracle secs land in
 "oracle_queries", the suite-level warm/oracle ratio in "ratio" (the
-number BASELINE.md's 2x acceptance bar is defined on). Pass
---no-oracle to skip the DuckDB pass.
+number BASELINE.md's 2x acceptance bar is defined on). Each oracle runs
+under a DUCK_TIMEOUT_S interrupt cap; a capped query is listed in
+"oracle_timeouts" and "ratio" covers the finished ones, so one process
+and one calibration window serve sf0.1, organic sf1 and x10-zipf alike.
+Pass --no-oracle to skip the DuckDB pass.
+
+Usage: python bench.py [query ...] [--no-oracle]
+Query names default to the frozen HEADLINE set; any registered query
+can be named, which makes this the per-query profiler too: "layers"
+splits each query's median warm pass into build_s / exec_s / jobs /
+stages.
 """
 
 from __future__ import annotations
@@ -16,7 +25,9 @@ import json
 import os
 import statistics
 import sys
+import threading
 import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -105,8 +116,8 @@ HEADLINE = [
     # NOTE: the headline set is intentionally FROZEN at these 77 so the
     # suite ratio stays comparable round over round (BASELINE.md's bar
     # is defined on it). Newer operators get their timing evidence from
-    # tools/profile_queries.py, SCALE_PROBE*.md, and BENCH_sf1 instead
-    # of growing this list.
+    # `bench.py <query ...>`, SCALE_PROBE*.md, and BENCH_sf1 instead of
+    # growing this list.
 ]
 
 
@@ -209,12 +220,102 @@ def _wait_for_idle(max_wait_s: float = 90.0, threshold: float | None = None) -> 
     return waited
 
 
+# Per-query DuckDB interrupt cap. At organic sf1 and x10-zipf the
+# oracle's quadratic embedding heavies (list-fold all-pairs cosine) do
+# not finish in any useful time — exactly the gap the engine's
+# size-gated scale paths exist to close — so a capped query is listed
+# in "oracle_timeouts" instead of stalling the run.
+DUCK_TIMEOUT_S = 180.0
+
+
+def time_query(spark, build) -> dict:
+    """One timed call: ``build()`` the DataFrame, write it to the noop
+    sink, then clearCache(). build_s + exec_s is the call's time; jobs
+    and stages are the ones the call launched in the caller's job group,
+    attributed by job-id VALUE (the status store neither orders its
+    list nor keeps every job)."""
+    from frontpage_spark.queries import _last_job_id
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = sc.getLocalProperty("spark.jobGroup.id")
+    before = _last_job_id(tracker, group)
+    t0 = time.time()
+    df = build()
+    t1 = time.time()
+    # noop sink: materializes EVERY output column (count() would let
+    # Catalyst prune the expensive projections right out of the plan)
+    df.write.format("noop").mode("overwrite").save()
+    t2 = time.time()
+    jobs = [j for j in tracker.getJobIdsForGroup(group) if j > before]
+    infos = [tracker.getJobInfo(j) for j in jobs]
+    # queries that persist() intermediates (near-dup, tf-idf) create a
+    # fresh cached DataFrame per call; drop those orphans so later
+    # queries aren't timed against another query's cache churn
+    spark.catalog.clearCache()
+    return {
+        "build_s": t1 - t0,
+        "exec_s": t2 - t1,
+        "jobs": len(jobs),
+        "stages": sum(len(i.stageIds) for i in infos if i is not None),
+    }
+
+
+def _secs(rec: dict) -> float:
+    return rec["build_s"] + rec["exec_s"]
+
+
+def oracle_pass(con, sqls: dict, spark_secs: dict, passes: int, timeout_s: float = DUCK_TIMEOUT_S) -> dict:
+    """Time each oracle in ``sqls`` on ``con`` with the Spark side's
+    interleaved median-of-``passes`` protocol. An execution still
+    running at ``timeout_s`` is interrupted; its query goes into
+    oracle_timeouts and is not re-run. ``ratio`` is warm Spark over
+    DuckDB, summed over the finished queries (BASELINE.md judges the 2x
+    bar at suite level)."""
+    import duckdb
+
+    samples: dict[str, list[float]] = {n: [] for n in sqls}
+    timeouts: list[str] = []
+    for _ in range(passes):
+        for name, sql in sqls.items():
+            if name in timeouts:
+                continue
+            timer = threading.Timer(timeout_s, con.interrupt)
+            timer.start()
+            t0 = time.time()
+            try:
+                con.execute(sql).fetchall()
+                samples[name].append(time.time() - t0)
+            except duckdb.InterruptException:
+                timeouts.append(name)
+                print(f"# {name}: DuckDB interrupted at {timeout_s:.0f}s", file=sys.stderr)
+            finally:
+                timer.cancel()
+                timer.join()
+    oracle_q = {
+        n: round(statistics.median(s), 3) for n, s in samples.items() if n not in timeouts
+    }
+    total = sum(oracle_q.values())
+    spark_total = sum(spark_secs[n] for n in oracle_q)
+    return {
+        "oracle_queries": oracle_q,
+        "oracle_timeouts": timeouts,
+        "oracle_value": round(total, 3),
+        "ratio": round(spark_total / total, 3) if total else None,
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     with_oracle = "--no-oracle" not in sys.argv
+    names = [a for a in sys.argv[1:] if a != "--no-oracle"] or HEADLINE
 
     from frontpage_spark.queries import ORACLES, QUERIES
     from frontpage_spark.session import default_parallelism, get_spark
+
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        raise SystemExit(f"unknown queries: {unknown}")
 
     load_start = _loadavg()
     idle_wait = _wait_for_idle()
@@ -231,21 +332,7 @@ def main() -> None:
     # visibly attributable instead of looking like an engine regression
     # (r3/r4 driver artifacts both showed 5-10x one-off spikes on the
     # gemm-path heavies that never reproduced locally)
-    query_loads: dict[str, list[float]] = {name: [] for name in HEADLINE}
-
-    def run(name: str, record_load: bool = False) -> float:
-        # noop sink: materializes EVERY output column (count() would let
-        # Catalyst prune the expensive projections right out of the plan)
-        t0 = time.time()
-        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
-        if record_load:
-            query_loads[name].append(_loadavg()[0])
-        # queries that persist() intermediates (near-dup, tf-idf) create a
-        # fresh cached DataFrame per call; drop those orphans so later
-        # queries aren't timed against another query's cache churn
-        spark.catalog.clearCache()
-        return dt
+    query_loads: dict[str, list[float]] = {name: [] for name in names}
 
     # Pass 1 (cold): includes each plan's one-time whole-stage-codegen
     # compile — a per-plan constant that amortizes to zero at real data
@@ -256,24 +343,32 @@ def main() -> None:
     # query instead of the whole artifact (round-3 postmortem: a single
     # contended pass produced an irreproducible suite-level 4.5x).
     cold_query: dict[str, float] = {}
-    warm_samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
-    for name in HEADLINE:
-        cold_query[name] = round(run(name), 3)
+    warm_samples: dict[str, list[dict]] = {name: [] for name in names}
+    for name in names:
+        cold_query[name] = round(_secs(time_query(spark, partial(QUERIES[name], spark, sf_dir))), 3)
     pass_loads: list[list[float]] = []
     for _ in range(WARM_PASSES):
         pass_loads.append(_loadavg())
-        for name in HEADLINE:
-            warm_samples[name].append(run(name, record_load=True))
+        for name in names:
+            warm_samples[name].append(time_query(spark, partial(QUERIES[name], spark, sf_dir)))
+            query_loads[name].append(_loadavg()[0])
 
     per_query: dict[str, float] = {}
+    layers: dict[str, dict] = {}
     total = 0.0
-    for name in HEADLINE:
-        med = statistics.median(warm_samples[name])
+    for name in names:
+        secs = [_secs(r) for r in warm_samples[name]]
+        med = statistics.median(secs)
         per_query[name] = round(med, 3)
         total += med
-        samples = "/".join(f"{s:.2f}" for s in warm_samples[name])
+        # the layers of the pass whose time is the median (the upper
+        # middle one for an even pass count)
+        mid = sorted(warm_samples[name], key=_secs)[len(secs) // 2]
+        layers[name] = {k: round(v, 3) for k, v in mid.items()}
+        samples = "/".join(f"{s:.2f}" for s in secs)
         print(
-            f"# {name}: {med:.2f}s (samples {samples}, cold {cold_query[name]:.2f}s)",
+            f"# {name}: {med:.2f}s (samples {samples}, cold {cold_query[name]:.2f}s,"
+            f" {mid['jobs']} jobs, {mid['stages']} stages)",
             file=sys.stderr,
         )
 
@@ -284,11 +379,12 @@ def main() -> None:
         "queries": per_query,
         "warm_passes": WARM_PASSES,
         "pass_totals": [
-            round(sum(warm_samples[n][i] for n in HEADLINE), 3)
+            round(sum(_secs(warm_samples[n][i]) for n in names), 3)
             for i in range(WARM_PASSES)
         ],
         "cold_value": round(sum(cold_query.values()), 3),
         "cold_queries": cold_query,
+        "layers": layers,
         "sf": sf_dir,
         "cpus": default_parallelism(),
         "loadavg_start": load_start,
@@ -298,34 +394,11 @@ def main() -> None:
     }
 
     if with_oracle:
-        import duckdb
+        from tools.check import duckdb_con
 
-        from frontpage_spark.schemas import TESTDATA_TABLES
-
-        con = duckdb.connect()
-        for t in TESTDATA_TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM '{os.path.join(sf_dir, t + '.parquet')}'"
-            )
-        covered = [n for n in HEADLINE if n in ORACLES]
-        # warm DuckDB once (classload/view-bind), then same interleaved
-        # median-of-N protocol as the Spark side for a symmetric ratio
-        oracle_samples: dict[str, list[float]] = {n: [] for n in covered}
-        for _ in range(WARM_PASSES):
-            for name in covered:
-                t0 = time.time()
-                con.execute(ORACLES[name]).fetchall()
-                oracle_samples[name].append(time.time() - t0)
-        oracle_q = {
-            n: round(statistics.median(oracle_samples[n]), 3) for n in covered
-        }
-        out["oracle_queries"] = oracle_q
-        oracle_total = sum(oracle_q.values())
-        out["oracle_value"] = round(oracle_total, 3)
-        # suite-level warm-Spark / DuckDB ratio over the oracle-covered
-        # queries (BASELINE.md judges the 2x bar at suite level)
-        spark_covered = sum(per_query[n] for n in oracle_q)
-        out["ratio"] = round(spark_covered / oracle_total, 3) if oracle_total else None
+        covered = {n: ORACLES[n] for n in names if n in ORACLES}
+        with duckdb_con(sf_dir) as con:
+            out.update(oracle_pass(con, covered, per_query, WARM_PASSES))
 
     # box-drift probes LAST so they never warm/poison the measured
     # queries; ratio_drift_corrected divides out the asymmetric part of

@@ -748,14 +748,15 @@ def stateful_session_close(
 
 
 # Below this estimated input size the CLASSIC single-window sessionize
-# wins outright (r10 A/B, tools/sessionize_ab.py: classic 3.0x faster at
+# wins outright (r10 A/B of both forced branches: classic 3.0x faster at
 # sf0.1, 1.7x at organic sf1, 1.6x even at x10-zipf); above it a skewed
 # key's history stops fitting one task's comfortable sort and the
 # bounded-partition stitch is the only shape that survives. The gate
 # sees only the scan estimate (plan metadata — computing a key
 # histogram would cost a job), so the constant must be safe under the
 # WORST skew a corpus below it can legally carry. Measured on a
-# 30%-one-key corpus (r11 `--neargate` sweep, the gate's worst case):
+# 30%-one-key corpus (r11 near-gate sweep, the gate's worst case;
+# rerun with `tools/scale_probe.py --neargate`):
 # classic wins 1.60x/1.36x/1.16x at 26/52/105 MB and LOSES (0.73x,
 # hot-key task ~7 s) at 205 MB — crossover ~130-150 MB. 128 MiB sits
 # under that with margin: below it classic wins even fully skewed

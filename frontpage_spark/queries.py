@@ -68,12 +68,14 @@ ORACLES: dict[str, str] = {}
 # timed run, so measurements never reuse data.
 
 
-def _last_job_id(tracker) -> int:
+def _last_job_id(tracker, group: str | None) -> int:
     # MAX job id, not len(): ids are monotonic while the status store
     # EVICTS old entries past spark.ui.retainedJobs (default 1000), so
     # a long session would saturate a count-based probe and silently
-    # misclassify a driver-loop build as pure
-    ids = tracker.getJobIdsForGroup(None)
+    # misclassify a driver-loop build as pure. ``group`` is the calling
+    # thread's spark.jobGroup.id: notebooks and job servers set one per
+    # command, and a build's jobs land in it, not among the ungrouped
+    ids = tracker.getJobIdsForGroup(group)
     return max(ids) if ids else -1
 
 
@@ -100,11 +102,13 @@ def register(name: str, oracle: str | None = None):
                 for frame in kept:
                     plans.keep(frame)
                 return df
-            tracker = spark.sparkContext.statusTracker()
-            jobs_before = _last_job_id(tracker)
+            sc = spark.sparkContext
+            tracker = sc.statusTracker()
+            group = sc.getLocalProperty("spark.jobGroup.id")
+            jobs_before = _last_job_id(tracker, group)
             with plans.keep_capture() as captured:
                 df = fn(spark, sf_dir)
-            if _last_job_id(tracker) == jobs_before:  # pure build
+            if _last_job_id(tracker, group) == jobs_before:  # pure build
                 # de-dup re-keeps of the same frame handle within one build
                 kept = list({id(k): k for k in captured}.values())
                 cache.put(key, (df, kept))
@@ -11609,8 +11613,8 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     separate offset jobs (VERDICT r6 items 1 and 3: pin the BOUNDED
     rollup once, never materialize inside the helper).
 
-    Local fixed-cost floor (VERDICT r7 items 3/6, measured at sf0.1 via
-    tools/profile_queries.py): ~1.09 s warm = 3 actions x Spark's
+    Local fixed-cost floor (VERDICT r7 items 3/6, measured at sf0.1;
+    `bench.py rfm_segments` splits it): ~1.09 s warm = 3 actions x Spark's
     ~0.2 s/job local stage-scheduling floor (rollup+persist+sample
     ~0.55 s, GROUPING-SETS offsets ~0.2 s, final exec 0.29 s) + plan
     build. The r8 horizon removal cut the 4th action (global-max

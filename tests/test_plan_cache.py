@@ -48,6 +48,25 @@ def test_driver_loop_query_never_cached(spark):
     assert _cached(spark, "pagerank_part_supplier") is not None
 
 
+def test_build_probe_reads_the_callers_job_group(spark):
+    # notebooks and job servers set a job group for every command; the
+    # jobs a build runs land in that group, so a probe that lists only
+    # ungrouped jobs would call dup_clusters' driver-loop build pure
+    sc = spark.sparkContext
+    clone = spark.newSession()  # an empty plan cache
+    sc.setJobGroup("notebook-cell-1", "a command with a job group")
+    try:
+        QUERIES["dup_clusters"](clone, SF_DIR)
+        assert _cached(clone, "dup_clusters") is None
+        QUERIES["group_counts_q1"](clone, SF_DIR)  # may pay first-touch jobs
+        QUERIES["group_counts_q1"](clone, SF_DIR)
+        assert _cached(clone, "group_counts_q1") is not None
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+
+
 def test_keep_using_query_cached_with_relink(spark):
     # near_dup_verified registers keep() frames; its build runs zero
     # jobs, so the plan is cached (r11) and every hit re-persist()s the

@@ -565,9 +565,9 @@ def test_take_wide_one_job_and_conf_free(spark):
     )
     assert df.rdd.getNumPartitions() == 16
     tracker = spark.sparkContext.statusTracker()
-    before = _last_job_id(tracker)
+    before = _last_job_id(tracker, None)
     every = take_wide(df, 36_001)
-    assert _last_job_id(tracker) == before + 1
+    assert _last_job_id(tracker, None) == before + 1
     assert every.num_rows == 36_000
     assert len(set(zip(every.column("id").to_pylist(), every.column("k").to_pylist()))) == 36_000
     assert take_wide(df, 1000).num_rows == 1000

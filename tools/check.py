@@ -40,9 +40,10 @@ def duckdb_con(sf_dir: str) -> "duckdb.DuckDBPyConnection":
     from frontpage_spark.schemas import TESTDATA_TABLES
 
     for t in TESTDATA_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{os.path.join(sf_dir, t + '.parquet')}'"
-        )
+        path = os.path.join(sf_dir, t + ".parquet")
+        if os.path.isdir(path):  # a directory of part files, as Spark writes a table
+            path = os.path.join(path, "*.parquet")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
     return con
 
 

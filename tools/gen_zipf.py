@@ -12,19 +12,13 @@ someone reruns the ad-hoc probe.
 
 Usage:
   python tools/gen_zipf.py [out_dir]          # default /tmp/frontpage_zipf_x10
-then (capture stdout too — it carries the Spark-window calibration the
-assemble step folds into ratio_drift_corrected, VERDICT r10 item 2):
-  SPARK_GRAFT_SF_DIR=<out_dir> SPARK_GRAFT_WARM_PASSES=1 \
-      python bench.py --no-oracle > .bench_zipf_spark.json 2> .bench_zipf_spark.log
-  SF1_DIR=<out_dir> SF_NOTE="x10-zipf replica of sf0.1 (tools/gen_zipf.py)" \
-      SPARK_PROTOCOL_NOTE="bench.py cold + 1 warm pass (median==the pass)" \
-      python tools/bench_sf1_assemble.py .bench_zipf_spark.log BENCH_zipf_r{N}.json \
-      --bench-json .bench_zipf_spark.json
+  SPARK_GRAFT_SF_DIR=<out_dir> SPARK_GRAFT_WARM_PASSES=1 python bench.py
 
-(The assemble step reuses the sf1 artifact tooling: one timed DuckDB
-pass per oracle with a per-query interrupt cap — at x10 data the
-oracle's quadratic embedding heavies do not finish, exactly the gap
-the engine's size-gated scale paths exist to close.)
+bench.py times Spark, the DuckDB oracles and the drift calibration in
+one process and one window; each oracle runs under a per-query
+interrupt cap (at x10 data the oracle's quadratic embedding heavies do
+not finish, exactly the gap the engine's size-gated scale paths exist
+to close) and the capped ones are listed in "oracle_timeouts".
 """
 
 from __future__ import annotations

@@ -10,8 +10,16 @@ only worked because the input was small. A superlinear ratio names the
 operator to fix. This is the local stand-in for the 1000-executor
 question the engine is designed around.
 
-Usage: python tools/scale_probe.py [factor] [--md SCALE_PROBE.md]
-Writes the markdown report and prints one JSON line.
+Usage: python tools/scale_probe.py [factor] [--heavy | --zipf] [--md SCALE_PROBE.md]
+       python tools/scale_probe.py --neargate
+Writes the markdown report and prints one JSON line. --neargate
+(VERDICT r10 item 4) measures the sessionize size gate's worst case
+instead of asserting it: a zipf events corpus (~30% of rows on one hot
+user) whose scan estimate sits just under _SESSIONIZE_STITCH_BYTES,
+with both branches timed there. Below the gate the classic branch must
+stay the faster one; if its hot-key window task blows past the stitch,
+lower the constant. Per-query passes are bench.WARM_PASSES
+(SPARK_GRAFT_WARM_PASSES).
 """
 
 from __future__ import annotations
@@ -21,7 +29,7 @@ import os
 import shutil
 import statistics
 import sys
-import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -30,15 +38,23 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # anchor refs — so a steal episode can never again ship as a skew
 # verdict. Probes run before AND after the timed slice; loadavg is
 # stamped per measured pass.
-from bench import CALIBRATION_REF, _calibrate, _loadavg, _wait_for_idle  # noqa: E402
+from bench import (  # noqa: E402
+    CALIBRATION_REF,
+    WARM_PASSES,
+    _calibrate,
+    _loadavg,
+    _secs,
+    _wait_for_idle,
+    time_query,
+)
 
 BASE = "/root/testdata/sf0.1"
 WORK = "/tmp/frontpage_scale_probe"
 
-# per-query timed passes (median); a single pass that already ran
-# longer than _LONG_PASS_S is accepted alone — at that length scheduler
-# noise amortizes, and tripling a 400 s output-bound query buys nothing
-PROBE_PASSES = max(1, int(os.environ.get("SPARK_GRAFT_PROBE_PASSES", "3")))
+# per-query timed passes: median of bench.WARM_PASSES; a single pass
+# that already ran longer than _LONG_PASS_S is accepted alone — at that
+# length scheduler noise amortizes, and tripling a 400 s output-bound
+# query buys nothing
 _LONG_PASS_S = 120.0
 
 # keys that must be OFFSET per replica so the key space grows with the
@@ -102,11 +118,12 @@ PROBE_QUERIES = [
 ]
 
 
-def build_replica(spark, factor: int, out_dir: str, zipf: bool = False) -> None:
+def build_replica(spark, factor: int, out_dir: str, zipf: bool = False, tables=KEY_OFFSETS) -> None:
     from pyspark.sql import functions as F
 
     os.makedirs(out_dir, exist_ok=True)
-    for table, offsets in KEY_OFFSETS.items():
+    for table in tables:
+        offsets = KEY_OFFSETS[table]
         src = spark.read.parquet(os.path.join(BASE, table + ".parquet"))
         if not offsets or factor == 1:
             parts = [src] if factor == 1 or not offsets else [src] * factor
@@ -225,27 +242,26 @@ _GATE_PAIRS = {
 
 def time_queries(spark, sf_dir: str, names=None) -> dict[str, dict]:
     """Per-operator warm timing: one untimed warm pass, then median of
-    PROBE_PASSES timed passes (single pass accepted past _LONG_PASS_S).
-    Each record carries its raw samples and the 1-min loadavg observed
-    right after each timed pass, so a contended sample is attributable
-    in-artifact instead of shipping as a plan verdict."""
+    WARM_PASSES consecutive bench.time_query passes (single pass
+    accepted past _LONG_PASS_S). Each record carries its raw samples and
+    the 1-min loadavg observed right after each timed pass, so a
+    contended sample is attributable in-artifact instead of shipping as
+    a plan verdict."""
     from frontpage_spark.queries import QUERIES
 
     times: dict[str, dict] = {}
     for name in names if names is not None else PROBE_QUERIES:
-        fn = EXTRA_QUERIES.get(name) or QUERIES[name]
+        build = partial(EXTRA_QUERIES.get(name) or QUERIES[name], spark, sf_dir)
         print(f"# running {name} @ {sf_dir}", file=sys.stderr, flush=True)
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        time_query(spark, build)
         samples: list[float] = []
         loads: list[float] = []
-        for _ in range(PROBE_PASSES):
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(round(time.time() - t0, 3))
+        for _ in range(WARM_PASSES):
+            samples.append(round(_secs(time_query(spark, build)), 3))
             loads.append(_loadavg()[0])
             if samples[-1] > _LONG_PASS_S:
                 break
-        rows = fn(spark, sf_dir).count()
+        rows = build().count()
         times[name] = {
             "t": round(statistics.median(samples), 3),
             "samples": samples,
@@ -413,7 +429,7 @@ def zipf_probe(spark, factor: int, md_path: str) -> None:
     meta: dict = {
         "factor": factor,
         "mode": "zipf",
-        "passes": PROBE_PASSES,
+        "passes": WARM_PASSES,
         "loadavg_start": load_start,
         "idle_wait_sec": idle_wait,
         "calibration_ref": CALIBRATION_REF,
@@ -441,7 +457,7 @@ def zipf_probe(spark, factor: int, md_path: str) -> None:
         "the skew penalty at equal row count; `verdict` is SKEW-FRAGILE when",
         "zipf time far exceeds uniform time after normalizing by the zipf",
         "corpus's own larger true output. Per-operator time = median of",
-        f"{PROBE_PASSES} warm passes (raw samples + per-pass 1-min loadavg",
+        f"{WARM_PASSES} warm passes (raw samples + per-pass 1-min loadavg",
         "shown); the pinned bench calibration probes ran before and after",
         "the slice, so box weather is measured, not inferred.",
         "",
@@ -514,6 +530,42 @@ def zipf_probe(spark, factor: int, md_path: str) -> None:
     shutil.rmtree(WORK, ignore_errors=True)
 
 
+def neargate_probe(spark) -> None:
+    """--neargate: sf0.1 events alone, replicated and zipf-collapsed
+    exactly as the zipf corpus is, to 97% of the sessionize gate (the
+    collapsed user_id compresses better than organic ids, so the margin
+    keeps the achieved estimate under it; gate_diag records what the
+    gate saw). Times the gated query and its forced stitch branch."""
+    from pyspark.sql import functions as F
+
+    from frontpage_spark.incremental import _SESSIONIZE_STITCH_BYTES, _plan_size_bytes
+    from frontpage_spark.sources import load_table
+
+    base_bytes = _plan_size_bytes(load_table(spark, BASE, "events"))
+    factor = max(1, int(_SESSIONIZE_STITCH_BYTES * 0.97 / base_bytes))
+    out_dir = os.path.join(WORK, "neargate")
+    shutil.rmtree(WORK, ignore_errors=True)
+    build_replica(spark, factor, out_dir, zipf=True, tables=["events"])
+    events = load_table(spark, out_dir, "events")
+    rows = events.count()
+    hot = events.filter(F.col("user_id") == 424242).count()
+    gated = "sessionize_users"
+    forced = _GATE_PAIRS[gated]
+    t = time_queries(spark, out_dir, [gated, forced])
+    print(json.dumps({
+        "mode": "neargate",
+        "factor": factor,
+        "passes": WARM_PASSES,
+        "gate_diag": _gate_diag(spark, out_dir),
+        "rows": rows,
+        "hot_key_share": round(hot / rows, 3),
+        gated: t[gated],
+        forced: t[forced],
+        "stitch_over_classic": round(t[forced]["t"] / t[gated]["t"], 3),
+    }))
+    shutil.rmtree(WORK, ignore_errors=True)
+
+
 ZIPF_NOTES = {
     "dup_clusters": (
         "pair discovery contracts exact-(blk,prefix) groups to one "
@@ -570,6 +622,9 @@ def main() -> None:
     if "--zipf" in sys.argv:
         zipf_probe(spark, factor, md_path)
         return
+    if "--neargate" in sys.argv:
+        neargate_probe(spark)
+        return
 
     load_start = _loadavg()
     idle_wait = _wait_for_idle()
@@ -581,7 +636,7 @@ def main() -> None:
 
     meta: dict = {
         "factor": factor,
-        "passes": PROBE_PASSES,
+        "passes": WARM_PASSES,
         "loadavg_start": load_start,
         "idle_wait_sec": idle_wait,
         "calibration_ref": CALIBRATION_REF,
@@ -601,7 +656,7 @@ def main() -> None:
         f"# SCALE_PROBE — sf0.1 x1 vs x{factor} (expanding key space)",
         "",
         "Generated by `python tools/scale_probe.py` — wall-clock per operator",
-        f"(median of {PROBE_PASSES} warm passes, noop sink, local[{default_parallelism()}]) at 1x",
+        f"(median of {WARM_PASSES} warm passes, noop sink, local[{default_parallelism()}]) at 1x",
         f"and {factor}x rows. Replicas offset every key column and lightly",
         f"perturb document text, so the {factor}x corpus behaves like a",
         f"mirror-heavy crawl: every document gains {factor}-1 near-copies.",
