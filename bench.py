@@ -16,7 +16,7 @@ Usage: python bench.py [query ...] [--no-oracle]
 Query names default to the frozen HEADLINE set; any registered query
 can be named, which makes this the per-query profiler too: "layers"
 splits each query's median warm pass into build_s / exec_s / jobs /
-stages.
+stages, and lists the branch each size gate took ("gates").
 """
 
 from __future__ import annotations
@@ -233,7 +233,9 @@ def time_query(spark, build) -> dict:
     sink, then clearCache(). build_s + exec_s is the call's time; jobs
     and stages are the ones the call launched in the caller's job group,
     attributed by job-id VALUE (the status store neither orders its
-    list nor keeps every job)."""
+    list nor keeps every job); gates are the call's size-gate records
+    (``plans.size_gate``), a plan-cache hit included."""
+    from frontpage_spark import plans
     from frontpage_spark.queries import _last_job_id
 
     sc = spark.sparkContext
@@ -241,7 +243,8 @@ def time_query(spark, build) -> dict:
     group = sc.getLocalProperty("spark.jobGroup.id")
     before = _last_job_id(tracker, group)
     t0 = time.time()
-    df = build()
+    with plans.keep_capture() as captured:
+        df = build()
     t1 = time.time()
     # noop sink: materializes EVERY output column (count() would let
     # Catalyst prune the expensive projections right out of the plan)
@@ -258,6 +261,7 @@ def time_query(spark, build) -> dict:
         "exec_s": t2 - t1,
         "jobs": len(jobs),
         "stages": sum(len(i.stageIds) for i in infos if i is not None),
+        "gates": captured.gates,
     }
 
 
@@ -364,7 +368,7 @@ def main() -> None:
         # the layers of the pass whose time is the median (the upper
         # middle one for an even pass count)
         mid = sorted(warm_samples[name], key=_secs)[len(secs) // 2]
-        layers[name] = {k: round(v, 3) for k, v in mid.items()}
+        layers[name] = {k: v if k == "gates" else round(v, 3) for k, v in mid.items()}
         samples = "/".join(f"{s:.2f}" for s in secs)
         print(
             f"# {name}: {med:.2f}s (samples {samples}, cold {cold_query[name]:.2f}s,"

@@ -32,7 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..plans import pin
+from ..plans import pin, size_gate
 
 PR_SCALE = 10**12
 
@@ -129,7 +129,6 @@ def _pagerank_local(
 def pagerank_fixedpoint(
     edges: DataFrame,
     iterations: int = 3,
-    small_edges: int = _SMALL_EDGE_ROWS,
     bidirected: bool = False,
     edge_rows_hint: int | None = None,
     dedup_edges: bool = False,
@@ -169,16 +168,16 @@ def pagerank_fixedpoint(
     if edge_rows_hint is not None:
         # hint is an upper bound on the RAW rows, so it bounds the
         # distinct rows too — valid for the dedup_edges path as-is
-        gated_small = edge_rows_hint * mult <= small_edges
-        if not gated_small:
-            edges = pin(edges.distinct() if dedup_edges else edges)
-            dedup_edges = False
+        rows = edge_rows_hint
     else:
         edges = pin(edges.distinct() if dedup_edges else edges)
         dedup_edges = False
-        gated_small = edges.limit(small_edges + 1).count() * mult <= small_edges
-    if gated_small:
+        rows = edges.limit(_SMALL_EDGE_ROWS + 1).count()
+    if size_gate("pagerank", rows * mult, _SMALL_EDGE_ROWS):
         return _pagerank_local(edges, iterations, bidirected, dedup_edges)
+    if edge_rows_hint is not None:
+        edges = pin(edges.distinct() if dedup_edges else edges)
+        dedup_edges = False
     if bidirected:
         edges = edges.unionByName(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..plans import keep as _keep, take_wide as _take_wide
+from ..plans import keep as _keep, size_gate as _size_gate, take_wide as _take_wide
 from . import dedup
 from .sampling import assign_split
 from .textstats import distinct_ratio, with_char_entropy
@@ -229,6 +229,11 @@ def _bpe_state_expr(word_col: str) -> F.Column:
     )
 
 
+# Distinct-word vocabularies at or below this size train on the driver
+# (``_bpe_train_local``); larger ones run the distributed merge rounds.
+_SMALL_VOCAB = 100_000
+
+
 def bpe_train(
     docs: DataFrame, text_col: str = "text", n_merges: int = 12
 ) -> tuple[list[tuple[int, str, str]], DataFrame]:
@@ -283,9 +288,8 @@ def bpe_train(
     # all partitions in ONE job instead of executeTake's 1-then-4x ramp
     # (a gate probe nearly always exhausts the input, so the ramp paid
     # 2 extra scheduling floors for the same scan).
-    _SMALL_VOCAB = 100_000
     head = _take_wide(state.select("word", "wc"), _SMALL_VOCAB + 1)
-    if len(head) <= _SMALL_VOCAB:
+    if _size_gate("bpe_train", len(head), _SMALL_VOCAB):
         vocab = list(zip(head.column("word").to_pylist(), head.column("wc").to_pylist()))
         merges = _bpe_train_local(vocab, n_merges)
         expr = "st"

@@ -184,16 +184,11 @@ class TxlogWriter(DataSourceWriter):
     def commit(self, messages) -> None:
         """Driver side: one log commit referencing every task's file —
         readers see all of this write or none of it. Claims auto-rebase
-        like ``txlog.append`` (blind appends commute)."""
+        and checkpoint exactly as ``txlog.append`` does."""
         from . import txlog
 
         add = [m.rel_path for m in messages if m is not None and m.n_rows > 0]
-        payload = {"op": "append", "add": add, "remove": [], "stats": {}}
-        for _ in range(20):
-            v = txlog.current_version(self.table) + 1
-            if txlog._try_claim(self.table, v, {**payload, "version": v}):
-                return
-        raise txlog.TxConflict(f"txlog sink lost 20 claim races on {self.table!r}")
+        txlog.commit_append(self.table, {"op": "append", "add": add, "remove": [], "stats": {}})
 
     def abort(self, messages) -> None:
         for m in messages:

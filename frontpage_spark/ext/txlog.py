@@ -307,6 +307,20 @@ def _maybe_checkpoint(table: str, v: int, every: int) -> None:
         os.replace(tmp, _checkpoint_path(table, v))
 
 
+def commit_append(
+    table: str, payload: dict, checkpoint_every: int = 10, max_retries: int = 20
+) -> int:
+    """Claim the next version for a blind append, then checkpoint when
+    due. A lost claim re-bases onto the new head, because appends
+    commute. Returns the committed version."""
+    for _ in range(max_retries):
+        v = current_version(table) + 1
+        if _try_claim(table, v, {**payload, "version": v}):
+            _maybe_checkpoint(table, v, checkpoint_every)
+            return v
+    raise TxConflict(f"append to {table!r} lost {max_retries} claim races")
+
+
 def append(
     df: DataFrame,
     table: str,
@@ -326,12 +340,7 @@ def append(
         "remove": [],
         "stats": _file_stats(df.sparkSession, table, add, stats_cols or []),
     }
-    for _ in range(max_retries):
-        v = current_version(table) + 1
-        if _try_claim(table, v, {**payload, "version": v}):
-            _maybe_checkpoint(table, v, checkpoint_every)
-            return v
-    raise TxConflict(f"append to {table!r} lost {max_retries} claim races")
+    return commit_append(table, payload, checkpoint_every, max_retries)
 
 
 def overwrite(

@@ -22,6 +22,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from .plans import size_gate
+
 
 def delta_scan(
     raw: DataFrame,
@@ -305,7 +307,7 @@ def stream_near_dup_dedup(
                 # no-history; any other read failure must raise — a
                 # swallowed transient error here would silently admit
                 # near-dups AND append their signatures (permanent
-                # contamination; the _table_rows_meta/ADVICE-r4 rule)
+                # contamination; the sources._measured/ADVICE-r4 rule)
                 msg = str(e)
                 no_store = (
                     "PATH_NOT_FOUND" in msg
@@ -774,14 +776,6 @@ def _plan_size_bytes(df: DataFrame) -> int | None:
         return None
 
 
-def sessionize_gate(size: int | None) -> str:
-    """The plan ``sessionize(plan=None)`` picks for an input whose
-    Catalyst size estimate is ``size`` bytes (None: unknown)."""
-    if size is not None and size <= _SESSIONIZE_STITCH_BYTES:
-        return "classic"
-    return "stitch"
-
-
 def _sessionize_classic(
     events: DataFrame, gap_seconds: int
 ) -> DataFrame:
@@ -809,26 +803,21 @@ def _sessionize_classic(
     )
 
 
-def sessionize(
-    events: DataFrame,
-    gap_seconds: int = 1800,
-    bucket_seconds: int = 86_400,
-    plan: str | None = None,
-) -> DataFrame:
+def sessionize(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     """Session assignment (batch): a new session starts when the gap to
     the previous event of the same user exceeds ``gap_seconds``.
     Output: events + session_idx (1-based per user).
 
-    Size-gated (r10, VERDICT r9 item 4): ``plan=None`` picks by
-    Catalyst's input-size estimate (plan metadata, no job) —
-    ``"classic"`` single-window below ``_SESSIONIZE_STITCH_BYTES``
-    (measured faster at every local SF, zipf included: a hot key's
-    whole history is still one cheap task at those sizes),
-    ``"stitch"`` above, where a skewed key's history outgrows one
-    task and only the bounded-partition form survives. An unknown
-    size estimate defaults to the stitch (assume production scale).
-    Both forms are BIT-EQUAL (equivalence test pins it, null-ts
-    included); pass ``plan=`` to force one explicitly.
+    Size-gated (r10, VERDICT r9 item 4) on Catalyst's input-size
+    estimate (plan metadata, no job): the classic single-window at or
+    below ``_SESSIONIZE_STITCH_BYTES`` (measured faster at every local
+    SF, zipf included: a hot key's whole history is still one cheap
+    task at those sizes), the stitch above, where a skewed key's
+    history outgrows one task and only the bounded-partition form
+    survives. An unknown size estimate takes the stitch (assume
+    production scale). Both forms are BIT-EQUAL (equivalence test pins
+    it, null-ts included); set ``_SESSIONIZE_STITCH_BYTES`` to force
+    a branch.
 
     Skew-proof two-level form (r9 — the zipf probe showed the classic
     single ``lag + running-sum OVER (PARTITION BY user_id)`` puts a hot
@@ -865,19 +854,13 @@ def sessionize(
     (ts, event_id) order and ties share a bucket, so concatenating
     buckets in order reproduces the exact event sequence, gaps are the
     same epoch diffs, and the flag prefix sums telescope."""
-    if plan is None:
-        plan = sessionize_gate(_plan_size_bytes(events))
-    if plan == "classic":
+    if size_gate("sessionize", _plan_size_bytes(events), _SESSIONIZE_STITCH_BYTES):
         return _sessionize_classic(events, gap_seconds)
-    if plan != "stitch":
-        raise ValueError(
-            f"sessionize: plan must be None/'classic'/'stitch', got {plan!r}"
-        )
-    return _sessionize_stitch(events, gap_seconds, bucket_seconds)
+    return _sessionize_stitch(events, gap_seconds)
 
 
 def _sessionize_stitch(
-    events: DataFrame, gap_seconds: int, bucket_seconds: int
+    events: DataFrame, gap_seconds: int, bucket_seconds: int = 86_400
 ) -> DataFrame:
     """The bounded-partition two-level form — plan commentary and the
     stitch/equivalence argument live in :func:`sessionize`'s docstring

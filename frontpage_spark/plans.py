@@ -21,6 +21,7 @@ from __future__ import annotations
 import os
 import threading
 from contextlib import contextmanager
+from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -49,25 +50,41 @@ _KEPT: list[DataFrame] = []
 _KEPT_MAX = 8
 _KEPT_LOCK = threading.Lock()
 
-# Thread-local keep() capture: the prepared-plan cache must know which
-# frames its build kept, and only ITS build's — a concurrent build on
-# another thread keeps its own frames. Each open capture is a list on
-# this thread's stack; keep() appends to every one of them, so an outer
-# capture also sees the keeps of a build nested inside it.
+# Thread-local capture: the prepared-plan cache must know which frames
+# its build kept and which branch each size gate took, and only ITS
+# build's: a concurrent build on another thread keeps its own frames.
+# Each open capture is a namespace on this thread's stack; keep() and
+# size_gate() append to every one of them, so an outer capture also
+# sees the keeps and gates of a build nested inside it.
 _CAPTURES = threading.local()
 
 
 @contextmanager
 def keep_capture():
-    """Collect, into the yielded list, every frame keep() registers on
-    this thread inside the ``with`` block."""
+    """Collect, into the yielded namespace, every frame keep() registers
+    (``kept``) and every record size_gate() makes (``gates``) on this
+    thread inside the ``with`` block."""
     stack = _CAPTURES.__dict__.setdefault("stack", [])
-    captured: list[DataFrame] = []
+    captured = SimpleNamespace(kept=[], gates=[])
     stack.append(captured)
     try:
         yield captured
     finally:
         stack.pop()
+
+
+def size_gate(name: str, measured: int | None, limit: int) -> bool:
+    """The one size-gate decision: True (the small branch) iff the
+    input's ``measured`` size is known and at most ``limit``. An
+    unknown size (None) takes the scale branch. Records ``{gate,
+    measured, limit, branch}`` in the open captures, so a run record
+    names the branch every gate took. A test or tool forces a branch
+    by setting the gate's module limit."""
+    small = measured is not None and measured <= limit
+    record = dict(gate=name, measured=measured, limit=limit, branch="small" if small else "scale")
+    for captured in getattr(_CAPTURES, "stack", ()):
+        captured.gates.append(record)
+    return small
 
 
 def keep(df: DataFrame) -> DataFrame:
@@ -77,7 +94,7 @@ def keep(df: DataFrame) -> DataFrame:
     df = df.persist()
     evict: list[DataFrame] = []
     for captured in getattr(_CAPTURES, "stack", ()):
-        captured.append(df)
+        captured.kept.append(df)
     with _KEPT_LOCK:
         # identity scan, not list.remove(): DataFrame.__eq__ builds a
         # Column, so equality-based membership would be nonsense here

@@ -30,7 +30,7 @@ from . import functions as FF
 from .ext import dedup, similarity, textstats
 from .session import session_cache, tune
 from . import plans
-from .sources import load_table
+from .sources import load_table, table_rows
 
 # --------------------------------------------------------------------------
 # Registry
@@ -65,7 +65,9 @@ ORACLES: dict[str, str] = {}
 # the warm persisted blocks — the ordinary persist() semantics every
 # keep() already had (CacheManager canonical-plan matching exposed the
 # same reuse before the relink). bench.py clearCache()s after EVERY
-# timed run, so measurements never reuse data.
+# timed run, so measurements never reuse data. The build's size-gate
+# records are stored with the plan too and re-emitted on every hit, so
+# every call names the branches its plan took.
 
 
 def _last_job_id(tracker, group: str | None) -> int:
@@ -93,7 +95,7 @@ def register(name: str, oracle: str | None = None):
             key = ("plan", sf_dir, name)
             hit = cache.get(key)
             if hit is not None:
-                df, kept = hit
+                df, kept, gates = hit
                 # re-link the plan's keep() frames: clearCache() since
                 # the last call dropped their CacheManager registration;
                 # re-persisting the SAME handle makes the shared stages
@@ -101,6 +103,8 @@ def register(name: str, oracle: str | None = None):
                 # recomputed — nothing carries over across calls)
                 for frame in kept:
                     plans.keep(frame)
+                for g in gates:  # the same decision on the same measure
+                    plans.size_gate(g["gate"], g["measured"], g["limit"])
                 return df
             sc = spark.sparkContext
             tracker = sc.statusTracker()
@@ -110,8 +114,8 @@ def register(name: str, oracle: str | None = None):
                 df = fn(spark, sf_dir)
             if _last_job_id(tracker, group) == jobs_before:  # pure build
                 # de-dup re-keeps of the same frame handle within one build
-                kept = list({id(k): k for k in captured}.values())
-                cache.put(key, (df, kept))
+                kept = list({id(k): k for k in captured.kept}.values())
+                cache.put(key, (df, kept, captured.gates))
             return df
 
         wrapped.__wrapped__ = fn
@@ -1214,16 +1218,16 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact all-pairs mirror; the gated branch is exercised by the 20x
     scale probe and `tests/test_ext.py::test_embedding_near_dup_gate`."""
     emb = load_table(spark, sf_dir, "embeddings")
-    over_gate = _table_rows_meta(sf_dir, "embeddings") > _EMB_EXACT_GATE
-    if over_gate:
-        pairs = similarity.lsh_near_dup_pairs(emb, threshold=-1.0).withColumn(
-            "cosine", F.round("cosine", 12)
-        )
-    else:
+    n_vec = table_rows(sf_dir, "embeddings")
+    if plans.size_gate("embedding_near_dup", n_vec, _EMB_EXACT_GATE):
         # Round BEFORE thresholding (both sides): the gemm path's BLAS
         # summation order differs from DuckDB's sequential fold, so a pair
         # within float noise of 0.5/0.8 could otherwise flip a count.
         pairs = similarity.cosine_pairs_blocked(emb).withColumn(
+            "cosine", F.round("cosine", 12)
+        )
+    else:
+        pairs = similarity.lsh_near_dup_pairs(emb, threshold=-1.0).withColumn(
             "cosine", F.round("cosine", 12)
         )
     return pairs.agg(
@@ -1235,46 +1239,6 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _EMB_EXACT_GATE = 4096
-
-
-def _table_rows_meta(sf_dir: str, name: str) -> int:
-    """Exact row count of a base parquet table from file FOOTERS —
-    driver-side metadata only, no Spark job (the previous
-    limit(N+1).count() gate probe cost one scheduler round per call).
-    Matches what the engine itself trusts: parquet num_rows is the
-    same statistic Spark's own count-star metadata optimization reads.
-    Uncached: a footer read costs well under a millisecond and runs
-    only at build time, which a prepared-plan cache hit skips. The
-    except is NARROW (missing pyarrow / missing path / unreadable
-    footer) and the over-gate fallback is LOGGED: a silent broad except
-    here once meant an environment hiccup could route a size-gated
-    operator onto its large-input branch whose semantics differ from
-    the registered oracle (ADVICE r4) — anything unexpected now raises
-    instead of mispicking a branch."""
-    try:
-        import pyarrow.parquet as pq
-
-        path = os.path.join(sf_dir, name + ".parquet")
-        files = (
-            [os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")]
-            if os.path.isdir(path)
-            else [path]
-        )
-        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    except (ImportError, FileNotFoundError, OSError, ValueError) as e:
-        # ValueError covers pyarrow.lib.ArrowInvalid (truncated /
-        # corrupt footer — "Parquet magic bytes not found"), which
-        # subclasses it; the docstring's "unreadable footer →
-        # over-gate" contract was otherwise a crash
-        import warnings
-
-        warnings.warn(
-            f"_table_rows_meta({sf_dir}, {name}): metadata unreadable "
-            f"({type(e).__name__}: {e}); assuming over-gate (scalable branch)",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        return 1 << 62
 
 
 # banded-signature SQL shared by the embedding_near_dup_lsh oracle:
@@ -1920,11 +1884,8 @@ _SESSIONIZE_USERS_SQL = """
     """
 
 
-def _sessionize_users_agg(spark: SparkSession, sf_dir: str, plan) -> DataFrame:
-    from .incremental import sessionize
-
-    ev = load_table(spark, sf_dir, "events")
-    s = sessionize(ev, gap_seconds=1800, plan=plan)
+def _sessionize_users_agg(s: DataFrame) -> DataFrame:
+    """Per-user session counts over sessionized events."""
     per_session = s.groupBy("user_id", "session_idx").agg(
         F.count("*").alias("session_len")
     )
@@ -1942,19 +1903,23 @@ def sessionize_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``incremental._SESSIONIZE_STITCH_BYTES`` (every local SF lands
     here — measured faster at sf0.1/sf1/x10-zipf alike), the
     skew-proof two-level stitch above it (see ``sessionize``)."""
-    return _sessionize_users_agg(spark, sf_dir, plan=None)
+    from .incremental import sessionize
+
+    return _sessionize_users_agg(sessionize(load_table(spark, sf_dir, "events"), 1800))
 
 
 @register("sessionize_users_stitch", _SESSIONIZE_USERS_SQL)
 def sessionize_users_stitch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The over-gate branch of ``sessionize_users``, FORCED
-    (plan='stitch') so the bounded-partition production path stays in
-    the oracle matrix / cluster / fault / zipf gates at every SF even
-    though the size gate would pick classic locally — same contract as
-    the forced-distributed pagerank and star-contraction fault
-    targets. Bit-equal to the classic form by construction (same
+    """The over-gate branch of ``sessionize_users``, called directly
+    (``_sessionize_stitch``) so the bounded-partition production path
+    stays in the oracle matrix / cluster / fault / zipf gates at every
+    SF even though the size gate would pick classic locally — same
+    contract as the forced-distributed pagerank and star-contraction
+    fault targets. Bit-equal to the classic form by construction (same
     DuckDB oracle, plus the equivalence test)."""
-    return _sessionize_users_agg(spark, sf_dir, plan="stitch")
+    from .incremental import _sessionize_stitch
+
+    return _sessionize_users_agg(_sessionize_stitch(load_table(spark, sf_dir, "events"), 1800))
 
 
 # ---- tumbling windows -----------------------------------------------------
@@ -3591,9 +3556,7 @@ _DUP_WALK_SQL = """
 """
 
 
-def _dup_component_labels(
-    spark: SparkSession, sf_dir: str, small_rows: int | None = None
-) -> DataFrame:
+def _dup_component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared fixpoint: (id, comp) connected-component labels over the
     blocked-Levenshtein near-dup pair graph (see ``dup_clusters`` for
     the plan commentary). ``_tw``: with a single-split local file, AQE
@@ -3657,11 +3620,7 @@ def _dup_component_labels(
         )
         .select("a", "b")
     )
-    pairs = star.unionByName(rep_pairs)
-    if small_rows is None:
-        return _component_fixpoint(pairs)
-    # probe/fault harness hook: force one side of the components gate
-    return _component_fixpoint(pairs, small_rows=small_rows)
+    return _component_fixpoint(star.unionByName(rep_pairs))
 
 
 # Pair graphs at or below this row count take the driver union-find
@@ -3710,11 +3669,7 @@ def _components_from_rows(spark: SparkSession, head, id_type: str) -> DataFrame:
     )
 
 
-def _component_fixpoint(
-    pairs: DataFrame,
-    small_rows: int = _SMALL_PAIR_GRAPH_ROWS,
-    pair_count_out: dict | None = None,
-) -> DataFrame:
+def _component_fixpoint(pairs: DataFrame, pair_count_out: dict | None = None) -> DataFrame:
     """Connected components over an (a, b) pair list (a < b) — returns
     (id, comp) with comp = the minimum id in the component, covering
     exactly the nodes that appear in ``pairs``.
@@ -3765,16 +3720,16 @@ def _component_fixpoint(
     # rows, the same order as the bpe vocab gate collect); over the
     # gate the collected head is discarded and the distributed star
     # contraction reads the persisted pairs exactly as before.
-    head = plans.take_wide(pairs, small_rows + 1)
-    probe = len(head)
+    head = plans.take_wide(pairs, _SMALL_PAIR_GRAPH_ROWS + 1)
+    small = plans.size_gate("components", len(head), _SMALL_PAIR_GRAPH_ROWS)
     if pair_count_out is not None:
         # the gate probe IS the exact pair count whenever it fit under
         # the limit — callers that need |pairs| (semantic_dedup_report)
         # reuse it instead of scheduling a second count job; above the
         # gate the limit truncated, so publish None and let the caller
         # aggregate (amortized there by definition of the gate)
-        pair_count_out["n_pairs"] = probe if probe <= small_rows else None
-    if probe <= small_rows:
+        pair_count_out["n_pairs"] = len(head) if small else None
+    if small:
         # includes the EMPTY graph: the collect proved there are no
         # pairs, so return the empty local labels relation directly
         # instead of paying the distributed loop's pin + probe jobs
@@ -5204,7 +5159,7 @@ def _pagerank_part_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         e0,
         iterations=3,
         bidirected=True,
-        edge_rows_hint=_table_rows_meta(sf_dir, "lineitem"),
+        edge_rows_hint=table_rows(sf_dir, "lineitem"),
         dedup_edges=True,
     )
     return (
@@ -6011,7 +5966,9 @@ def recursive_ancestor_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     caller's session still never sees the raised limit."""
     from .sql_api import register_views
 
-    n_cust = _table_rows_meta(sf_dir, "customer")
+    n_cust = table_rows(sf_dir, "customer")
+    if n_cust is None:  # footer unreadable: the highest rail
+        n_cust = 1 << 62
     need = max(1_000_000, (n_cust + 1) * 22)
     cur = int(spark.conf.get("spark.sql.cteRecursionRowLimit", "1000000"))
     if need > cur:
@@ -6516,8 +6473,8 @@ def semantic_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         pair_col = F.col("n_pairs")
     else:
         pair_col = F.lit(n_pairs).cast("long")
-    n_vec = _table_rows_meta(sf_dir, "embeddings")
-    if n_vec >= (1 << 62):  # footer unreadable — count honestly
+    n_vec = table_rows(sf_dir, "embeddings")
+    if n_vec is None:  # footer unreadable — count honestly
         out = out.crossJoin(F.broadcast(emb.agg(F.count("*").alias("n_vectors"))))
         vec_col = F.col("n_vectors")
     else:
@@ -6696,7 +6653,8 @@ def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # collapses into one numpy kernel under the gate (sf0.1 warm
     # 0.74s -> ~0.35s); the distributed ordered-edge plan below is the
     # scale branch and byte-identical.
-    if _table_rows_meta(sf_dir, "lineitem") <= _TRI_LOCAL_MAX_LI_ROWS:
+    li_rows = table_rows(sf_dir, "lineitem")
+    if plans.size_gate("triangle_count_copurchase", li_rows, _TRI_LOCAL_MAX_LI_ROWS):
         return _triangle_count_local(inc)
     li = inc.distinct()
     a = li.select(F.col("l_orderkey"), F.col("l_partkey").alias("a"))
@@ -11642,7 +11600,8 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # offsets -> final) collapse into ONE job scoring the rollup in a
     # numpy kernel (sf0.1 warm 0.99s -> ~0.35s); the prefix-stats form
     # below stays the scale branch and the two are byte-identical.
-    if _table_rows_meta(sf_dir, "orders") <= _RFM_LOCAL_MAX_ORDER_ROWS:
+    order_rows = table_rows(sf_dir, "orders")
+    if plans.size_gate("rfm_segments", order_rows, _RFM_LOCAL_MAX_ORDER_ROWS):
         return _rfm_segments_local(rollup)
     rfm = keep(rollup)
     t: dict = {}

@@ -24,6 +24,8 @@ from collections import OrderedDict
 
 from pyspark.sql import SparkSession
 
+from .plans import size_gate
+
 # Conf that can be applied to an already-running session (runtime-settable).
 RUNTIME_CONF = {
     "spark.sql.adaptive.enabled": "true",
@@ -58,13 +60,6 @@ def default_parallelism() -> int:
 _SMALL_INPUT_BYTES = 1 << 30
 
 
-def _dir_bytes(path: str) -> int:
-    try:
-        return sum(e.stat().st_size for e in os.scandir(path) if e.name.endswith(".parquet"))
-    except OSError:
-        return _SMALL_INPUT_BYTES  # unknown → large profile
-
-
 def tune(spark: SparkSession, sf_dir: str | None = None) -> SparkSession:
     """Apply the runtime profile for ``sf_dir`` to ``spark``.
 
@@ -83,9 +78,11 @@ def tune(spark: SparkSession, sf_dir: str | None = None) -> SparkSession:
     cache miss and a hit ran under different conf) and would rewrite
     the conf every other thread's query on the session runs under.
     """
-    small = sf_dir is not None and _dir_bytes(sf_dir) < _SMALL_INPUT_BYTES
+    from .sources import corpus_bytes  # sources imports this module
+
     conf = dict(RUNTIME_CONF)
-    if small:
+    # strictly below the limit: the gate's ``<=`` over integer bytes
+    if sf_dir is not None and size_gate("tune", corpus_bytes(sf_dir), _SMALL_INPUT_BYTES - 1):
         conf["spark.sql.adaptive.enabled"] = "false"
         parts = min(8, default_parallelism())
     else:

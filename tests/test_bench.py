@@ -9,7 +9,11 @@ import duckdb
 import pyarrow.parquet as pq
 
 from bench import oracle_pass, time_query
+from frontpage_spark import queries
+from frontpage_spark.plans import size_gate
 from frontpage_spark.queries import QUERIES
+from frontpage_spark.session import session_cache
+from frontpage_spark.sources import load_table
 from frontpage_spark.schemas import TESTDATA_TABLES
 from tools.check import duckdb_con
 from .conftest import SF_DIR
@@ -19,7 +23,7 @@ def test_time_query_record(spark):
     t0 = time.time()
     rec = time_query(spark, lambda: QUERIES["group_counts_q1"](spark, SF_DIR))
     wall = time.time() - t0
-    assert set(rec) == {"build_s", "exec_s", "jobs", "stages"}
+    assert set(rec) == {"build_s", "exec_s", "jobs", "stages", "gates"}
     assert 0 <= rec["build_s"] and 0 < rec["exec_s"]
     assert rec["build_s"] + rec["exec_s"] <= wall
     assert rec["jobs"] >= 1
@@ -64,3 +68,30 @@ def test_duckdb_con_reads_part_file_directories(tmp_path):
             q = f"SELECT * FROM {t} ORDER BY ALL"
             assert split.execute(q).fetchall() == single.execute(q).fetchall()
         assert split.execute("SELECT count(*) FROM orders").fetchone()[0] > 1
+
+
+def _branches(rec) -> dict:
+    return {g["gate"]: g["branch"] for g in rec["gates"]}
+
+
+def test_time_query_names_every_gate_branch(spark, monkeypatch):
+    """A call's record lists the branch each size gate took, a
+    plan-cache hit included: the hit re-emits its build's records."""
+    clone = spark.newSession()
+    load_table(clone, SF_DIR, "events")  # the scan's first touch, outside the build
+    for _ in range(2):
+        rec = time_query(clone, lambda: QUERIES["sessionize_users"](clone, SF_DIR))
+        # sessionize's small branch is the classic single-window plan
+        assert _branches(rec) == {"tune": "small", "sessionize": "small"}
+        assert session_cache(clone).get(("plan", SF_DIR, "sessionize_users")) is not None
+    (tune,) = [g for g in rec["gates"] if g["gate"] == "tune"]
+    assert 0 < tune["measured"] <= tune["limit"]
+
+    def dup_clusters():
+        return QUERIES["dup_clusters"].__wrapped__(spark, SF_DIR)
+
+    assert _branches(time_query(spark, dup_clusters)) == {"components": "small"}
+    monkeypatch.setattr(queries, "_SMALL_PAIR_GRAPH_ROWS", 0)
+    assert _branches(time_query(spark, dup_clusters)) == {"components": "scale"}
+    # an unknown size takes the scale branch
+    assert size_gate("unknown", None, 1 << 62) is False

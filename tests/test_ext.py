@@ -450,60 +450,54 @@ def test_pagerank_fixedpoint_star(spark):
     assert rc == {"x": PR_SCALE // 2, "y": PR_SCALE // 2}
 
 
-def test_pagerank_local_matches_distributed(spark):
-    # the size-gated single-job path must be BYTE-identical to the
-    # distributed join/agg loop (small_edges=0 forces the latter) —
-    # irregular multigraph with a sink node and parallel edges
-    from frontpage_spark.ext.graph import pagerank_fixedpoint
+def _pagerank_ranks(monkeypatch, edges, small_edge_rows=None, **kw):
+    """{(node, r)} from pagerank_fixedpoint; ``small_edge_rows`` sets
+    the size gate's limit for this call (0 forces the distributed
+    join/agg loop)."""
+    from frontpage_spark.ext import graph
 
+    with monkeypatch.context() as m:
+        if small_edge_rows is not None:
+            m.setattr(graph, "_SMALL_EDGE_ROWS", small_edge_rows)
+        return {(row.node, row.r) for row in graph.pagerank_fixedpoint(edges, **kw).collect()}
+
+
+def test_pagerank_local_matches_distributed(spark, monkeypatch):
+    # the size-gated single-job path must be BYTE-identical to the
+    # distributed join/agg loop — irregular multigraph with a sink node
+    # and parallel edges
     raw = [
         ("a", "b"), ("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"),
         ("d", "a"), ("d", "c"), ("e", "f"), ("f", "e"), ("g", "a"),
         ("b", "sink"),
     ]
     edges = spark.createDataFrame(raw, ["src", "dst"]).repartition(5)
-    local = {
-        (row.node, row.r)
-        for row in pagerank_fixedpoint(edges, iterations=4).collect()
-    }
-    dist = {
-        (row.node, row.r)
-        for row in pagerank_fixedpoint(edges, iterations=4, small_edges=0).collect()
-    }
+    local = _pagerank_ranks(monkeypatch, edges, iterations=4)
+    dist = _pagerank_ranks(monkeypatch, edges, 0, iterations=4)
     assert local == dist and len(local) == 8
     # bidirected=True over the directed half == explicit union, on all
     # four path combinations (local/distributed x probe/hint gate)
     bi = edges.union(
         spark.createDataFrame([(b, a) for a, b in raw], ["src", "dst"])
     )
-    want = {
-        (row.node, row.r)
-        for row in pagerank_fixedpoint(bi, iterations=3).collect()
-    }
-    for kw in (
-        {},
-        {"small_edges": 0},
-        {"edge_rows_hint": len(raw)},
-        {"edge_rows_hint": 1 << 40, "small_edges": 0},
+    want = _pagerank_ranks(monkeypatch, bi, iterations=3)
+    for limit, kw in (
+        (None, {}),
+        (0, {}),
+        (None, {"edge_rows_hint": len(raw)}),
+        (0, {"edge_rows_hint": 1 << 40}),
     ):
-        got = {
-            (row.node, row.r)
-            for row in pagerank_fixedpoint(
-                edges, iterations=3, bidirected=True, **kw
-            ).collect()
-        }
-        assert got == want, kw
+        got = _pagerank_ranks(monkeypatch, edges, limit, iterations=3, bidirected=True, **kw)
+        assert got == want, (limit, kw)
 
 
-def test_pagerank_dedup_edges_matches_caller_distinct(spark):
+def test_pagerank_dedup_edges_matches_caller_distinct(spark, monkeypatch):
     # r11 optimization: dedup_edges=True pushes the caller's
     # edges.distinct() into the operator (local path dedups inside the
     # kernel on factorized int codes — no Exchange; distributed path
     # falls back to a plan-level distinct). Every gate combination must
     # be byte-identical to distinct-then-pagerank, on string AND int
     # node ids, with and without bidirected derivation.
-    from frontpage_spark.ext.graph import pagerank_fixedpoint
-
     raw = [
         ("a", "b"), ("a", "b"), ("a", "b"), ("a", "c"), ("b", "c"),
         ("c", "a"), ("c", "a"), ("d", "a"), ("e", "f"), ("f", "e"),
@@ -511,25 +505,17 @@ def test_pagerank_dedup_edges_matches_caller_distinct(spark):
     for mk in (lambda p: p, lambda p: (hash(p[0]) % 97, hash(p[1]) % 97)):
         edges = spark.createDataFrame([mk(p) for p in raw], ["src", "dst"])
         for bd in (False, True):
-            want = {
-                (row.node, row.r)
-                for row in pagerank_fixedpoint(
-                    edges.distinct(), iterations=3, bidirected=bd
-                ).collect()
-            }
-            for kw in (
-                {},  # probe gate -> plan distinct + local kernel
-                {"edge_rows_hint": len(raw)},  # hint gate -> in-kernel dedup
-                {"small_edges": 0},  # distributed -> plan distinct
-                {"edge_rows_hint": 1 << 40, "small_edges": 0},
+            want = _pagerank_ranks(monkeypatch, edges.distinct(), iterations=3, bidirected=bd)
+            for limit, kw in (
+                (None, {}),  # probe gate -> plan distinct + local kernel
+                (None, {"edge_rows_hint": len(raw)}),  # hint gate -> in-kernel dedup
+                (0, {}),  # distributed -> plan distinct
+                (0, {"edge_rows_hint": 1 << 40}),
             ):
-                got = {
-                    (row.node, row.r)
-                    for row in pagerank_fixedpoint(
-                        edges, iterations=3, bidirected=bd, dedup_edges=True, **kw
-                    ).collect()
-                }
-                assert got == want, (bd, kw)
+                got = _pagerank_ranks(
+                    monkeypatch, edges, limit, iterations=3, bidirected=bd, dedup_edges=True, **kw
+                )
+                assert got == want, (bd, limit, kw)
 
 
 def test_expectations_report_counts(spark):
@@ -904,34 +890,35 @@ def _cc_expected(pairs):
     return {x: find(x) for x in parent}
 
 
-def test_component_fixpoint_high_diameter_and_mixed(spark):
+def _components(monkeypatch, pairs, small_pair_graph_rows=None) -> dict:
+    """{id: comp} from _component_fixpoint; ``small_pair_graph_rows``
+    sets the size gate's limit for this call."""
+    from frontpage_spark import queries
+
+    with monkeypatch.context() as m:
+        if small_pair_graph_rows is not None:
+            m.setattr(queries, "_SMALL_PAIR_GRAPH_ROWS", small_pair_graph_rows)
+        return {r["id"]: r["comp"] for r in queries._component_fixpoint(pairs).collect()}
+
+
+def test_component_fixpoint_high_diameter_and_mixed(spark, monkeypatch):
     """Star contraction labels a 40-node path (worst case for plain
     min-label propagation: diameter == n), plus disjoint components and
     a cycle, with comp == min(component)."""
-    from frontpage_spark.queries import _component_fixpoint
-
     path = [(i, i + 1) for i in range(100, 140)]           # one long path
     blob = [(1, 2), (2, 3), (1, 3), (3, 4)]                # small dense blob
     cycle = [(50, 51), (51, 52), (52, 53), (50, 53)]       # cycle
     pairs = sorted(set((min(a, b), max(a, b)) for a, b in path + blob + cycle))
     df = spark.createDataFrame(pairs, "a long, b long")
     # default gate -> local union-find fast path
-    got = {r["id"]: r["comp"] for r in _component_fixpoint(df).collect()}
-    assert got == _cc_expected(pairs)
+    assert _components(monkeypatch, df) == _cc_expected(pairs)
     # force the distributed star-contraction loop on the same graph
-    got_dist = {
-        r["id"]: r["comp"] for r in _component_fixpoint(df, small_rows=1).collect()
-    }
-    assert got_dist == _cc_expected(pairs)
+    assert _components(monkeypatch, df, 1) == _cc_expected(pairs)
     # endpoints are read by NAME: a pairs frame with a leading extra
     # column must give the same labels on both paths
     wab = spark.createDataFrame([(0.5, a, b) for a, b in pairs], "w double, a long, b long")
-    for small_rows in (100_000, 1):
-        got_w = {
-            r["id"]: r["comp"]
-            for r in _component_fixpoint(wab, small_rows=small_rows).collect()
-        }
-        assert got_w == _cc_expected(pairs)
+    for limit in (100_000, 1):
+        assert _components(monkeypatch, wab, limit) == _cc_expected(pairs)
 
 
 def test_component_fixpoint_empty_and_single(spark):
@@ -944,11 +931,12 @@ def test_component_fixpoint_empty_and_single(spark):
     assert got == {7: 3, 3: 3}
 
 
-def test_pair_graph_partitioning_is_size_gated(spark):
+def test_pair_graph_partitioning_is_size_gated(spark, monkeypatch):
     """VERDICT r2 item 1: a pair graph over the small-rows threshold must
     NOT collapse to one partition (no single-task serialization point at
     scale); under the threshold the union-find runs on the driver over
     the gate probe's rows and returns a local relation."""
+    from frontpage_spark import queries as q
     from frontpage_spark.queries import _component_fixpoint
 
     big = spark.range(0, 500).select(
@@ -962,7 +950,9 @@ def test_pair_graph_partitioning_is_size_gated(spark):
     # over the gate: the distributed star-contraction route, not the
     # local union-find (AQE may still coalesce the tiny OUTPUT to one
     # partition, so the discriminator is the plan shape)
-    dist = _component_fixpoint(big, small_rows=100)
+    monkeypatch.setattr(q, "_SMALL_PAIR_GRAPH_ROWS", 100)
+    dist = _component_fixpoint(big)
+    monkeypatch.undo()
     dist_plan = dist._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" not in dist_plan and "LocalTableScan" not in dist_plan
     # and the fixpoint is still correct when the gate keeps >1 partition
@@ -1362,7 +1352,7 @@ def test_component_queries_keep_each_frame_once(spark, name):
 
     with plans.keep_capture() as captured:
         QUERIES[name].__wrapped__(spark, SF_DIR).collect()
-    counts = Counter(id(df) for df in captured)
+    counts = Counter(id(df) for df in captured.kept)
     assert counts and max(counts.values()) == 1
 
 
@@ -1553,21 +1543,11 @@ def test_cosine_pairs_within_degenerate_inputs(spark):
     assert got_b == [0.0]
 
 
-def test_pagerank_null_edges_dropped_both_paths(spark):
-    from frontpage_spark.ext.graph import pagerank_fixedpoint
-
+def test_pagerank_null_edges_dropped_both_paths(spark, monkeypatch):
     e = spark.createDataFrame(
         [("a", "b"), ("b", "a"), (None, "b"), ("a", None)], ["src", "dst"]
     )
-    local = {(r.node, r.r) for r in pagerank_fixedpoint(e, iterations=2).collect()}
-    dist = {
-        (r.node, r.r)
-        for r in pagerank_fixedpoint(e, iterations=2, small_edges=0).collect()
-    }
-    clean = {
-        (r.node, r.r)
-        for r in pagerank_fixedpoint(
-            e.dropna(), iterations=2, small_edges=0
-        ).collect()
-    }
+    local = _pagerank_ranks(monkeypatch, e, iterations=2)
+    dist = _pagerank_ranks(monkeypatch, e, 0, iterations=2)
+    clean = _pagerank_ranks(monkeypatch, e.dropna(), 0, iterations=2)
     assert local == dist == clean and len(local) == 2

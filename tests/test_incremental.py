@@ -4,6 +4,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from frontpage_spark.incremental import (
+    _sessionize_classic,
+    _sessionize_stitch,
     delta_scan,
     sessionize,
     stream_pipeline,
@@ -91,21 +93,16 @@ def test_sessionize_stitch_equals_single_window(spark):
     for bucket in (60, 61, 97, 86_400):
         got = {
             r["event_id"]: r["session_idx"]
-            for r in sessionize(
-                ev, gap_seconds=60, bucket_seconds=bucket, plan="stitch"
-            ).collect()
+            for r in _sessionize_stitch(ev, 60, bucket).collect()
         }
         assert got == want, f"bucket_seconds={bucket} diverges"
     # the gate's classic branch must be the same function as the ref
-    got = {
-        r["event_id"]: r["session_idx"]
-        for r in sessionize(ev, gap_seconds=60, plan="classic").collect()
-    }
+    got = {r["event_id"]: r["session_idx"] for r in _sessionize_classic(ev, 60).collect()}
     assert got == want
 
 
-def test_sessionize_size_gate(spark, tmp_path):
-    """r10 (VERDICT r9 item 4): plan=None picks the classic
+def test_sessionize_size_gate(spark, tmp_path, monkeypatch):
+    """r10 (VERDICT r9 item 4): sessionize picks the classic
     single-window below _SESSIONIZE_STITCH_BYTES (every local SF) and
     the bounded-partition stitch above — decided from Catalyst's size
     estimate, no job. File-backed frames have real size stats (tiny ->
@@ -124,18 +121,10 @@ def test_sessionize_size_gate(spark, tmp_path):
         return df._jdf.queryExecution().executedPlan().toString()
 
     assert "Join" not in plan_of(inc.sessionize(ev))  # tiny file -> classic
-    assert "Join" in plan_of(inc.sessionize(ev, plan="stitch"))
+    assert "Join" in plan_of(inc._sessionize_stitch(ev, 1800))
     assert "Join" in plan_of(inc.sessionize(local))  # unknown size -> stitch
-    old = inc._SESSIONIZE_STITCH_BYTES
-    inc._SESSIONIZE_STITCH_BYTES = 0
-    try:
-        assert "Join" in plan_of(inc.sessionize(ev))  # over-gate -> stitch
-    finally:
-        inc._SESSIONIZE_STITCH_BYTES = old
-    import pytest
-
-    with pytest.raises(ValueError):
-        inc.sessionize(ev, plan="bogus")
+    monkeypatch.setattr(inc, "_SESSIONIZE_STITCH_BYTES", 0)
+    assert "Join" in plan_of(inc.sessionize(ev))  # over-gate -> stitch
 
 
 def test_windowed_counts_batch(spark):

@@ -133,6 +133,30 @@ def test_query_builds_leave_session_conf_unchanged(spark):
     plans.release_kept()
 
 
+def test_tune_measures_part_file_tables(spark, tmp_path, monkeypatch):
+    """A corpus of Spark-written tables (directories of part files) is
+    sized by its part files, so a corpus over the small-input limit
+    gets the large profile and the tune gate records the scale branch."""
+    from frontpage_spark import session
+    from frontpage_spark.session import default_parallelism, tune
+
+    spark.range(0, 200_000).selectExpr("id", "id * 7919 % 100003 AS v").repartition(3).write.parquet(
+        str(tmp_path / "orders.parquet")
+    )
+    parts = [f for f in os.listdir(tmp_path / "orders.parquet") if f.endswith(".parquet")]
+    size = sum(os.path.getsize(tmp_path / "orders.parquet" / f) for f in parts)
+    assert len(parts) > 1 and size > 1 << 20
+    monkeypatch.setattr(session, "_SMALL_INPUT_BYTES", size // 2)
+    clone = spark.newSession()
+    with plans.keep_capture() as captured:
+        tune(clone, str(tmp_path))
+    assert clone.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert clone.conf.get("spark.sql.shuffle.partitions") == str(default_parallelism())
+    assert captured.gates == [
+        {"gate": "tune", "measured": size, "limit": size // 2 - 1, "branch": "scale"}
+    ]
+
+
 def test_session_cache_lru_bound():
     cache = SessionCache(cap=2)
     cache.put("a", 1)
@@ -199,8 +223,8 @@ def test_keep_capture_is_thread_local():
             assert not t.is_alive()
             with plans.keep_capture() as nested:
                 plans.keep(inner)
-        assert [id(f) for f in outer] == [id(mine), id(inner)]
-        assert [id(f) for f in nested] == [id(inner)]
+        assert [id(f) for f in outer.kept] == [id(mine), id(inner)]
+        assert [id(f) for f in nested.kept] == [id(inner)]
     finally:
         plans._KEPT[:] = old_kept
 

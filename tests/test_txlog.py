@@ -444,3 +444,20 @@ def test_txlog_python_datasource_sink(spark, tmp_path):
         spark.range(5).toDF("id").write.format("txlog").option("path", t).mode(
             "overwrite"
         ).save()
+
+
+def test_txlog_datasource_appends_checkpoint(spark, tmp_path):
+    """Appends through df.write.format("txlog") checkpoint on the same
+    schedule as txlog.append, so a reader replays from the checkpoint
+    instead of the whole log."""
+    from frontpage_spark.ext.pysource import TxlogDataSource
+
+    spark.dataSource.register(TxlogDataSource)
+    t = str(tmp_path / "t")
+    for i in range(10):
+        spark.range(i, i + 1).toDF("id").write.format("txlog").option("path", t).mode(
+            "append"
+        ).save()
+    assert txlog.current_version(t) == 10
+    assert os.path.exists(txlog._checkpoint_path(t, 10))
+    assert sorted(r["id"] for r in txlog.read(spark, t).collect()) == list(range(10))

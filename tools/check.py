@@ -38,12 +38,11 @@ import pandas as pd
 def duckdb_con(sf_dir: str) -> "duckdb.DuckDBPyConnection":
     con = duckdb.connect()
     from frontpage_spark.schemas import TESTDATA_TABLES
+    from frontpage_spark.sources import table_files
 
     for t in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, t + ".parquet")
-        if os.path.isdir(path):  # a directory of part files, as Spark writes a table
-            path = os.path.join(path, "*.parquet")
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+        # a single file or a directory of part files, as Spark writes a table
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet({table_files(sf_dir, t)!r})")
     return con
 
 

@@ -175,9 +175,10 @@ SELECTED = {
         "row per key; top-10 is TakeOrdered. Costs a fraction of the join it protects."
     ),
     "semantic_dedup_report": (
-        "SemDeDup: broadcast-argmax cluster assignment (1 row/vector shuffle), pair cosine "
-        "ONLY within a cell (join keyed on cent_id), min-label components on the tiny pair "
-        "graph with broadcast label state. The corpus never self-joins unclustered."
+        "SemDeDup: argmax cell assignment, pair cosine ONLY within a cell (a gemm per cell). "
+        "Under the components gate the build's gate probe collects the pairs and a driver "
+        "union-find labels them: the plan is the report aggregate over a LocalTableScan of "
+        "labels, n_pairs and n_vectors literals. Above it, the star-contraction fixpoint."
     ),
     "hashed_ngram_quality_score": (
         "fastText-shape classifier inference: hashing-trick featurization and the integer "
@@ -185,10 +186,10 @@ SELECTED = {
         "exchange is the per-source rollup of exact integer sums."
     ),
     "triangle_count_copurchase": (
-        "Ordered-edge node-iterator triangles on a brand-sliced co-purchase graph: two "
-        "equi-joins on the distinct edge list count each triangle once; wedge cost is "
-        "Σ deg², which is why the operator runs on interest slices and notes the "
-        "degree-ordering bound for dense graphs."
+        "Triangles on a brand-sliced co-purchase graph. Under the lineitem-footer gate the "
+        "incidence rows (one broadcast join) coalesce to ONE task whose numpy kernel does "
+        "pairs, dedup and wedge join; above it two equi-joins on the distinct ordered edge "
+        "list count each triangle once (wedge cost Σ deg²). Integer counts: byte-identical."
     ),
     "prefix_filtered_jaccard": (
         "PPJoin set-similarity join: one narrow shingle pass, frequency-sorted sets "
@@ -310,12 +311,12 @@ SELECTED = {
         "sort; budget is a driver literal from the offsets pass."
     ),
     "rfm_segments": (
-        "Round-8 shape: ONE plain keyed rollup (the horizon global-max "
-        "job and its broadcast cross join are gone -- ordering by "
-        "last_o ASC is identical to recency DESC), persisted once, "
-        "then three chained per-__part window exchanges from one "
-        "global_prefix_stats_multi call with dense offset arrays; "
-        "quintiles are arithmetic over (rn, N). 3 actions total."
+        "ONE plain keyed customer rollup (last_o ASC orders as recency "
+        "DESC). Under the orders-footer gate it coalesces to ONE task "
+        "whose numpy kernel scores the quintiles: one job. Above it the "
+        "rollup is persisted and one global_prefix_stats_multi call "
+        "ranks it (sample, offsets, final: 3 actions); quintiles are "
+        "arithmetic over (rn, N) on both branches."
     ),
     "peak_concurrent_sessions": (
         "Round-8 shape: sessionize shuffle + keyed agg collapse to the "
@@ -355,19 +356,24 @@ SELECTED = {
 def main() -> None:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 
+    from frontpage_spark import plans
     from frontpage_spark.queries import QUERIES
     from frontpage_spark.session import get_spark
 
     spark = get_spark("dump_plans")
     spark.sparkContext.setLogLevel("ERROR")
     out = [
-        "# PLANS — physical plans of representative queries (sf0.1, AQE on)",
+        f"# PLANS — physical plans of representative queries ({os.path.basename(sf)})",
         "",
         "Regenerate with: `python tools/dump_plans.py` (this file is its output).",
+        "Above each plan, its size-gate records; `tune` small = AQE off.",
         "",
     ]
+    gate = "- gate `{gate}`: {branch} (measured {measured}, limit {limit})"
     for name, note in SELECTED.items():
-        df = QUERIES[name](spark, sf)
+        with plans.keep_capture() as captured:
+            df = QUERIES[name](spark, sf)
+        gates = [gate.format(**g) for g in captured.gates]
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
@@ -375,7 +381,7 @@ def main() -> None:
         tree_end = next((i for i, l in enumerate(lines) if l.strip() == "" and i > 2), len(lines))
         tree = "\n".join(lines[:tree_end])
         scans = "\n".join(l for l in lines if "PushedFilters" in l or "ReadSchema" in l)
-        out += [f"## {name}", "", note, "", "```", tree, "", scans, "```", ""]
+        out += [f"## {name}", "", note, "", *gates, "", "```", tree, "", scans, "```", ""]
 
     path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
     with open(path, "w") as f:

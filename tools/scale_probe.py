@@ -197,7 +197,7 @@ ZIPF_QUERIES = [
     "dup_clusters",
     # r11: BOTH sides of each size gate (VERDICT r10 item 3) — the
     # gated name runs whatever the gate picks at this corpus size
-    # (recorded in gate_diag); the forced name runs the other branch
+    # (its gate records name it); the forced name runs the other branch
     "dup_clusters_distributed",
     "near_dup_verified",
     "minhash_lsh_candidates",
@@ -220,9 +220,14 @@ ZIPF_QUERIES = [
 def _dup_clusters_forced_distributed(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    from frontpage_spark.queries import _dup_component_labels
+    from frontpage_spark import queries
 
-    labels = _dup_component_labels(spark, sf_dir, small_rows=1)
+    limit = queries._SMALL_PAIR_GRAPH_ROWS
+    queries._SMALL_PAIR_GRAPH_ROWS = 1
+    try:
+        labels = queries._dup_component_labels(spark, sf_dir)
+    finally:
+        queries._SMALL_PAIR_GRAPH_ROWS = limit
     return labels.groupBy(F.col("comp").alias("cluster_id")).agg(
         F.count("*").alias("n_members")
     )
@@ -243,10 +248,11 @@ _GATE_PAIRS = {
 def time_queries(spark, sf_dir: str, names=None) -> dict[str, dict]:
     """Per-operator warm timing: one untimed warm pass, then median of
     WARM_PASSES consecutive bench.time_query passes (single pass
-    accepted past _LONG_PASS_S). Each record carries its raw samples and
+    accepted past _LONG_PASS_S). Each record carries its raw samples,
     the 1-min loadavg observed right after each timed pass, so a
     contended sample is attributable in-artifact instead of shipping as
-    a plan verdict."""
+    a plan verdict, and the size-gate records of the last pass, so a
+    verdict names the branch it measured."""
     from frontpage_spark.queries import QUERIES
 
     times: dict[str, dict] = {}
@@ -257,7 +263,8 @@ def time_queries(spark, sf_dir: str, names=None) -> dict[str, dict]:
         samples: list[float] = []
         loads: list[float] = []
         for _ in range(WARM_PASSES):
-            samples.append(round(_secs(time_query(spark, build)), 3))
+            rec = time_query(spark, build)
+            samples.append(round(_secs(rec), 3))
             loads.append(_loadavg()[0])
             if samples[-1] > _LONG_PASS_S:
                 break
@@ -267,6 +274,7 @@ def time_queries(spark, sf_dir: str, names=None) -> dict[str, dict]:
             "samples": samples,
             "load": loads,
             "rows": rows,
+            "gates": rec["gates"],
         }
         spark.catalog.clearCache()
     return times
@@ -357,7 +365,7 @@ NOTES = {
         "state, no checkpoint; cost ~ K^2 x n arithmetic"
     ),
     "sessionize_users_stitch": (
-        "FORCED over-gate branch (gated pick per dir is in gate_diag): "
+        "FORCED over-gate branch (the gated pick per dir is in gates): "
         "two windows within (user, day-bucket) + per-bucket rollup "
         "stitch — bounded partitions however hot a key"
     ),
@@ -378,24 +386,17 @@ NOTES = {
 }
 
 
-def _gate_diag(spark, sf_dir: str) -> dict:
-    """Which side of the sessionize size gate this corpus sits on —
-    recorded per probe dir so a verdict can never again be ambiguous
-    about WHICH plan it measured (VERDICT r10: the r10 zipf artifact
-    shipped without this and its sessionize row was unadjudicable)."""
-    from frontpage_spark.incremental import (
-        _SESSIONIZE_STITCH_BYTES,
-        _plan_size_bytes,
-        sessionize_gate,
-    )
-    from frontpage_spark.sources import load_table
-
-    size = _plan_size_bytes(load_table(spark, sf_dir, "events"))
-    return {
-        "events_plan_bytes": size,
-        "sessionize_gate_bytes": _SESSIONIZE_STITCH_BYTES,
-        "sessionize_gated_plan": sessionize_gate(size),
-    }
+def _gate_branches(times: dict[str, dict]) -> dict[str, list[str]]:
+    """gate -> every distinct "branch (measured vs limit)" among one
+    dir's timed queries, read from their run records (a forced row
+    adds its own branch next to the gated pick)."""
+    seen: dict[str, set[str]] = {}
+    for rec in times.values():
+        for g in rec["gates"]:
+            seen.setdefault(g["gate"], set()).add(
+                f"{g['branch']} ({g['measured']} vs {g['limit']})"
+            )
+    return {gate: sorted(branches) for gate, branches in seen.items()}
 
 
 def _calibration_envelope(spark, when: str) -> dict:
@@ -433,11 +434,6 @@ def zipf_probe(spark, factor: int, md_path: str) -> None:
         "loadavg_start": load_start,
         "idle_wait_sec": idle_wait,
         "calibration_ref": CALIBRATION_REF,
-        "gate_diag": {
-            "x1": _gate_diag(spark, base_dir),
-            "uniform": _gate_diag(spark, big_dir),
-            "zipf": _gate_diag(spark, zipf_dir),
-        },
     }
     meta.update(_calibration_envelope(spark, "start"))
     t1 = time_queries(spark, base_dir, ZIPF_QUERIES)
@@ -445,7 +441,11 @@ def zipf_probe(spark, factor: int, md_path: str) -> None:
     tz = time_queries(spark, zipf_dir, ZIPF_QUERIES)
     meta.update(_calibration_envelope(spark, "end"))
     meta["loadavg_end"] = _loadavg()
-    g = meta["gate_diag"]
+    g = meta["gates"] = {
+        "x1": _gate_branches(t1),
+        "uniform": _gate_branches(tu),
+        "zipf": _gate_branches(tz),
+    }
     lines = [
         f"# SCALE_PROBE (zipf skew) — sf0.1 x1 vs x{factor} uniform vs x{factor} zipf",
         "",
@@ -465,15 +465,10 @@ def zipf_probe(spark, factor: int, md_path: str) -> None:
         + (f" (waited {idle_wait:.0f}s for idle)" if idle_wait else ""),
         f"- box drift start: {meta['box_drift_start']}, end: {meta['box_drift_end']}"
         " (1.0 = the idle anchor box; >1 = this run's box was slower)",
-        f"- sessionize gate: corpus estimate x1/uniform/zipf = "
-        f"{g['x1']['events_plan_bytes']}/{g['uniform']['events_plan_bytes']}/"
-        f"{g['zipf']['events_plan_bytes']} bytes vs gate "
-        f"{g['x1']['sessionize_gate_bytes']} — gated `sessionize_users` runs "
-        f"`{g['zipf']['sessionize_gated_plan']}` on every dir here; "
-        "`sessionize_users_stitch` is the forced over-gate branch",
-        "- `dup_clusters` runs the gate's pick (local union-find at this "
-        "pair-graph size); `dup_clusters_distributed` forces the "
-        "star-contraction branch (small_rows=1)",
+        *(f"- gate branches {d}: {g[d]}" for d in g),
+        "- `sessionize_users_stitch` is the forced over-gate branch of "
+        "`sessionize_users`; `dup_clusters_distributed` forces the "
+        "star-contraction branch (`_SMALL_PAIR_GRAPH_ROWS` = 1)",
         "",
         f"| operator | 1x sec | x{factor} uniform sec | x{factor} zipf sec | zipf/uniform | out uniform | out zipf | out ratio | verdict | zipf samples | zipf loadavg |",
         "|---|---|---|---|---|---|---|---|---|---|---|",
@@ -534,8 +529,9 @@ def neargate_probe(spark) -> None:
     """--neargate: sf0.1 events alone, replicated and zipf-collapsed
     exactly as the zipf corpus is, to 97% of the sessionize gate (the
     collapsed user_id compresses better than organic ids, so the margin
-    keeps the achieved estimate under it; gate_diag records what the
-    gate saw). Times the gated query and its forced stitch branch."""
+    keeps the achieved estimate under it; the gated query's gate
+    records show what the gate saw). Times the gated query and its
+    forced stitch branch."""
     from pyspark.sql import functions as F
 
     from frontpage_spark.incremental import _SESSIONIZE_STITCH_BYTES, _plan_size_bytes
@@ -556,7 +552,7 @@ def neargate_probe(spark) -> None:
         "mode": "neargate",
         "factor": factor,
         "passes": WARM_PASSES,
-        "gate_diag": _gate_diag(spark, out_dir),
+        "gates": _gate_branches({gated: t[gated]}),
         "rows": rows,
         "hot_key_share": round(hot / rows, 3),
         gated: t[gated],
@@ -640,18 +636,13 @@ def main() -> None:
         "loadavg_start": load_start,
         "idle_wait_sec": idle_wait,
         "calibration_ref": CALIBRATION_REF,
-        "gate_diag": {
-            "x1": _gate_diag(spark, base_dir),
-            f"x{factor}": _gate_diag(spark, big_dir),
-        },
     }
     meta.update(_calibration_envelope(spark, "start"))
     t1 = time_queries(spark, base_dir)
     tn = time_queries(spark, big_dir)
     meta.update(_calibration_envelope(spark, "end"))
     meta["loadavg_end"] = _loadavg()
-
-    g = meta["gate_diag"]
+    g = meta["gates"] = {"x1": _gate_branches(t1), f"x{factor}": _gate_branches(tn)}
     lines = [
         f"# SCALE_PROBE — sf0.1 x1 vs x{factor} (expanding key space)",
         "",
@@ -671,10 +662,7 @@ def main() -> None:
         + (f" (waited {idle_wait:.0f}s for idle)" if idle_wait else ""),
         f"- box drift start: {meta['box_drift_start']}, end: {meta['box_drift_end']}"
         " (pinned bench probes; 1.0 = idle anchor box)",
-        f"- sessionize gate: events estimate x1 {g['x1']['events_plan_bytes']} / "
-        f"x{factor} {g[f'x{factor}']['events_plan_bytes']} bytes vs gate "
-        f"{g['x1']['sessionize_gate_bytes']} — gated pick is "
-        f"`{g[f'x{factor}']['sessionize_gated_plan']}` at x{factor}",
+        *(f"- gate branches {d}: {g[d]}" for d in g),
         "",
         f"| operator | 1x sec | {factor}x sec | time ratio | out 1x | out {factor}x | work ratio | verdict | {factor}x samples | note |",
         "|---|---|---|---|---|---|---|---|---|---|",
